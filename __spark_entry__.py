@@ -100,182 +100,6 @@ _R14_WINDOW = [
     "q_kmeans_step",
 ]
 
-# retained for provenance (round-13 ordering, VERDICT r12 #3): the
-# TWENTY-TWO round-13
-# additions (merge-on-read DV MERGE, RESTORE, streaming CDF drain,
-# multi-table catalog txn, shallow clone, convex hull, TextRank,
-# mu-law + IMA-ADPCM codecs, Spearman, ACF, Gini, Jaro-Winkler,
-# Kendall tau-b, Theil-Sen, quantile normalization, Fellegi-Sunter,
-# DTW, Haar, batch + streaming SPRT, isotonic regression),
-# then ALL fifteen remaining r07 rows plus the stalest r08 rows, with
-# the last slot swapped for q_dedup_minhash_lsh — the one r11->r12
-# >1.3x panel mover (VERDICT r12 #1/#2) taking its standard
-# driver-vs-driver confirmation read. Base list from ``python
-# tools/gate_coverage.py --window``.
-_R13_WINDOW = [
-    "q_multimodal_mulaw_roundtrip",
-    "q_multimodal_adpcm_roundtrip",
-    "q_cow_merge_dv",
-    "q_cow_restore",
-    "q_cow_txn",
-    "q_cow_clone",
-    "q_textrank_keywords",
-    "q_geo_convex_hull",
-    "q_spearman_corr",
-    "q_acf_lags",
-    "q_gini_concentration",
-    "q_jaro_winkler_linkage",
-    "q_kendall_tau",
-    "q_quantile_normalize",
-    "q_sprt_monitor",
-    "q_theilsen_trend",
-    "q_fellegi_sunter",
-    "q_dtw_profiles",
-    "q_haar_wavelet",
-    "q_isotonic_fit",
-    "q_stream_cow_changes",
-    "q_stream_sprt",
-    "q_cube_orders",
-    "q_curation_pipeline",
-    "q_customer_order_running",
-    "q_customers_without_orders",
-    "q_date_functions",
-    "q_decontaminate_ngram",
-    "q_decontamination",
-    "q_dedup_canonical",
-    "q_dedup_exact",
-    "q_dedup_simhash",
-    "q_distinct_agg",
-    "q_doc_chunking",
-    "q_dp_census",
-    "q_embed_binary_hamming",
-    "q_embed_int8_rerank",
-    "q_epoch_shuffle",
-    "q_integrity_audit",
-    "q_langid_confusion",
-    "q_logreg_step",
-    "q_multimodal_bmp_decode",
-    "q_multimodal_png_decode",
-    "q_multimodal_wav_features",
-    "q_nb_auc",
-    "q_negative_sampling",
-    "q_priority_sample",
-    "q_recursive_calendar",
-    "q_rollup_returns",
-    "q_dedup_minhash_lsh",
-]
-
-# retained for provenance (round-12 ordering)
-_R12_WINDOW = [
-    "q_geo_dbscan_geodesic",
-    "q_multimodal_flac_decode",
-    "q_cow_delete_dv",
-    "q_cow_partition_evolution",
-    "q_cow_agg_ivm",
-    "q_stream_stream_full",
-    "q_ldiversity",
-    "q_resample_interpolate",
-    "q_cc_star",
-    "q_embed_rvq_adc",
-    "q_rvq_recall",
-    "q_zh_segment_fmm",
-    "q_zh_convert_audit",
-    "q_label_balance",
-    "q_link_prediction",
-    "q_mannwhitney_u",
-    "q_multimodal_ppm_resize",
-    "q_multimodal_wav_decode",
-    "q_multimodal_y4m_framesample",
-    "q_nb_calibration",
-    "q_nb_source_classifier",
-    "q_ndcg_mrr",
-    "q_neardup_pr_curve",
-    "q_pq_recall",
-    "q_psi_arms",
-    "q_seasonal_decompose",
-    "q_span_corruption",
-    "q_split_leakage",
-    "q_sql_shared_text",
-    "q_stream_heavy_hitters",
-    "q_stream_psi",
-    "q_substring_span_clean",
-    "q_token_zipf",
-    "q_weighted_sample",
-    "q_welch_ttest",
-    "q_window_ranks",
-    "q_winsorized_stats",
-    "q13_customer_distribution",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q_advanced_aggregates",
-    "q_annotator_kappa",
-    "q_array_functions",
-    "q_asof_click_purchase",
-    "q_blocklist_filter",
-    "q_bpe_merge_candidates",
-    "q_cms_heavy_hitters",
-    "q_cohort_retention",
-]
-
-# retained for provenance (round-11 ordering)
-_R11_WINDOW = [
-    # 17 r04 rows — after this window, no row is older than r06
-    "q_rolling_median",
-    "q_semdedup",
-    "q_ses_forecast",
-    "q_session_bounce",
-    "q_setops_nations",
-    "q_skyline_parts",
-    "q_sliding_distinct_hll",
-    "q_source_kl",
-    "q_stream_minhash_buckets",
-    "q_stream_running_totals",
-    "q_stream_stream_left",
-    "q_substring_dupfrac",
-    "q_tfidf_topk",
-    "q_theta_set_algebra",
-    "q_time_weighted_avg",
-    "q_top3_parts_per_brand",
-    "q_variant_json",
-    # the other five settled bench movers (confirmation read)
-    "q_stream_zh_backfill",
-    "q_stream_cusum",
-    "q_stream_stream_join",
-    "q_rank_fusion_rrf",
-    "q_geo_nearest",
-    # round-11 additions
-    "q_geo_polygon_join_geodesic",
-    "q_geo_segment_join_geodesic",
-    "q_geo_polygon_overlay_geodesic",
-    # 25 stalest r06 rows
-    "q1_pricing_summary",
-    "q_anomaly_residual",
-    "q_balanced_shards",
-    "q_boilerplate_cleaned",
-    "q_boilerplate_segments",
-    "q_bootstrap_ci",
-    "q_bpe_apply",
-    "q_char_entropy",
-    "q_corpus_datasheet",
-    "q_cross_source_overlap",
-    "q_cusum_changepoint",
-    "q_dsir_selection",
-    "q_embed_class_drift",
-    "q_embed_covariance",
-    "q_embed_matryoshka",
-    "q_embed_pca_power",
-    "q_embed_pq_adc",
-    "q_embed_rand_projection",
-    "q_gopher_rules",
-    "q_hard_negatives",
-    "q_hits_scores",
-    "q_holt_linear",
-    "q_kanonymity",
-    "q_kcore",
-    "q_km_survival",
-]
 
 def _gate_order(names) -> list[str]:
     head = [n for n in _R14_WINDOW if n in names]

@@ -51,10 +51,6 @@ def classify_schema(schema: StructType, table: str = "") -> TableClass | None:
     return None
 
 
-def classify_table(df: DataFrame, table: str = "") -> TableClass | None:
-    return classify_schema(df.schema, table)
-
-
 def discover_parquet_tables(spark: SparkSession, root: str) -> dict[str, DataFrame]:
     """Lake-mode catalog scan: every ``*.parquet`` under ``root`` is a table.
 
@@ -66,14 +62,6 @@ def discover_parquet_tables(spark: SparkSession, root: str) -> dict[str, DataFra
     for p in sorted(Path(root).glob("*.parquet")):
         out[p.stem] = spark.read.parquet(str(p))
     return out
-
-
-def discover_catalog_tables(
-    spark: SparkSession, database: str | None = None
-) -> dict[str, DataFrame]:
-    """Metastore-mode catalog scan via ``spark.catalog.listTables``."""
-    tables = spark.catalog.listTables(database) if database else spark.catalog.listTables()
-    return {t.name: spark.table(t.name) for t in tables}
 
 
 def classify_all(tables: dict[str, DataFrame]) -> list[TableClass]:

@@ -52,8 +52,8 @@ dropped data. Tables that never rename keep no mapping and take the
 original single-scan fast path unchanged.
 
 Scale notes: the only driver-side materialization is the DISTINCT
-partition values of the merge source (bounded by partition count, the
-same collect ``write_back_merge`` does); the merge itself is ONE
+partition values of the merge source (bounded by partition count); the
+merge itself is ONE
 ``merge_into`` plan (full-outer or broadcast-left join) over only the
 affected partitions' files.
 """

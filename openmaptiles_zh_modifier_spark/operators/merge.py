@@ -15,9 +15,9 @@ Scale notes (100 TB target):
   join, which Spark CAN broadcast (source side), making update/delete
   merges exchange-free on the base.
 - File-level pruning (only rewrite files containing touched keys) is the
-  other half of Delta MERGE; ``sources.io.write_back_merge`` provides it
-  at partition granularity. Compose: prune partitions there, apply
-  row-level clauses here.
+  other half of Delta MERGE; ``operators.cow_table.cow_merge`` provides
+  it at partition granularity and applies the row-level clauses through
+  this operator.
 - Skewed merge keys: pre-salt via ``operators.salted`` or rely on AQE
   skew-join splitting (enabled in session defaults).
 """

@@ -34,12 +34,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from openmaptiles_zh_modifier_spark.functions.zh import (
+    CURATED,
     is_han,
     nullif_empty,
+    opencc_tables_from_env,
     to_simplified,
     to_traditional,
 )
-from ..functions.zh import CURATED, opencc_tables_from_env
 
 
 KEY_ZH = "name:zh"
@@ -48,14 +49,57 @@ KEY_HANT = "name:zh-Hant"
 KEY_HANT_TYPO = "names:zh-Hant"  # B1: the reference's misspelled read key
 
 
-def _qualifies(name: Column, tags: Column) -> Column:
-    """Server-side WHERE (P2, OMTZHModifier.java:137-138): has some name
-    source AND at least one zh variant missing. Uses the CORRECT keys even
-    in typo mode — the reference's WHERE is spelled right; only the SELECT
-    is not."""
-    return (name.isNotNull() | tags[KEY_ZH].isNotNull()) & (
-        tags[KEY_HANT].isNull() | tags[KEY_HANS].isNull()
+def _zh_exprs(compat_names_typo: bool, tables) -> dict[str, Column]:
+    """The back-fill derivation, spelled once: named column expressions
+    over ``name`` / ``tags`` that every public form below selects from.
+
+    ``tables`` resolves here: :data:`CURATED` forces the curated
+    dictionaries, ``None`` defers to env ``SPARK_GRAFT_OPENCC_DIR``
+    (ingested OpenCC dictionaries — the deployment path to full
+    dictionary parity, VERDICT r11 #3; unset = curated gate path), and a
+    :class:`ZhTables` is used as given.
+    """
+    tables = (
+        None
+        if tables is CURATED
+        else (tables if tables is not None else opencc_tables_from_env())
     )
+    name = F.col("name")
+    tags = F.col("tags")
+    hant_read_key = KEY_HANT_TYPO if compat_names_typo else KEY_HANT
+
+    # P4 residual: zh source = tags['name:zh'], else name when it is a
+    # non-empty Han-script string (OMTZHModifier.java:209-218). Map-key
+    # extraction (element_at) is hstore ``->``.
+    name_usable = name.isNotNull() & (name != F.lit("")) & is_han(name)
+    zh = F.coalesce(tags[KEY_ZH], F.when(name_usable, name))
+
+    # P5: '' and NULL are the same "missing" state (:220-225).
+    hans_old = nullif_empty(tags[KEY_HANS])
+    hant_old = nullif_empty(tags[hant_read_key])
+
+    # F5 coalesce cascade (:227-235) + F6 changed-row flag (:207,237-244).
+    hans = F.coalesce(hans_old, to_simplified(zh, tables))
+    hant = F.coalesce(hant_old, to_traditional(zh, tables))
+    return {
+        # Server-side WHERE (P2, OMTZHModifier.java:137-138): has some
+        # name source AND at least one zh variant missing. Uses the
+        # CORRECT keys even in typo mode — the reference's WHERE is
+        # spelled right; only the SELECT is not.
+        "qualifies": (name.isNotNull() | tags[KEY_ZH].isNotNull())
+        & (tags[KEY_HANT].isNull() | tags[KEY_HANS].isNull()),
+        "zh": zh,
+        "hans_old": hans_old,
+        "hant_old": hant_old,
+        "hans": hans,
+        "hant": hant,
+        "needs_update": hans_old.isNull() | hant_old.isNull(),
+        # F7: hstore ``||`` — LAST_WIN map_concat, right operand wins.
+        "new_tags": F.map_concat(
+            F.coalesce(tags, F.create_map().cast("map<string,string>")),
+            F.create_map(F.lit(KEY_HANS), hans, F.lit(KEY_HANT), hant),
+        ),
+    }
 
 
 def derive_zh_columns(
@@ -69,52 +113,23 @@ def derive_zh_columns(
     for rows that pass the server-side filter AND have a usable zh source.
 
     Pure column expressions — Catalyst pushes the filter into the scan and
-    prunes the projection to exactly (id_field, name, tags).
-
-    ``tables`` (or env ``SPARK_GRAFT_OPENCC_DIR``, resolved here) swaps
-    in ingested OpenCC dictionaries — the deployment path to full
-    dictionary parity (VERDICT r11 #3); unset = curated gate path.
+    prunes the projection to exactly (id_field, name, tags). ``tables``
+    as in :func:`_zh_exprs`.
     """
-    tables = (
-        None
-        if tables is CURATED
-        else (tables if tables is not None else opencc_tables_from_env())
-    )
-    name = F.col("name")
-    tags = F.col("tags")
-    hant_read_key = KEY_HANT_TYPO if compat_names_typo else KEY_HANT
-
-    # P1 projection with map-key extraction (element_at == hstore ->).
-    zh_raw = tags[KEY_ZH]
-    hans_raw = tags[KEY_HANS]
-    hant_raw = tags[hant_read_key]
-
-    # P4 residual: zh source = tags['name:zh'], else name when it is a
-    # non-empty Han-script string (OMTZHModifier.java:209-218).
-    name_usable = name.isNotNull() & (name != F.lit("")) & is_han(name)
-    zh = F.coalesce(zh_raw, F.when(name_usable, name))
-
-    # P5: '' and NULL are the same "missing" state (:220-225).
-    hans_old = nullif_empty(hans_raw)
-    hant_old = nullif_empty(hant_raw)
-
-    # F5 coalesce cascade (:227-235) + F6 changed-row flag (:207,237-244).
-    hans_new = F.coalesce(hans_old, to_simplified(zh, tables))
-    hant_new = F.coalesce(hant_old, to_traditional(zh, tables))
-    needs_update = hans_old.isNull() | hant_old.isNull()
-
+    e = _zh_exprs(compat_names_typo, tables)
     return (
-        df.where(_qualifies(name, tags))
-        .where(zh.isNotNull())
+        df.where(e["qualifies"])
+        .where(e["zh"].isNotNull())
         .select(
             F.col(id_field),
-            name.alias("name"),
-            zh.alias("zh"),
-            hans_old.alias("hans_old"),
-            hant_old.alias("hant_old"),
-            hans_new.alias("hans"),
-            hant_new.alias("hant"),
-            needs_update.alias("needs_update"),
+            F.col("name").alias("name"),
+            *(
+                e[c].alias(c)
+                for c in (
+                    "zh", "hans_old", "hant_old", "hans", "hant",
+                    "needs_update",
+                )
+            ),
         )
     )
 
@@ -140,41 +155,20 @@ def updates_frame_with_tags(
 ) -> DataFrame:
     """Changed-rows frame ``(id_field, hans, hant, new_tags_map)`` computed
     in ONE projection over ONE scan — for sinks that must write the full
-    post-update tags value (the JDBC staging path). Deliberately NOT a
-    join of :func:`updates_frame` back onto the source: over a live JDBC
-    source, two scans are two snapshots, and pairing hans/hant from one
-    snapshot with tags from another silently loses concurrent writes."""
-    tables = (
-        None
-        if tables is CURATED
-        else (tables if tables is not None else opencc_tables_from_env())
-    )
-    name = F.col("name")
-    tags = F.col("tags")
-    hant_read_key = KEY_HANT_TYPO if compat_names_typo else KEY_HANT
-
-    name_usable = name.isNotNull() & (name != F.lit("")) & is_han(name)
-    zh = F.coalesce(tags[KEY_ZH], F.when(name_usable, name))
-    hans_old = nullif_empty(tags[KEY_HANS])
-    hant_old = nullif_empty(tags[hant_read_key])
-    hans_new = F.coalesce(hans_old, to_simplified(zh, tables))
-    hant_new = F.coalesce(hant_old, to_traditional(zh, tables))
-    needs_update = hans_old.isNull() | hant_old.isNull()
-    new_tags = F.map_concat(
-        F.coalesce(tags, F.create_map().cast("map<string,string>")),
-        F.create_map(
-            F.lit(KEY_HANS), hans_new,
-            F.lit(KEY_HANT), hant_new,
-        ),
-    )
+    post-update tags value (the JDBC staging path, the cow merge).
+    Deliberately NOT a join of :func:`updates_frame` back onto the source:
+    over a live JDBC source, two scans are two snapshots, and pairing
+    hans/hant from one snapshot with tags from another silently loses
+    concurrent writes."""
+    e = _zh_exprs(compat_names_typo, tables)
     return (
-        df.where(_qualifies(name, tags))
-        .where(zh.isNotNull() & needs_update)
+        df.where(e["qualifies"])
+        .where(e["zh"].isNotNull() & e["needs_update"])
         .select(
             F.col(id_field),
-            hans_new.alias("hans"),
-            hant_new.alias("hant"),
-            new_tags.alias("new_tags_map"),
+            e["hans"].alias("hans"),
+            e["hant"].alias("hant"),
+            e["new_tags"].alias("new_tags_map"),
         )
     )
 
@@ -193,71 +187,8 @@ def backfill_table(
     applies, which at lake scale beats materializing an updates frame and
     joining it back. Every other column is passed through untouched.
     """
-    tables = (
-        None
-        if tables is CURATED
-        else (tables if tables is not None else opencc_tables_from_env())
-    )
-    name = F.col("name")
-    tags = F.col("tags")
-    hant_read_key = KEY_HANT_TYPO if compat_names_typo else KEY_HANT
-
-    name_usable = name.isNotNull() & (name != F.lit("")) & is_han(name)
-    zh = F.coalesce(tags[KEY_ZH], F.when(name_usable, name))
-    hans_old = nullif_empty(tags[KEY_HANS])
-    hant_old = nullif_empty(tags[hant_read_key])
-    needs_update = hans_old.isNull() | hant_old.isNull()
-
-    apply_update = _qualifies(name, tags) & zh.isNotNull() & needs_update
-    new_tags = F.map_concat(
-        F.coalesce(tags, F.create_map().cast("map<string,string>")),
-        F.create_map(
-            F.lit(KEY_HANS), F.coalesce(hans_old, to_simplified(zh, tables)),
-            F.lit(KEY_HANT), F.coalesce(hant_old, to_traditional(zh, tables)),
-        ),
-    )
+    e = _zh_exprs(compat_names_typo, tables)
+    apply_update = e["qualifies"] & e["zh"].isNotNull() & e["needs_update"]
     return df.withColumn(
-        "tags", F.when(apply_update, new_tags).otherwise(tags)
-    )
-
-
-def merge_backfill(
-    base: DataFrame,
-    updates: DataFrame,
-    id_field: str = "id",
-    broadcast_updates: bool | None = None,
-) -> DataFrame:
-    """Keyed-join form of the write-back (S5 option a without Delta): the
-    logical left-join the reference spells as per-row UPDATE statements
-    (OMTZHModifier.java:157-169).
-
-    When the updates side is small (the common back-fill case: few rows
-    change), broadcast it so the join is shuffle-free on the 100 TB base
-    side. ``broadcast_updates=None`` leaves the decision to AQE/Catalyst.
-    """
-    upd = updates.select(
-        F.col(id_field).alias("__upd_id"),
-        F.col("hans").alias("__upd_hans"),
-        F.col("hant").alias("__upd_hant"),
-    )
-    if broadcast_updates:
-        upd = F.broadcast(upd)
-    joined = base.join(upd, base[id_field] == upd["__upd_id"], "left")
-    new_tags = F.map_concat(
-        F.coalesce(
-            F.col("tags"), F.create_map().cast("map<string,string>")
-        ),
-        F.create_map(
-            F.lit(KEY_HANS), F.col("__upd_hans"),
-            F.lit(KEY_HANT), F.col("__upd_hant"),
-        ),
-    )
-    return (
-        joined.withColumn(
-            "tags",
-            F.when(F.col("__upd_id").isNotNull(), new_tags).otherwise(
-                F.col("tags")
-            ),
-        )
-        .drop("__upd_id", "__upd_hans", "__upd_hant")
+        "tags", F.when(apply_update, e["new_tags"]).otherwise(F.col("tags"))
     )

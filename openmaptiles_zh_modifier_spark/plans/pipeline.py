@@ -3,28 +3,38 @@
 plan per table -> write back.
 
 The reference processes tables sequentially on one connection with manual
-id-range batching; here each table is ONE DataFrame plan whose parallelism
-comes from file splits, and tables can be submitted concurrently (they
-share the session's scheduler pools). Metrics (S6) come from the engine,
-not hand-counted batches.
+id-range batching; here tables are still processed one after another, but
+each table is ONE DataFrame plan whose parallelism comes from file splits
+(or JDBC range partitions) rather than a client-side batching loop.
+Metrics (S6) come from the engine, not hand-counted batches.
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from openmaptiles_zh_modifier_spark.catalog import (
     classify_all,
+    discover_jdbc_tables,
     discover_parquet_tables,
 )
 from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
     backfill_table,
     updates_frame,
+    updates_frame_with_tags,
 )
-from openmaptiles_zh_modifier_spark.sources.io import write_parquet
+from openmaptiles_zh_modifier_spark.sources.io import (
+    execute_jdbc_update,
+    read_jdbc_partitioned,
+    write_jdbc,
+    write_parquet,
+)
 
 
 @dataclass
@@ -94,8 +104,6 @@ def hstore_text_to_map(col):
     ``NULL`` values become real SQL nulls; ``\"`` and ``\\`` escapes in
     keys/values are unescaped. Duplicate keys collapse LAST_WIN (matches
     hstore || and the session's mapKeyDedupPolicy)."""
-    from pyspark.sql import functions as F
-
     # Mark unquoted NULL values with a sentinel that cannot appear in
     # hstore text (U+0000: PostgreSQL text types reject NUL), so
     # extraction sees uniformly-quoted values. The match is anchored to
@@ -139,8 +147,6 @@ def map_to_hstore_text(col):
     (``"k"=>"v", "k2"=>NULL``) — the exact inverse of hstore_text_to_map,
     with ``\\`` and ``\"`` escaping and unquoted NULL for null values.
     Pure codegen expressions (map_entries -> transform -> array_join)."""
-    from pyspark.sql import functions as F
-
     def esc(c):
         return F.replace(
             F.replace(c, F.lit("\\"), F.lit("\\\\")),
@@ -208,6 +214,43 @@ def _apply_update_sql(
     )
 
 
+def _stage_and_apply(
+    df: DataFrame,
+    url: str,
+    driver: str,
+    table: str,
+    id_field: str,
+    compat_names_typo: bool,
+    staging: str,
+    opts: dict[str, str],
+) -> int:
+    """The JDBC write-back of one source frame (a table scan or one
+    micro-batch) whose ``tags`` column is hstore TEXT: parse it to a map,
+    derive ``(id, hans, hant, new_tags)`` in ONE projection over ONE scan
+    (a join of the updates frame back onto the source would be a second
+    scan, and over a live database two scans are two snapshots), overwrite
+    the ``staging`` table with it, then run ONE set-based server-side
+    ``UPDATE … FROM staging``. Returns the update count the server
+    reports — the telemetry the reference logs per executeBatch."""
+    mapped = df.withColumn("tags", hstore_text_to_map(df["tags"]))
+    staged = updates_frame_with_tags(
+        mapped, id_field, compat_names_typo
+    ).select(
+        id_field,
+        "hans",
+        "hant",
+        map_to_hstore_text(F.col("new_tags_map")).alias("new_tags"),
+    )
+    write_jdbc(staged, url, staging, mode="overwrite", driver=driver, **opts)
+    return execute_jdbc_update(
+        df.sparkSession,
+        url,
+        driver,
+        _apply_update_sql(table, staging, id_field, url),
+        properties=opts or None,
+    )
+
+
 def run_backfill_jdbc(
     spark: SparkSession,
     url: str,
@@ -238,18 +281,6 @@ def run_backfill_jdbc(
     (Derby folds up, PostgreSQL folds down; the reference compares
     lowercase PG names); staging tables are created unquoted next to
     their source schema."""
-    from pyspark.sql import functions as F
-
-    from openmaptiles_zh_modifier_spark.catalog import discover_jdbc_tables
-    from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
-        updates_frame_with_tags,
-    )
-    from openmaptiles_zh_modifier_spark.sources.io import (
-        execute_jdbc_update,
-        read_jdbc_partitioned,
-        write_jdbc,
-    )
-
     raw = discover_jdbc_tables(spark, url, driver, schema_pattern, properties)
     tables: dict[str, DataFrame] = {}
     for name, df in raw.items():
@@ -271,31 +302,15 @@ def run_backfill_jdbc(
             driver=driver,
             **opts,
         ).toDF(*[c.lower() for c in tables[tc.table].columns])
-        mapped = scan.withColumn("tags", hstore_text_to_map(scan["tags"]))
-        # the generic-dialect apply sets the FULL new tags text; derive
-        # (id, hans, hant, new_tags) in ONE projection over ONE scan — a
-        # join of the updates frame back onto the source would be a second
-        # scan, and over a live database two scans are two snapshots.
-        staged_df = updates_frame_with_tags(
-            mapped, tc.id_field, compat_names_typo
-        ).select(
-            tc.id_field,
-            "hans",
-            "hant",
-            map_to_hstore_text(F.col("new_tags_map")).alias("new_tags"),
-        )
-        staging = f"{tc.table}{staging_suffix}"
-        write_jdbc(
-            staged_df, url, staging, mode="overwrite", driver=driver, **opts
-        )
-        # S5 final apply: ONE set-based server-side statement; its update
-        # count is the telemetry the reference logs per executeBatch.
-        n_updated = execute_jdbc_update(
-            spark,
+        n_updated = _stage_and_apply(
+            scan,
             url,
             driver,
-            _apply_update_sql(tc.table, staging, tc.id_field, url),
-            properties=opts or None,
+            tc.table,
+            tc.id_field,
+            compat_names_typo,
+            f"{tc.table}{staging_suffix}",
+            opts,
         )
         report.tables.append(
             TableResult(
@@ -325,62 +340,47 @@ def stream_backfill_to_jdbc(
     re-scans instead, OMTZHModifier.java:120-140), and every micro-batch
     runs the IDENTICAL staging-write + server-side ``UPDATE … FROM
     staging`` path the batch program uses — ``foreachBatch`` hands each
-    micro-batch over as a batch DataFrame, so ``updates_frame_with_tags``
-    / ``map_to_hstore_text`` / ``_apply_update_sql`` are shared, not
-    reimplemented. The staging table is OVERWRITTEN per batch (it is a
-    transport buffer, not a log) and the keyed UPDATE is idempotent on
-    replay — re-deriving the same hans/hant writes the same tags — which
-    is exactly the at-least-once-to-effectively-once story foreachBatch
-    requires.
+    micro-batch over as a batch DataFrame, so both call the one
+    ``_stage_and_apply`` — shared, not reimplemented. The staging table
+    is OVERWRITTEN per batch (it is a transport buffer, not a log) and
+    the keyed UPDATE is idempotent on replay — re-deriving the same
+    hans/hant writes the same tags — which is exactly the
+    at-least-once-to-effectively-once story foreachBatch requires.
+
+    The checkpoint lives in a fresh temporary directory that nothing can
+    resume from, so it is removed once the query ends.
 
     Returns the total server-reported update count across batches (the
     reference's executeBatch tally, OMTZHModifier.java:169-176)."""
-    from pyspark.sql import functions as F
-
-    from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
-        updates_frame_with_tags,
-    )
-    from openmaptiles_zh_modifier_spark.sources.io import (
-        execute_jdbc_update,
-        write_jdbc,
-    )
-
     opts = dict(properties or {})
     staging = f"{table}{staging_suffix}"
     counts: list[int] = []
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        mapped = batch_df.withColumn(
-            "tags", hstore_text_to_map(batch_df["tags"])
-        )
-        staged = updates_frame_with_tags(
-            mapped, id_field, compat_names_typo
-        ).select(
-            id_field,
-            "hans",
-            "hant",
-            map_to_hstore_text(F.col("new_tags_map")).alias("new_tags"),
-        )
-        write_jdbc(staged, url, staging, mode="overwrite", driver=driver, **opts)
         counts.append(
-            execute_jdbc_update(
-                batch_df.sparkSession,
+            _stage_and_apply(
+                batch_df,
                 url,
                 driver,
-                _apply_update_sql(table, staging, id_field, url),
-                properties=opts or None,
+                table,
+                id_field,
+                compat_names_typo,
+                staging,
+                opts,
             )
         )
 
-    import tempfile
-
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="omt-jdbc-ckpt-"))
-        .start()
-    )
-    q.awaitTermination()
+    checkpoint = tempfile.mkdtemp(prefix="omt-jdbc-ckpt-")
+    try:
+        q = (
+            stream_df.writeStream.foreachBatch(apply_batch)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", checkpoint)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return sum(counts)
 
 
@@ -405,17 +405,12 @@ def run_backfill_cow(
     merge must not burn a version number — readers use version deltas as
     a change signal, e.g. the cowtable streaming source).
     """
-    from pyspark.sql import functions as F
-
     from openmaptiles_zh_modifier_spark.catalog import classify_schema
     from openmaptiles_zh_modifier_spark.operators.cow_table import (
         _latest_version,
         _read_manifest,
         cow_merge,
         cow_read,
-    )
-    from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
-        updates_frame_with_tags,
     )
 
     # Pin the snapshot ONCE: read version V, derive from V, merge with
@@ -508,7 +503,6 @@ def stream_upsert_to_cow(
     import os
 
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from openmaptiles_zh_modifier_spark.operators.cow_table import cow_merge
 

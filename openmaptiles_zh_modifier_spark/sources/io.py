@@ -10,10 +10,10 @@ UPDATE write-back (:156-169). Here:
   scan: Spark's partitioned JDBC read generates
   ``WHERE idField BETWEEN lo AND hi`` per task — the same SQL the
   reference emits, but issued concurrently from executors.
-- writers: partitioned/bucketed Parquet (the 100 TB path), ``overwrite``
-  full-rewrite write-back, and a keyed ``write_back_merge`` that rewrites
-  ONLY the partitions that contain updated keys — the lake equivalent of
-  an indexed UPDATE (Delta MERGE compiles to the same shape).
+- writers: partitioned/bucketed Parquet (the 100 TB path), batched JDBC
+  inserts, and ``execute_jdbc_update`` for the server-side keyed UPDATE.
+  The keyed lake write-back (the equivalent of an indexed UPDATE) is
+  ``operators.cow_table.cow_merge``.
 """
 
 from __future__ import annotations
@@ -157,39 +157,6 @@ def execute_jdbc_update(
             st.close()
     finally:
         conn.close()
-
-
-def write_back_overwrite(df: DataFrame, path: str) -> None:
-    """S5 option (b): full-column rewrite of the table (immutable lake
-    semantics). Reads and writes must not overlap a live path — callers
-    stage to a new location or use checkpointed overwrite."""
-    write_parquet(df, path, mode="overwrite")
-
-
-def write_back_merge(
-    spark: SparkSession,
-    base_path: str,
-    updates: DataFrame,
-    id_field: str,
-    apply_update,
-    partition_col: str | None = None,
-) -> DataFrame:
-    """Keyed merge write-back (S5 option a) without Delta: left-join the
-    base with the updates frame and apply ``apply_update(base_df, upd_cols)``.
-
-    When ``partition_col`` is given, only partitions containing updated
-    keys are rewritten (partition-pruned merge — the scale path; Delta's
-    MERGE file-pruning is the same idea at file granularity). Returns the
-    merged frame; caller writes it with write_back_overwrite / per-partition
-    overwrite."""
-    base = spark.read.parquet(base_path)
-    if partition_col is not None:
-        touched = [
-            r[0]
-            for r in updates.select(partition_col).distinct().collect()
-        ]
-        base = base.where(F.col(partition_col).isin(touched))
-    return apply_update(base, F.broadcast(updates))
 
 
 def compact_parquet(

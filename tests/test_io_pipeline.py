@@ -18,7 +18,6 @@ from openmaptiles_zh_modifier_spark.sources.io import (
     read_csv,
     read_json,
     read_parquet,
-    write_back_merge,
     write_parquet,
 )
 
@@ -112,27 +111,6 @@ def test_run_backfill_end_to_end(spark, lake, tmp_path):
     assert got[3]["name:zh-Hans"] == "北京"
     assert got[4]["name:zh-Hans"] == "头发"  # untouched
     assert report.records_per_sec() > 0
-
-
-def test_write_back_merge_partition_pruned(spark, tmp_path):
-    base_p = str(tmp_path / "base")
-    base = spark.createDataFrame(
-        [(i, i % 4, f"v{i}") for i in range(40)], "id long, part long, val string"
-    )
-    write_parquet(base, base_p, partition_by=["part"])
-    updates = spark.createDataFrame([(3, 3 % 4, "NEW")], "id long, part long, newval string")
-
-    def apply(b, u):
-        j = b.join(u.select("id", "newval"), "id", "left")
-        return j.withColumn("val", F.coalesce("newval", "val")).drop("newval")
-
-    merged = write_back_merge(
-        spark, base_p, updates, "id", apply, partition_col="part"
-    )
-    rows = {r.id: r.val for r in merged.collect()}
-    # only partition 3 was read/rewritten
-    assert set(r.part for r in merged.select("part").distinct().collect()) == {3}
-    assert rows[3] == "NEW" and rows[7] == "v7"
 
 
 def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):

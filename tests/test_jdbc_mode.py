@@ -5,6 +5,10 @@ write-back to a staging table."""
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
 from pyspark.sql import functions as F
 
 from openmaptiles_zh_modifier_spark.registry import zh_backfill_transform
@@ -228,8 +232,12 @@ def test_stream_backfill_jdbc_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "2")
         .parquet(src_dir)
     )
+    ckpts = os.path.join(tempfile.gettempdir(), "omt-jdbc-ckpt-*")
+    before = set(glob.glob(ckpts))
     n = stream_backfill_to_jdbc(stream, url_s, "app.poi", "id", DRIVER)
     assert n == 3  # same server-side update tally as the batch run
+    # the throwaway checkpoint is removed once the query ends
+    assert set(glob.glob(ckpts)) == before
 
     def final_tags(url):
         df = (

@@ -168,3 +168,25 @@ def test_bench_panel_names_stay_registered():
     missing = [q for q in bench.PANEL if q not in QUERIES]
     assert missing == [], missing
     assert len(bench.PANEL) == 30
+
+
+def test_local_frame_parses_ddl_names_and_keeps_integers_exact(spark):
+    """``local_frame`` takes column names from Spark's DDL parse, so a
+    type with a comma (``decimal(10,2)``) does not split a column in two,
+    and a None in a bigint column does not round its other values
+    through float64 (2**53 + 1 is not representable as a double)."""
+    from decimal import Decimal
+
+    from openmaptiles_zh_modifier_spark.registry import local_frame
+
+    big = 2**53 + 1
+    df = local_frame(
+        spark,
+        [(big, Decimal("1.25")), (None, None)],
+        "a bigint, d decimal(10,2)",
+    )
+    assert df.schema.simpleString() == "struct<a:bigint,d:decimal(10,2)>"
+    assert [tuple(r) for r in df.collect()] == [
+        (big, Decimal("1.25")),
+        (None, None),
+    ]

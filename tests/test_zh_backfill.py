@@ -22,8 +22,8 @@ from openmaptiles_zh_modifier_spark.functions.zh import (
 )
 from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
     backfill_table,
-    merge_backfill,
     updates_frame,
+    updates_frame_with_tags,
 )
 
 SCHEMA = StructType(
@@ -130,15 +130,6 @@ def to_trad_py(s: str) -> str:
     for src, dst in _phrase_order(S2T_PHRASES):
         s = s.replace(src, dst)
     return s.translate(str.maketrans(S2T_FROM, S2T_TO))
-
-
-def test_merge_backfill_equals_inline_backfill(spark, lattice_df):
-    upd = updates_frame(lattice_df)
-    via_merge = merge_backfill(lattice_df, upd, broadcast_updates=True)
-    via_inline = backfill_table(lattice_df)
-    a = {r["id"]: r["tags"] for r in via_merge.collect()}
-    b = {r["id"]: r["tags"] for r in via_inline.collect()}
-    assert a == b
 
 
 def test_is_han_non_bmp(spark):
@@ -360,29 +351,57 @@ def test_opencc_divergence_envelope(spark):
     assert diverged == []
 
 
-def test_updates_frame_with_tags_consistent(spark, lattice_df):
+@pytest.mark.parametrize("compat_names_typo", [False, True])
+def test_updates_frame_with_tags_consistent(
+    spark, lattice_df, compat_names_typo
+):
     """The single-scan (id, hans, hant, new_tags_map) frame must select
     exactly the rows updates_frame selects, with identical hans/hant, and
     its new_tags_map must equal what backfill_table writes for those rows
-    — the three write-back forms are views of one derivation."""
-    from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
-        updates_frame_with_tags,
+    — the three write-back forms are views of one derivation, in both
+    compat modes. Row 12 (hans missing, hant present) is the row the B1
+    typo mode regenerates differently."""
+    df = lattice_df.union(
+        mk(
+            spark,
+            [Row(id=12, name="x", tags={"name:zh": "理发", "name:zh-Hant": "X"})],
+        )
     )
-
     upd = {
         r["id"]: (r["hans"], r["hant"])
-        for r in updates_frame(lattice_df).collect()
+        for r in updates_frame(
+            df, compat_names_typo=compat_names_typo
+        ).collect()
     }
     with_tags = {
         r["id"]: (r["hans"], r["hant"], r["new_tags_map"])
-        for r in updates_frame_with_tags(lattice_df).collect()
+        for r in updates_frame_with_tags(
+            df, compat_names_typo=compat_names_typo
+        ).collect()
     }
     assert {i: v[:2] for i, v in with_tags.items()} == upd
+    assert upd[12][1] == ("理髮" if compat_names_typo else "X")
     rewritten = {
-        r["id"]: r["tags"] for r in backfill_table(lattice_df).collect()
+        r["id"]: r["tags"]
+        for r in backfill_table(
+            df, compat_names_typo=compat_names_typo
+        ).collect()
     }
     for i, (_, _, new_tags) in with_tags.items():
         assert new_tags == rewritten[i], i
+
+
+def test_backfill_plans_are_shuffle_free(spark, lattice_df, tmp_path):
+    """The module contract: over a parquet scan, the rewrite and the
+    single-scan changed-rows frame execute map-side only — no Exchange,
+    no Join in the executed plan."""
+    path = str(tmp_path / "lattice.parquet")
+    lattice_df.write.parquet(path)
+    df = spark.read.parquet(path)
+    for out in (backfill_table(df), updates_frame_with_tags(df)):
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan and "Join" not in plan, plan
 
 
 def test_typo_compat_gate_query_diverges_by_mode(spark):
