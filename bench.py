@@ -142,17 +142,20 @@ def main() -> None:
         timings[name] = round(t, 4)
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
 
-    # Panel noise resistance (VERDICT r13 #9): two EXTRA reps of each
-    # fixed-panel query, reported as per-query min-of-3 in additional
-    # trailing keys — a driver window with 1.2-1.4x co-tenant CPU drift
-    # (the r12->r13 controls) stops producing phantom "regressions" on
-    # untouched lineage. The main `queries` numbers are untouched: same
-    # loop, same methodology, same keys as every prior round.
+    # Panel noise resistance (VERDICT r13 #9): three fresh reps of each
+    # fixed-panel query after the main loop, reported as per-query
+    # min-of-3 in additional trailing keys — a bench window with
+    # 1.2-1.4x co-tenant CPU drift (the r12->r13 controls) stops
+    # producing phantom "regressions" on untouched lineage. The reps do
+    # not reuse timings[q], which is already a min-of-2 for queries over
+    # 1 s, so every panel query is a min over exactly 3 runs. The main
+    # `queries` numbers are untouched: same loop, same methodology, same
+    # keys as every prior round.
     panel_min3 = {}
     for q in PANEL:
         if q not in timings:
             continue
-        reps = [timings[q], run_once(q, QUERIES[q]), run_once(q, QUERIES[q])]
+        reps = [run_once(q, QUERIES[q]) for _ in range(3)]
         panel_min3[q] = round(min(reps), 4)
     # end-of-window control reps — bracketing the whole run catches load
     # that arrived mid-window (start-only reads would miss it)

@@ -56,22 +56,28 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
 
 
 def lazy_checkpoint(df: DataFrame) -> DataFrame:
-    """LAZY localCheckpoint with the same fresh-stats leaf rebuild as
-    :func:`eager_checkpoint` (round 14).
+    """``localCheckpoint(eager=False)`` with the same fresh-stats leaf
+    rebuild as :func:`eager_checkpoint` (round 14).
 
-    Semantics: ``localCheckpoint(eager=False)`` marks the plan's RDD
-    for MEMORY_AND_DISK persistence WITHOUT running a job — the first
-    action materializes it, later references (including multiple
-    references inside the SAME action, e.g. a loop state consumed by
-    both the next round and a per-round census leg) read the persisted
-    blocks. Compared to ``eager_checkpoint`` inside an iterative loop
-    this keeps the registered-query contract LAZY (zero jobs at
-    construction — the tools/type_audit.py gate) and collapses the
-    per-round materialization jobs into stages of the one real action,
-    while still truncating the retained logical lineage to a LogicalRDD
-    leaf per round. Nothing survives the returned frame: the RDD is
-    per-call, unpersisted by the ContextCleaner when the frame is
-    dropped — a repeat timed run rebuilds from the parquet inputs."""
+    It is NOT lazy under adaptive query execution, which is this
+    session's default: ``localCheckpoint(eager=False)`` takes the plan's
+    RDD, and building it makes AQE materialize every non-result
+    (shuffle) stage of ``df`` at call time. Only the final result stage
+    is deferred — the first action runs it and persists its blocks
+    (MEMORY_AND_DISK). So a caller pays Spark jobs at construction for
+    every exchange in ``df`` (measured: q_bfs_reachability 13 jobs,
+    q_cow_merge_dv 5 jobs), and tools/type_audit.py's zero-jobs-at-
+    construction gate does not hold for its callers.
+
+    What it does buy: the retained logical lineage is truncated to a
+    LogicalRDD leaf with session-default stats (so an iterative loop
+    neither grows its plan nor squares its size estimate), and later
+    references — including several references inside the SAME action,
+    e.g. a loop state read by both the next round and a per-round
+    census leg — read the persisted blocks instead of recomputing.
+    Nothing survives the returned frame: the RDD is per-call and the
+    ContextCleaner unpersists it when the frame is dropped, so a repeat
+    timed run rebuilds from the parquet inputs."""
     cp = df.localCheckpoint(eager=False)
     try:
         return _fresh_logical_rdd(cp)

@@ -49,6 +49,44 @@ KEY_HANT = "name:zh-Hant"
 KEY_HANT_TYPO = "names:zh-Hant"  # B1: the reference's misspelled read key
 
 
+def _predicate_exprs(compat_names_typo: bool) -> dict[str, Column]:
+    """The dictionary-free part of the derivation: the zh source, the
+    old variants, and the predicates that decide which rows the
+    write-back changes (``applies``)."""
+    name = F.col("name")
+    tags = F.col("tags")
+    hant_read_key = KEY_HANT_TYPO if compat_names_typo else KEY_HANT
+
+    # P4 residual: zh source = tags['name:zh'], else name when it is a
+    # non-empty Han-script string (OMTZHModifier.java:209-218). Map-key
+    # extraction (element_at) is hstore ``->``.
+    name_usable = name.isNotNull() & (name != F.lit("")) & is_han(name)
+    zh = F.coalesce(tags[KEY_ZH], F.when(name_usable, name))
+
+    # P5: '' and NULL are the same "missing" state (:220-225).
+    hans_old = nullif_empty(tags[KEY_HANS])
+    hant_old = nullif_empty(tags[hant_read_key])
+
+    # Server-side WHERE (P2, OMTZHModifier.java:137-138): has some name
+    # source AND at least one zh variant missing. Uses the CORRECT keys
+    # even in typo mode — the reference's WHERE is spelled right; only
+    # the SELECT is not.
+    qualifies = (name.isNotNull() | tags[KEY_ZH].isNotNull()) & (
+        tags[KEY_HANT].isNull() | tags[KEY_HANS].isNull()
+    )
+    # F6 changed-row flag (:207,237-244).
+    needs_update = hans_old.isNull() | hant_old.isNull()
+    return {
+        "qualifies": qualifies,
+        "zh": zh,
+        "hans_old": hans_old,
+        "hant_old": hant_old,
+        "needs_update": needs_update,
+        # the update predicate: the rows the write-back changes
+        "applies": qualifies & zh.isNotNull() & needs_update,
+    }
+
+
 def _zh_exprs(compat_names_typo: bool, tables) -> dict[str, Column]:
     """The back-fill derivation, spelled once: named column expressions
     over ``name`` / ``tags`` that every public form below selects from.
@@ -64,36 +102,16 @@ def _zh_exprs(compat_names_typo: bool, tables) -> dict[str, Column]:
         if tables is CURATED
         else (tables if tables is not None else opencc_tables_from_env())
     )
-    name = F.col("name")
+    e = _predicate_exprs(compat_names_typo)
     tags = F.col("tags")
-    hant_read_key = KEY_HANT_TYPO if compat_names_typo else KEY_HANT
 
-    # P4 residual: zh source = tags['name:zh'], else name when it is a
-    # non-empty Han-script string (OMTZHModifier.java:209-218). Map-key
-    # extraction (element_at) is hstore ``->``.
-    name_usable = name.isNotNull() & (name != F.lit("")) & is_han(name)
-    zh = F.coalesce(tags[KEY_ZH], F.when(name_usable, name))
-
-    # P5: '' and NULL are the same "missing" state (:220-225).
-    hans_old = nullif_empty(tags[KEY_HANS])
-    hant_old = nullif_empty(tags[hant_read_key])
-
-    # F5 coalesce cascade (:227-235) + F6 changed-row flag (:207,237-244).
-    hans = F.coalesce(hans_old, to_simplified(zh, tables))
-    hant = F.coalesce(hant_old, to_traditional(zh, tables))
+    # F5 coalesce cascade (:227-235).
+    hans = F.coalesce(e["hans_old"], to_simplified(e["zh"], tables))
+    hant = F.coalesce(e["hant_old"], to_traditional(e["zh"], tables))
     return {
-        # Server-side WHERE (P2, OMTZHModifier.java:137-138): has some
-        # name source AND at least one zh variant missing. Uses the
-        # CORRECT keys even in typo mode — the reference's WHERE is
-        # spelled right; only the SELECT is not.
-        "qualifies": (name.isNotNull() | tags[KEY_ZH].isNotNull())
-        & (tags[KEY_HANT].isNull() | tags[KEY_HANS].isNull()),
-        "zh": zh,
-        "hans_old": hans_old,
-        "hant_old": hant_old,
+        **e,
         "hans": hans,
         "hant": hant,
-        "needs_update": hans_old.isNull() | hant_old.isNull(),
         # F7: hstore ``||`` — LAST_WIN map_concat, right operand wins.
         "new_tags": F.map_concat(
             F.coalesce(tags, F.create_map().cast("map<string,string>")),
@@ -143,8 +161,10 @@ def updates_frame(
     """The changed-rows frame ``(id_field, hans, hant)`` — the engine's
     equivalent of the reference's List<ChineseValues> per batch
     (OMTZHModifier.java:140-152), but computed distributed and lazy."""
-    derived = derive_zh_columns(df, id_field, compat_names_typo, tables)
-    return derived.where(F.col("needs_update")).select(id_field, "hans", "hant")
+    e = _zh_exprs(compat_names_typo, tables)
+    return df.where(e["applies"]).select(
+        F.col(id_field), e["hans"].alias("hans"), e["hant"].alias("hant")
+    )
 
 
 def updates_frame_with_tags(
@@ -161,15 +181,11 @@ def updates_frame_with_tags(
     hans/hant from one snapshot with tags from another silently loses
     concurrent writes."""
     e = _zh_exprs(compat_names_typo, tables)
-    return (
-        df.where(e["qualifies"])
-        .where(e["zh"].isNotNull() & e["needs_update"])
-        .select(
-            F.col(id_field),
-            e["hans"].alias("hans"),
-            e["hant"].alias("hant"),
-            e["new_tags"].alias("new_tags_map"),
-        )
+    return df.where(e["applies"]).select(
+        F.col(id_field),
+        e["hans"].alias("hans"),
+        e["hant"].alias("hant"),
+        e["new_tags"].alias("new_tags_map"),
     )
 
 
@@ -188,7 +204,19 @@ def backfill_table(
     joining it back. Every other column is passed through untouched.
     """
     e = _zh_exprs(compat_names_typo, tables)
-    apply_update = e["qualifies"] & e["zh"].isNotNull() & e["needs_update"]
     return df.withColumn(
-        "tags", F.when(apply_update, e["new_tags"]).otherwise(F.col("tags"))
+        "tags", F.when(e["applies"], e["new_tags"]).otherwise(F.col("tags"))
+    )
+
+
+def backfill_counts(compat_names_typo: bool = False) -> tuple[Column, Column]:
+    """Aggregates ``(n_updated, n_rows)`` over a SOURCE frame: the rows
+    :func:`backfill_table` changes, and all rows. Evaluate them over the
+    frame before the rewrite (afterwards the changed rows no longer
+    qualify), e.g. as an ``Observation`` on the frame being written.
+    The update predicate does not read the dictionaries."""
+    applies = _predicate_exprs(compat_names_typo)["applies"]
+    return (
+        F.count_if(applies).alias("n_updated"),
+        F.count(F.lit(1)).alias("n_rows"),
     )

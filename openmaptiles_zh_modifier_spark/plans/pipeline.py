@@ -16,7 +16,7 @@ import tempfile
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from openmaptiles_zh_modifier_spark.catalog import (
@@ -25,8 +25,8 @@ from openmaptiles_zh_modifier_spark.catalog import (
     discover_parquet_tables,
 )
 from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
+    backfill_counts,
     backfill_table,
-    updates_frame,
     updates_frame_with_tags,
 )
 from openmaptiles_zh_modifier_spark.sources.io import (
@@ -71,19 +71,34 @@ def run_backfill(
     """Discover every parquet table under ``lake_root``, classify by schema
     (id/osm_id precedence B4), back-fill qualifying tables, and (optionally)
     write the rewritten tables under ``out_root``. Non-qualifying tables are
-    skipped exactly like the reference skips them."""
+    skipped exactly like the reference skips them.
+
+    One pass per table, like the reference's scan → derive → UPDATE loop
+    that tallies update counts as it writes: ``n_updated`` and ``n_rows``
+    come from an ``Observation`` on the frame being written (without
+    ``out_root``, from one aggregate over the source), not from extra
+    count and read-back jobs. The observed counts are exact: the
+    back-fill plan is shuffle-free (pinned by
+    tests/test_zh_backfill.py::test_backfill_plans_are_shuffle_free), so
+    the metrics are collected in the write's result stage, where Spark
+    applies each successful task's accumulator update exactly once, even
+    when a task is retried."""
     tables = discover_parquet_tables(spark, lake_root)
     report = RunReport()
     for tc in classify_all(tables):
         df = tables[tc.table]
         t0 = time.perf_counter()
-        n_updated = updates_frame(df, tc.id_field, compat_names_typo).count()
-        result = backfill_table(df, tc.id_field, compat_names_typo)
+        counts = backfill_counts(compat_names_typo)
         if out_root is not None:
+            obs = Observation()
+            result = backfill_table(
+                df.observe(obs, *counts), tc.id_field, compat_names_typo
+            )
             write_parquet(result, f"{out_root}/{tc.table}.parquet")
-            n_rows = spark.read.parquet(f"{out_root}/{tc.table}.parquet").count()
+            got = obs.get
+            n_updated, n_rows = got["n_updated"], got["n_rows"]
         else:
-            n_rows = result.count()
+            n_updated, n_rows = df.agg(*counts).first()
         report.tables.append(
             TableResult(
                 tc.table,
@@ -274,9 +289,11 @@ def run_backfill_jdbc(
 
     Telemetry counts the rows the server reports UPDATED (the statement's
     update count — the reference's executeBatch tally, :169-176), not a
-    separate pre-write scan. Tables whose name already ends with
-    ``staging_suffix`` are skipped (the distinctive default makes a
-    user-table collision unlikely; pass another suffix if needed).
+    separate pre-write scan, and ``n_rows`` is observed on the same
+    partitioned scan the staging write reads (no second scan). Tables
+    whose name already ends with ``staging_suffix`` are skipped (the
+    distinctive default makes a user-table collision unlikely; pass
+    another suffix if needed).
     Column/table case is normalized to lowercase for classification
     (Derby folds up, PostgreSQL folds down; the reference compares
     lowercase PG names); staging tables are created unquoted next to
@@ -302,6 +319,10 @@ def run_backfill_jdbc(
             driver=driver,
             **opts,
         ).toDF(*[c.lower() for c in tables[tc.table].columns])
+        # n_rows is observed during the staging write: the same snapshot
+        # the update is derived from, without a second scan
+        obs = Observation()
+        scan = scan.observe(obs, F.count(F.lit(1)).alias("n_rows"))
         n_updated = _stage_and_apply(
             scan,
             url,
@@ -316,7 +337,7 @@ def run_backfill_jdbc(
             TableResult(
                 tc.table,
                 tc.id_field,
-                scan.count(),
+                obs.get["n_rows"],
                 n_updated,
                 round(time.perf_counter() - t0, 4),
             )

@@ -557,10 +557,11 @@ def q_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundary (operators/lineage.py) truncates the plan instead.
     # Round 14 (VERDICT r13 #1): the finished distance table is NOT
     # memoized — every invocation rebuilds it, so timed runs measure
-    # the computation — and the boundary is now lazy_checkpoint, so the
-    # plan stays a lazy one-action pipeline (the per-round eager
-    # materialization jobs collapse into stages of the real action) and
-    # the query keeps the zero-jobs-at-construction contract. A
+    # the computation — and the boundary is now lazy_checkpoint. Under
+    # AQE that is not deferred execution: each round's shuffle stages
+    # run at construction (13 jobs for this query), and only each
+    # round's result stage waits for the real action. What it buys is
+    # lineage truncation plus reuse of the persisted blocks. A
     # boundary lands EVERY round: the relax's two reads of the previous
     # state serialize (the outer merge depends on nbr_min), so the
     # persisted blocks are always reused, and measured variants read

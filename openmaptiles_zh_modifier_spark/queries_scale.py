@@ -1677,10 +1677,10 @@ def q_cow_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # does not dedupe identical subtrees across a union, so without a
     # boundary each leg re-runs the full change-feed scan. Round 14
     # (VERDICT r13 #1, second-order): per-call lazy_checkpoint instead
-    # of a session-lifetime memo — intra-query common-subexpression
-    # elimination (the one real action materializes the CDF once, both
-    # legs read the persisted blocks) without making a repeat timed run
-    # a cache read, and without eager jobs at construction.
+    # of a session-lifetime memo — the CDF is computed once and both
+    # legs read the persisted blocks, without making a repeat timed run
+    # a cache read. It is not free at construction: under AQE the CDF's
+    # shuffle stages run inside the lazy_checkpoint call (5 jobs).
     from openmaptiles_zh_modifier_spark.operators.lineage import (
         lazy_checkpoint,
     )

@@ -13,6 +13,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from openmaptiles_zh_modifier_spark.operators.zh_backfill import updates_frame
 from openmaptiles_zh_modifier_spark.plans.pipeline import run_backfill
 from openmaptiles_zh_modifier_spark.sources.io import (
     read_csv,
@@ -111,6 +112,55 @@ def test_run_backfill_end_to_end(spark, lake, tmp_path):
     assert got[3]["name:zh-Hans"] == "北京"
     assert got[4]["name:zh-Hans"] == "头发"  # untouched
     assert report.records_per_sec() > 0
+
+
+@pytest.mark.parametrize("compat_names_typo", [False, True])
+@pytest.mark.parametrize("write", [False, True], ids=["no_out", "out"])
+def test_run_backfill_counts_match_recount(
+    spark, lake, tmp_path, compat_names_typo, write
+):
+    """The counts run_backfill takes while writing (an Observation) or
+    from one aggregate (no out_root) equal a separate recount: n_updated
+    is the updates_frame row count, n_rows the rows read back. The
+    extra table holds the B7 '' / NULL mixes and a B1 typo-key row."""
+    quirks = [
+        Row(id=1, name="理发", tags={"name:zh-Hans": "", "name:zh-Hant": ""}),
+        Row(id=2, name="理发", tags={"name:zh-Hans": "", "name:zh-Hant": None}),
+        Row(id=3, name="理发", tags={"name:zh-Hant": "X"}),
+        Row(id=4, name="理发", tags={"names:zh-Hant": "Y"}),
+        Row(id=5, name=None, tags=None),
+        Row(id=6, name="", tags={}),
+    ]
+    spark.createDataFrame(quirks, ZH_SCHEMA).write.parquet(
+        f"{lake}/quirks.parquet"
+    )
+    out = str(tmp_path / "out") if write else None
+    report = run_backfill(spark, lake, out, compat_names_typo)
+    assert {t.table for t in report.tables} == {"poi", "roads", "quirks"}
+    for t in report.tables:
+        src = read_parquet(spark, f"{lake}/{t.table}.parquet")
+        want = updates_frame(src, t.id_field, compat_names_typo).count()
+        assert t.n_updated == want, t
+        back = read_parquet(spark, f"{out}/{t.table}.parquet") if write else src
+        assert t.n_rows == back.count(), t
+
+
+def test_run_backfill_one_job_per_table(spark, lake, tmp_path):
+    """One pass per table: discovery reads each table's schema (at most
+    one job per discovered table) and each qualifying table is written
+    by ONE job that also yields its counts — no separate count job and
+    no read-back."""
+    sc = spark.sparkContext
+    group = "run-backfill-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        report = run_backfill(spark, lake, str(tmp_path / "out"))
+    finally:
+        sc.setJobGroup(None, None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    n_discovered = 3  # poi, roads, plain
+    assert len(report.tables) == 2
+    assert n_jobs <= n_discovered + len(report.tables), n_jobs
 
 
 def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):

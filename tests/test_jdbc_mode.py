@@ -147,7 +147,13 @@ def test_run_backfill_jdbc_end_to_end(spark):
     write_jdbc(roads, url, "roads", mode="overwrite", driver=DRIVER)
     write_jdbc(plain, url, "plain", mode="overwrite", driver=DRIVER)
 
-    report = run_backfill_jdbc(spark, url, DRIVER, schema_pattern="APP")
+    sc = spark.sparkContext
+    group = "run-backfill-jdbc-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        report = run_backfill_jdbc(spark, url, DRIVER, schema_pattern="APP")
+    finally:
+        sc.setJobGroup(None, None)
     by_table = {t.table: t for t in report.tables}
     # keys are schema-qualified (two schemas may hold same-named tables)
     assert set(by_table) == {"app.poi", "app.roads"}  # plain skipped (S2)
@@ -155,7 +161,22 @@ def test_run_backfill_jdbc_end_to_end(spark):
     assert by_table["app.roads"].id_field == "osm_id"  # B4 classes
     assert by_table["app.poi"].n_updated == 2
     assert by_table["app.roads"].n_updated == 1
+    # n_rows is observed on the scan the staging write reads
+    assert by_table["app.poi"].n_rows == poi.count()
+    assert by_table["app.roads"].n_rows == roads.count()
     assert report.records_per_sec() > 0               # S6 telemetry
+    # per table: the min/max bounds probe (a map and a result job under
+    # AQE) and the staging write — no second partitioned scan to count
+    # rows after the UPDATE
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) <= 3 * len(report.tables), len(jobs)
+    for job in jobs:
+        stage_ids = tracker.getJobInfo(job).stageIds
+        infos = (tracker.getStageInfo(s) for s in stage_ids)
+        # the status store may already have evicted a skipped stage
+        names = {i.name for i in infos if i is not None}
+        assert all(n.startswith(("first at", "jdbc at")) for n in names), names
 
     staged = (
         spark.read.format("jdbc")

@@ -466,3 +466,57 @@ def test_typo_compat_gate_query_diverges_by_mode(spark):
         else:
             assert faithful[doc_id] == hant
     assert saw >= 2
+
+
+def test_curated_fold_equals_duckdb_twin_on_every_phrase(spark):
+    """The Spark phrase fold (indexed constant arrays) and its DuckDB
+    twin (split_part over joined pairs) are spelled differently; pin
+    them equal on every curated phrase source and target, bare, inside
+    a neutral Han context and at both string ends, plus NULL and ''."""
+    import duckdb
+    import pyarrow as pa
+
+    from openmaptiles_zh_modifier_spark.functions.zh import (
+        _S2T_RULED_PAIRS,
+        S2T_FROM,
+        T2S_FROM,
+        T2S_PHRASES,
+        to_simplified_sql,
+        to_traditional_sql,
+    )
+
+    pairs = T2S_PHRASES + _S2T_RULED_PAIRS
+    words = sorted({w for pair in pairs for w in pair})
+    used = set("".join(words) + T2S_FROM + S2T_FROM)
+    ctx = next(ch for ch in "之乎者也丁七丈" if ch not in used)
+    texts = [None, ""] + [
+        form
+        for w in words
+        for form in (w, f"{ctx}{w}{ctx}", f"{w}{ctx}", f"{ctx}{w}")
+    ]
+    rows = list(enumerate(texts))
+
+    df = spark.createDataFrame(rows, "i int, v string")
+    got = {
+        r.i: (r.s, r.t)
+        for r in df.select(
+            "i",
+            to_simplified("v").alias("s"),
+            to_traditional("v").alias("t"),
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.register(
+        "src",
+        pa.table({"i": [i for i, _ in rows], "v": [v for _, v in rows]}),
+    )
+    want = {
+        i: (s, t)
+        for i, s, t in con.execute(
+            f"SELECT i, {to_simplified_sql('v')}, {to_traditional_sql('v')}"
+            " FROM src"
+        ).fetchall()
+    }
+    assert len(got) == len(rows) > 4 * len(pairs)
+    diff = {texts[i]: (got[i], want[i]) for i in got if got[i] != want[i]}
+    assert diff == {}
