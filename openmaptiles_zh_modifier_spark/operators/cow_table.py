@@ -68,6 +68,13 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from openmaptiles_zh_modifier_spark.operators.merge import (
+    _check_source_unique,
+    _key_cond,
+    _key_pairs,
+    merge_into,
+)
+
 _MANIFEST_DIR = "_manifests"
 _PV = "__cow_pv"  # duplicated partition column: directory AND data
 _ANON_TXN = "__anon__"  # stream commits without a caller-supplied txn id
@@ -178,6 +185,33 @@ def _commit_manifest(root: str, manifest: dict) -> None:
             ) from exc
     finally:
         os.unlink(tmp)
+
+
+# Table metadata every next version carries forward from its
+# predecessor unless the commit overrides it.
+_TABLE_META = (
+    "partition_by", "schema", "column_mapping", "retired_physical", "constraints",
+)
+
+
+def _commit_next(root: str, m: dict, files: list, **meta) -> int:
+    """Publish the version after ``m``: ``files`` plus ``m``'s table
+    metadata with ``meta`` overriding per key. An override of None
+    drops the key, except ``partition_by``, which is always written
+    (None = unpartitioned). Extra keys (``stream_txns``) pass through.
+    Returns the committed version."""
+    nxt = {k: m[k] for k in _TABLE_META if k in m}
+    nxt.update(meta)
+    version = m["version"] + 1
+    _commit_manifest(
+        root,
+        {
+            "version": version,
+            "files": files,
+            **{k: v for k, v in nxt.items() if v is not None or k == "partition_by"},
+        },
+    )
+    return version
 
 
 def _write_commit(
@@ -519,69 +553,42 @@ def cow_merge(
     read-derive-merge TOCTOU). Default (None) merges onto the latest
     version, which is only safe when the source was derived
     independently of the table's current contents."""
-    from openmaptiles_zh_modifier_spark.operators.merge import merge_into
-
     if strategy not in ("cow", "dv", "auto"):
         raise ValueError(f"cow_merge: unknown strategy {strategy!r}")
 
     m = _read_manifest(root, base_version)
-    part_col = m["partition_by"]
-    next_version = m["version"] + 1
-
-    if strategy != "cow":
-        affected, keep = _merge_affected(source, m)
-        if strategy == "auto":
-            strategy = _pick_merge_strategy(
-                spark, root, m, source, on, affected,
-                matched_update, matched_delete, dv_matched_threshold,
-            )
-        if strategy == "dv":
-            return _merge_dv(
-                spark, root, m, source, on,
-                matched_update, matched_delete, not_matched_insert,
-                affected,
-            )
-
-    if part_col is None:
-        # unpartitioned: the whole table is one copy-on-write unit
-        base = cow_read(spark, root, version=m["version"])
-        merged = merge_into(
-            base, source, on, matched_update, matched_delete, not_matched_insert
+    affected, keep = _merge_affected(source, m)
+    if strategy == "auto":
+        strategy = _pick_merge_strategy(
+            spark, root, m, source, on, affected,
+            matched_update, matched_delete, dv_matched_threshold,
         )
-        new_files = _write_commit(_to_physical(merged, m), root, None)
-        _validate_constraints(spark, root, m, new_files)
-        keep: list[dict] = []
-    else:
-        affected, keep = _merge_affected(source, m)
-        # manifest schema is authoritative (not a sampled footer):
-        # pre-evolution files must project their missing columns as
-        # NULL, or a rewrite would silently drop evolved columns
-        base = _read_files(spark, root, m, affected)
-        merged = merge_into(
-            base, source, on, matched_update, matched_delete, not_matched_insert
+    if strategy == "dv":
+        return _merge_dv(
+            spark, root, m, source, on,
+            matched_update, matched_delete, not_matched_insert,
+            affected,
         )
-        new_files = _write_commit(
-            _to_physical(merged, m), root, _physical_name(m, part_col)
-        )
-        _validate_constraints(spark, root, m, new_files)
 
-    manifest = {
-        "version": next_version,
-        "partition_by": part_col,
-        "files": keep + new_files,
-        "schema": m["schema"],
-    }
-    for k in ("column_mapping", "retired_physical", "constraints"):
-        if k in m:
-            manifest[k] = m[k]
-    _commit_manifest(root, manifest)
-    return next_version
+    # manifest schema is authoritative (not a sampled footer):
+    # pre-evolution files must project their missing columns as
+    # NULL, or a rewrite would silently drop evolved columns
+    base = _read_files(spark, root, m, affected)
+    merged = merge_into(
+        base, source, on, matched_update, matched_delete, not_matched_insert
+    )
+    new_files = _write_commit(
+        _to_physical(merged, m), root, _physical_name(m, m["partition_by"])
+    )
+    _validate_constraints(spark, root, m, new_files)
+    return _commit_next(root, m, keep + new_files)
 
 
 def _merge_affected(source: DataFrame, m: dict) -> tuple[list, list]:
     """Partition-prune a merge: (affected entries, untouched entries).
-    Unpartitioned tables treat the whole table as affected. Bounded
-    collect: one value per touched partition."""
+    Unpartitioned tables treat the whole table as affected — one
+    copy-on-write unit. Bounded collect: one value per touched
+    partition."""
     part_col = m["partition_by"]
     if part_col is None:
         return list(m["files"]), []
@@ -607,14 +614,6 @@ def _merge_affected(source: DataFrame, m: dict) -> tuple[list, list]:
     return affected, keep
 
 
-def _merge_key_pairs(on) -> list[tuple[str, str]]:
-    """Normalize ``on`` to [(target_col, source_col)] — merge_into's
-    contract."""
-    if isinstance(on, str):
-        on = [on]
-    return list(on.items()) if isinstance(on, dict) else [(k, k) for k in on]
-
-
 def _pick_merge_strategy(
     spark: SparkSession,
     root: str,
@@ -633,8 +632,6 @@ def _pick_merge_strategy(
     counts (metadata only, bounded by file count — an upper bound that
     ignores already-DV'd positions, which only biases TOWARD the cow
     rewrite, the safe side)."""
-    from functools import reduce
-
     import pyarrow.parquet as pq
 
     if matched_update is None and matched_delete is None:
@@ -647,14 +644,9 @@ def _pick_merge_strategy(
             return "cow"  # unreadable footer: be conservative
     if total == 0:
         return "dv"
-    key_pairs = _merge_key_pairs(on)
     base = _read_files(spark, root, m, affected).alias("t")
-    s = source.alias("s")
-    cond = reduce(
-        Column.__and__,
-        [F.col(f"t.{tc}") == F.col(f"s.{sc}") for tc, sc in key_pairs],
-    )
-    matched = base.join(s, cond, "left_semi").count()
+    cond = _key_cond(_key_pairs(on))
+    matched = base.join(source.alias("s"), cond, "left_semi").count()
     return "dv" if matched / total <= threshold else "cow"
 
 
@@ -685,20 +677,15 @@ def _merge_dv(
     list and the partition-value list (both metadata-bounded)."""
     from functools import reduce
 
-    key_pairs = _merge_key_pairs(on)
+    key_pairs = _key_pairs(on)
     schema = _logical_schema(m)
     part_col = m["partition_by"]
-    next_version = m["version"] + 1
-    entries = m["files"]
 
     base = _read_files(spark, root, m, affected, with_lineage=True)
-    _validate_merge_source_unique(base, source, key_pairs)
+    _check_source_unique(base, source, key_pairs)
     t = base.alias("t")
     s = source.alias("s")
-    cond = reduce(
-        Column.__and__,
-        [F.col(f"t.{tc}") == F.col(f"s.{sc}") for tc, sc in key_pairs],
-    )
+    cond = _key_cond(key_pairs)
 
     appends: list[DataFrame] = []
     touched: set[str] = set()
@@ -781,65 +768,37 @@ def _merge_dv(
         )
         _validate_constraints(spark, root, m, new_files)
 
-    files = entries
-    if touched:
-        # the new sidecar carries each touched file's FULL deleted set
-        # (fresh hits ∪ prior vectors) — same single-sidecar-per-entry
-        # invariant as cow_delete, so reads stay one anti-join
-
-        def _fname(e: dict) -> str:
-            return os.path.basename(e["path"])
-
-        prior_dirs = sorted(
-            {e["dv"] for e in entries if e.get("dv") and _fname(e) in touched}
-        )
-        dv_rows = hits
-        if prior_dirs:
-            prior = spark.read.parquet(
-                *[os.path.join(root, d) for d in prior_dirs]
-            ).where(F.col("fname").isin(list(touched)))
-            dv_rows = dv_rows.unionByName(prior)
-        dv_rel = f"dv-{uuid.uuid4().hex[:12]}"
-        dv_rows.write.parquet(os.path.join(root, dv_rel))
-        files = [
-            ({**e, "dv": dv_rel} if _fname(e) in touched else e)
-            for e in entries
-        ]
-
-    manifest = {
-        "version": next_version,
-        "partition_by": part_col,
-        "files": files + new_files,
-        "schema": m["schema"],
-    }
-    for k in ("column_mapping", "retired_physical", "constraints"):
-        if k in m:
-            manifest[k] = m[k]
-    _commit_manifest(root, manifest)
-    return next_version
+    files = _repoint_dv(spark, root, m["files"], hits, touched)
+    return _commit_next(root, m, files + new_files)
 
 
-def _validate_merge_source_unique(base: DataFrame, source: DataFrame, key_pairs):
-    """Delta MERGE contract (same check merge_into runs): more than one
-    source row matching a single target row is an error, not a silent
-    fan-out. Duplicate source keys that match NO target row are fine."""
-    src_keys = [sc for _, sc in key_pairs]
-    base_keys = base.select(*[F.col(tc).alias(sc) for tc, sc in key_pairs])
-    dup = (
-        source.join(base_keys, src_keys, "left_semi")
-        .groupBy(*src_keys)
-        .agg(F.count(F.lit(1)).alias("__merge_nsrc"))
-        .where(F.col("__merge_nsrc") > 1)
-        .limit(1)
-        .collect()
+def _fname(e: dict) -> str:
+    return os.path.basename(e["path"])
+
+
+def _repoint_dv(
+    spark: SparkSession, root: str, entries: list, hits, touched: set
+) -> list:
+    """Deletion-vector commit body shared by cow_delete and the DV
+    merge: write ONE sidecar carrying each touched file's FULL deleted
+    set (fresh ``hits`` (fname, pos) rows unioned with the touched
+    files' prior vectors) and repoint the touched entries at it. Each
+    entry references exactly one sidecar, so reads stay one anti-join.
+    No touched file: ``entries`` unchanged, nothing written."""
+    if not touched:
+        return entries
+    prior_dirs = sorted(
+        {e["dv"] for e in entries if e.get("dv") and _fname(e) in touched}
     )
-    if dup:
-        raise ValueError(
-            "cow_merge(dv): source has multiple rows for merge key "
-            f"{tuple(dup[0])[:-1]} — MERGE requires at most one source "
-            "row per matched target row (dedupe or pre-aggregate the "
-            "source)"
-        )
+    dv_rows = hits
+    if prior_dirs:
+        prior = spark.read.parquet(
+            *[os.path.join(root, d) for d in prior_dirs]
+        ).where(F.col("fname").isin(list(touched)))
+        dv_rows = dv_rows.unionByName(prior)
+    dv_rel = f"dv-{uuid.uuid4().hex[:12]}"
+    dv_rows.write.parquet(os.path.join(root, dv_rel))
+    return [({**e, "dv": dv_rel} if _fname(e) in touched else e) for e in entries]
 
 
 def _effective_commit_ts(root: str, version: int) -> float:
@@ -1099,17 +1058,10 @@ def cow_restore(root: str, version: int) -> int:
             f"(first: {missing[0]}); pin versions before vacuuming "
             "if restores must stay possible"
         )
-    manifest = {
-        "version": m_cur["version"] + 1,
-        "partition_by": m_target["partition_by"],
-        "files": m_target["files"],
-        "schema": m_target["schema"],
-    }
-    for k in ("column_mapping", "retired_physical", "constraints"):
-        if k in m_target:
-            manifest[k] = m_target[k]
-    _commit_manifest(root, manifest)
-    return manifest["version"]
+    return _commit_next(
+        root, m_cur, m_target["files"],
+        **{k: m_target.get(k) for k in _TABLE_META},
+    )
 
 
 def cow_set_partition_spec(root: str, new_partition_by: str | None) -> int:
@@ -1151,17 +1103,7 @@ def cow_set_partition_spec(root: str, new_partition_by: str | None) -> int:
         (e if "pcol" in e else {**e, "pcol": m["partition_by"]})
         for e in m["files"]
     ]
-    manifest = {
-        "version": m["version"] + 1,
-        "partition_by": new_partition_by,
-        "files": files,
-        "schema": m["schema"],
-    }
-    for k in ("column_mapping", "retired_physical", "constraints"):
-        if k in m:
-            manifest[k] = m[k]
-    _commit_manifest(root, manifest)
-    return manifest["version"]
+    return _commit_next(root, m, files, partition_by=new_partition_by)
 
 
 class CowConstraintError(ValueError):
@@ -1198,6 +1140,34 @@ def _validate_constraints(spark: SparkSession, root: str, m: dict, entries):
             )
 
 
+def _constraint_probe_error(schema, expr: str) -> Exception | None:
+    """Evaluate CHECK ``expr`` with DuckDB on a 0-row relation of the
+    logical ``schema``; return the error if it does not parse or bind
+    (None when it does). The DSv2 write path evaluates constraints this
+    way, so a constraint that fails here would brick every later
+    write."""
+    import duckdb
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    with duckdb.connect() as con:
+        con.register(
+            "__cow_probe",
+            pa.Table.from_arrays(
+                [pa.array([], type=f.type) for f in arrow], schema=arrow
+            ),
+        )
+        try:
+            con.execute(
+                "SELECT * FROM __cow_probe WHERE NOT COALESCE("
+                f"CAST(({expr}) AS BOOLEAN), TRUE) LIMIT 1"
+            ).fetchall()
+        except duckdb.Error as exc:
+            return exc
+    return None
+
+
 def cow_add_constraint(
     spark: SparkSession, root: str, name: str, expr: str
 ) -> int:
@@ -1213,24 +1183,9 @@ def cow_add_constraint(
     # dialect-portability gate (review finding): the DSv2 write path
     # evaluates constraints with DuckDB (no live SparkSession in its
     # runner), so an expression only Spark can parse would brick every
-    # later DSv2 write with a parser error instead of a verdict. Reject
-    # it HERE, on a 0-row relation with the table's schema.
-    import duckdb
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    probe = pa.Table.from_arrays(
-        [pa.array([], type=f.type) for f in to_arrow_schema(_logical_schema(m))],
-        schema=to_arrow_schema(_logical_schema(m)),
-    )
-    con = duckdb.connect()
-    con.register("__cow_probe", probe)
-    try:
-        con.execute(
-            "SELECT * FROM __cow_probe WHERE NOT COALESCE("
-            f"CAST(({expr}) AS BOOLEAN), TRUE) LIMIT 1"
-        ).fetchall()
-    except Exception as exc:
+    # later DSv2 write with a parser error instead of a verdict
+    exc = _constraint_probe_error(_logical_schema(m), expr)
+    if exc is not None:
         raise ValueError(
             f"CHECK constraint {name!r} ({expr}) is not portable to the"
             f" DuckDB-evaluated DSv2 write path: {exc}. Use the ANSI"
@@ -1248,18 +1203,7 @@ def cow_add_constraint(
             f" violates it: {bad[0].asDict()}"
         )
     cons[name] = expr
-    manifest = {
-        "version": m["version"] + 1,
-        "partition_by": m["partition_by"],
-        "files": m["files"],
-        "schema": m["schema"],
-        "constraints": cons,
-    }
-    for k in ("column_mapping", "retired_physical"):
-        if k in m:
-            manifest[k] = m[k]
-    _commit_manifest(root, manifest)
-    return manifest["version"]
+    return _commit_next(root, m, m["files"], constraints=cons)
 
 
 def cow_drop_constraint(root: str, name: str) -> int:
@@ -1269,19 +1213,7 @@ def cow_drop_constraint(root: str, name: str) -> int:
     if name not in cons:
         raise ValueError(f"no constraint {name!r} (have {sorted(cons)})")
     del cons[name]
-    manifest = {
-        "version": m["version"] + 1,
-        "partition_by": m["partition_by"],
-        "files": m["files"],
-        "schema": m["schema"],
-    }
-    if cons:
-        manifest["constraints"] = cons
-    for k in ("column_mapping", "retired_physical"):
-        if k in m:
-            manifest[k] = m[k]
-    _commit_manifest(root, manifest)
-    return manifest["version"]
+    return _commit_next(root, m, m["files"], constraints=cons or None)
 
 
 def cow_delete(
@@ -1316,8 +1248,9 @@ def cow_delete(
     anti-join side would rival the table.
 
     Scale shape: one scan of the live files evaluates the predicate
-    (file-level stats pruning would narrow this; the manifest carries
-    no column stats yet — documented gap), the hit positions come back
+    (each manifest entry carries footer zone maps (``stats``) that the
+    DSv2 reader prunes by, but this JVM scan does not consult them, so
+    every live file is read), the hit positions come back
     as a distributed frame, and the only driver-side materialization is
     the touched FILE NAME list (bounded by file count, the same
     metadata-scale collect cow_merge does for partition values). Both
@@ -1342,10 +1275,6 @@ def cow_delete(
     touched = {r.fname for r in hits.select("fname").distinct().collect()}
     if not touched:
         return m["version"]  # nothing matched; no version burned
-
-    def _fname(e: dict) -> str:
-        return os.path.basename(e["path"])
-
     if rewrite:
         keep_entries = [e for e in entries if _fname(e) not in touched]
         touched_entries = [e for e in entries if _fname(e) in touched]
@@ -1359,34 +1288,8 @@ def cow_delete(
         )
         files = keep_entries + new_files
     else:
-        # the new sidecar carries each touched file's FULL deleted set:
-        # fresh hits unioned with the touched files' prior vectors
-        prior_dirs = sorted(
-            {e["dv"] for e in entries if e.get("dv") and _fname(e) in touched}
-        )
-        dv_rows = hits
-        if prior_dirs:
-            prior = spark.read.parquet(
-                *[os.path.join(root, d) for d in prior_dirs]
-            ).where(F.col("fname").isin(list(touched)))
-            dv_rows = dv_rows.unionByName(prior)
-        dv_rel = f"dv-{uuid.uuid4().hex[:12]}"
-        dv_rows.write.parquet(os.path.join(root, dv_rel))
-        files = [
-            ({**e, "dv": dv_rel} if _fname(e) in touched else e)
-            for e in entries
-        ]
-    manifest = {
-        "version": m["version"] + 1,
-        "partition_by": m["partition_by"],
-        "files": files,
-        "schema": m["schema"],
-    }
-    for k in ("column_mapping", "retired_physical", "constraints"):
-        if k in m:
-            manifest[k] = m[k]
-    _commit_manifest(root, manifest)
-    return manifest["version"]
+        files = _repoint_dv(spark, root, entries, hits, touched)
+    return _commit_next(root, m, files)
 
 
 def cow_append(
@@ -1437,14 +1340,7 @@ def cow_append(
     if part_col is not None and df.where(F.col(part_col).isNull()).limit(1).count():
         raise ValueError(f"cow_append: NULL {part_col!r} partition values")
 
-    manifest = {
-        "version": m["version"] + 1,
-        "partition_by": part_col,
-        "files": m["files"],  # new files appended below
-        "schema": new_schema.json(),
-    }
-    if m.get("constraints"):
-        manifest["constraints"] = m["constraints"]
+    meta = {"schema": new_schema.json()}
     cmap = m.get("column_mapping")
     if cmap is not None:
         # physical names for evolved columns must never collide with a
@@ -1456,22 +1352,19 @@ def cow_append(
         for f in extra:
             phys = f.name
             while phys in taken:
-                phys = f"{phys}__v{manifest['version']}"
+                phys = f"{phys}__v{m['version'] + 1}"
             cmap[f.name] = phys
             taken.add(phys)
-        manifest["column_mapping"] = cmap
-        if "retired_physical" in m:
-            manifest["retired_physical"] = m["retired_physical"]
+        meta["column_mapping"] = cmap
+    nxt = {**m, **meta}  # the next version's metadata, for the write
 
     # column order normalized to the evolved schema so the files are uniform
     ordered = df.select(*[f.name for f in new_schema.fields])
     new_files = _write_commit(
-        _to_physical(ordered, manifest), root, _physical_name(manifest, part_col)
+        _to_physical(ordered, nxt), root, _physical_name(nxt, part_col)
     )
-    _validate_constraints(spark, root, manifest, new_files)
-    manifest["files"] = m["files"] + new_files
-    _commit_manifest(root, manifest)
-    return manifest["version"]
+    _validate_constraints(spark, root, nxt, new_files)
+    return _commit_next(root, m, m["files"] + new_files, **meta)
 
 
 def _identity_mapping(m: dict) -> dict:
@@ -1505,19 +1398,12 @@ def cow_rename_column(root: str, old: str, new: str) -> int:
         StructField(new, f.dataType, f.nullable) if f.name == old else f
         for f in schema.fields
     ]
-    manifest = {
-        "version": m["version"] + 1,
-        "partition_by": new if m["partition_by"] == old else m["partition_by"],
-        "files": m["files"],
-        "schema": StructType(fields).json(),
-        "column_mapping": cmap,
-    }
-    if "retired_physical" in m:
-        manifest["retired_physical"] = m["retired_physical"]
-    if m.get("constraints"):
-        manifest["constraints"] = m["constraints"]
-    _commit_manifest(root, manifest)
-    return manifest["version"]
+    return _commit_next(
+        root, m, m["files"],
+        partition_by=new if m["partition_by"] == old else m["partition_by"],
+        schema=StructType(fields).json(),
+        column_mapping=cmap,
+    )
 
 
 def cow_drop_column(root: str, name: str) -> int:
@@ -1537,23 +1423,22 @@ def cow_drop_column(root: str, name: str) -> int:
         raise ValueError(f"cow_drop_column: no column {name!r} (have {names})")
     if name == m["partition_by"]:
         raise ValueError("cow_drop_column: cannot drop the partition column")
+    kept = StructType([f for f in schema.fields if f.name != name])
+    # Delta refuses a DROP COLUMN a CHECK constraint uses: committing it
+    # would leave a constraint no later write can evaluate
+    for cname, cexpr in (m.get("constraints") or {}).items():
+        if _constraint_probe_error(kept, cexpr) is not None:
+            raise ValueError(
+                f"cow_drop_column: CHECK constraint {cname!r} ({cexpr})"
+                f" uses {name!r}; drop the constraint first"
+            )
     cmap = dict(m.get("column_mapping") or _identity_mapping(m))
     retired = list(m.get("retired_physical", []))
     retired.append(cmap.pop(name))
-    manifest = {
-        "version": m["version"] + 1,
-        "partition_by": m["partition_by"],
-        "files": m["files"],
-        "schema": StructType(
-            [f for f in schema.fields if f.name != name]
-        ).json(),
-        "column_mapping": cmap,
-        "retired_physical": retired,
-    }
-    if m.get("constraints"):
-        manifest["constraints"] = m["constraints"]
-    _commit_manifest(root, manifest)
-    return manifest["version"]
+    return _commit_next(
+        root, m, m["files"],
+        schema=kept.json(), column_mapping=cmap, retired_physical=retired,
+    )
 
 
 # Value-preserving type promotions the parquet readers upcast natively
@@ -1610,17 +1495,7 @@ def cow_widen_column(root: str, name: str, new_type) -> int:
         StructField(f.name, new_type, f.nullable) if f.name == name else f
         for f in schema.fields
     ]
-    manifest = {
-        "version": m["version"] + 1,
-        "partition_by": m["partition_by"],
-        "files": m["files"],
-        "schema": StructType(fields).json(),
-    }
-    for k in ("column_mapping", "retired_physical", "constraints"):
-        if k in m:
-            manifest[k] = m[k]
-    _commit_manifest(root, manifest)
-    return manifest["version"]
+    return _commit_next(root, m, m["files"], schema=StructType(fields).json())
 
 
 _ZB = "__cow_zb"  # compaction's Z-bucket directory label
@@ -1813,17 +1688,7 @@ def cow_compact(
             _physical_name(m, part_col),
             scatter_col=_ZB,
         )
-    manifest = {
-        "version": m["version"] + 1,
-        "partition_by": part_col,
-        "files": keep + new_files,
-        "schema": m["schema"],
-    }
-    for k in ("column_mapping", "retired_physical", "constraints"):
-        if k in m:
-            manifest[k] = m[k]
-    _commit_manifest(root, manifest)
-    return manifest["version"]
+    return _commit_next(root, m, keep + new_files)
 
 
 def cow_clone(src_root: str, dst_root: str, version: int | None = None) -> int:

@@ -61,44 +61,13 @@ def merge_into(
     - ``validate_source_unique``: eagerly reject sources carrying more
       than one row per merge key (Delta's multiple-matches error).
     """
-    if isinstance(on, str):
-        on = [on]
-    key_pairs = list(on.items()) if isinstance(on, dict) else [(k, k) for k in on]
-
+    key_pairs = _key_pairs(on)
     if validate_source_unique:
-        # Delta MERGE contract: multiple source rows matching one TARGET
-        # row is an error, not a silent row-count fan-out. Faithful to
-        # Delta: duplicate source keys that match no target row are fine
-        # (both rows just INSERT), and NULL merge keys never match under
-        # equality, so only base-matching keys are checked. One eager
-        # semi-join + aggregation; pass False to skip when uniqueness is
-        # guaranteed by construction (e.g. a groupBy source).
-        src_keys = [sc for _, sc in key_pairs]
-        base_keys = base.select(
-            *[F.col(tc).alias(sc) for tc, sc in key_pairs]
-        )
-        dup = (
-            source.join(base_keys, src_keys, "left_semi")
-            .groupBy(*src_keys)
-            .agg(F.count(F.lit(1)).alias("__merge_nsrc"))
-            .where(F.col("__merge_nsrc") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                "merge_into: source has multiple rows for merge key "
-                f"{tuple(dup[0])[:-1]} — MERGE requires at most one source "
-                "row per matched target row (dedupe or pre-aggregate the "
-                "source)"
-            )
+        _check_source_unique(base, source, key_pairs)
 
     t = base.withColumn(_T_MARK, F.lit(True)).alias("t")
     s = source.withColumn(_S_MARK, F.lit(True)).alias("s")
-    cond = reduce(
-        Column.__and__,
-        [F.col(f"t.{tc}") == F.col(f"s.{sc}") for tc, sc in key_pairs],
-    )
+    cond = _key_cond(key_pairs)
     how = "full_outer" if not_matched_insert is not None else "left"
     j = t.join(s, cond, how)
 
@@ -123,3 +92,46 @@ def merge_into(
             )
         out_cols.append(col.alias(field.name))
     return j.select(*out_cols)
+
+
+def _key_pairs(on) -> list[tuple[str, str]]:
+    """Normalize ``on`` to [(target_col, source_col)]."""
+    if isinstance(on, str):
+        on = [on]
+    return list(on.items()) if isinstance(on, dict) else [(k, k) for k in on]
+
+
+def _key_cond(key_pairs) -> Column:
+    """The ``t``/``s``-aliased equality join condition over the keys."""
+    return reduce(
+        Column.__and__,
+        [F.col(f"t.{tc}") == F.col(f"s.{sc}") for tc, sc in key_pairs],
+    )
+
+
+def _check_source_unique(
+    base: DataFrame, source: DataFrame, key_pairs
+) -> None:
+    """Delta MERGE contract: multiple source rows matching one TARGET
+    row is an error, not a silent row-count fan-out. Faithful to Delta:
+    duplicate source keys that match no target row are fine (both rows
+    just INSERT), and NULL merge keys never match under equality, so
+    only base-matching keys are checked. One eager semi-join +
+    aggregation."""
+    src_keys = [sc for _, sc in key_pairs]
+    base_keys = base.select(*[F.col(tc).alias(sc) for tc, sc in key_pairs])
+    dup = (
+        source.join(base_keys, src_keys, "left_semi")
+        .groupBy(*src_keys)
+        .agg(F.count(F.lit(1)).alias("__merge_nsrc"))
+        .where(F.col("__merge_nsrc") > 1)
+        .limit(1)
+        .collect()
+    )
+    if dup:
+        raise ValueError(
+            "merge source has multiple rows for merge key "
+            f"{tuple(dup[0])[:-1]} — MERGE requires at most one source "
+            "row per matched target row (dedupe or pre-aggregate the "
+            "source)"
+        )

@@ -73,7 +73,10 @@ from pyspark.sql.types import StructType
 from openmaptiles_zh_modifier_spark.operators.cow_table import (
     _ANON_TXN,
     _PV,
+    _TABLE_META,
+    CowConflictError,
     _commit_manifest,
+    _commit_next,
     _latest_version,
     _read_manifest,
     cow_history,
@@ -629,24 +632,16 @@ class CowBatchWriter(DataSourceArrowWriter):
         self._overwrite = overwrite
         # one commit dir per write JOB, shared by all tasks via pickle
         self._commit_dir = f"commit-{uuid.uuid4().hex[:12]}"
-        # creating a new table? capture existing state at plan time for
-        # validation only — versioning reads the LATEST manifest in
-        # commit() so concurrent writers conflict correctly
-        self._cmap: dict | None = None
-        self._retired: list | None = None
-        self._constraints: dict | None = None
-        self._plan_schema_json: str | None = None
+        # capture the table metadata at plan time for the task write and
+        # the commit-time conflict gate only — versioning reads the
+        # LATEST manifest in commit() so concurrent writers conflict
+        # correctly
         try:
             m = _read_manifest(root)
-            self._partition_by = m["partition_by"]
-            self._cmap = m.get("column_mapping")
-            self._retired = m.get("retired_physical")
-            self._constraints = m.get("constraints")
-            self._plan_schema_json = m["schema"]
-            if partition_by is not None and partition_by != self._partition_by:
+            if partition_by is not None and partition_by != m["partition_by"]:
                 raise ValueError(
                     f"cowtable at {root} is partitioned by "
-                    f"{self._partition_by!r}; cannot write partition_by="
+                    f"{m['partition_by']!r}; cannot write partition_by="
                     f"{partition_by!r}"
                 )
             existing = StructType.fromJson(json.loads(m["schema"]))
@@ -666,8 +661,13 @@ class CowBatchWriter(DataSourceArrowWriter):
                     f"partition_by={partition_by!r} is not a column of the"
                     f" written frame ({schema.fieldNames()})"
                 ) from None
-            self._partition_by = partition_by
+            # a table this write creates: its metadata is the write's own
+            m = {"partition_by": partition_by, "schema": schema.json()}
             self._exists = False
+        self._plan_meta = {k: m.get(k) for k in _TABLE_META}
+        self._partition_by = m["partition_by"]
+        self._cmap = m.get("column_mapping")
+        self._constraints = m.get("constraints")
 
     def write(self, iterator):
         import uuid
@@ -769,55 +769,44 @@ class CowBatchWriter(DataSourceArrowWriter):
 
     def commit(self, messages):
         new_entries = [e for m in messages if m for e in m.entries]
-        if self._exists:
-            m = _read_manifest(self._root)
-            version = m["version"] + 1
-            files = new_entries if self._overwrite else m["files"] + new_entries
-            schema_json = m["schema"]
-            part_col = m["partition_by"]
-            # metadata-conflict gate (same contract as Delta): the task
-            # files were written under PLAN-time physical names, so a
-            # rename/drop/widen/evolve committed while tasks ran cannot
-            # be absorbed — e.g. a drop + re-add would publish our files
-            # with the re-added column under a RETIRED physical name,
-            # silently reading as NULL. Concurrent APPENDS only touch
-            # version/files and pass; any schema or mapping change
-            # aborts. (ADVICE r11 #1)
-            if (
-                m["schema"] != self._plan_schema_json
-                or m.get("column_mapping") != self._cmap
-                or m.get("retired_physical") != self._retired
-                or m["partition_by"] != self._partition_by
-                or m.get("constraints") != self._constraints
-            ):
-                from ..operators.cow_table import CowConflictError
+        if not self._exists:
+            self._create(new_entries)
+            return
+        m = _read_manifest(self._root)
+        self._check_plan_metadata(
+            m, "between write planning and commit", "re-run the write"
+        )
+        files = new_entries if self._overwrite else m["files"] + new_entries
+        _commit_next(self._root, m, files)
 
-                raise CowConflictError(
-                    f"cowtable at {self._root}: table metadata (schema/"
-                    "column_mapping/partition spec/constraints) changed"
-                    f" between write planning and commit (manifest"
-                    f" v{m['version']}); re-run the write"
-                )
+    def _create(self, new_entries: list, **extra) -> None:
+        """Publish v1 of a table this write creates."""
+        os.makedirs(self._root, exist_ok=True)
+        _commit_manifest(
+            self._root,
+            {
+                "version": 1,
+                "partition_by": self._partition_by,
+                "files": new_entries,
+                "schema": self._schema.json(),
+                **extra,
+            },
+        )
 
-        else:
-            os.makedirs(self._root, exist_ok=True)
-            version = 1
-            files = new_entries
-            schema_json = self._schema.json()
-            part_col = self._partition_by
-        manifest = {
-            "version": version,
-            "partition_by": part_col,
-            "files": files,
-            "schema": schema_json,
-        }
-        if self._cmap is not None:
-            manifest["column_mapping"] = self._cmap
-        if self._retired is not None:
-            manifest["retired_physical"] = self._retired
-        if self._constraints is not None:
-            manifest["constraints"] = self._constraints
-        _commit_manifest(self._root, manifest)
+    def _check_plan_metadata(self, m: dict, when: str, remedy: str) -> None:
+        """Metadata-conflict gate (same contract as Delta): the task
+        files were written under PLAN-time physical names, so a
+        rename/drop/widen/evolve committed while tasks ran cannot be
+        absorbed — e.g. a drop + re-add would publish our files with the
+        re-added column under a RETIRED physical name, silently reading
+        as NULL. Concurrent APPENDS only touch version/files and pass;
+        any change to the table metadata aborts."""
+        if {k: m.get(k) for k in _TABLE_META} != self._plan_meta:
+            raise CowConflictError(
+                f"cowtable at {self._root}: table metadata (schema/"
+                "column_mapping/partition spec/constraints) changed"
+                f" {when} (manifest v{m['version']}); {remedy}"
+            )
 
     def abort(self, messages):
         for m in messages:
@@ -891,54 +880,16 @@ class CowStreamWriter(CowBatchWriter, DataSourceStreamArrowWriter):
                 # the just-written duplicate files are manifest-orphans
                 self.abort(messages, batchId)
                 return
-            version = m["version"] + 1
-            files = m["files"] + new_entries
-            schema_json = m["schema"]
-            part_col = m["partition_by"]
-            # same metadata-conflict gate as the batch writer: batch
-            # files are written under STREAM-START physical names, so a
-            # mid-stream rename/drop/widen cannot be absorbed. A table
-            # this stream itself created has no plan-time manifest —
-            # its expected schema is the write schema verbatim.
-            expected_schema = self._plan_schema_json or self._schema.json()
-            if (
-                m["schema"] != expected_schema
-                or m.get("column_mapping") != self._cmap
-                or m.get("retired_physical") != self._retired
-                or m["partition_by"] != self._partition_by
-                or m.get("constraints") != self._constraints
-            ):
-                from ..operators.cow_table import CowConflictError
-
-                raise CowConflictError(
-                    f"cowtable at {self._root}: table metadata (schema/"
-                    "column_mapping/partition spec/constraints) changed"
-                    f" mid-stream (manifest v{m['version']}); restart the"
-                    " stream to adopt it"
-                )
-
+            self._check_plan_metadata(
+                m, "mid-stream", "restart the stream to adopt it"
+            )
+            _commit_next(
+                self._root, m, m["files"] + new_entries,
+                stream_txns={**stamps, self._txn_key: batchId},
+            )
         else:
-            os.makedirs(self._root, exist_ok=True)
-            stamps = {}
-            version = 1
-            files = new_entries
-            schema_json = self._schema.json()
-            part_col = self._partition_by
-        manifest = {
-            "version": version,
-            "partition_by": part_col,
-            "files": files,
-            "schema": schema_json,
-            "stream_txns": {**stamps, self._txn_key: batchId},
-        }
-        if self._cmap is not None:
-            manifest["column_mapping"] = self._cmap
-        if self._retired is not None:
-            manifest["retired_physical"] = self._retired
-        if self._constraints is not None:
-            manifest["constraints"] = self._constraints
-        _commit_manifest(self._root, manifest)
-        self._exists = True
+            self._create(new_entries, stream_txns={self._txn_key: batchId})
+            self._exists = True
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
         CowBatchWriter.abort(self, messages)

@@ -17,6 +17,7 @@ from openmaptiles_zh_modifier_spark.operators.cow_table import (
     cow_add_constraint,
     cow_append,
     cow_create,
+    cow_drop_column,
     cow_drop_constraint,
     cow_merge,
     cow_read,
@@ -102,6 +103,34 @@ def test_drop_constraint_and_metadata_carry(spark, table):
     )  # no longer enforced
     with pytest.raises(ValueError, match="no constraint"):
         cow_drop_constraint(table, "nope")
+
+
+def test_drop_constrained_column_refused(spark, table):
+    """Delta refuses a DROP COLUMN a CHECK constraint uses: committing
+    it would leave a constraint no later write can evaluate. The drop
+    raises naming the constraint, nothing commits, and the table stays
+    writable; an unconstrained column still drops."""
+    cow_add_constraint(spark, table, "score_pos", "score > 0")
+    with pytest.raises(ValueError, match="score_pos"):
+        cow_drop_column(table, "score")
+    assert _read_manifest(table)["version"] == 2  # nothing published
+    cow_append(
+        spark,
+        table,
+        spark.createDataFrame(
+            [(9, 5, "x")], "id long, score int, tag string"
+        ).coalesce(1),
+    )
+    cow_drop_column(table, "tag")
+    m = _read_manifest(table)
+    assert m["constraints"] == {"score_pos": "score > 0"}
+    assert [f.name for f in cow_read(spark, table).schema] == ["id", "score"]
+    with pytest.raises(CowConstraintError, match="score_pos"):
+        cow_append(
+            spark,
+            table,
+            spark.createDataFrame([(10, -1)], "id long, score int").coalesce(1),
+        )
 
 
 def test_dsv2_writer_enforces_and_gates(spark, table, tmp_path):

@@ -217,6 +217,54 @@ def test_auto_strategy_picks_by_matched_fraction(spark, tmp_path):
     assert vals == {"dense"}
 
 
+def test_auto_strategy_collects_partition_values_once(spark, twin_tables):
+    """``strategy="auto"`` resolving to ``cow`` runs exactly the jobs of
+    a plain cow merge plus the strategy pick's matched count: the
+    source's distinct partition values are collected once, not again
+    for the rewrite."""
+    from openmaptiles_zh_modifier_spark.operators.cow_table import (
+        _merge_affected,
+        _pick_merge_strategy,
+        _read_manifest,
+    )
+
+    sc = spark.sparkContext
+    dense = _base_df(spark).withColumn("val", F.lit("dense"))
+    upd = {"val": F.col("s.val")}
+
+    def jobs(label, fn):
+        sc.setJobGroup(label, label)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(label)), out
+
+    cow_root, auto_root = twin_tables
+    m = _read_manifest(auto_root)
+    affected, _ = _merge_affected(dense, m)
+    n_pick, picked = jobs(
+        "auto-pick",
+        lambda: _pick_merge_strategy(
+            spark, auto_root, m, dense, "id", affected, upd, None, 0.2
+        ),
+    )
+    assert picked == "cow"
+    n_cow, _ = jobs(
+        "auto-cow",
+        lambda: cow_merge(spark, cow_root, dense, on="id", matched_update=upd),
+    )
+    n_auto, _ = jobs(
+        "auto-auto",
+        lambda: cow_merge(
+            spark, auto_root, dense, on="id", matched_update=upd,
+            strategy="auto",
+        ),
+    )
+    assert n_auto == n_cow + n_pick, (n_auto, n_cow, n_pick)
+    assert _rows(cow_read(spark, auto_root)) == _rows(cow_read(spark, cow_root))
+
+
 def test_dv_merge_source_uniqueness_enforced(spark, tmp_path):
     root = str(tmp_path / "uniq")
     cow_create(spark, root, _base_df(spark), partition_by="part")

@@ -665,3 +665,163 @@ def test_vacuum_age_based_retention(spark, tmp_path):
 
     with _pt.raises((ValueError, FileNotFoundError)):
         cow_read(spark, root, version=1)
+
+
+# Manifest keys that are table metadata: every commit carries them
+# forward unless the commit exists to change them.
+_META_KEYS = (
+    "partition_by", "schema", "column_mapping", "retired_physical", "constraints",
+)
+
+
+@pytest.fixture(scope="module")
+def decorated(spark, tmp_path_factory):
+    """A partitioned table carrying every optional metadata key: a
+    column mapping (rename), a retired physical name (drop) and a CHECK
+    constraint. Each carry case mutates its own shallow clone."""
+    from openmaptiles_zh_modifier_spark.operators.cow_table import (
+        cow_add_constraint,
+        cow_drop_column,
+        cow_rename_column,
+    )
+
+    root = str(tmp_path_factory.mktemp("carry") / "src")
+    cow_create(
+        spark,
+        root,
+        spark.createDataFrame(
+            [
+                (i, f"n{i}", float(i), ["US", "DE", "JP"][i % 3], i, "j")
+                for i in range(12)
+            ],
+            "id long, name string, bal double, region string, score int,"
+            " junk string",
+        ),
+        partition_by="region",
+    )
+    cow_rename_column(root, "name", "label")
+    cow_drop_column(root, "junk")
+    cow_add_constraint(spark, root, "bal_pos", "bal >= 0")
+    return root
+
+
+def _shifted(spark, root, cond, shift):
+    df = cow_read(spark, root).where(cond).withColumn("id", F.col("id") + shift)
+    return spark.createDataFrame(df.collect(), df.schema)
+
+
+def _merge(strategy):
+    def run(spark, root):
+        src = _shifted(spark, root, "id % 4 = 0", 0).withColumn("bal", F.lit(1.0))
+        cow_merge(
+            spark, root, src, on="id",
+            matched_update={"bal": F.col("s.bal")}, strategy=strategy,
+        )
+    return run
+
+
+def _dsv2(mode):
+    def run(spark, root):
+        _shifted(spark, root, "id < 5", 100).write.format("cowtable").option(
+            "path", root
+        ).mode(mode).save()
+    return run
+
+
+def _stream(spark, root):
+    src_dir = root + "-src"
+    for i in range(2):
+        _shifted(spark, root, f"id % 4 = {i}", 200).coalesce(1).write.mode(
+            "append"
+        ).parquet(src_dir)
+    q = (
+        spark.readStream.schema(cow_read(spark, root).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+        .writeStream.format("cowtable")
+        .option("path", root)
+        .option("checkpointLocation", root + "-ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "stream did not finish in time"
+
+
+def _carry_cases():
+    from openmaptiles_zh_modifier_spark.operators import cow_table as ct
+
+    def restore(spark, root):
+        ct.cow_widen_column(root, "score", "long")
+        ct.cow_restore(root, 1)
+
+    return {
+        "merge_cow": (_merge("cow"), ()),
+        "merge_dv": (_merge("dv"), ()),
+        "delete_dv": (lambda s, r: ct.cow_delete(s, r, "id % 4 = 1"), ()),
+        "delete_rewrite": (
+            lambda s, r: ct.cow_delete(s, r, "id % 4 = 1", rewrite=True), ()
+        ),
+        "restore": (restore, ()),
+        "set_partition_spec": (
+            lambda s, r: ct.cow_set_partition_spec(r, None), ("partition_by",)
+        ),
+        "add_constraint": (
+            lambda s, r: ct.cow_add_constraint(s, r, "id_nonneg", "id >= 0"),
+            ("constraints",),
+        ),
+        "drop_constraint": (
+            lambda s, r: ct.cow_drop_constraint(r, "bal_pos"), ("constraints",)
+        ),
+        "append": (
+            lambda s, r: ct.cow_append(s, r, _shifted(s, r, "id < 3", 100)), ()
+        ),
+        "append_evolve": (
+            lambda s, r: ct.cow_append(
+                s, r, _shifted(s, r, "id < 3", 100).withColumn("x", F.lit(1)),
+                evolve_schema=True,
+            ),
+            ("schema", "column_mapping"),
+        ),
+        "rename_column": (
+            lambda s, r: ct.cow_rename_column(r, "label", "title"),
+            ("schema", "column_mapping"),
+        ),
+        "drop_column": (
+            lambda s, r: ct.cow_drop_column(r, "label"),
+            ("schema", "column_mapping", "retired_physical"),
+        ),
+        "widen_column": (
+            lambda s, r: ct.cow_widen_column(r, "score", "long"), ("schema",)
+        ),
+        "compact": (
+            lambda s, r: ct.cow_compact(s, r, min_files_per_partition=1), ()
+        ),
+        "dsv2_append": (_dsv2("append"), ()),
+        "dsv2_overwrite": (_dsv2("overwrite"), ()),
+        "dsv2_stream": (_stream, ()),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_carry_cases()))
+def test_every_commit_carries_table_metadata(spark, decorated, tmp_path, case):
+    """Every next-version writer carries each table-metadata key of its
+    predecessor unchanged, except the keys it exists to change."""
+    from openmaptiles_zh_modifier_spark.operators.cow_table import cow_clone
+    from openmaptiles_zh_modifier_spark.sources.cow_datasource import (
+        register_cow_datasource,
+    )
+
+    register_cow_datasource(spark)
+    root = str(tmp_path / "t")
+    cow_clone(decorated, root)
+    before = _read_manifest(root)
+    assert all(k in before for k in _META_KEYS)
+    mutate, changes = _carry_cases()[case]
+    mutate(spark, root)
+    after = _read_manifest(root)
+    assert after["version"] > before["version"]
+    for k in _META_KEYS:
+        if k in changes:
+            assert after.get(k) != before.get(k), k
+        else:
+            assert after.get(k) == before.get(k), k
