@@ -51,8 +51,15 @@ logical; writers (append/merge/compact/DSv2) emit physical names;
 dropped data. Tables that never rename keep no mapping and take the
 original single-scan fast path unchanged.
 
+Row-local updates: ``cow_update`` is Delta's ``UPDATE ... SET ...
+WHERE`` — one predicate scan picks the FILES holding matching rows, and
+only those files are rewritten, each row through its own SET
+expression, with no join. ``cow_delete(rewrite=True)`` commits through
+the same touched-file rewrite.
+
 Scale notes: the only driver-side materialization is the DISTINCT
-partition values of the merge source (bounded by partition count); the
+partition values of the merge source (bounded by partition count), or
+the touched file names for UPDATE/DELETE (bounded by file count); the
 merge itself is ONE
 ``merge_into`` plan (full-outer or broadcast-left join) over only the
 affected partitions' files.
@@ -1250,23 +1257,29 @@ def cow_delete(
     Scale shape: one scan of the live files evaluates the predicate
     (each manifest entry carries footer zone maps (``stats``) that the
     DSv2 reader prunes by, but this JVM scan does not consult them, so
-    every live file is read), the hit positions come back
-    as a distributed frame, and the only driver-side materialization is
-    the touched FILE NAME list (bounded by file count, the same
-    metadata-scale collect cow_merge does for partition values). Both
-    modes commit under the optimistic version race.
+    every live file is read), and the only driver-side materialization
+    is the touched FILE NAME list (bounded by file count, the same
+    metadata-scale collect cow_merge does for partition values). DV
+    mode materializes the hit positions once (the touched-file collect
+    and the sidecar both consume them); rewrite mode needs only the
+    touched names and commits through ``_rewrite_touched``, the body
+    ``cow_update`` uses. Both modes commit under the optimistic version
+    race.
 
     Streaming caveat (same as Delta without ignoreDeletes): the
     cowtable streaming source replays ADDED files, so a DV commit adds
     nothing and its deletions do not flow into downstream streams."""
     m = _read_manifest(root)
-    entries = m["files"]
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    cond_true = F.coalesce(cond.cast("boolean"), F.lit(False))
-    live = _read_files(spark, root, m, entries, with_lineage=True)
-    # materialize the hit positions once: the touched-file collect AND
-    # the sidecar write both consume them, and the predicate must be
-    # evaluated against ONE snapshot of the scan
+    cond_true = _cond_true(condition)
+    live = _read_files(spark, root, m, m["files"], with_lineage=True)
+    if rewrite:
+        touched = _touched_counts(live, cond_true)
+        if not touched:
+            return m["version"]  # nothing matched; no version burned
+        return _rewrite_touched(
+            spark, root, m, touched, lambda df: df.where(~cond_true)
+        )
+    # the predicate must be evaluated against ONE snapshot of the scan
     hits = (
         live.where(cond_true)
         .select(F.col(_DV_FN).alias("fname"), F.col(_DV_POS).alias("pos"))
@@ -1275,21 +1288,107 @@ def cow_delete(
     touched = {r.fname for r in hits.select("fname").distinct().collect()}
     if not touched:
         return m["version"]  # nothing matched; no version burned
-    if rewrite:
-        keep_entries = [e for e in entries if _fname(e) not in touched]
-        touched_entries = [e for e in entries if _fname(e) in touched]
-        survivors = _read_files(
-            spark, root, m, touched_entries, with_lineage=False
-        ).where(~cond_true)
-        new_files = _write_commit(
-            _to_physical(survivors, m),
-            root,
-            _physical_name(m, m["partition_by"]),
+    return _commit_next(
+        root, m, _repoint_dv(spark, root, m["files"], hits, touched)
+    )
+
+
+def _cond_true(condition) -> Column:
+    """A DML predicate (Column or SQL string) with SQL WHERE semantics:
+    a NULL verdict does not match."""
+    cond = F.expr(condition) if isinstance(condition, str) else condition
+    return F.coalesce(cond.cast("boolean"), F.lit(False))
+
+
+def _touched_counts(live: DataFrame, cond_true: Column) -> dict:
+    """{file name: matching rows} over a lineage scan, for the files
+    holding at least one match. One grouped collect, bounded by file
+    count."""
+    return {
+        r[0]: r[1]
+        for r in live.where(cond_true).groupBy(_DV_FN).count().collect()
+    }
+
+
+def _rewrite_touched(
+    spark: SparkSession, root: str, m: dict, touched, transform
+) -> int:
+    """Copy-on-write commit body shared by cow_update and
+    cow_delete(rewrite=True): read the entries whose file name is in
+    ``touched`` (any container of names, e.g. ``_touched_counts``'
+    dict; their deletion vectors applied, so the rewrite
+    materializes them), write ``transform`` of that frame as one new
+    commit directory, validate it against the CHECK constraints, and
+    publish the untouched entries plus the new files as the version
+    after ``m``. Untouched entries carry over unchanged, ``dv`` and
+    all."""
+    keep = [e for e in m["files"] if _fname(e) not in touched]
+    rewritten = [e for e in m["files"] if _fname(e) in touched]
+    out = transform(_read_files(spark, root, m, rewritten))
+    new_files = _write_commit(
+        _to_physical(out, m), root, _physical_name(m, m["partition_by"])
+    )
+    _validate_constraints(spark, root, m, new_files)
+    return _commit_next(root, m, keep + new_files)
+
+
+def cow_update(
+    spark: SparkSession,
+    root: str,
+    condition,
+    assignments: dict,
+    base_version: int | None = None,
+) -> tuple[int, int]:
+    """UPDATE ... SET ``assignments`` WHERE ``condition`` (Delta's
+    UPDATE): ``condition`` is a Column or SQL string over the LOGICAL
+    schema (a NULL verdict does not match); ``assignments`` maps column
+    names to Column expressions evaluated on the row being updated.
+    Returns ``(version, n_updated)``.
+
+    Two passes, no join and no shuffle of table rows:
+
+    1. one predicate scan of the pinned version counts the matching
+       rows per data file (a grouped collect bounded by file count);
+    2. only the files holding a match are read (deletion vectors
+       applied), rewritten through ``when(cond, expr).otherwise(col)``
+       per assigned column, and committed with every other entry
+       carried over byte-identical — file-granular copy-on-write, so an
+       unpartitioned multi-file table rewrites only the touched files.
+
+    Every row is updated from itself, so duplicate keys need no
+    uniqueness check. ``base_version`` pins the snapshot exactly like
+    ``cow_merge``'s: a commit landing after the pin makes the publish
+    raise ``CowConflictError``. No matching row: the current version is
+    returned with 0 and no version is burned. The partition column
+    cannot be assigned (a row would have to move between partitions)."""
+    m = _read_manifest(root, base_version)
+    fields = _logical_schema(m).fields
+    names = [f.name for f in fields]
+    unknown = [c for c in assignments if c not in names]
+    if unknown:
+        raise ValueError(f"cow_update: no column(s) {unknown} (have {names})")
+    if m["partition_by"] in assignments:
+        raise ValueError("cow_update: cannot assign the partition column")
+    cond_true = _cond_true(condition)
+    live = _read_files(spark, root, m, m["files"], with_lineage=True)
+    touched = _touched_counts(live, cond_true)
+    n_updated = sum(touched.values())
+    if not n_updated:
+        return m["version"], 0
+
+    def apply(df: DataFrame) -> DataFrame:
+        return df.select(
+            *[
+                F.when(cond_true, assignments[f.name].cast(f.dataType))
+                .otherwise(F.col(f.name))
+                .alias(f.name)
+                if f.name in assignments
+                else F.col(f.name)
+                for f in fields
+            ]
         )
-        files = keep_entries + new_files
-    else:
-        files = _repoint_dv(spark, root, entries, hits, touched)
-    return _commit_next(root, m, files)
+
+    return _rewrite_touched(spark, root, m, touched, apply), n_updated
 
 
 def cow_append(
@@ -1394,14 +1493,24 @@ def cow_rename_column(root: str, old: str, new: str) -> int:
         raise ValueError(f"cow_rename_column: column {new!r} already exists")
     cmap = dict(m.get("column_mapping") or _identity_mapping(m))
     cmap[new] = cmap.pop(old)
-    fields = [
-        StructField(new, f.dataType, f.nullable) if f.name == old else f
-        for f in schema.fields
-    ]
+    renamed = StructType(
+        [
+            StructField(new, f.dataType, f.nullable) if f.name == old else f
+            for f in schema.fields
+        ]
+    )
+    # Delta refuses a RENAME COLUMN a CHECK constraint uses, for the
+    # same reason cow_drop_column refuses the drop
+    for cname, cexpr in (m.get("constraints") or {}).items():
+        if _constraint_probe_error(renamed, cexpr) is not None:
+            raise ValueError(
+                f"cow_rename_column: CHECK constraint {cname!r} ({cexpr})"
+                f" uses {old!r}; drop the constraint first"
+            )
     return _commit_next(
         root, m, m["files"],
         partition_by=new if m["partition_by"] == old else m["partition_by"],
-        schema=StructType(fields).json(),
+        schema=renamed.json(),
         column_mapping=cmap,
     )
 

@@ -25,6 +25,7 @@ from openmaptiles_zh_modifier_spark.catalog import (
     discover_parquet_tables,
 )
 from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
+    _zh_exprs,
     backfill_counts,
     backfill_table,
     updates_frame_with_tags,
@@ -411,74 +412,54 @@ def run_backfill_cow(
     compat_names_typo: bool = False,
 ) -> tuple[int, int]:
     """Back-fill a COW table IN PLACE — the reference's batched keyed
-    ``UPDATE ... WHERE id = ?`` (OMTZHModifier.java:156-169) expressed as
-    a transactional lake MERGE: read the current committed version,
-    derive the changed rows in one projection over one snapshot
-    (``updates_frame_with_tags`` — no torn two-scan read), and publish
-    version N+1 atomically via the manifest commit protocol (a
-    concurrent writer loses with CowConflictError, mirroring Delta's
-    optimistic concurrency; the reference's per-batch commit had no such
-    guard). The schema classifier picks ``id``/``osm_id`` with B4
-    precedence, exactly like the parquet and JDBC paths.
+    ``UPDATE ... SET tags = tags || hstore(...) WHERE id = ?``
+    (OMTZHModifier.java:156-169) as a file-pruned in-place UPDATE
+    (``cow_update``): each row's new tags come from that row alone, so
+    one predicate scan of the pinned version picks the data files
+    holding rows the back-fill changes, only those files are rewritten
+    (``backfill_table``'s SET expression, no join, no shuffle of table
+    rows), and version N+1 is published atomically via the manifest
+    commit protocol. The result equals ``backfill_table`` of the same
+    snapshot; a duplicate id is back-filled from its own row. The
+    schema classifier picks ``id``/``osm_id`` with B4 precedence,
+    exactly like the parquet and JDBC paths.
+
+    Conflict contract (unchanged from the MERGE form): the snapshot is
+    pinned once and the update commits with ``base_version`` = that
+    version, so a concurrent commit landing after the pin makes the
+    publish raise ``CowConflictError`` instead of clobbering it with
+    tags derived from the older version (the reference's per-batch
+    commit had no such guard). The caller retries from the new version,
+    like Delta.
 
     Returns ``(committed_version, n_updated)``; when nothing qualifies
     the table is untouched and the CURRENT version is returned (an empty
-    merge must not burn a version number — readers use version deltas as
-    a change signal, e.g. the cowtable streaming source).
+    update must not burn a version number — readers use version deltas
+    as a change signal, e.g. the cowtable streaming source).
     """
     from openmaptiles_zh_modifier_spark.catalog import classify_schema
     from openmaptiles_zh_modifier_spark.operators.cow_table import (
         _latest_version,
+        _logical_schema,
         _read_manifest,
-        cow_merge,
-        cow_read,
+        cow_update,
     )
 
-    # Pin the snapshot ONCE: read version V, derive from V, merge with
-    # base_version=V. If anyone commits V+1 while we derive, the manifest
-    # publish of V+1 below raises CowConflictError instead of silently
-    # clobbering their write with tags derived from V (read-derive-merge
-    # TOCTOU). Caller retries from the new version, like Delta.
     base = _latest_version(root)
-    part_col = _read_manifest(root, base)["partition_by"]
-    df = cow_read(spark, root, version=base)
-    tc = classify_schema(df.schema, root)
+    tc = classify_schema(_logical_schema(_read_manifest(root, base)), root)
     if tc is None:
         raise ValueError(
             f"cow table at {root} does not qualify for zh back-fill "
             "(needs name + tags and an id/osm_id column)"
         )
-    updates = updates_frame_with_tags(df, tc.id_field, compat_names_typo)
-    # partitioned tables: cow_merge routes the rewrite by the source's
-    # partition values, so the source must carry the partition column.
-    # The join-back is against the SAME pinned (immutable) snapshot, so
-    # it cannot tear, unlike the live-JDBC case updates_frame_with_tags
-    # exists to avoid.
-    if part_col and part_col != tc.id_field:
-        src = updates.join(
-            df.select(tc.id_field, part_col), tc.id_field
-        ).select(tc.id_field, "new_tags_map", part_col)
-    else:
-        src = updates.select(tc.id_field, "new_tags_map")
-    # one materialization serves the count, the uniqueness validation
-    # scan, and the merge write (three recomputes of the conversion
-    # projection otherwise)
-    src = src.persist()
-    try:
-        n_updated = src.count()
-        if n_updated == 0:
-            return base, 0
-        version = cow_merge(
-            spark,
-            root,
-            src,
-            on=tc.id_field,
-            matched_update={"tags": F.col("s.new_tags_map")},
-            base_version=base,
-        )
-    finally:
-        src.unpersist()
-    return version, n_updated
+    e = _zh_exprs(compat_names_typo, None)
+    return cow_update(
+        spark,
+        root,
+        condition=e["applies"],
+        assignments={"tags": e["new_tags"]},
+        base_version=base,
+    )
 
 
 def stream_upsert_to_cow(

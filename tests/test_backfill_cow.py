@@ -1,9 +1,13 @@
 """End-to-end zh back-fill against the ACID COW table format
 (`plans.pipeline.run_backfill_cow`): the reference's keyed UPDATE
-(OMTZHModifier.java:156-169) as a transactional lake MERGE. Asserts the
-post-merge table equals the plain `backfill_table` rewrite of the same
-data, that the previous version stays readable (time travel), and that
-a no-op run does not burn a version.
+(OMTZHModifier.java:156-169) as a file-pruned in-place `cow_update`.
+Asserts the new version equals the plain `backfill_table` rewrite of the
+live rows (partitioned, multi-file, deletion-vector, column-mapped and
+duplicate-key tables), that only the files holding updated rows are
+rewritten, that the previous version stays readable (time travel), that
+a no-op run does not burn a version, that a commit landing after the
+snapshot pin raises CowConflictError, and that a warm run stays within
+three Spark jobs.
 """
 
 from __future__ import annotations
@@ -87,35 +91,47 @@ def test_cow_backfill_partitioned_table(spark, tmp_path):
 
 def test_cow_backfill_conflict_on_concurrent_commit(spark, lattice_cow):
     """The base_version pin: a commit that lands between the snapshot
-    read and the merge publish must surface as CowConflictError, not a
-    silent clobber (review finding)."""
+    pin and the update's publish must surface as CowConflictError, not
+    a silent clobber (review finding). The competitor commits inside the
+    rewrite step, at its first data-file write; it commits through the
+    same helpers, so it fires once. Its v2 stays intact: its ``name``
+    update holds and no tag is back-filled."""
+    import unittest.mock as mock
+
     from pyspark.sql import functions as F
 
+    from openmaptiles_zh_modifier_spark.operators import cow_table
     from openmaptiles_zh_modifier_spark.operators.cow_table import (
         CowConflictError,
+        cow_history,
         cow_merge,
     )
 
     root, df = lattice_cow
-    real_merge = cow_merge
+    real_write = cow_table._write_commit
+    fired = []
 
-    def racing_merge(spark_, root_, src_, **kw):
-        # interleave a competing writer AFTER the snapshot was pinned
-        upd = spark_.createDataFrame([(3, "競")], "id long, name string")
-        real_merge(
-            spark_, root_, upd, on="id",
-            matched_update={"name": F.col("s.name")},
-        )
-        return real_merge(spark_, root_, src_, **kw)
+    def racing_write(*args, **kw):
+        if not fired:
+            # interleave a competing writer AFTER the snapshot was pinned
+            fired.append(True)
+            upd = spark.createDataFrame([(3, "競")], "id long, name string")
+            cow_merge(
+                spark, root, upd, on="id",
+                matched_update={"name": F.col("s.name")},
+            )
+        return real_write(*args, **kw)
 
-    import unittest.mock as mock
-
-    with mock.patch(
-        "openmaptiles_zh_modifier_spark.operators.cow_table.cow_merge",
-        side_effect=racing_merge,
-    ):
+    with mock.patch.object(cow_table, "_write_commit", side_effect=racing_write):
         with pytest.raises(CowConflictError):
             run_backfill_cow(spark, root)
+    assert fired and cow_history(root) == [1, 2]
+    want = sorted(
+        (r.id, "競" if r.id == 3 else r.name,
+         None if r.tags is None else sorted(r.tags.items()))
+        for r in df.collect()
+    )
+    assert _canon(cow_read(spark, root, version=2)) == want
 
 
 def test_cow_backfill_rejects_unqualified_table(spark, tmp_path):
@@ -124,6 +140,149 @@ def test_cow_backfill_rejects_unqualified_table(spark, tmp_path):
     cow_create(spark, root, df)
     with pytest.raises(ValueError, match="does not qualify"):
         run_backfill_cow(spark, root)
+
+
+def _rows(spark, rows):
+    return mk(spark, [Row(id=i, name=n, tags=t) for i, n, t in rows])
+
+
+_STILL = [  # lattice rows the back-fill never changes
+    (i, n, t) for i, n, t, upd, *_ in LATTICE if not upd
+]
+_ALL = [(i, n, t) for i, n, t, *_ in LATTICE]
+
+
+def _entries(root, version):
+    from openmaptiles_zh_modifier_spark.operators.cow_table import (
+        _read_manifest,
+    )
+
+    return _read_manifest(root, version)["files"]
+
+
+def _assert_backfilled(spark, root, before):
+    """Run the back-fill and check the new version equals
+    ``backfill_table`` of the live rows at ``before``."""
+    want = _canon(backfill_table(cow_read(spark, root, version=before)))
+    version, n_updated = run_backfill_cow(spark, root)
+    assert version == before + 1 and n_updated > 0
+    assert _canon(cow_read(spark, root, version=version)) == want
+    return version, n_updated
+
+
+def test_cow_backfill_rewrites_only_touched_files(spark, tmp_path):
+    """An unpartitioned table of three files, only one holding rows the
+    back-fill changes: that file alone is rewritten, and every other
+    entry carries over byte-identical (file-granular copy-on-write)."""
+    from openmaptiles_zh_modifier_spark.operators.cow_table import cow_append
+
+    root = str(tmp_path / "t")
+    shift = [(i + 100, n, t) for i, n, t in _STILL]
+    cow_create(spark, root, _rows(spark, _STILL).coalesce(1))
+    cow_append(spark, root, _rows(spark, shift).coalesce(1))
+    v = cow_append(
+        spark, root,
+        _rows(spark, [(i + 200, n, t) for i, n, t in _ALL]).coalesce(1),
+    )
+    before = _entries(root, v)
+    assert len(before) == 3
+    version, _ = _assert_backfilled(spark, root, v)
+    after = _entries(root, version)
+    assert [e for e in after if e in before] == before[:2]
+    assert before[2] not in after
+
+
+def test_cow_backfill_after_dv_delete(spark, tmp_path):
+    """A prior deletion-vector delete: deleted rows stay deleted (the
+    rewritten file materializes its vector) and the untouched entry
+    keeps its ``dv``."""
+    from openmaptiles_zh_modifier_spark.operators.cow_table import (
+        cow_append,
+        cow_delete,
+    )
+
+    root = str(tmp_path / "t")
+    cow_create(
+        spark, root,
+        _rows(spark, [(i + 100, n, t) for i, n, t in _STILL]).coalesce(1),
+    )
+    cow_append(spark, root, _rows(spark, _ALL).coalesce(1))
+    v = cow_delete(spark, root, "id IN (101, 4)")
+    before = _entries(root, v)
+    assert all(e.get("dv") for e in before)
+    version, _ = _assert_backfilled(spark, root, v)
+    after = _entries(root, version)
+    assert before[0] in after and before[1] not in after
+    assert not any(e.get("dv") for e in after if e != before[0])
+    ids = {r.id for r in cow_read(spark, root).collect()}
+    assert not ids & {101, 4}
+
+
+def test_cow_backfill_with_column_mapping(spark, tmp_path):
+    """A prior rename of a non-key column: the rewrite reads and writes
+    physical names, and the renamed column keeps its values."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from openmaptiles_zh_modifier_spark.operators.cow_table import (
+        cow_rename_column,
+    )
+
+    root = str(tmp_path / "t")
+    df = _rows(spark, _ALL).withColumn("note", F.concat(F.lit("n"), F.col("id")))
+    cow_create(spark, root, df.coalesce(1))
+    v = cow_rename_column(root, "note", "remark")
+    version, _ = _assert_backfilled(spark, root, v)
+    got = cow_read(spark, root, version=version)
+    assert {r.id: r.remark for r in got.collect()} == {
+        i: f"n{i}" for i, *_ in _ALL
+    }
+    new = [e for e in _entries(root, version) if e not in _entries(root, v)]
+    assert new and all(
+        "note" in pq.read_schema(f"{root}/{e['path']}").names for e in new
+    )
+
+
+def test_cow_backfill_duplicate_id(spark, tmp_path):
+    """Two rows sharing an id are each back-filled from their own row,
+    like ``backfill_table``. (The earlier MERGE form raised "merge
+    source has multiple rows" here.)"""
+    root = str(tmp_path / "t")
+    cow_create(
+        spark, root,
+        _rows(spark, [(3, "臺北", {}), (3, "東京", {}), (2, "Berlin", {})]),
+    )
+    _, n_updated = _assert_backfilled(spark, root, 1)
+    assert n_updated == 2
+
+
+def test_cow_backfill_job_count(spark, tmp_path):
+    """A warm back-fill of a partitioned table runs at most three Spark
+    jobs: the per-file predicate count (its shuffle map stage and its
+    result) and the rewrite."""
+    from pyspark.sql import functions as F
+
+    from openmaptiles_zh_modifier_spark.operators.cow_table import cow_clone
+
+    sc = spark.sparkContext
+    base = str(tmp_path / "base")
+    df = _rows(spark, _ALL).withColumn("region", (F.col("id") % 3).cast("int"))
+    cow_create(spark, base, df, partition_by="region")
+    cow_clone(base, str(tmp_path / "warm"))
+    run_backfill_cow(spark, str(tmp_path / "warm"))
+    clone = str(tmp_path / "clone")
+    cow_clone(base, clone)
+    group = "backfill-cow-census"
+    sc.setJobGroup(group, group)
+    try:
+        version, _ = run_backfill_cow(spark, clone)
+    finally:
+        sc.setJobGroup(None, None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 3, n_jobs
+    assert _canon(cow_read(spark, clone, version=version)) == _canon(
+        backfill_table(df)
+    )
 
 
 def test_stream_upsert_to_cow_equals_batch_latest_state(spark, sf_dir, tmp_path):

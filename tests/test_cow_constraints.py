@@ -133,6 +133,31 @@ def test_drop_constrained_column_refused(spark, table):
         )
 
 
+def test_rename_constrained_column_refused(spark, table):
+    """Delta refuses a RENAME COLUMN a CHECK constraint uses: the
+    constraint would name a column the table no longer has. The rename
+    raises naming the constraint, nothing commits, and the constraint
+    still gates writes; an unconstrained column still renames."""
+    cow_add_constraint(spark, table, "score_pos", "score > 0")
+    with pytest.raises(ValueError, match="score_pos"):
+        cow_rename_column(table, "score", "points")
+    assert _read_manifest(table)["version"] == 2  # nothing published
+    cow_rename_column(table, "tag", "label")
+    m = _read_manifest(table)
+    assert m["constraints"] == {"score_pos": "score > 0"}
+    assert [f.name for f in cow_read(spark, table).schema] == [
+        "id", "score", "label",
+    ]
+    with pytest.raises(CowConstraintError, match="score_pos"):
+        cow_append(
+            spark,
+            table,
+            spark.createDataFrame(
+                [(10, -1, "z")], "id long, score int, label string"
+            ).coalesce(1),
+        )
+
+
 def test_dsv2_writer_enforces_and_gates(spark, table, tmp_path):
     from openmaptiles_zh_modifier_spark.operators.cow_table import (
         CowConflictError,

@@ -166,6 +166,43 @@ def test_cow_merge_source_dup_key_rejected(spark, tmp_path):
         cow_merge(spark, root, dup, on="id", matched_update={"bal": F.col("s.bal")})
 
 
+def test_cow_update_in_place(spark, tmp_path):
+    """UPDATE ... SET ... WHERE: each matching row is rewritten from
+    itself, a NULL verdict does not match, only the one file holding the
+    matching row is rewritten, and a no-match update burns no version."""
+    from openmaptiles_zh_modifier_spark.operators.cow_table import (
+        CowConstraintError,
+        cow_add_constraint,
+        cow_update,
+    )
+
+    root = str(tmp_path / "t")
+    cow_create(spark, root, _base_df(spark), partition_by="region")
+    v1 = _read_manifest(root, 1)["files"]
+    v, n = cow_update(
+        spark, root, "region = 'US' AND bal > 15",
+        {"bal": F.col("bal") * 2, "name": F.upper("name")},
+    )
+    assert (v, n) == (2, 1)
+    got = _rows(cow_read(spark, root))
+    want = _rows(_base_df(spark))
+    want[2] = ("B", 40.0, "US")
+    assert got == want
+    v2 = _read_manifest(root, 2)["files"]
+    gone = [e for e in v1 if e not in v2]
+    assert len(gone) == 1 and gone[0]["partition"] == "US"
+    assert cow_update(spark, root, F.lit(None), {"bal": F.lit(0.0)}) == (2, 0)
+    assert cow_update(spark, root, "id > 99", {"bal": F.lit(0.0)}) == (2, 0)
+    with pytest.raises(ValueError, match="nope"):
+        cow_update(spark, root, "id = 1", {"nope": F.lit(1)})
+    with pytest.raises(ValueError, match="partition column"):
+        cow_update(spark, root, "id = 1", {"region": F.lit("DE")})
+    cow_add_constraint(spark, root, "bal_pos", "bal > 0")
+    with pytest.raises(CowConstraintError, match="bal_pos"):
+        cow_update(spark, root, "id = 1", {"bal": F.lit(-1.0)})
+    assert cow_history(root)[-1] == 3  # the violating update published nothing
+
+
 def test_cow_changes_cdf(spark, tmp_path):
     """Change data feed: file-diff narrowed, rewritten-unchanged rows
     cancel, updates surface as delete+insert pairs."""
@@ -760,6 +797,12 @@ def _carry_cases():
         "delete_dv": (lambda s, r: ct.cow_delete(s, r, "id % 4 = 1"), ()),
         "delete_rewrite": (
             lambda s, r: ct.cow_delete(s, r, "id % 4 = 1", rewrite=True), ()
+        ),
+        "update": (
+            lambda s, r: ct.cow_update(
+                s, r, "id % 4 = 1", {"bal": F.col("bal") + 1}
+            ),
+            (),
         ),
         "restore": (restore, ()),
         "set_partition_spec": (
