@@ -3,8 +3,10 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
 
-Each query is executed to completion (collect on a counted/materialized
-result) — timings include scan + shuffle + action, not plan construction.
+Each query is built and executed to completion (``fn(spark, sf_dir)
+.count()``; results are small) — a timing includes plan construction
+(with any jobs it runs and any session-memo entry it builds on first
+use) as well as scan + shuffle + action.
 """
 
 from __future__ import annotations

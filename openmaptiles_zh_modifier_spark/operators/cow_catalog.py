@@ -46,7 +46,6 @@ from openmaptiles_zh_modifier_spark.operators.cow_table import (
     CowConflictError,
     _latest_version,
     _manifest_path,
-    _read_manifest,
     cow_read,
 )
 
@@ -291,8 +290,3 @@ def catalog_verify(cat_root: str) -> dict:
             seq.append(pin["version"])
     return {"versions": latest, "tables": tables}
 
-
-def _read_manifest_for_tests(root: str, version: int | None = None) -> dict:
-    # re-exported so tests can reach the internal without importing the
-    # underscore name from cow_table directly
-    return _read_manifest(root, version)

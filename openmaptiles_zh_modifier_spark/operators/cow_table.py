@@ -365,6 +365,10 @@ def _logical_schema(m: dict):
 
 _DV_FN = "__cow_fn"
 _DV_POS = "__cow_pos"
+# sidecar rows: (_metadata.file_name, _metadata.row_index). A pinned
+# schema keeps a DV'd read from running a schema-inference job at plan
+# construction.
+_DV_SCHEMA = "fname string, pos bigint"
 
 
 def _read_files(
@@ -430,7 +434,9 @@ def _read_files(
         F.col("_metadata.row_index").alias(_DV_POS),
     )
     if dv_dirs:
-        dv = spark.read.parquet(*[os.path.join(root, d) for d in dv_dirs])
+        dv = spark.read.schema(_DV_SCHEMA).parquet(
+            *[os.path.join(root, d) for d in dv_dirs]
+        )
         df = df.join(
             dv,
             (F.col(_DV_FN) == dv["fname"]) & (F.col(_DV_POS) == dv["pos"]),
@@ -799,7 +805,7 @@ def _repoint_dv(
     )
     dv_rows = hits
     if prior_dirs:
-        prior = spark.read.parquet(
+        prior = spark.read.schema(_DV_SCHEMA).parquet(
             *[os.path.join(root, d) for d in prior_dirs]
         ).where(F.col("fname").isin(list(touched)))
         dv_rows = dv_rows.unionByName(prior)

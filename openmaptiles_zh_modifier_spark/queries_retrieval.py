@@ -671,13 +671,12 @@ def q_substring_dupfrac(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = parts[0]
     for p in parts[1:]:
         grams = F.zip_with(grams, p, lambda a, b: F.concat_ws(" ", a, b))
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
 
     # spread before the explode: single-split corpus (see SCALE.md
     # round-3); memoized — the gram-DF branch and the join-back branch
     # both consume it, and without the cache the 8-slice zip_with
     # explode runs twice per query (round 5: 1.4-2.0 s -> ~1 s warm)
-    g = memo_frame_lazy(
+    g = memo_frame(
         spark,
         f"dupfrac_g:{sf_dir}",
         lambda: (

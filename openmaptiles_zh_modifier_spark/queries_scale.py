@@ -17,7 +17,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openmaptiles_zh_modifier_spark.functions.text import h32, h32_sql
-from openmaptiles_zh_modifier_spark.registry import load, memo_frame_lazy, register
+from openmaptiles_zh_modifier_spark.registry import (
+    load,
+    memo_frame,
+    register,
+    session_memo,
+)
 
 # ---------------------------------------------------------------- bloom ----
 
@@ -297,18 +302,18 @@ def q_gdpr_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpivoted into the three-row manifest by exploding an array of
     structs over that one row — nothing executes at construction, one
     action runs everything. The two frames referenced by more than one
-    subtree (victims, del_orders) sit under ``memo_frame_lazy`` so the
+    subtree (victims, del_orders) sit under ``memo_frame`` so the
     duplicated subtrees collapse onto one cached intermediate instead of
     re-scanning their inputs per consumer."""
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    victims = memo_frame_lazy(
+    victims = memo_frame(
         spark,
         f"gdpr_victims:{sf_dir}",
         lambda: cust.where(F.col("c_custkey") % ERASE_MOD == 0).select("c_custkey"),
     )
-    del_orders = memo_frame_lazy(
+    del_orders = memo_frame(
         spark,
         f"gdpr_del_orders:{sf_dir}",
         lambda: orders.join(
@@ -832,9 +837,7 @@ def q_zorder_vs_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the comparison inherently consumes the Morton frame twice (two
     # layouts' zone maps); the lazy cache keeps that at ONE scan+compute
     # instead of per-consumer re-derivation (PLANS audit showed 6 scans)
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
-
-    m = memo_frame_lazy(
+    m = memo_frame(
         spark,
         f"zvl:m:{sf_dir}",
         lambda: pts.select(
@@ -997,61 +1000,25 @@ def q_cow_compact_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _zc_measure(spark, root, v_after)
 
 
-def _app_scoped_table_memo(
-    spark: SparkSession, memo: dict, sf_dir: str, builder
-) -> tuple[str, int]:
-    """ONE implementation of the app-scoped build-table memo the COW
-    measurement queries share: get-or-build (root, version) per
-    (applicationId, sf_dir); when a NEW app id arrives every stale
-    session's entry is evicted AND its temp table deleted from disk
-    (the builders mkdtemp real parquet — without the rmtree a
-    long-lived process restarting sessions leaks tables).
-    operators.salted keeps its own differently-shaped memo (per-plan
-    stats rows + a public invalidate API) but follows the same
-    new-app-evicts discipline."""
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    hit = memo.get(key)
-    if hit is not None:
-        return hit
-    if not any(k[0] == app for k in memo):
-        _evict_memo(memo)
-    val = builder()
-    memo[key] = val
-    return val
-
-
-def _evict_memo(memo: dict) -> None:
-    """The one rmtree-then-clear eviction path (dirname(root) is the
-    builder's mkdtemp dir) — shared by the new-app eviction above and
-    the bench harness's :func:`evict_table_memos`, so a temp-dir layout
-    change cannot leave one copy deleting the wrong directory."""
+def _build_table_memo(spark: SparkSession, name: str, sf_dir: str, builder):
+    """Get-or-build the (root, version) of a cow measurement query's
+    build table once per (session, sf_dir). The builders write real
+    parquet under a mkdtemp dir (``dirname(root)``), which eviction
+    deletes, so a long-lived process that restarts sessions or clears
+    between cold runs leaks no tables."""
     import shutil
 
-    for root, _ in memo.values():
-        shutil.rmtree(os.path.dirname(root), ignore_errors=True)
-    memo.clear()
-
-
-def evict_table_memos() -> None:
-    """Drop every memoized COW build table AND its on-disk temp dir.
-
-    The bench harness must call this (not ``memo.clear()`` directly)
-    before a cold rep: clearing the dicts alone leaks the mkdtemp
-    parquet trees for the life of the process, because the
-    new-app-evicts path in :func:`_app_scoped_table_memo` never fires
-    within one application."""
-    for memo in (_ZC_TABLES, _SE_TABLES, _DV_TABLES, _PE_TABLES):
-        _evict_memo(memo)
-
-
-# (applicationId, sf_dir) -> (table root, post-compaction version)
-_ZC_TABLES: dict[tuple, tuple[str, int]] = {}
+    return session_memo(
+        spark,
+        ("cow_table", name, sf_dir),
+        builder,
+        lambda val: shutil.rmtree(os.path.dirname(val[0]), ignore_errors=True),
+    )
 
 
 def _zc_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    return _app_scoped_table_memo(
-        spark, _ZC_TABLES, sf_dir, lambda: _zc_build(spark, sf_dir)
+    return _build_table_memo(
+        spark, "zc", sf_dir, lambda: _zc_build(spark, sf_dir)
     )
 
 
@@ -1164,13 +1131,9 @@ def _zc_measure(spark: SparkSession, root: str, v_after: int) -> DataFrame:
 # schema (operators/cow_table.py cow_append(evolve_schema=True)).
 # ---------------------------------------------------------------------------
 
-# (applicationId, sf_dir) -> (root, latest version)
-_SE_TABLES: dict[tuple, tuple[str, int]] = {}
-
-
 def _se_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    return _app_scoped_table_memo(
-        spark, _SE_TABLES, sf_dir, lambda: _se_build(spark, sf_dir)
+    return _build_table_memo(
+        spark, "se", sf_dir, lambda: _se_build(spark, sf_dir)
     )
 
 
@@ -1271,13 +1234,9 @@ def q_cow_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return census(2).unionByName(census(v_latest)).orderBy("version")
 
 
-# (applicationId, sf_dir) -> (table root, post-delete version)
-_DV_TABLES: dict[tuple, tuple[str, int]] = {}
-
-
 def _dv_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    return _app_scoped_table_memo(
-        spark, _DV_TABLES, sf_dir, lambda: _dv_build(spark, sf_dir)
+    return _build_table_memo(
+        spark, "dv", sf_dir, lambda: _dv_build(spark, sf_dir)
     )
 
 
@@ -1370,13 +1329,9 @@ def q_cow_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> (table root, post-evolution version)
-_PE_TABLES: dict[tuple, tuple[str, int]] = {}
-
-
 def _pe_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    return _app_scoped_table_memo(
-        spark, _PE_TABLES, sf_dir, lambda: _pe_build(spark, sf_dir)
+    return _build_table_memo(
+        spark, "pe", sf_dir, lambda: _pe_build(spark, sf_dir)
     )
 
 
@@ -1552,13 +1507,9 @@ def q_cow_agg_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> (table root, post-merge version)
-_MDV_TABLES: dict[tuple, tuple[str, int]] = {}
-
-
 def _mdv_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    return _app_scoped_table_memo(
-        spark, _MDV_TABLES, sf_dir, lambda: _mdv_build(spark, sf_dir)
+    return _build_table_memo(
+        spark, "mdv", sf_dir, lambda: _mdv_build(spark, sf_dir)
     )
 
 
@@ -1673,35 +1624,32 @@ def q_cow_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_custkey",
         )
 
-    # the CDF frame feeds BOTH census legs (insert + delete) — Spark
-    # does not dedupe identical subtrees across a union, so without a
-    # boundary each leg re-runs the full change-feed scan. Round 14
-    # (VERDICT r13 #1, second-order): per-call lazy_checkpoint instead
-    # of a session-lifetime memo — the CDF is computed once and both
-    # legs read the persisted blocks, without making a repeat timed run
-    # a cache read. It is not free at construction: under AQE the CDF's
-    # shuffle stages run inside the lazy_checkpoint call (5 jobs).
-    from openmaptiles_zh_modifier_spark.operators.lineage import (
-        lazy_checkpoint,
-    )
-
-    cdf = lazy_checkpoint(cow_changes(spark, root, 1, v))
+    # Both CDF census rows come from ONE conditional aggregate, so the
+    # change feed is referenced once: a union of two filtered legs would
+    # re-run its scans and exceptAll shuffles per leg, and a lineage
+    # boundary to share them runs those stages at construction.
+    cdf = cow_changes(spark, root, 1, v)
+    legs = []
+    for label, kind in ((90, "insert"), (91, "delete")):
+        hit = F.col("_change_type") == kind
+        legs.append(
+            F.struct(
+                F.lit(label).cast("long").alias("version"),
+                F.count_if(hit).alias("n_rows"),
+                F.sum(F.when(hit, F.col("o_custkey"))).alias("sum_custkey"),
+            )
+        )
     return (
         census(1, cow_read(spark, root, version=1))
         .unionByName(census(2, cow_read(spark, root, version=v)))
-        .unionByName(census(90, cdf.where(F.col("_change_type") == "insert")))
-        .unionByName(census(91, cdf.where(F.col("_change_type") == "delete")))
+        .unionByName(cdf.agg(F.array(*legs).alias("l")).select(F.inline("l")))
         .orderBy("version")
     )
 
 
-# (applicationId, sf_dir) -> (table root, post-restore version)
-_RESTORE_TABLES: dict[tuple, tuple[str, int]] = {}
-
-
 def _restore_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    return _app_scoped_table_memo(
-        spark, _RESTORE_TABLES, sf_dir, lambda: _restore_build(spark, sf_dir)
+    return _build_table_memo(
+        spark, "restore", sf_dir, lambda: _restore_build(spark, sf_dir)
     )
 
 
@@ -1793,13 +1741,9 @@ def q_cow_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> (catalog root, post-txn catalog version)
-_TXN_CATALOGS: dict[tuple, tuple[str, int]] = {}
-
-
 def _txn_catalog(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    return _app_scoped_table_memo(
-        spark, _TXN_CATALOGS, sf_dir, lambda: _txn_build(spark, sf_dir)
+    return _build_table_memo(
+        spark, "txn", sf_dir, lambda: _txn_build(spark, sf_dir)
     )
 
 
@@ -1934,13 +1878,9 @@ def q_cow_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("cat_version", "tname")
 
 
-# (applicationId, sf_dir) -> (clone root, source root)
-_CLONE_TABLES: dict[tuple, tuple[str, int]] = {}
-
-
 def _clone_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    return _app_scoped_table_memo(
-        spark, _CLONE_TABLES, sf_dir, lambda: _clone_build(spark, sf_dir)
+    return _build_table_memo(
+        spark, "clone", sf_dir, lambda: _clone_build(spark, sf_dir)
     )
 
 

@@ -1195,14 +1195,14 @@ def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     20-row broadcast of the per-source frame, one fold over 20 values —
     the whole query is scan-bound, exactly what you want for a 100 TB
     corpus-composition pass."""
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
     docs = load(spark, sf_dir, "documents")
     # one corpus scan: every downstream branch (total, weights, norm,
     # output) descends from this 20-row aggregate — without the cache
     # boundary each branch re-scans documents (4 scans, measured in the
     # plan audit)
-    per_src = memo_frame_lazy(
+    per_src = memo_frame(
         spark,
         f"mixture_per_src:{sf_dir}",
         lambda: docs.groupBy("source").agg(
@@ -1343,16 +1343,16 @@ def q_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "lang", "b")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
-    fb = memo_frame_lazy(spark, f"dsir_fb:{sf_dir}", lambda: fb)
+    fb = memo_frame(spark, f"dsir_fb:{sf_dir}", lambda: fb)
     # BOTH bucket LMs (raw corpus + target slice) in ONE pass over fb
     # via a conditional sum, memoized as a {DSIR_BUCKETS}-row frame:
     # round 5 — the previous rawb/tgtb/tots/r subtrees each re-scanned
     # the cached corpus-sized fb (5 scans ≈ 1.5 s at sf0.1); everything
     # below now derives from these 128 cached rows, leaving exactly one
     # fb scan in the scoring join.
-    bstats = memo_frame_lazy(
+    bstats = memo_frame(
         spark,
         f"dsir_bstats:{sf_dir}",
         lambda: fb.groupBy("b").agg(
@@ -1460,13 +1460,13 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable distinct-splits-per-content aggregate (content
     hash is the shuffle key); the audit join is content-key equi. At
     100 TB both shuffles carry only hashes."""
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
     docs = load(spark, sf_dir, "documents")
     h = F.pmod(h32(F.col("doc_id").cast("string")), F.lit(100))
     # both consumers (the per-content split census and the audit join)
     # read this narrow frame — memoized so the corpus md5 pass runs once
-    s = memo_frame_lazy(
+    s = memo_frame(
         spark,
         f"split_assign:{sf_dir}",
         lambda: docs.select(
@@ -1566,9 +1566,9 @@ def q_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     segs = docs.select(
         "doc_id", "source", F.explode(seg_arr).alias("seg")
     )
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
-    segs = memo_frame_lazy(spark, f"boiler_segs:{sf_dir}", lambda: segs)
+    segs = memo_frame(spark, f"boiler_segs:{sf_dir}", lambda: segs)
     df = segs.groupBy("seg").agg(F.countDistinct("doc_id").alias("d"))
     is_boiler = F.col("d") > SEG_DF_MAX
     return (
@@ -1623,7 +1623,7 @@ def boilerplate_clean_frame(
     frame — the registered query binds it to the fixture; the hypothesis
     property test drives it over generated corpora against a pure-Python
     reference."""
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
     spark = docs.sparkSession
     SEG_TOKENS = seg_tokens
@@ -1640,7 +1640,7 @@ def boilerplate_clean_frame(
         "doc_id", "source", F.posexplode(seg_arr).alias("pos", "seg")
     )
     if memo_key is not None:
-        segs = memo_frame_lazy(spark, memo_key, lambda: segs)
+        segs = memo_frame(spark, memo_key, lambda: segs)
     df = segs.groupBy("seg").agg(F.countDistinct("doc_id").alias("d"))
     kept = (
         segs.join(df, "seg")
@@ -1757,7 +1757,7 @@ def substring_clean_frame(
     the registered query binds it to the fixture; the hypothesis
     property test drives it over generated corpora against a
     pure-Python reference."""
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
     spark = docs.sparkSession
     K = k
@@ -1785,7 +1785,7 @@ def substring_clean_frame(
         )
 
     if memo_key is not None:
-        spans = memo_frame_lazy(spark, memo_key, build_spans)
+        spans = memo_frame(spark, memo_key, build_spans)
     else:
         spans = build_spans()
     dup = (
@@ -2029,9 +2029,9 @@ def q_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", h32(F.col("gram")).alias("gh"))
         .distinct()
     )
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
-    g = memo_frame_lazy(spark, f"xsrc_shingles:{sf_dir}", lambda: g)
+    g = memo_frame(spark, f"xsrc_shingles:{sf_dir}", lambda: g)
     ns = g.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     # Pair expansion is IN-ROW, not a self-join: one shuffle on gh
     # collapses each shingle to its sorted source set (bounded by
@@ -2158,9 +2158,9 @@ def q_token_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(F.explode(tokens(F.col("text"))).alias("w"))
     tc = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
-    tc = memo_frame_lazy(spark, f"zipf_tc:{sf_dir}", lambda: tc)
+    tc = memo_frame(spark, f"zipf_tc:{sf_dir}", lambda: tc)
     tot = tc.agg(
         F.sum("c").cast("long").alias("n_total"),
         F.count(F.lit(1)).cast("long").alias("vocab"),

@@ -1129,25 +1129,25 @@ def unigram_train_rounds(
     to the materialized RDD, keeping the logical plan linear in rounds.
     memo_frame keys make repeat calls in a session reuse the same
     checkpoints."""
-    from openmaptiles_zh_modifier_spark.registry import memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import memo_frame
 
     pos, chars, pieces = _unigram_base(spark, sf_dir)
-    pos = memo_frame_lazy(spark, f"uni3:pos:{sf_dir}", lambda: pos)
-    chars = memo_frame_lazy(spark, f"uni3:chars:{sf_dir}", lambda: chars)
+    pos = memo_frame(spark, f"uni3:pos:{sf_dir}", lambda: pos)
+    chars = memo_frame(spark, f"uni3:chars:{sf_dir}", lambda: chars)
     key = ",".join(str(k) for k in ks)
     rounds = []
     for r in range(len(ks) + 1):
-        pcost = memo_frame_lazy(
+        pcost = memo_frame(
             spark,
             f"uni3:pcost:{sf_dir}:{key}:{r}",
             lambda pieces=pieces: _cost_from_counts(pieces).localCheckpoint(),
         )
-        seg = memo_frame_lazy(
+        seg = memo_frame(
             spark,
             f"uni3:seg:{sf_dir}:{key}:{r}",
             lambda pcost=pcost: _viterbi_over(pos, pcost).localCheckpoint(),
         )
-        mstep = memo_frame_lazy(
+        mstep = memo_frame(
             spark,
             f"uni3:mstep:{sf_dir}:{key}:{r}",
             lambda seg=seg: (

