@@ -23,9 +23,10 @@ from openmaptiles_zh_modifier_spark.session import get_spark, session_builder
 
 # Populate the query registry HERE, not at registry-module import time:
 # the package __init__ always finishes before any submodule body runs, so
-# second-wave modules (queries_graph2, queries_embeddings2, ...) that
-# from-import first-wave siblings never see a partially initialized
-# module — regardless of which submodule a caller imports first.
+# query modules that from-import sibling modules (queries_retrieval and
+# queries_trainprep import from queries_embeddings) never see a partially
+# initialized module — regardless of which submodule a caller imports
+# first.
 from openmaptiles_zh_modifier_spark import registry as _registry
 
 _registry._register_all()

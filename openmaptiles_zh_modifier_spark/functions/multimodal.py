@@ -1011,32 +1011,6 @@ def resize_ppm(payload: bytes, tw: int, th: int) -> bytes:
     return header + out.tobytes()
 
 
-def ppm_patch_embed(payload: bytes, grid: int = 2) -> list[int]:
-    """Patch-pool "embedding" over a decoded PPM: the image is cut into
-    a ``grid x grid`` cell layout (cell i spans rows [i*H//g, (i+1)*H//g))
-    and each cell contributes its per-channel pixel SUM — integer-exact
-    (no float means), so cross-engine comparison needs no rounding
-    convention. Layout: [cell(0,0) R,G,B, cell(0,1) R,G,B, ...]."""
-    import numpy as np
-
-    d = decode_ppm(payload)
-    w, h = d["width"], d["height"]
-    pos = len(payload) - 3 * w * h
-    arr = (
-        np.frombuffer(payload, dtype=np.uint8, count=3 * w * h, offset=pos)
-        .reshape(h, w, 3)
-        .astype(np.int64)
-    )
-    out: list[int] = []
-    for i in range(grid):
-        r0, r1 = i * h // grid, (i + 1) * h // grid
-        for j in range(grid):
-            c0, c1 = j * w // grid, (j + 1) * w // grid
-            cell = arr[r0:r1, c0:c1]
-            out.extend(int(v) for v in cell.sum(axis=(0, 1)))
-    return out
-
-
 RESIZE_SCHEMA = (
     "doc_id long, width int, height int, thumb_w int, thumb_h int, "
     "resized_sum long, resized_checksum64 long"

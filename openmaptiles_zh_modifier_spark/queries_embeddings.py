@@ -16,7 +16,7 @@ rationals — exactly representable, engine-portable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from openmaptiles_zh_modifier_spark.registry import load, local_frame, register
@@ -112,8 +112,6 @@ def q_embed_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (_norm(F.col("qe")) * _norm(F.col("e"))),
         4,
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nn_id"))
     return (
         v.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
@@ -190,8 +188,6 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rawblk", F.floor(F.col("vec_id") / BLOCK_ROWS).cast("long")
         )
     )
-    from pyspark.sql import Window
-
     blocks_dim = raw.select("rawblk").distinct().select(
         "rawblk",
         (
@@ -327,8 +323,6 @@ def q_embed_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = F.round(
         _dot_fold(F.col("qe"), F.col("e")) / (F.col("qn") * F.col("nrm")), 4
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nn_id"))
     return (
         bucketed.join(
@@ -435,8 +429,6 @@ def q_embed_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         - 2 * _dot_fold(F.col("e"), F.col("ce"))
         + _dot_fold(F.col("ce"), F.col("ce"))
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("vec_id").orderBy("dist", "cid")
     return (
         v.crossJoin(F.broadcast(c))
@@ -519,8 +511,6 @@ def q_embed_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only matching cells. At 100 TB the assigned frame is written once,
     partitioned BY cid, and every later query reads just its probed
     partitions (directory-level pruning)."""
-    from pyspark.sql import Window
-
     v = load(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec("embedding").alias("e"), "label"
     )
@@ -637,8 +627,6 @@ def q_embed_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic across engines and runs — no ulp-sensitive ordering in
     the wide stage; floats appear only in the final small re-rank, behind
     a ROUND."""
-    from pyspark.sql import Window
-
     v = load(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec("embedding").alias("e"), "label"
     )
@@ -724,9 +712,9 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE Lloyd iteration of the IVF coarse quantizer as an
     oracle-checked query: argmin-assign every vector to its nearest seed
     centroid (first {N_CENTROIDS} vectors), then recompute per-(cell,
-    dim) means. Complements ``operators.ivf.kmeans_fit`` (the full
-    driver-looped trainer, pytest-covered): the judge-visible gate
-    proves the distributed update step itself is correct.
+    dim) means. A full trainer repeats this step until the assignment
+    stops moving; the gate proves the distributed update step itself is
+    correct.
 
     The mean numerator folds values in explicit vec_id order on both
     engines (bit-identical sums — same discipline as PageRank); the
@@ -829,8 +817,6 @@ def q_embed_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combinable on the doc key, which is the storage
     partitioning for multi-vector corpora). Production composes this
     with the IVF/LSH candidate cut — score only probed docs."""
-    from pyspark.sql import Window
-
     v = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.floor(F.col("vec_id") / DOC_VECS).alias("doc"),
@@ -884,9 +870,7 @@ PQ_DS = DIM // PQ_M    # dims per subspace
 PQ_K = 16              # codebook entries per subspace
 
 
-@register(
-    "q_embed_pq_adc",
-    oracle=f"""
+_PQ_ADC_ORACLE = f"""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e, label FROM embeddings),
 ms AS (SELECT unnest([{', '.join(str(m) for m in range(PQ_M))}]) AS m),
 subs AS (
@@ -929,8 +913,10 @@ FROM (
   FROM adist
 ) WHERE rk <= {TOP_K}
 ORDER BY qid, rk
-""",
-)
+"""
+
+
+@register("q_embed_pq_adc", oracle=_PQ_ADC_ORACLE)
 def q_embed_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantized ANN with asymmetric distance computation
     (Jégou et al.'s PQ): split the {DIM}-dim space into {PQ_M} x
@@ -944,11 +930,9 @@ def q_embed_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Codebooks here are the oracle-checkable deterministic seed (the
     first {PQ_K} vectors' sub-vectors, the same convention the IVF
-    queries use for coarse centroids); the production fit —
-    ``pq_train_codebooks`` running ``operators.ivf.kmeans_fit`` per
-    subspace, feeding the identical ``_pq_adc_topk`` plan plus an exact
-    re-rank — is exercised by tests/test_pq_trained.py (recall@5
-    0.58 -> 0.70 over seeded at a 10x shortlist).
+    queries use for coarse centroids). A production fit trains the
+    codebooks with k-means per subspace and feeds the identical
+    ``_pq_adc_topk`` plan; only the codebook rows differ.
 
     Determinism: every distance is a fixed-order fold of exact double
     products (_dot_fold == list_reduce); the {PQ_M}-term ADC sum folds
@@ -993,17 +977,10 @@ def _pq_subvectors(v: DataFrame) -> DataFrame:
     ).select("vec_id", "label", F.col("s.m").alias("m"), F.col("s.sv").alias("sv"))
 
 
-def _pq_adc_topk(
-    subs: DataFrame, cb: DataFrame, topk: int = TOP_K
-) -> DataFrame:
-    """PQ encode + ADC top-k against an arbitrary codebook frame
-    ``cb(m, cid, cv)`` — the seeded registered query and the
-    kmeans-trained variant share this exact plan; only the codebook rows
-    differ. The codebook is broadcast (M x K x DS doubles — kilobytes at
-    any corpus scale). ``topk`` > TOP_K produces the ADC SHORTLIST for
-    exact re-ranking (the IVF-PQ serving recipe)."""
-    from pyspark.sql import Window
-
+def _pq_adc_topk(subs: DataFrame, cb: DataFrame) -> DataFrame:
+    """PQ encode + ADC top-TOP_K against a codebook frame
+    ``cb(m, cid, cv)``. The codebook is broadcast (M x K x DS doubles —
+    kilobytes at any corpus scale)."""
     d = (
         _dot_fold(F.col("sv"), F.col("sv"))
         - 2 * _dot_fold(F.col("sv"), F.col("cv"))
@@ -1046,7 +1023,7 @@ def _pq_adc_topk(
     w = Window.partitionBy("qid").orderBy(F.asc("ad"), F.asc("nn_id"))
     return (
         adist.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= topk)
+        .where(F.col("rk") <= TOP_K)
         .select(
             "qid", "nn_id", "nn_label",
             F.round("ad", 4).alias("approx_dist"), "rk",
@@ -1055,104 +1032,15 @@ def _pq_adc_topk(
     )
 
 
-def pq_rerank_exact(
-    spark: SparkSession,
-    sf_dir: str,
-    shortlist: DataFrame,
-    topk: int = TOP_K,
-) -> DataFrame:
-    """Exact squared-L2 re-rank of a PQ-ADC shortlist ``(qid, nn_id)`` —
-    the second stage of the IVF-PQ serving recipe: the 4-byte-code ADC
-    scan nominates a shortlist (say 10x topk), then full vectors are
-    fetched for ONLY those candidates and ranked exactly. Recall equals
-    the shortlist's containment of the true top-k; the full-width vector
-    math touches shortlist-size rows per query, never the corpus."""
-    from pyspark.sql import Window
-
-    v = load(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec("embedding").alias("e")
-    )
-    q = v.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
-    )
-    c = (
-        shortlist.select("qid", "nn_id")
-        .join(
-            v.select(F.col("vec_id").alias("nn_id"), F.col("e").alias("ce")),
-            "nn_id",
-        )
-        .join(F.broadcast(q), "qid")
-    )
-    d = _dot_fold(F.col("ce"), F.col("ce")) - 2 * _dot_fold(
-        F.col("qe"), F.col("ce")
-    )
-    w = Window.partitionBy("qid").orderBy("d", "nn_id")
-    return (
-        c.select("qid", "nn_id", d.alias("d"))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= topk)
-        .select("qid", "nn_id", "rk")
-    )
-
-
-def pq_train_codebooks(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = PQ_K,
-    max_iter: int = 10,
-) -> DataFrame:
-    """Train per-subspace PQ codebooks with the distributed Lloyd trainer
-    (``operators.ivf.kmeans_fit``) and return them as a codebook frame
-    ``cb(m, cid, cv)`` consumable by ``_pq_adc_topk`` — the production
-    path the seeded registered query's docstring points at. Deterministic
-    (kmeans init = k lowest-id sub-vectors, first-min tie-breaks).
-
-    Scale shape: each fit is one narrow corpus pass per iteration with an
-    O(k*ds) driver collect — in production you fit on a driver-bounded
-    sample; the result is a broadcast literal either way. NOTE: runs
-    Spark jobs eagerly (it is a trainer, not a query) — keep out of
-    registered query construction (tools/type_audit.py laziness gate)."""
-    from openmaptiles_zh_modifier_spark.operators.ivf import kmeans_fit
-
-    v = load(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec("embedding").alias("e")
-    )
-    rows = []
-    for m in range(PQ_M):
-        sub = v.select(
-            "vec_id", F.slice("e", m * PQ_DS + 1, PQ_DS).alias("sv")
-        )
-        centroids, _hist = kmeans_fit(
-            sub, "sv", k, "vec_id", max_iter=max_iter
-        )
-        rows += [(m, cid, list(c)) for cid, c in enumerate(centroids)]
-    return spark.createDataFrame(
-        rows, "m int, cid long, cv array<double>"
-    )
-
-
-def pq_adc_topk_trained(
-    spark: SparkSession, sf_dir: str, cb: DataFrame, topk: int = TOP_K
-) -> DataFrame:
-    """The PQ-ADC search plan against trained codebooks (same plan as
-    the registered q_embed_pq_adc; only the codebook differs)."""
-    v = load(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec("embedding").alias("e"), "label"
-    )
-    return _pq_adc_topk(_pq_subvectors(v), cb, topk=topk)
-
-
 # -------------------------------------------------------------------------
 # PQ recall@k vs the exact scan (the ANN quality dial, measured in-engine)
 # -------------------------------------------------------------------------
 
-from openmaptiles_zh_modifier_spark.registry import ORACLE_SQL as _ORACLES
-
-
-@register(
-    "q_pq_recall",
-    oracle=f"""
-WITH pq AS ({_ORACLES['q_embed_pq_adc']}),
+def _recall_oracle(ann: str, ann_sql: str) -> str:
+    """DuckDB twin of :func:`pq_recall_vs_exact`: the ANN oracle
+    ``ann_sql`` as the CTE named ``ann``, against the exact top-k scan."""
+    return f"""
+WITH {ann} AS ({ann_sql}),
 v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 exd AS (
   SELECT q.vec_id AS qid, c.vec_id AS nn_id,
@@ -1163,14 +1051,16 @@ exd AS (
   FROM v q JOIN v c ON q.vec_id < {N_QUERIES} AND c.vec_id <> q.vec_id
 ),
 ex AS (SELECT qid, nn_id FROM exd WHERE rk <= {TOP_K})
-SELECT pq.qid,
+SELECT {ann}.qid,
        CAST(COUNT(ex.nn_id) AS BIGINT) AS n_hits,
        ROUND(COUNT(ex.nn_id) / {TOP_K}.0, 2) AS recall
-FROM pq LEFT JOIN ex ON ex.qid = pq.qid AND ex.nn_id = pq.nn_id
-GROUP BY pq.qid
-ORDER BY pq.qid
-""",
-)
+FROM {ann} LEFT JOIN ex ON ex.qid = {ann}.qid AND ex.nn_id = {ann}.nn_id
+GROUP BY {ann}.qid
+ORDER BY {ann}.qid
+"""
+
+
+@register("q_pq_recall", oracle=_recall_oracle("pq", _PQ_ADC_ORACLE))
 def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@{TOP_K} of the PQ-ADC index against the exact squared-L2
     scan — the measurement every ANN deployment runs before trusting an
@@ -1181,7 +1071,7 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ||q||^2 term (argmin-invariant), so it is one fold per pair.
     Measured on the fixture: mean recall@5 = 0.34 under the seeded
     (untrained) codebooks — honestly low, and exactly the reading that
-    tells a deployment to run operators.ivf.kmeans_fit per subspace
+    tells a deployment to train the codebooks (k-means per subspace)
     and/or raise M x K before serving.
 
     Scale shape: the exact side is the expensive one BY DESIGN — it is
@@ -1198,10 +1088,8 @@ def pq_recall_vs_exact(
     spark: SparkSession, sf_dir: str, pq: DataFrame
 ) -> DataFrame:
     """Per-query recall@TOP_K of an ANN result frame ``pq(qid, nn_id)``
-    against the exact squared-L2 scan (shared by the registered seeded
-    recall query and the trained-codebook test)."""
-    from pyspark.sql import Window
-
+    against the exact squared-L2 scan (shared by every registered recall
+    audit: PQ, RVQ, Matryoshka, binary Hamming)."""
     pq = pq.select("qid", "nn_id")
     v = load(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec("embedding").alias("e")
@@ -1684,3 +1572,701 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     return local_frame(
         spark, sorted(vd.items()), "component int, loading_micro long"
     ).orderBy("component")
+
+
+# ===========================================================================
+# Matryoshka truncation recall (the dimension-vs-quality dial of MRL
+# embeddings, Kusupati et al. 2022), Johnson-Lindenstrauss random projection
+# with measured distance distortion, the near-dup precision/recall curve,
+# binary (sign-bit) Hamming search and residual vector quantization: the
+# "shrink the vectors, know what you lose" tools next to PQ and int8.
+#
+# Determinism: the projection sign matrix is a fixed LCG-derived +-1.0
+# literal shared between both engines; every cross-row double reduction
+# folds in explicit candidate order (the pagerank pattern); presentation
+# rounds at 4 dp.
+# ===========================================================================
+
+# ---------------------------------------------------------------------------
+# Matryoshka truncation recall
+# ---------------------------------------------------------------------------
+
+MAT_DIM = 16  # serve on the first 16 of 64 dims
+
+
+@register(
+    "q_embed_matryoshka",
+    oracle=f"""
+WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+t AS (SELECT vec_id, e[1:{MAT_DIM}] AS te FROM v),
+q AS (SELECT vec_id AS qid, te AS qe FROM t WHERE vec_id < {N_QUERIES}),
+scored AS (
+  SELECT q.qid, t.vec_id AS nn_id,
+         ROW_NUMBER() OVER (
+           PARTITION BY q.qid
+           ORDER BY {_dot_sql('t.te', 't.te')} - 2 * {_dot_sql('q.qe', 't.te')},
+                    t.vec_id) AS rk
+  FROM q JOIN t ON t.vec_id <> q.qid
+),
+ann AS (SELECT qid, nn_id FROM scored WHERE rk <= {TOP_K}),
+fq AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < {N_QUERIES}),
+exd AS (
+  SELECT fq.qid, v.vec_id AS nn_id,
+         ROW_NUMBER() OVER (
+           PARTITION BY fq.qid
+           ORDER BY {_dot_sql('v.e', 'v.e')} - 2 * {_dot_sql('fq.qe', 'v.e')},
+                    v.vec_id) AS rk
+  FROM fq JOIN v ON v.vec_id <> fq.qid
+),
+ex AS (SELECT qid, nn_id FROM exd WHERE rk <= {TOP_K})
+SELECT ann.qid,
+       CAST(COUNT(ex.nn_id) AS BIGINT) AS n_hits,
+       ROUND(COUNT(ex.nn_id) / {TOP_K}.0, 2) AS recall
+FROM ann LEFT JOIN ex ON ex.qid = ann.qid AND ex.nn_id = ann.nn_id
+GROUP BY ann.qid
+ORDER BY ann.qid
+""",
+)
+def q_embed_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Matryoshka-style truncation recall: serve nearest-neighbor search
+    on only the FIRST {MAT_DIM} of {DIM} dimensions (the MRL deployment
+    trick — a prefix of a matryoshka-trained embedding is itself a
+    valid embedding at 1/{DIM // MAT_DIM} the storage and FLOPs) and
+    measure recall@{TOP_K} against the full-dimension exact scan.
+    These fixture vectors are not MRL-trained, so the measured recall
+    is the honest untrained floor — the same reading q_pq_recall gives
+    for untrained codebooks.
+
+    Determinism: both ANN and exact sides rank by the fold-ordered
+    squared-L2 surrogate ||c||^2 - 2<q,c> with id tie-breaks.
+
+    Scale shape: the truncated scan reads {MAT_DIM * 4} bytes/vector
+    instead of {DIM * 4} — at 100 TB that is a 4x scan-cost cut before
+    any indexing; plan is broadcast-queries + one corpus pass + per-
+    query top-k, identical to the exact path it replaces."""
+    v = load(spark, sf_dir, "embeddings").select(
+        "vec_id", _dvec("embedding").alias("e")
+    )
+    t = v.select("vec_id", F.slice("e", 1, MAT_DIM).alias("te"))
+    q = t.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"), F.col("te").alias("qe")
+    )
+    dist = _dot_fold(F.col("te"), F.col("te")) - 2 * _dot_fold(
+        F.col("qe"), F.col("te")
+    )
+    w = Window.partitionBy("qid").orderBy("d", "nn_id")
+    ann = (
+        t.crossJoin(F.broadcast(q))
+        .where(F.col("vec_id") != F.col("qid"))
+        .select("qid", F.col("vec_id").alias("nn_id"), dist.alias("d"))
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= TOP_K)
+        .select("qid", "nn_id")
+    )
+    return pq_recall_vs_exact(spark, sf_dir, ann)
+
+
+# ---------------------------------------------------------------------------
+# Johnson-Lindenstrauss random projection + distortion audit
+# ---------------------------------------------------------------------------
+
+JL_K = 16  # projected dimensionality
+JL_LCG_A, JL_LCG_C, JL_LCG_M = 1103515245, 12345, 1 << 31
+JL_CAND_MOD, JL_CAND_RES = 7, 3  # candidate sample: vec_id % 7 == 3
+
+
+def _jl_signs(k: int) -> list[float]:
+    """Row k of the fixed Rademacher +-1 projection matrix (LCG parity,
+    seeded disjointly from the LSH planes via the +9973 offset)."""
+    out = []
+    for i in range(DIM):
+        x = (JL_LCG_A * (k * DIM + i + 9973) + JL_LCG_C) % JL_LCG_M
+        out.append(1.0 if x % 2 == 0 else -1.0)
+    return out
+
+
+def _jl_sign_sql(k: int) -> str:
+    return "[" + ", ".join(repr(c) for c in _jl_signs(k)) + "]::DOUBLE[]"
+
+
+def _jl_proj_sql(e: str) -> str:
+    comps = ", ".join(
+        _dot_sql(e, _jl_sign_sql(k)) for k in range(JL_K)
+    )
+    return f"[{comps}]"
+
+
+@register(
+    "q_embed_rand_projection",
+    oracle=f"""
+WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+p AS (SELECT vec_id, e, {_jl_proj_sql('e')} AS pe FROM v),
+q AS (SELECT vec_id AS qid, e AS qe, pe AS qpe FROM p
+      WHERE vec_id < {N_QUERIES}),
+c AS (SELECT vec_id AS cid, e AS ce, pe AS cpe FROM p
+      WHERE vec_id % {JL_CAND_MOD} = {JL_CAND_RES} AND vec_id >= {N_QUERIES}),
+pairs AS (
+  SELECT qid, cid,
+         ROUND(({_dot_sql('list_transform(list_zip(qpe, cpe), z -> z[1] - z[2])',
+                          'list_transform(list_zip(qpe, cpe), z -> z[1] - z[2])')})
+               / ({JL_K} * ({_dot_sql('list_transform(list_zip(qe, ce), z -> z[1] - z[2])',
+                                      'list_transform(list_zip(qe, ce), z -> z[1] - z[2])')})),
+               6) AS ratio
+  FROM q CROSS JOIN c
+)
+SELECT qid,
+       CAST(COUNT(*) AS BIGINT) AS n_pairs,
+       ROUND(list_reduce(list_prepend(0.0::DOUBLE, list(ratio ORDER BY cid)),
+                         (acc, x) -> acc + x) / COUNT(*), 4) AS mean_ratio,
+       ROUND(MIN(ratio), 4) AS min_ratio,
+       ROUND(MAX(ratio), 4) AS max_ratio
+FROM pairs GROUP BY qid
+ORDER BY qid
+""",
+)
+def q_embed_rand_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Johnson-Lindenstrauss random projection ({DIM} -> {JL_K} dims via
+    a fixed Rademacher +-1 sign matrix) with the distortion audit that
+    justifies it: for each query vector against a deterministic
+    candidate sample, the ratio ||P(q-c)||^2 / (k * ||q-c||^2), whose
+    expectation is 1 under the JL guarantee (each projected coordinate
+    of x has variance ||x||^2 for +-1 entries). The per-query
+    mean/min/max ratios are the concentration reading that tells a
+    pipeline whether {JL_K} dims suffice before swapping the projection
+    into the dedup or ANN path.
+
+    Determinism: the sign matrix is a Python-generated literal injected
+    into both plans; distance folds run in array order; the per-query
+    mean folds in candidate order; ratios round at 6 dp before the
+    fold, stats at 4 dp.
+
+    Scale shape: projection is a per-row map ({JL_K} folds of {DIM}
+    muls — whole-stage codegen, no shuffle); the audit joins a
+    broadcast {N_QUERIES}-row query side against a ~1/{JL_CAND_MOD}
+    candidate sample. At 100 TB the projection runs in the ingest scan
+    and the audit on a sample, exactly as here."""
+    v = load(spark, sf_dir, "embeddings").select(
+        "vec_id", _dvec("embedding").alias("e")
+    )
+    proj = F.array(
+        *[
+            _dot_fold(
+                F.col("e"),
+                F.array(*[F.lit(s) for s in _jl_signs(k)]),
+            )
+            for k in range(JL_K)
+        ]
+    )
+    p = v.select("vec_id", "e", proj.alias("pe"))
+    q = p.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"),
+        F.col("e").alias("qe"),
+        F.col("pe").alias("qpe"),
+    )
+    c = p.where(
+        (F.pmod(F.col("vec_id"), F.lit(JL_CAND_MOD)) == JL_CAND_RES)
+        & (F.col("vec_id") >= N_QUERIES)
+    ).select(
+        F.col("vec_id").alias("cid"),
+        F.col("e").alias("ce"),
+        F.col("pe").alias("cpe"),
+    )
+    dproj = F.zip_with(F.col("qpe"), F.col("cpe"), lambda a, b: a - b)
+    dfull = F.zip_with(F.col("qe"), F.col("ce"), lambda a, b: a - b)
+    ratio = F.round(
+        _dot_fold(dproj, dproj) / (JL_K * _dot_fold(dfull, dfull)), 6
+    )
+    pairs = c.crossJoin(F.broadcast(q)).select(
+        "qid", "cid", ratio.alias("ratio")
+    )
+    return (
+        pairs.groupBy("qid")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_pairs"),
+            F.round(
+                F.aggregate(
+                    F.array_sort(F.collect_list(F.struct("cid", "ratio"))),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x["ratio"],
+                )
+                / F.count(F.lit(1)),
+                4,
+            ).alias("mean_ratio"),
+            F.round(F.min("ratio"), 4).alias("min_ratio"),
+            F.round(F.max("ratio"), 4).alias("max_ratio"),
+        )
+        .orderBy("qid")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Blocking-quality PR curve: LSH candidates vs exact near-dup truth
+# ---------------------------------------------------------------------------
+
+PR_SAMPLE_MOD = 5  # evaluate on vectors with vec_id % 5 == 0
+PR_THRESHOLDS = (0.35, 0.40, 0.45)
+
+
+@register(
+    "q_neardup_pr_curve",
+    oracle=f"""
+WITH v AS (
+  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
+  WHERE vec_id % {PR_SAMPLE_MOD} = 0
+),
+b AS (SELECT vec_id, e, {_bucket_sql()} AS bucket FROM v),
+pairs AS (
+  SELECT a.vec_id AS ida, bb.vec_id AS idb,
+         ROUND({_dot_sql('a.e', 'bb.e')}
+               / (sqrt({_dot_sql('a.e', 'a.e')})
+                  * sqrt({_dot_sql('bb.e', 'bb.e')})), 6) AS cos,
+         CASE WHEN a.bucket = bb.bucket THEN 1 ELSE 0 END AS cand
+  FROM b a JOIN b bb ON a.vec_id < bb.vec_id
+),
+agg AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
+         CAST(SUM(cand) AS BIGINT) AS n_cand,
+         {', '.join(
+           f"CAST(SUM(CASE WHEN cos >= {t} THEN 1 ELSE 0 END) AS BIGINT)"
+           f" AS nt_{i}, "
+           f"CAST(SUM(CASE WHEN cand = 1 AND cos >= {t} THEN 1 ELSE 0 END)"
+           f" AS BIGINT) AS nh_{i}"
+           for i, t in enumerate(PR_THRESHOLDS))}
+  FROM pairs
+)
+{' UNION ALL '.join(
+  f"SELECT CAST({t} AS DOUBLE) AS threshold, n_pairs, n_cand,"
+  f" nt_{i} AS n_true,"
+  f" nh_{i} AS n_hit,"
+  f" ROUND(CASE WHEN n_cand > 0 THEN nh_{i} * 1.0 / n_cand END, 4)"
+  f" AS precision_pairs,"
+  f" ROUND(CASE WHEN nt_{i} > 0 THEN nh_{i} * 1.0 / nt_{i} END, 4)"
+  f" AS recall FROM agg"
+  for i, t in enumerate(PR_THRESHOLDS))}
+ORDER BY threshold
+""",
+)
+def q_neardup_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blocking-quality evaluation of the hyperplane-LSH candidate
+    generator against exact cosine truth, as a precision/recall curve
+    over near-dup thresholds — the dedup-side twin of q_pq_recall (ANN
+    recall) and q_nb_calibration (classifier reliability): before
+    trusting LSH-bucketed dedup at scale you measure what fraction of
+    true near-dup pairs share a bucket (recall = pair completeness)
+    and how much of the candidate set is signal (precision; its
+    inverse tracks the verify-stage cost the blocking buys you).
+
+    Determinism: cosines round at 6 dp before thresholding; buckets
+    are the shared fixed-hyperplane sign codes; everything else is
+    exact counts evaluated on the deterministic
+    vec_id % {PR_SAMPLE_MOD} sample.
+
+    Scale shape: the exact side is O(sample^2) BY DESIGN — it is the
+    ground-truth audit you run on a sample (the mod-{PR_SAMPLE_MOD}
+    slice here IS that sample), not the serving path; the serving path
+    is the bucketed join whose quality this measures. One pair scan
+    computes cosine + candidacy together; one aggregate carries every
+    threshold as a conditional sum (no per-threshold pass)."""
+    v = (
+        load(spark, sf_dir, "embeddings")
+        .where(F.pmod(F.col("vec_id"), F.lit(PR_SAMPLE_MOD)) == 0)
+        .select("vec_id", _dvec("embedding").alias("e"))
+    )
+    bucket = None
+    for p in range(LSH_PLANES):
+        plane = F.array(*[F.lit(c) for c in _plane(p)])
+        bit = F.when(_dot_fold(F.col("e"), plane) > 0, F.lit(1 << p)).otherwise(
+            0
+        )
+        bucket = bit if bucket is None else bucket + bit
+    b = v.withColumn("bucket", bucket)
+    a = b.select(
+        F.col("vec_id").alias("ida"),
+        F.col("e").alias("ea"),
+        F.col("bucket").alias("ba"),
+    )
+    bb = b.select(
+        F.col("vec_id").alias("idb"),
+        F.col("e").alias("eb"),
+        F.col("bucket").alias("bb"),
+    )
+    cos = F.round(
+        _dot_fold(F.col("ea"), F.col("eb"))
+        / (
+            F.sqrt(_dot_fold(F.col("ea"), F.col("ea")))
+            * F.sqrt(_dot_fold(F.col("eb"), F.col("eb")))
+        ),
+        6,
+    )
+    pairs = a.join(bb, F.col("ida") < F.col("idb")).select(
+        cos.alias("cos"),
+        (F.col("ba") == F.col("bb")).cast("int").alias("cand"),
+    )
+    aggs = [
+        F.count(F.lit(1)).cast("long").alias("n_pairs"),
+        F.sum("cand").cast("long").alias("n_cand"),
+    ]
+    for i, t in enumerate(PR_THRESHOLDS):
+        aggs.append(
+            F.sum((F.col("cos") >= t).cast("int")).cast("long").alias(f"nt_{i}")
+        )
+        aggs.append(
+            F.sum(((F.col("cand") == 1) & (F.col("cos") >= t)).cast("int"))
+            .cast("long")
+            .alias(f"nh_{i}")
+        )
+    one = pairs.agg(*aggs)
+    rows = []
+    for i, t in enumerate(PR_THRESHOLDS):
+        rows.append(
+            one.select(
+                F.lit(t).alias("threshold"),
+                "n_pairs",
+                "n_cand",
+                F.col(f"nt_{i}").alias("n_true"),
+                F.col(f"nh_{i}").alias("n_hit"),
+                F.round(
+                    F.when(
+                        F.col("n_cand") > 0,
+                        F.col(f"nh_{i}") * F.lit(1.0) / F.col("n_cand"),
+                    ),
+                    4,
+                ).alias("precision_pairs"),
+                F.round(
+                    F.when(
+                        F.col(f"nt_{i}") > 0,
+                        F.col(f"nh_{i}") * F.lit(1.0) / F.col(f"nt_{i}"),
+                    ),
+                    4,
+                ).alias("recall"),
+            )
+        )
+    out = rows[0]
+    for r in rows[1:]:
+        out = out.unionByName(r)
+    return out.orderBy("threshold")
+
+
+# ---------------------------------------------------------------------------
+# Binary (sign-bit) quantization + Hamming shortlist + exact re-rank
+# ---------------------------------------------------------------------------
+
+BIN_RERANK = 30  # Hamming shortlist size re-ranked exactly
+
+
+def _sign_word_sql(e: str, lo: int, n: int) -> str:
+    """BIGINT whose n low bits are the sign bits of e[lo:lo+n-1]."""
+    return (
+        f"list_reduce(list_transform({e}[{lo}:{lo + n - 1}], "
+        "x -> CASE WHEN x > 0 THEN 1::BIGINT ELSE 0::BIGINT END), "
+        "(acc, b) -> acc * 2 + b)"
+    )
+
+
+def _sign_word(e, lo: int, n: int):
+    return F.aggregate(
+        F.slice(e, lo, n),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc * 2 + F.when(x > 0, 1).otherwise(0),
+    )
+
+
+@register(
+    "q_embed_binary_hamming",
+    oracle=f"""
+WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+b AS (
+  SELECT vec_id, e,
+         {_sign_word_sql('e', 1, 32)} AS w1,
+         {_sign_word_sql('e', 33, 32)} AS w2
+  FROM v
+),
+q AS (SELECT vec_id AS qid, e AS qe, w1 AS qw1, w2 AS qw2
+      FROM b WHERE vec_id < {N_QUERIES}),
+coarse AS (
+  SELECT q.qid, b.vec_id AS nn_id, b.e, q.qe,
+         ROW_NUMBER() OVER (
+           PARTITION BY q.qid
+           ORDER BY bit_count(xor(q.qw1, b.w1)) + bit_count(xor(q.qw2, b.w2)),
+                    b.vec_id) AS rk
+  FROM q JOIN b ON b.vec_id <> q.qid
+),
+rr AS (
+  SELECT qid, nn_id,
+         ROW_NUMBER() OVER (
+           PARTITION BY qid
+           ORDER BY {_dot_sql('e', 'e')} - 2 * {_dot_sql('qe', 'e')},
+                    nn_id) AS rk
+  FROM coarse WHERE rk <= {BIN_RERANK}
+),
+ann AS (SELECT qid, nn_id FROM rr WHERE rk <= {TOP_K}),
+fv AS (SELECT vec_id, e FROM v),
+fq AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < {N_QUERIES}),
+exd AS (
+  SELECT fq.qid, fv.vec_id AS nn_id,
+         ROW_NUMBER() OVER (
+           PARTITION BY fq.qid
+           ORDER BY {_dot_sql('fv.e', 'fv.e')} - 2 * {_dot_sql('fq.qe', 'fv.e')},
+                    fv.vec_id) AS rk
+  FROM fq JOIN fv ON fv.vec_id <> fq.qid
+),
+ex AS (SELECT qid, nn_id FROM exd WHERE rk <= {TOP_K})
+SELECT ann.qid,
+       CAST(COUNT(ex.nn_id) AS BIGINT) AS n_hits,
+       ROUND(COUNT(ex.nn_id) / {TOP_K}.0, 2) AS recall
+FROM ann LEFT JOIN ex ON ex.qid = ann.qid AND ex.nn_id = ann.nn_id
+GROUP BY ann.qid
+ORDER BY ann.qid
+""",
+)
+def q_embed_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary (sign-bit) embedding quantization with Hamming-distance
+    shortlist + exact re-rank — the most aggressive standard compression
+    point on the ANN dial next to int8 (q_embed_int8_rerank) and PQ
+    (q_embed_pq_adc): one bit per dimension, {DIM} dims packed into two
+    BIGINT sign words, 32x smaller than float32 storage. Coarse ranking
+    is bit_count(xor) per word pair — integer-exact, so the shortlist
+    cut is deterministic; the top-{BIN_RERANK} shortlist per query is
+    re-ranked with full-precision distance and recall@{TOP_K} is
+    measured against the exact scan (the honest untrained floor, as for
+    PQ/MRL).
+
+    Determinism: sign packing, XOR, and popcount are exact integers on
+    both engines (identical acc*2+bit fold, identical 32-bit word
+    split — no 64-bit fold because a 64th bit would wrap Java's silent
+    long overflow vs DuckDB's checked one); floats only in the small
+    re-rank behind the fold-ordered surrogate with id tie-breaks.
+
+    Scale shape: at 100 TB the wide O(n_query x n_corpus) stage reads
+    16 bytes/vector instead of 512 and evaluates 2 xor+popcnt ops/pair
+    (SIMD-friendly, whole-stage-codegen JVM intrinsics) — memory
+    bandwidth drops ~32x; exact math touches only
+    n_query x {BIN_RERANK} rows."""
+    v = load(spark, sf_dir, "embeddings").select(
+        "vec_id", _dvec("embedding").alias("e")
+    )
+    b = v.select(
+        "vec_id",
+        "e",
+        _sign_word(F.col("e"), 1, 32).alias("w1"),
+        _sign_word(F.col("e"), 33, 32).alias("w2"),
+    )
+    q = b.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"),
+        F.col("e").alias("qe"),
+        F.col("w1").alias("qw1"),
+        F.col("w2").alias("qw2"),
+    )
+    ham = F.bit_count(F.col("qw1").bitwiseXOR(F.col("w1"))) + F.bit_count(
+        F.col("qw2").bitwiseXOR(F.col("w2"))
+    )
+    wc = Window.partitionBy("qid").orderBy("ham", "nn_id")
+    coarse = (
+        b.crossJoin(F.broadcast(q))
+        .where(F.col("vec_id") != F.col("qid"))
+        .select(
+            "qid",
+            F.col("vec_id").alias("nn_id"),
+            "e",
+            "qe",
+            ham.alias("ham"),
+        )
+        .withColumn("rk", F.row_number().over(wc))
+        .where(F.col("rk") <= BIN_RERANK)
+    )
+    dist = _dot_fold(F.col("e"), F.col("e")) - 2 * _dot_fold(
+        F.col("qe"), F.col("e")
+    )
+    wr = Window.partitionBy("qid").orderBy("d", "nn_id")
+    ann = (
+        coarse.select("qid", "nn_id", dist.alias("d"))
+        .withColumn("rk", F.row_number().over(wr))
+        .where(F.col("rk") <= TOP_K)
+        .select("qid", "nn_id")
+    )
+    return pq_recall_vs_exact(spark, sf_dir, ann)
+
+
+# -------------------------------------------------------------------------
+# Residual vector quantization (RVQ) + pair-table ADC
+# -------------------------------------------------------------------------
+
+RVQ_K1 = 16  # level-1 codebook entries
+RVQ_K2 = 16  # level-2 (residual) codebook entries
+
+
+_RVQ_ADC_ORACLE = f"""
+WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e, label FROM embeddings),
+cb1 AS (SELECT vec_id AS cid1, e AS c1 FROM v WHERE vec_id < {RVQ_K1}),
+d1 AS (
+  SELECT v.vec_id, v.label, v.e, cb1.cid1, cb1.c1,
+         {_dot_sql('v.e', 'v.e')} - 2 * {_dot_sql('v.e', 'cb1.c1')}
+           + {_dot_sql('cb1.c1', 'cb1.c1')} AS d
+  FROM v CROSS JOIN cb1
+),
+a1 AS (
+  SELECT vec_id, label, e, cid1, c1 FROM (
+    SELECT *, ROW_NUMBER() OVER (
+      PARTITION BY vec_id ORDER BY d, cid1) AS rk
+    FROM d1
+  ) WHERE rk = 1
+),
+resid AS (
+  SELECT vec_id, label, cid1,
+         list_transform(list_zip(e, c1), z -> z[1] - z[2]) AS r
+  FROM a1
+),
+cb2 AS (
+  SELECT vec_id AS cid2, r AS c2 FROM resid
+  WHERE vec_id >= {RVQ_K1} AND vec_id < {RVQ_K1 + RVQ_K2}
+),
+d2 AS (
+  SELECT rr.vec_id, rr.label, rr.cid1, cb2.cid2,
+         {_dot_sql('rr.r', 'rr.r')} - 2 * {_dot_sql('rr.r', 'cb2.c2')}
+           + {_dot_sql('cb2.c2', 'cb2.c2')} AS d
+  FROM resid rr CROSS JOIN cb2
+),
+codes AS (
+  SELECT vec_id, label, cid1, cid2 FROM (
+    SELECT *, ROW_NUMBER() OVER (
+      PARTITION BY vec_id ORDER BY d, cid2) AS rk
+    FROM d2
+  ) WHERE rk = 1
+),
+pairs AS (
+  SELECT cb1.cid1, cb2.cid2,
+         list_transform(list_zip(cb1.c1, cb2.c2), z -> z[1] + z[2]) AS cc
+  FROM cb1 CROSS JOIN cb2
+),
+q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < {N_QUERIES}),
+qd AS (
+  SELECT q.qid, p.cid1, p.cid2,
+         {_dot_sql('q.qe', 'q.qe')} - 2 * {_dot_sql('q.qe', 'p.cc')}
+           + {_dot_sql('p.cc', 'p.cc')} AS ad
+  FROM q CROSS JOIN pairs p
+),
+cand AS (
+  SELECT qd.qid, c.vec_id AS nn_id, c.label AS nn_label, qd.ad
+  FROM codes c JOIN qd ON qd.cid1 = c.cid1 AND qd.cid2 = c.cid2
+  WHERE c.vec_id <> qd.qid
+)
+SELECT qid, nn_id, nn_label, ROUND(ad, 4) AS approx_dist, rk
+FROM (
+  SELECT *, ROW_NUMBER() OVER (
+    PARTITION BY qid ORDER BY ad, nn_id) AS rk
+  FROM cand
+) WHERE rk <= {TOP_K}
+ORDER BY qid, rk
+"""
+
+
+@register("q_embed_rvq_adc", oracle=_RVQ_ADC_ORACLE)
+def q_embed_rvq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Residual vector quantization ANN (round 12 — the additive-
+    codebook family: RVQ is the quantizer behind modern neural audio
+    codecs and additive-quantization ANN indexes): level 1 assigns each
+    vector to its nearest FULL-dimension centroid; level 2 quantizes the
+    RESIDUAL against a second codebook; the reconstruction is the SUM
+    c1 + c2, so {RVQ_K1} + {RVQ_K2} stored centroids span
+    {RVQ_K1} x {RVQ_K2} effective cells — the expressiveness-per-byte
+    trade PQ makes across subspaces, made across SCALES instead.
+    Queries run pair-table ADC: the {RVQ_K1} x {RVQ_K2} = 256 summed
+    centroids are materialized once (broadcast kilobytes), each query
+    scores all 256 cells exactly, and candidate distance is ONE lookup
+    on (cid1, cid2) — no full-width math per candidate.
+
+    Codebooks are the oracle-checkable deterministic seed (level 1 =
+    first {RVQ_K1} vectors; level 2 = the NEXT {RVQ_K2} vectors'
+    level-1 residuals — real residuals, so level 2 genuinely corrects
+    level 1). Determinism: fixed-order fold dots, elementwise list
+    arithmetic, id tie-breaks; bit-identical cross-engine before the
+    presentation ROUND.
+
+    Scale shape: assignment is a corpus pass against a broadcast
+    codebook per level (map-side argmin); the code table (2 small ints
+    per vector) replaces embeddings for search; the pair table is
+    codebook-sized, never corpus-sized."""
+    v = load(spark, sf_dir, "embeddings").select(
+        "vec_id", _dvec("embedding").alias("e"), "label"
+    )
+    cb1 = v.where(F.col("vec_id") < RVQ_K1).select(
+        F.col("vec_id").alias("cid1"), F.col("e").alias("c1")
+    )
+
+    def assign(frame, vec_col, cb, cid_col, cvec_col):
+        d = (
+            _dot_fold(F.col(vec_col), F.col(vec_col))
+            - 2 * _dot_fold(F.col(vec_col), F.col(cvec_col))
+            + _dot_fold(F.col(cvec_col), F.col(cvec_col))
+        )
+        w = Window.partitionBy("vec_id").orderBy("d", cid_col)
+        return (
+            frame.crossJoin(F.broadcast(cb))
+            .withColumn("d", d)
+            .withColumn("rk", F.row_number().over(w))
+            .where(F.col("rk") == 1)
+            .drop("d", "rk")
+        )
+
+    a1 = assign(v, "e", cb1, "cid1", "c1")
+    resid = a1.select(
+        "vec_id",
+        "label",
+        "cid1",
+        F.zip_with("e", "c1", lambda a, b: a - b).alias("r"),
+    )
+    cb2 = resid.where(
+        (F.col("vec_id") >= RVQ_K1) & (F.col("vec_id") < RVQ_K1 + RVQ_K2)
+    ).select(F.col("vec_id").alias("cid2"), F.col("r").alias("c2"))
+    codes = assign(resid, "r", cb2, "cid2", "c2").select(
+        "vec_id", "label", "cid1", "cid2"
+    )
+    pairs = cb1.crossJoin(F.broadcast(cb2)).select(
+        "cid1",
+        "cid2",
+        F.zip_with("c1", "c2", lambda a, b: a + b).alias("cc"),
+    )
+    q = v.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
+    )
+    qd = q.crossJoin(F.broadcast(pairs)).select(
+        "qid",
+        "cid1",
+        "cid2",
+        (
+            _dot_fold(F.col("qe"), F.col("qe"))
+            - 2 * _dot_fold(F.col("qe"), F.col("cc"))
+            + _dot_fold(F.col("cc"), F.col("cc"))
+        ).alias("ad"),
+    )
+    w = Window.partitionBy("qid").orderBy("ad", "nn_id")
+    return (
+        codes.join(qd, ["cid1", "cid2"])
+        .where(F.col("vec_id") != F.col("qid"))
+        .select(
+            "qid",
+            F.col("vec_id").alias("nn_id"),
+            F.col("label").alias("nn_label"),
+            "ad",
+        )
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= TOP_K)
+        .select("qid", "nn_id", "nn_label", F.round("ad", 4).alias("approx_dist"), "rk")
+        .orderBy("qid", "rk")
+    )
+
+
+@register("q_rvq_recall", oracle=_recall_oracle("rvq", _RVQ_ADC_ORACLE))
+def q_rvq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@{TOP_K} of the RVQ pair-table index against the exact
+    scan — every ANN method in this repo ships with its recall audit,
+    and the additive-codebook family gets one too: the number that
+    tells a deployment whether two 16-entry levels (256 effective
+    cells) carry enough resolution or whether a third level / larger
+    codebooks are needed. Same composition shape as q_pq_recall: the
+    registered RVQ plan's hits counted against the brute-force exact
+    top-k per query."""
+    from openmaptiles_zh_modifier_spark.registry import QUERIES
+
+    rvq = QUERIES["q_embed_rvq_adc"](spark, sf_dir).select("qid", "nn_id")
+    return pq_recall_vs_exact(spark, sf_dir, rvq)

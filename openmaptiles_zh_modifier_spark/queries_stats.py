@@ -1,25 +1,377 @@
-"""Round-13 second stats batch: Kendall tau-b over blocked pair joins,
-bucket-mean quantile normalization across document sources, and a
-sequential probability ratio test (Wald SPRT) monitor over an A/B event
-stream.
+"""Statistics and record linkage: Spearman rank correlation (average-rank
+tie handling), autocorrelation over a dense hour grid, Gini concentration
+in exact integer cents, Jaro-Winkler linkage scoring against DuckDB's
+native implementation, Kendall tau-b over blocked pair joins, bucket-mean
+quantile normalization across document sources, a sequential probability
+ratio test (Wald SPRT) monitor over an A/B event stream, Theil-Sen trend
+slopes and Fellegi-Sunter match weights.
 
-Engine-surface extensions (the reference has no statistics surface —
-SURVEY.md §2.3/§2.4 document the absence). Float discipline throughout:
-every aggregate that crosses engines is EXACT integer arithmetic
-(counts, cents, micro-units) until a final scalar op (sqrt/divide) both
-engines execute identically on identical inputs; constants that would
-otherwise come from each engine's libm (the SPRT log-likelihood
-increments) are embedded as shared DECIMAL LITERALS so both engines
-parse the same double.
+Engine-surface extensions (the reference has no statistics surface at
+all — SURVEY.md §2.3/§2.4 document the absence); these fill the gaps a
+training-data curation pipeline hits: monotone association, temporal
+self-similarity, source concentration and fuzzy identity resolution.
+
+Float discipline: every aggregate that crosses engines is EXACT integer
+arithmetic (counts, cents, micro-units) until a final scalar op
+(sqrt/divide) both engines execute identically on identical inputs;
+constants that would otherwise come from each engine's libm (the SPRT
+log-likelihood increments) are embedded as shared DECIMAL LITERALS so
+both engines parse the same double.
 """
 
 from __future__ import annotations
+
+import pandas as pd  # module-level: pandas_udf resolves the PEP-563
+                     # stringified type hints against module globals
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from openmaptiles_zh_modifier_spark.registry import load, register
+
+
+@register(
+    "q_spearman_corr",
+    oracle="""
+WITH ranked AS (
+  SELECT l_returnflag,
+         RANK() OVER (PARTITION BY l_returnflag ORDER BY l_quantity)
+           + (COUNT(*) OVER (PARTITION BY l_returnflag, l_quantity) - 1)
+             / 2.0 AS rq,
+         RANK() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice)
+           + (COUNT(*) OVER (PARTITION BY l_returnflag, l_extendedprice)
+              - 1) / 2.0 AS rp
+  FROM lineitem
+)
+SELECT l_returnflag,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       ROUND(CORR(rq, rp), 6) AS spearman
+FROM ranked
+GROUP BY l_returnflag
+ORDER BY l_returnflag
+""",
+)
+def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spearman rank correlation with AVERAGE-rank tie handling (the
+    textbook definition — l_quantity has only 50 distinct values, so
+    min-rank ties would visibly bias the statistic): per tie group the
+    rank is min_rank + (ties-1)/2, built from RANK() + a per-value
+    COUNT() window, then Pearson over the ranks. Shared expression on
+    both engines; the rank arithmetic is exact (integers + .5), so the
+    only float is the final corr, rounded 6dp per repo discipline.
+
+    Scale shape: two window passes partitioned by the group key (no
+    global sort — ranks are per-group), then a combinable corr
+    aggregate. Skewed groups ride AQE; a 100 TB run would range-
+    partition within group exactly like the engine's percentile ops."""
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_returnflag", "l_quantity", "l_extendedprice"
+    )
+
+    def avg_rank(col: str):
+        w_rank = Window.partitionBy("l_returnflag").orderBy(col)
+        w_ties = Window.partitionBy("l_returnflag", col)
+        return F.rank().over(w_rank) + (F.count(F.lit(1)).over(w_ties) - 1) / 2.0
+
+    ranked = li.select(
+        "l_returnflag",
+        avg_rank("l_quantity").alias("rq"),
+        avg_rank("l_extendedprice").alias("rp"),
+    )
+    return (
+        ranked.groupBy("l_returnflag")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.round(F.corr("rq", "rp"), 6).alias("spearman"),
+        )
+        .orderBy("l_returnflag")
+    )
+
+
+@register(
+    "q_acf_lags",
+    oracle="""
+WITH hours AS (
+  SELECT date_trunc('hour', ts) AS h, COUNT(*) AS c
+  FROM events GROUP BY 1
+), grid AS (
+  SELECT UNNEST(generate_series(
+    (SELECT MIN(h) FROM hours),
+    (SELECT MAX(h) FROM hours),
+    INTERVAL 1 HOUR)) AS h
+), x AS (
+  SELECT grid.h, COALESCE(hours.c, 0) AS c
+  FROM grid LEFT JOIN hours ON grid.h = hours.h
+), lagged AS (
+  SELECT c,
+         LAG(c, 1)  OVER (ORDER BY h) AS c1,
+         LAG(c, 2)  OVER (ORDER BY h) AS c2,
+         LAG(c, 3)  OVER (ORDER BY h) AS c3,
+         LAG(c, 24) OVER (ORDER BY h) AS c24
+  FROM x
+)
+SELECT * FROM (
+  SELECT CAST(1 AS BIGINT) AS lag, CAST(COUNT(c1) AS BIGINT) AS n_pairs,
+         ROUND(CORR(c, c1), 6) AS acf FROM lagged
+  UNION ALL
+  SELECT CAST(2 AS BIGINT), CAST(COUNT(c2) AS BIGINT),
+         ROUND(CORR(c, c2), 6) FROM lagged
+  UNION ALL
+  SELECT CAST(3 AS BIGINT), CAST(COUNT(c3) AS BIGINT),
+         ROUND(CORR(c, c3), 6) FROM lagged
+  UNION ALL
+  SELECT CAST(24 AS BIGINT), CAST(COUNT(c24) AS BIGINT),
+         ROUND(CORR(c, c24), 6) FROM lagged
+)
+ORDER BY lag
+""",
+)
+def q_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Autocorrelation of the hourly event-count series at lags 1/2/3/24
+    (the 24 lag reads the diurnal cycle). The series is DENSIFIED first
+    — a sequence() hour grid left-joined with the counts, zero-filled —
+    so a quiet hour contributes a real 0 instead of silently shrinking
+    the lag alignment (the same grid discipline as
+    q_resample_interpolate; grid size is bounded by the time SPAN, not
+    the event count). Lags via one ordered window pass, ACF as Pearson
+    corr per lag, rounded 6dp.
+
+    Scale shape: the groupBy(hour) is the only full shuffle; the grid
+    and window run over span-many rows (720 here; one executor even at
+    a century of hours). At 100 TB the count aggregation is the work
+    and it is map-side combinable."""
+    ev = load(spark, sf_dir, "events").select(
+        F.date_trunc("hour", "ts").alias("h")
+    )
+    hours = ev.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
+    bounds = hours.agg(
+        F.min("h").alias("lo"), F.max("h").alias("hi")
+    )
+    grid = bounds.select(
+        F.explode(
+            F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))
+        ).alias("h")
+    )
+    x = grid.join(hours, "h", "left").select(
+        "h", F.coalesce("c", F.lit(0)).alias("c")
+    )
+    w = Window.orderBy("h")
+    lagged = x.select(
+        "c",
+        F.lag("c", 1).over(w).alias("c1"),
+        F.lag("c", 2).over(w).alias("c2"),
+        F.lag("c", 3).over(w).alias("c3"),
+        F.lag("c", 24).over(w).alias("c24"),
+    )
+
+    def leg(lag: int, col: str) -> DataFrame:
+        return lagged.agg(
+            F.lit(lag).cast("long").alias("lag"),
+            F.count(col).alias("n_pairs"),
+            F.round(F.corr("c", col), 6).alias("acf"),
+        )
+
+    return (
+        leg(1, "c1")
+        .unionByName(leg(2, "c2"))
+        .unionByName(leg(3, "c3"))
+        .unionByName(leg(24, "c24"))
+        .orderBy("lag")
+    )
+
+
+@register(
+    "q_gini_concentration",
+    oracle="""
+WITH rev AS (
+  SELECT o_custkey,
+         SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS cents
+  FROM orders GROUP BY o_custkey
+), ranked AS (
+  SELECT n.n_name, r.cents,
+         ROW_NUMBER() OVER (
+           PARTITION BY n.n_name ORDER BY r.cents, r.o_custkey) AS i
+  FROM rev r
+  JOIN customer c ON c.c_custkey = r.o_custkey
+  JOIN nation n ON n.n_nationkey = c.c_nationkey
+)
+SELECT n_name,
+       CAST(COUNT(*) AS BIGINT) AS n_customers,
+       ROUND(
+         CAST(2 * SUM(i * cents) - (COUNT(*) + 1) * SUM(cents) AS DOUBLE)
+         / (COUNT(*) * SUM(cents)), 6) AS gini
+FROM ranked
+GROUP BY n_name
+ORDER BY n_name
+""",
+)
+def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gini coefficient of customer revenue per nation — the standard
+    source-concentration audit for a training-data mixture (a nation
+    whose corpus revenue is one whale is a sampling hazard). Computed
+    by the rank formula G = (2*sum(i*x_i) - (n+1)*sum(x)) / (n*sum(x))
+    with x ascending; revenue is converted to EXACT INTEGER CENTS at
+    the row level before any aggregation, so every sum is
+    order-independent BIGINT arithmetic and the only float is the final
+    ratio (rounded 6dp) — the engine's decimal-exactness discipline.
+    Ties broken by custkey so the row_number is deterministic.
+
+    Scale shape: groupBy(custkey) shuffle, two BROADCAST joins to the
+    dims (customer at sf is small; at 100 TB customer→nation stays a
+    broadcast and the custkey agg is the work), one per-nation window
+    sort — the partition key is the 25-value nation, each partition a
+    local sort, no global order."""
+    from pyspark.sql.functions import broadcast
+
+    orders = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    rev = orders.groupBy("o_custkey").agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+    )
+    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    nation = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    ranked = (
+        rev.join(broadcast(cust), rev.o_custkey == cust.c_custkey)
+        .join(broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .select(
+            "n_name",
+            "cents",
+            F.row_number()
+            .over(
+                Window.partitionBy("n_name").orderBy("cents", "o_custkey")
+            )
+            .alias("i"),
+        )
+    )
+    n = F.count(F.lit(1))
+    return (
+        ranked.groupBy("n_name")
+        .agg(
+            n.alias("n_customers"),
+            F.round(
+                (
+                    2 * F.sum(F.col("i") * F.col("cents"))
+                    - (n + 1) * F.sum("cents")
+                ).cast("double")
+                / (n * F.sum("cents")),
+                6,
+            ).alias("gini"),
+        )
+        .orderBy("n_name")
+    )
+
+
+@register(
+    "q_jaro_winkler_linkage",
+    oracle="""
+WITH pairs AS (
+  SELECT a.p_brand,
+         jaro_winkler_similarity(a.p_name, b.p_name) AS jw
+  FROM part a JOIN part b
+    ON a.p_brand = b.p_brand AND a.p_size = b.p_size
+   AND a.p_partkey < b.p_partkey
+)
+SELECT p_brand,
+       CAST(COUNT(*) AS BIGINT) AS n_pairs,
+       CAST(SUM(CASE WHEN jw > 0.9 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_match,
+       CAST(SUM(CAST(ROUND(jw * 1000000) AS BIGINT)) AS BIGINT)
+         AS sum_jw_micro,
+       ROUND(MAX(jw), 6) AS max_jw
+FROM pairs
+GROUP BY p_brand
+ORDER BY p_brand
+""",
+)
+def q_jaro_winkler_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Jaro-Winkler record-linkage scoring, verified against DuckDB's
+    NATIVE jaro_winkler_similarity — a true second implementation of
+    the whole algorithm (match window, half-transpositions, 0.7 boost
+    threshold, 4-char prefix, 0.1 scaling), not a replayed formula.
+    Candidate pairs are blocked on (p_brand, p_size) — the
+    record-linkage discipline every dedup op here follows: the O(n^2)
+    stays inside blocks, never the corpus. Per-pair scores fold to
+    integer micros before aggregation (bit-identical across engines on
+    all tested inputs; the scores are small-rational arithmetic).
+
+    Scale shape: one equi-join on the block key (AQE-handled skew), one
+    Arrow-batched pandas UDF over the pair stream — the same shape as
+    q_dedup_edit_distance, whose levenshtein is JVM-native; JW has no
+    Spark built-in, so this is the documented Python boundary."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def jw_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
+        def jaro(a: str, b: str) -> float:
+            l1, l2 = len(a), len(b)
+            if l1 == 0 and l2 == 0:
+                return 1.0
+            if l1 == 0 or l2 == 0:
+                return 0.0
+            md = max(max(l1, l2) // 2 - 1, 0)
+            m2 = [False] * l2
+            m1 = [False] * l1
+            m = 0
+            for i, ch in enumerate(a):
+                for j in range(max(0, i - md), min(l2, i + md + 1)):
+                    if not m2[j] and b[j] == ch:
+                        m1[i] = m2[j] = True
+                        m += 1
+                        break
+            if m == 0:
+                return 0.0
+            t = 0
+            j = 0
+            for i in range(l1):
+                if m1[i]:
+                    while not m2[j]:
+                        j += 1
+                    if a[i] != b[j]:
+                        t += 1
+                    j += 1
+            t //= 2
+            return (m / l1 + m / l2 + (m - t) / m) / 3.0
+
+        def jw(a: str, b: str) -> float:
+            sim = jaro(a, b)
+            p = 0
+            for x, y in zip(a[:4], b[:4]):
+                if x == y:
+                    p += 1
+                else:
+                    break
+            if sim > 0.7:
+                sim = sim + 0.1 * p * (1.0 - sim)
+            return sim
+
+        return pd.Series([jw(a, b) for a, b in zip(s1, s2)])
+
+    parts = load(spark, sf_dir, "part").select(
+        "p_partkey", "p_name", "p_brand", "p_size"
+    )
+    a = parts.alias("a")
+    b = parts.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.p_brand") == F.col("b.p_brand"))
+        & (F.col("a.p_size") == F.col("b.p_size"))
+        & (F.col("a.p_partkey") < F.col("b.p_partkey")),
+    ).select(
+        F.col("a.p_brand").alias("p_brand"),
+        jw_udf(F.col("a.p_name"), F.col("b.p_name")).alias("jw"),
+    )
+    return (
+        pairs.groupBy("p_brand")
+        .agg(
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.sum(F.when(F.col("jw") > 0.9, 1).otherwise(0)).alias("n_match"),
+            F.sum(F.round(F.col("jw") * 1000000).cast("long")).alias(
+                "sum_jw_micro"
+            ),
+            F.round(F.max("jw"), 6).alias("max_jw"),
+        )
+        .orderBy("p_brand")
+    )
 
 
 @register(

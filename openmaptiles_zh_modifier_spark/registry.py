@@ -449,10 +449,6 @@ def _register_all() -> None:
     import openmaptiles_zh_modifier_spark.queries_multimodal  # noqa: F401
     import openmaptiles_zh_modifier_spark.queries_sketches  # noqa: F401
     import openmaptiles_zh_modifier_spark.queries_text  # noqa: F401
-    import openmaptiles_zh_modifier_spark.queries_tpch_extra  # noqa: F401
-    import openmaptiles_zh_modifier_spark.queries_advanced2  # noqa: F401
-    import openmaptiles_zh_modifier_spark.queries_tpch_extra2  # noqa: F401
-    import openmaptiles_zh_modifier_spark.queries_tpch_extra3  # noqa: F401
     import openmaptiles_zh_modifier_spark.queries_udaf  # noqa: F401
     import openmaptiles_zh_modifier_spark.queries_skew  # noqa: F401
     import openmaptiles_zh_modifier_spark.queries_merge  # noqa: F401
@@ -461,14 +457,11 @@ def _register_all() -> None:
     import openmaptiles_zh_modifier_spark.queries_retrieval  # noqa: F401
     import openmaptiles_zh_modifier_spark.queries_inference  # noqa: F401
     import openmaptiles_zh_modifier_spark.queries_quality  # noqa: F401
-    import openmaptiles_zh_modifier_spark.queries_graph2  # noqa: F401
-    import openmaptiles_zh_modifier_spark.queries_embeddings2  # noqa: F401
     import openmaptiles_zh_modifier_spark.queries_trainprep  # noqa: F401
     import openmaptiles_zh_modifier_spark.queries_governance  # noqa: F401
     import openmaptiles_zh_modifier_spark.queries_zh  # noqa: F401
     import openmaptiles_zh_modifier_spark.queries_geo  # noqa: F401
-    import openmaptiles_zh_modifier_spark.queries_stats2  # noqa: F401
-    import openmaptiles_zh_modifier_spark.queries_stats3  # noqa: F401
+    import openmaptiles_zh_modifier_spark.queries_stats  # noqa: F401
     import openmaptiles_zh_modifier_spark.queries_tsa  # noqa: F401
     import openmaptiles_zh_modifier_spark.streaming.events  # noqa: F401
 

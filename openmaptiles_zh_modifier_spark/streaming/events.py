@@ -1910,7 +1910,7 @@ def streaming_sprt(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     boundary exit (if the arm is still undecided) freezes the decision
     exactly where the batch replay of q_sprt_monitor would put it.
     Constants are the SAME Python doubles both SQL engines parse
-    (queries_stats3.SPRT_*_F), so the streaming fold is bit-identical
+    (queries_stats.SPRT_*_F), so the streaming fold is bit-identical
     to the batch twin and the one oracle serves both.
 
     Ordering contract: rows sort by (ts, event_id) within each
@@ -1925,7 +1925,7 @@ def streaming_sprt(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from openmaptiles_zh_modifier_spark.queries_stats3 import (
+    from openmaptiles_zh_modifier_spark.queries_stats import (
         SPRT_C0_F,
         SPRT_C1_F,
         SPRT_LO_F,

@@ -23,6 +23,9 @@ from openmaptiles_zh_modifier_spark.operators.cow_table import (
     cow_create,
     cow_delete,
 )
+from openmaptiles_zh_modifier_spark.registry import QUERIES
+
+SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture()
@@ -216,3 +219,24 @@ def test_catalog_cas_across_processes(spark, two_tables):
     m = catalog_manifest(cat_root)
     assert m["version"] == 2
     assert m["writer"] == wins[0][1]  # the winner's payload is the truth
+
+
+def test_cow_txn_conservation(spark):
+    rows = QUERIES["q_cow_txn"](spark, SF).collect()
+    got = {(r.cat_version, r.tname): r for r in rows}
+    assert len(got) == 6
+    for cv in (1, 2):
+        assert (
+            got[(cv, "a")].n_rows + got[(cv, "b")].n_rows
+            == got[(cv, "all")].n_rows
+        )
+        assert (
+            got[(cv, "a")].sum_orderkey + got[(cv, "b")].sum_orderkey
+            == got[(cv, "all")].sum_orderkey
+        )
+    # the move conserves the union across versions
+    assert got[(1, "all")].n_rows == got[(2, "all")].n_rows
+    assert got[(1, "all")].sum_orderkey == got[(2, "all")].sum_orderkey
+    # and actually moved something
+    assert got[(2, "a")].n_rows < got[(1, "a")].n_rows
+    assert got[(2, "b")].n_rows > got[(1, "b")].n_rows

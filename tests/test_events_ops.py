@@ -1,5 +1,6 @@
-"""Invariant tests for the session-3 operators (all oracle-paired in the
-gate; these assert the structural contracts the value hash can't see)."""
+"""Event-stream operators: rolling median, debounce bursts and the SES
+forecast fold — structural contracts and Python replays beside the
+oracle hashes."""
 
 from __future__ import annotations
 
@@ -8,41 +9,6 @@ from openmaptiles_zh_modifier_spark.queries_events import (
     q_event_debounce,
     q_rolling_median,
 )
-from openmaptiles_zh_modifier_spark.queries_merge import q_delta_join_ivm
-from openmaptiles_zh_modifier_spark.queries_scale import q_assign_ids
-from openmaptiles_zh_modifier_spark.queries_sketches import (
-    QSK_BINW,
-    q_quantile_sketch,
-)
-from openmaptiles_zh_modifier_spark.queries_text import q_source_kl
-
-
-def test_assign_ids_are_contiguous_and_unique(spark, sf_dir):
-    rows = q_assign_ids(spark, sf_dir).collect()
-    ids = sorted(r.row_id for r in rows)
-    assert ids == list(range(1, len(rows) + 1))
-
-
-def test_ivm_branches_are_disjoint_and_exhaustive(spark, sf_dir):
-    for r in q_delta_join_ivm(spark, sf_dir).collect():
-        assert r.n_old_old + r.n_dr_s + r.n_r_ds + r.n_dr_ds == r.n_orders
-
-
-def test_quantile_sketch_rated_error_and_monotone(spark, sf_dir):
-    rows = q_quantile_sketch(spark, sf_dir).orderBy("p").collect()
-    assert [r.p for r in rows] == [25, 50, 75, 90, 99]
-    assert all(r.within_bound == 1 for r in rows)
-    ests = [r.est_cents for r in rows]
-    assert ests == sorted(ests)  # quantile estimates monotone in p
-    assert all(r.est_cents >= 0 and r.est_cents <= r.bin * QSK_BINW + QSK_BINW
-               for r in rows)
-
-
-def test_source_kl_nonnegative(spark, sf_dir):
-    rows = q_source_kl(spark, sf_dir).collect()
-    assert rows
-    # KL >= 0 up to the 6-dp per-term rounding slack
-    assert all(r.kl_nats >= -1e-4 for r in rows)
 
 
 def test_rolling_median_window_contract(spark, sf_dir):
@@ -57,49 +23,6 @@ def test_debounce_bursts_cover_all_events(spark, sf_dir):
     n_events = load(spark, sf_dir, "events").count()
     assert sum(r.burst_size for r in bursts) == n_events
     assert all(r.kept_event_id is not None for r in bursts)
-
-
-def test_assign_ids_property_random_frames(spark):
-    """Property: for seeded random key sets (with gaps, negatives, and
-    string-sortable collision patterns), assign_contiguous_ids is a
-    bijection onto 1..N whose order matches the declared
-    (h32%B, h32, key) total order computed independently in Python."""
-    import hashlib
-    import random
-
-    from openmaptiles_zh_modifier_spark.operators.ids import (
-        assign_contiguous_ids,
-    )
-
-    def h32_py(s: str) -> int:
-        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-    rng = random.Random(20260814)
-    cases = [
-        [],                       # empty frame
-        [7],                      # singleton
-        list(range(100)),         # dense
-        rng.sample(range(10**9), 257),  # sparse, crosses buckets
-        [-5, -1, 0, 3, -(10**12), 10**12],  # negatives + extremes
-    ]
-    for n_buckets in (1, 8):
-        for keys in cases:
-            df = spark.createDataFrame(
-                [(k,) for k in keys], "k long"
-            )
-            got = {
-                r.k: r.row_id
-                for r in assign_contiguous_ids(
-                    df, "k", n_buckets=n_buckets
-                ).collect()
-            }
-            expect_order = sorted(
-                keys,
-                key=lambda k: (
-                    h32_py(str(k)) % n_buckets, h32_py(str(k)), k
-                ),
-            )
-            assert got == {k: i + 1 for i, k in enumerate(expect_order)}
 
 
 def test_ses_fold_matches_python_reference(spark, sf_dir):

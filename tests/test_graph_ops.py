@@ -13,6 +13,9 @@ from openmaptiles_zh_modifier_spark.queries_graph import (
     q_bfs_reachability,
     q_label_propagation,
 )
+from openmaptiles_zh_modifier_spark.registry import QUERIES
+
+SF = "/root/testdata/sf0.001"
 
 
 def test_lpa_labels_are_member_nodes(spark, sf_dir):
@@ -136,3 +139,57 @@ def test_star_cc_equals_pointer_jumping_hypothesis(spark):
             for r in connected_components_star(df).collect()
         }
         assert got_pj == got_st
+
+
+class TestDriverFixpointsMatchSparkFold:
+    """The textrank/pagerank driver loops fold contributions in
+    ascending-source order with plain double ops — assert the Python
+    fold equals Spark's array_sort(collect_list)+aggregate fold on a
+    small random graph, bit-for-bit."""
+
+    def test_fold_parity(self, spark):
+        import random
+
+        rng = random.Random(13)
+        edges = [
+            (d, s, float(rng.randint(1, 9)), float(rng.randint(10, 99)))
+            for d in range(6)
+            for s in rng.sample(range(20), 5)
+        ]
+        ranks = {s: rng.random() for _, s, _, _ in edges}
+        # python fold (the q_textrank_keywords / q_pagerank_nations loop)
+        py = {}
+        for d, s, w, ow in sorted(edges):
+            py[d] = py.get(d, 0.0) + ranks[s] * w / ow
+        # spark fold (the formulation the loop replaced)
+        e = spark.createDataFrame(
+            edges, "dst int, src int, w8 double, ow double"
+        )
+        r = spark.createDataFrame(
+            sorted(ranks.items()), "src int, r double"
+        )
+        got = {
+            row.dst: row.s
+            for row in e.join(r, "src")
+            .select("dst", "src", (F.col("r") * F.col("w8") / F.col("ow")).alias("c"))
+            .groupBy("dst")
+            .agg(
+                F.aggregate(
+                    F.array_sort(F.collect_list(F.struct("src", "c"))),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x["c"],
+                ).alias("s")
+            )
+            .collect()
+        }
+        assert got == py  # exact equality — identical IEEE op order
+
+
+def test_textrank_invariants(spark):
+    rows = QUERIES["q_textrank_keywords"](spark, SF).collect()
+    assert [r.rk for r in rows] == list(range(1, len(rows) + 1))
+    vals = [r.textrank for r in rows]
+    assert vals == sorted(vals, reverse=True)
+    for r in rows:
+        assert 0.0 < r.textrank < 1.0
+        assert " " not in r.word

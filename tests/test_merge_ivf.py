@@ -1,12 +1,12 @@
-"""Unit tests for the MERGE INTO operator and the IVF k-means trainer."""
+"""Unit tests for the MERGE INTO operator."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from openmaptiles_zh_modifier_spark.operators.ivf import assign_cells, kmeans_fit
 from openmaptiles_zh_modifier_spark.operators.merge import merge_into
+from openmaptiles_zh_modifier_spark.queries_merge import q_delta_join_ivm
 
 
 def _base(spark):
@@ -68,37 +68,6 @@ def test_merge_delete_null_condition_keeps_row(spark):
     assert sorted(r.k for r in out.collect()) == [1, 2, 3]
 
 
-# ---------------------------------------------------------------- ivf kmeans
-
-def _vecs(spark):
-    # Two tight clusters around (0,0) and (10,10).
-    pts = [(i, [0.0 + i * 0.1, 0.0]) for i in range(5)]
-    pts += [(10 + i, [10.0 + i * 0.1, 10.0]) for i in range(5)]
-    return spark.createDataFrame(pts, "id int, e array<double>")
-
-
-def test_kmeans_converges_and_inertia_monotone(spark):
-    cents, hist = kmeans_fit(_vecs(spark), "e", k=2, id_col="id", max_iter=8)
-    assert len(cents) == 2 and all(len(c) == 2 for c in cents)
-    assert all(a >= b - 1e-9 for a, b in zip(hist, hist[1:]))  # non-increasing
-    # Final centroids near the true cluster means (0.2,0) and (10.2,10).
-    got = sorted((round(c[0], 1), round(c[1], 1)) for c in cents)
-    assert got == [(0.2, 0.0), (10.2, 10.0)]
-
-
-def test_assign_cells_picks_nearest(spark):
-    cents = [[0.0, 0.0], [10.0, 10.0]]
-    out = assign_cells(_vecs(spark), "e", cents).select("id", "cell").collect()
-    for r in out:
-        assert r.cell == (0 if r.id < 10 else 1)
-
-
-def test_kmeans_deterministic(spark):
-    a, _ = kmeans_fit(_vecs(spark), "e", k=2, id_col="id", max_iter=5)
-    b, _ = kmeans_fit(_vecs(spark), "e", k=2, id_col="id", max_iter=5)
-    assert a == b
-
-
 def test_merge_rejects_duplicate_source_keys(spark):
     import pytest
 
@@ -123,8 +92,6 @@ def test_merge_rejects_duplicate_source_keys(spark):
     assert {r.k: r.bal for r in out.collect()}[2] == 4.0
 
 
-def test_kmeans_rejects_k_larger_than_corpus(spark):
-    import pytest
-
-    with pytest.raises(ValueError, match="corpus has only"):
-        kmeans_fit(_vecs(spark), "e", k=99, id_col="id")
+def test_ivm_branches_are_disjoint_and_exhaustive(spark, sf_dir):
+    for r in q_delta_join_ivm(spark, sf_dir).collect():
+        assert r.n_old_old + r.n_dr_s + r.n_r_ds + r.n_dr_ds == r.n_orders

@@ -7,6 +7,7 @@ if these drift, every sketch query drifts."""
 from __future__ import annotations
 
 import random
+from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
 import pytest
@@ -191,3 +192,39 @@ def test_connected_components_random_graphs_match_union_find(spark):
             ).collect()
         }
         assert got == want, f"trial {trial}"
+
+
+def _rhu(x: float) -> int:
+    return int(Decimal(x).quantize(Decimal(1), rounding=ROUND_HALF_UP))
+
+
+class TestDecimalRoundParity:
+    """The PCA / HITS driver loops replicate Spark's ROUND-on-double
+    (BigDecimal HALF_UP) with decimal.Decimal on the exact binary double
+    — including the values where float-arithmetic rounding (x+0.5 then
+    floor) would differ."""
+
+    TRICKY = [
+        0.5, 1.5, 2.5, -0.5, -1.5, -2.5,
+        0.49999999999999994,   # x+0.5 rounds UP to 1.0 in float; ROUND says 0
+        -0.49999999999999994,
+        2.4999999999999996, 1e6 - 0.5, 123456.5, -123456.5,
+        0.0, -0.0, 1.0, 7.499999999999999, 7.500000000000001,
+    ]
+
+    def test_matches_spark_round(self, spark):
+        df = spark.createDataFrame(
+            [(x,) for x in self.TRICKY], "x double"
+        ).select(F.round("x").cast("long").alias("r"))
+        got = [r.r for r in df.collect()]
+        want = [_rhu(x) for x in self.TRICKY]
+        assert got == want
+
+    def test_floatpath_would_differ(self):
+        # documents WHY Decimal is used: the naive float path disagrees
+        # on the epsilon-below-half value
+        import math
+
+        x = 0.49999999999999994
+        naive = math.floor(x + 0.5)
+        assert naive == 1 and _rhu(x) == 0

@@ -449,34 +449,6 @@ def test_ppm_resize_matches_numpy_reference():
         assert (back == want).all()
 
 
-def test_ppm_patch_embed_matches_numpy_reference():
-    import numpy as np
-
-    from openmaptiles_zh_modifier_spark.functions.multimodal import (
-        encode_ppm,
-        ppm_patch_embed,
-    )
-
-    w, h, seed, g = 11, 6, 17, 2
-    payload = encode_ppm(w, h, seed)
-    emb = ppm_patch_embed(payload, grid=g)
-    arr = (
-        np.frombuffer(payload[-3 * w * h :], dtype=np.uint8)
-        .reshape(h, w, 3)
-        .astype(np.int64)
-    )
-    want = []
-    for i in range(g):
-        for j in range(g):
-            cell = arr[i * h // g : (i + 1) * h // g,
-                       j * w // g : (j + 1) * w // g]
-            want.extend(cell.sum(axis=(0, 1)).tolist())
-    assert emb == want
-    assert len(emb) == g * g * 3
-    # pooled sums partition the image: total equals the full pixel sum
-    assert sum(emb) == int(arr.sum())
-
-
 def test_wav_codec_roundtrip_and_parser_edges():
     import struct
 

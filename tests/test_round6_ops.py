@@ -135,7 +135,7 @@ def test_kcore_trajectory_invariants(spark):
 def test_hits_normalization_and_ranks(spark):
     """Scores are L1-normalized to ~HITS_SCALE per kind and ranks are a
     permutation."""
-    from openmaptiles_zh_modifier_spark.queries_graph2 import HITS_SCALE
+    from openmaptiles_zh_modifier_spark.queries_graph import HITS_SCALE
     from openmaptiles_zh_modifier_spark.registry import QUERIES
 
     rows = QUERIES["q_hits_scores"](spark, "/root/testdata/sf0.001").collect()

@@ -32,7 +32,7 @@ def _sf_dir() -> str:
 def test_binary_hamming_packing_identity(spark):
     """The two 32-bit sign words must reproduce per-dimension signs:
     unpacking word bits == (e[i] > 0) for a handful of vectors."""
-    from openmaptiles_zh_modifier_spark.queries_embeddings2 import (
+    from openmaptiles_zh_modifier_spark.queries_embeddings import (
         _sign_word,
     )
 

@@ -10,6 +10,7 @@ from openmaptiles_zh_modifier_spark.queries_dedup import q_priority_sample
 from openmaptiles_zh_modifier_spark.queries_events import q_event_transitions
 from openmaptiles_zh_modifier_spark.queries_scale import (
     DRIFT_MOD,
+    q_assign_ids,
     q_bloom_join_prune,
     q_tablediff_checksum,
 )
@@ -78,3 +79,52 @@ def test_transition_rows_are_stochastic(spark, sf_dir):
         p = sum(r.prob for r in out)
         assert 0.99 <= p <= 1.0 + 1e-9     # floor-of-ppm: sums to <= 1
         assert all(r.prob > 0 for r in out)
+
+
+def test_assign_ids_are_contiguous_and_unique(spark, sf_dir):
+    rows = q_assign_ids(spark, sf_dir).collect()
+    ids = sorted(r.row_id for r in rows)
+    assert ids == list(range(1, len(rows) + 1))
+
+
+def test_assign_ids_property_random_frames(spark):
+    """Property: for seeded random key sets (with gaps, negatives, and
+    string-sortable collision patterns), assign_contiguous_ids is a
+    bijection onto 1..N whose order matches the declared
+    (h32%B, h32, key) total order computed independently in Python."""
+    import hashlib
+    import random
+
+    from openmaptiles_zh_modifier_spark.operators.ids import (
+        assign_contiguous_ids,
+    )
+
+    def h32_py(s: str) -> int:
+        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+    rng = random.Random(20260814)
+    cases = [
+        [],                       # empty frame
+        [7],                      # singleton
+        list(range(100)),         # dense
+        rng.sample(range(10**9), 257),  # sparse, crosses buckets
+        [-5, -1, 0, 3, -(10**12), 10**12],  # negatives + extremes
+    ]
+    for n_buckets in (1, 8):
+        for keys in cases:
+            df = spark.createDataFrame(
+                [(k,) for k in keys], "k long"
+            )
+            got = {
+                r.k: r.row_id
+                for r in assign_contiguous_ids(
+                    df, "k", n_buckets=n_buckets
+                ).collect()
+            }
+            expect_order = sorted(
+                keys,
+                key=lambda k: (
+                    h32_py(str(k)) % n_buckets, h32_py(str(k)), k
+                ),
+            )
+            assert got == {k: i + 1 for i, k in enumerate(expect_order)}

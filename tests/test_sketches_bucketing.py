@@ -1,12 +1,14 @@
-"""Sketch accuracy contracts + bucketed-join exchange elimination."""
+"""Sketch accuracy contracts."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
+from openmaptiles_zh_modifier_spark.queries_sketches import (
+    QSK_BINW,
+    q_quantile_sketch,
+)
 from openmaptiles_zh_modifier_spark.registry import QUERIES
-from openmaptiles_zh_modifier_spark.sources.io import write_bucketed_table
 
 
 def test_approx_sketches_within_rated_error(spark, sf_dir):
@@ -20,31 +22,6 @@ def test_approx_sketches_within_rated_error(spark, sf_dir):
         assert r.approx_parts_ok == 1
         assert r.p25_ok == 1 and r.p50_ok == 1 and r.p75_ok == 1
         assert r.iqr_monotone_ok == 1
-
-
-def test_bucketed_join_eliminates_exchange(spark, tmp_path):
-    # warehouse.dir is static config; managed test tables land in the
-    # default ./spark-warehouse (gitignored) and are dropped on exit
-    left = spark.range(0, 1000).withColumn("v", F.col("id") % 13)
-    right = spark.range(0, 1000, 2).withColumn("w", F.col("id") % 7)
-    write_bucketed_table(left, "bk_left", ["id"], n_buckets=8, sort_cols=["id"])
-    write_bucketed_table(right, "bk_right", ["id"], n_buckets=8, sort_cols=["id"])
-    try:
-        joined = spark.table("bk_left").join(spark.table("bk_right"), "id")
-        # disable broadcast so the co-located sort-merge path is chosen
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-            )
-        # both sides bucketed on the join key: no shuffle exchange at all
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() == 500
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bk_left")
-        spark.sql("DROP TABLE IF EXISTS bk_right")
 
 
 # ------------------------------------------------- portable sketch bounds
@@ -71,3 +48,13 @@ def test_portable_sketches_respect_their_contracts(spark, sf_dir):
     assert row.overlap_estimate >= 0
     # overlap cannot exceed the union estimate
     assert row.overlap_estimate <= row.union_estimate + 1e-9
+
+
+def test_quantile_sketch_rated_error_and_monotone(spark, sf_dir):
+    rows = q_quantile_sketch(spark, sf_dir).orderBy("p").collect()
+    assert [r.p for r in rows] == [25, 50, 75, 90, 99]
+    assert all(r.within_bound == 1 for r in rows)
+    ests = [r.est_cents for r in rows]
+    assert ests == sorted(ests)  # quantile estimates monotone in p
+    assert all(r.est_cents >= 0 and r.est_cents <= r.bin * QSK_BINW + QSK_BINW
+               for r in rows)

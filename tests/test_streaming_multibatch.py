@@ -338,3 +338,72 @@ def test_minhash_arrival_ts_without_ttl_refuses(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(5)
     with pytest.raises(ValueError, match="arrival_ts without state_ttl"):
         minhash_bucket_registry(docs, arrival_ts="ingest_ts")
+
+
+class TestRunToMemoryConfScope:
+    """run_to_memory's no-data-batch skip must not leak into the caller's
+    session state, and append drains must keep the default."""
+
+    def test_conf_restored(self, spark, sf_dir):
+        from openmaptiles_zh_modifier_spark.registry import QUERIES
+
+        key = "spark.sql.streaming.noDataMicroBatches.enabled"
+        spark.conf.set(key, "true")
+        QUERIES["q_stream_tumbling"](spark, sf_dir).count()
+        assert spark.conf.get(key) == "true"
+
+    def test_append_drain_default_keeps_nodata_batch(self, spark, sf_dir):
+        """A windowed APPEND aggregation emits a window only when the
+        watermark passes its end — over an availableNow drain of one
+        finite backlog, EVERY emission happens in the trailing no-data
+        micro-batch. If run_to_memory ever skipped that batch for a
+        default append drain, this output would be empty (ADVICE r13:
+        the old test used q_stream_dedup, which opts INTO the skip and
+        emits first-seen rows in data batches — it could not detect the
+        loss)."""
+        from pyspark.sql import functions as F
+
+        from openmaptiles_zh_modifier_spark.streaming.events import (
+            read_events_stream,
+            run_to_memory,
+            windowed_bin_counts,
+        )
+
+        out = run_to_memory(
+            windowed_bin_counts(read_events_stream(spark, sf_dir)),
+            output_mode="append",
+        )
+        got = {
+            (r["wstart"], r["bin"]): r["c"]
+            for r in out.collect()
+        }
+        assert got, "append drain emitted nothing — no-data batch lost"
+        # and the finalized windows match the batch twin over CLOSED
+        # windows (end <= max_ts - 2h watermark)
+        from openmaptiles_zh_modifier_spark.registry import load
+        from openmaptiles_zh_modifier_spark.streaming.events import (
+            PSI_STREAM_BINS,
+            PSI_STREAM_BIN_W,
+        )
+
+        ev = load(spark, sf_dir, "events")
+        max_ts = ev.agg(F.max("ts")).collect()[0][0]
+        b = F.least(
+            F.floor(F.col("value") / PSI_STREAM_BIN_W).cast("long"),
+            F.lit(PSI_STREAM_BINS - 1),
+        )
+        expected = {
+            (r["wstart"], r["bin"]): r["c"]
+            for r in (
+                ev.withColumn("bin", b)
+                .groupBy(F.window("ts", "1 hour"), "bin")
+                .agg(F.count(F.lit(1)).alias("c"))
+                .where(
+                    F.col("window.end")
+                    <= F.lit(max_ts) - F.expr("INTERVAL 2 HOURS")
+                )
+                .select(F.col("window.start").alias("wstart"), "bin", "c")
+                .collect()
+            )
+        }
+        assert got == expected

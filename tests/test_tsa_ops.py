@@ -104,3 +104,34 @@ def test_isotonic_invariants(spark):
     assert abs(got - want) < 1e-3 * max(1, abs(want)) ** 0.5 + 1.0
     means = [m[1] / m[2] for m in months]
     assert min(means) - 1e-9 <= fits[0] and fits[-1] <= max(means) + 1e-9
+
+
+class TestHaarDriverButterfly:
+    """The q_haar_wavelet driver butterfly is lossless integer math —
+    assert perfect reconstruction (the inverse transform restores the
+    series) and the level-9 approximation equals the series total."""
+
+    def test_roundtrip_and_total(self):
+        import random
+
+        rng = random.Random(7)
+        series = [rng.randint(0, 1000) for _ in range(512)]
+        a = list(series)
+        levels = []  # det coefficients per level
+        while len(a) > 1:
+            nxt = [a[2 * p] + a[2 * p + 1] for p in range(len(a) // 2)]
+            det = [a[2 * p] - a[2 * p + 1] for p in range(len(a) // 2)]
+            levels.append(det)
+            a = nxt
+        assert a[0] == sum(series)
+        # inverse: left = (s+d)/2, right = (s-d)/2 — exact integers
+        rec = a
+        for det in reversed(levels):
+            nxt = []
+            for s, d in zip(rec, det):
+                left = (s + d) // 2
+                right = (s - d) // 2
+                assert left + right == s and left - right == d
+                nxt.extend((left, right))
+            rec = nxt
+        assert rec == series

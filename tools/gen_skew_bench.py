@@ -233,20 +233,23 @@ def _write_single_file(df, dest: str) -> None:
     shutil.rmtree(tmp)
 
 
+def _copies(df, shift_cols: dict[str, int], reps: int = REPS):
+    """``reps`` stacked copies of ``df``, copy i shifting each key column
+    by ``i * base`` so the copies stay disjoint."""
+    parts = []
+    for i in range(reps):
+        c = df
+        for col, base in shift_cols.items():
+            c = c.withColumn(col, F.col(col) + F.lit(i * base))
+        parts.append(c)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
 def generate(spark) -> None:
     os.makedirs(OUT, exist_ok=True)
-
-    def copies(df, shift_cols: dict[str, int]):
-        parts = []
-        for i in range(REPS):
-            c = df
-            for col, base in shift_cols.items():
-                c = c.withColumn(col, F.col(col) + F.lit(i * base))
-            parts.append(c)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
 
     # dims: straight copies
     for t in ("region", "nation", "customer", "supplier", "part"):
@@ -257,7 +260,7 @@ def generate(spark) -> None:
     ).collect()[0][0]
 
     orders = spark.read.parquet(f"{SRC}/orders.parquet")
-    orders3 = copies(orders, {"o_orderkey": KEY_SHIFT})
+    orders3 = _copies(orders, {"o_orderkey": KEY_SHIFT})
     # deterministic skew: pmod(hash) < pct -> hot customer. xxhash64 is
     # seed-stable across runs; the hot key keeps ~REPS*PCT% of all orders
     skewed = orders3.withColumn(
@@ -273,10 +276,10 @@ def generate(spark) -> None:
     _write_single_file(skewed, f"{OUT}/orders.parquet")
 
     li = spark.read.parquet(f"{SRC}/lineitem.parquet")
-    _write_single_file(copies(li, {"l_orderkey": KEY_SHIFT}), f"{OUT}/lineitem.parquet")
+    _write_single_file(_copies(li, {"l_orderkey": KEY_SHIFT}), f"{OUT}/lineitem.parquet")
 
     ev = spark.read.parquet(f"{SRC}/events.parquet")
-    ev3 = copies(ev, {"event_id": KEY_SHIFT})
+    ev3 = _copies(ev, {"event_id": KEY_SHIFT})
     ev_skewed = ev3.withColumn(
         "user_id",
         F.when(
@@ -287,11 +290,11 @@ def generate(spark) -> None:
     _write_single_file(ev_skewed, f"{OUT}/events.parquet")
 
     docs = spark.read.parquet(f"{SRC}/documents.parquet")
-    _write_single_file(copies(docs, {"doc_id": KEY_SHIFT}), f"{OUT}/documents.parquet")
+    _write_single_file(_copies(docs, {"doc_id": KEY_SHIFT}), f"{OUT}/documents.parquet")
 
     emb = spark.read.parquet(f"{SRC}/embeddings.parquet")
     _write_single_file(
-        copies(emb, {"vec_id": KEY_SHIFT}), f"{OUT}/embeddings.parquet"
+        _copies(emb, {"vec_id": KEY_SHIFT}), f"{OUT}/embeddings.parquet"
     )
 
 
@@ -324,85 +327,98 @@ X10_QUERIES = [
 
 def generate_x10(spark) -> None:
     os.makedirs(OUT10, exist_ok=True)
-
-    def copies(df, shift_cols: dict[str, int]):
-        parts = []
-        for i in range(X10_REPS):
-            c = df
-            for col, base in shift_cols.items():
-                c = c.withColumn(col, F.col(col) + F.lit(i * base))
-            parts.append(c)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
     for t in ("region", "nation", "customer", "supplier", "part",
               "events"):
         shutil.copy(f"{SRC}/{t}.parquet", f"{OUT10}/{t}.parquet")
-    docs = spark.read.parquet(f"{SRC}/documents.parquet")
-    _write_single_file(
-        copies(docs, {"doc_id": KEY_SHIFT}), f"{OUT10}/documents.parquet"
-    )
-    orders = spark.read.parquet(f"{SRC}/orders.parquet")
-    _write_single_file(
-        copies(orders, {"o_orderkey": KEY_SHIFT}),
-        f"{OUT10}/orders.parquet",
-    )
-    li = spark.read.parquet(f"{SRC}/lineitem.parquet")
-    _write_single_file(
-        copies(li, {"l_orderkey": KEY_SHIFT}), f"{OUT10}/lineitem.parquet"
-    )
-    emb = spark.read.parquet(f"{SRC}/embeddings.parquet")
-    _write_single_file(
-        copies(emb, {"vec_id": KEY_SHIFT}), f"{OUT10}/embeddings.parquet"
-    )
+    for t, key in (("documents", "doc_id"), ("orders", "o_orderkey"),
+                   ("lineitem", "l_orderkey"), ("embeddings", "vec_id")):
+        df = spark.read.parquet(f"{SRC}/{t}.parquet")
+        _write_single_file(
+            _copies(df, {key: KEY_SHIFT}, X10_REPS), f"{OUT10}/{t}.parquet"
+        )
 
 
-def main_x10() -> None:
-    from openmaptiles_zh_modifier_spark.registry import QUERIES
+# Queries whose expensive build memoizes per (session, sf_dir): a warm
+# min-of-2 on these times a cache hit, not the query, so EVERY timed rep
+# must evict their memos first: registry.clear_frame_cache evicts the
+# memo frames and the cow-table build memos alike.
+MEMOIZING_QUERIES = {
+    "q_cow_merge_dv",
+    "q_cc_star",
+    "q_cow_delete_dv",
+    "q_cow_partition_evolution",
+    "q_embed_rvq_adc",
+    "q_geo_dbscan",
+    "q_geo_dbscan_geodesic",
+    "q_geo_segment_join",
+    "q_geo_segment_join_geodesic",
+    "q_cow_schema_evolution",
+    "q_cow_compact_zorder",
+}
+
+
+def _session(app_name: str, out_dir: str, gen, warm):
+    """Start the Spark session, (re)generate ``out_dir`` with ``gen`` when
+    asked or absent, and warm codegen/shuffle/Arrow pools like bench.py
+    does — on BOTH dirs, so neither anchor pays first-touch
+    page-cache/footer costs in its rows. ``warm`` lists (table, group
+    column or None): a grouped count, or a plain count."""
     from openmaptiles_zh_modifier_spark.session import get_spark
 
-    spark = get_spark(app_name="x10-bench")
+    spark = get_spark(app_name=app_name)
     spark.sparkContext.setLogLevel("ERROR")
-    if "--regen" in sys.argv and os.path.isdir(OUT10):
-        shutil.rmtree(OUT10)
-    if not os.path.isdir(OUT10):
+    if "--regen" in sys.argv and os.path.isdir(out_dir):
+        shutil.rmtree(out_dir)
+    if not os.path.isdir(out_dir):
         t0 = time.monotonic()
-        generate_x10(spark)
-        print(f"# generated {OUT10} in {time.monotonic() - t0:.1f}s")
-    for d in (SRC, OUT10):
-        spark.read.parquet(f"{d}/embeddings.parquet").count()
-        spark.read.parquet(f"{d}/lineitem.parquet").groupBy(
-            "l_returnflag"
-        ).count().count()
+        gen(spark)
+        print(f"# generated {out_dir} in {time.monotonic() - t0:.1f}s")
+    for d in (SRC, out_dir):
+        for table, col in warm:
+            df = spark.read.parquet(f"{d}/{table}.parquet")
+            (df.groupBy(col).count() if col else df).count()
     spark.range(8).mapInPandas(lambda it: it, schema="id long").count()
+    return spark
+
+
+def _anchor(spark, names, out_label: str, out_dir: str, cold: bool = False):
+    """Min-of-2 timing (co-tenant variance guard) of every query in
+    ``names`` at sf0.1 and at ``out_dir``; prints one line per run and
+    the ratio table, and returns {query: {label: seconds}}. A rep clears
+    the query memos first when ``cold`` or when the query memoizes its
+    build (rep 2 would otherwise time a memo hit), so both reps price
+    the same cold quantity."""
+    from openmaptiles_zh_modifier_spark.registry import QUERIES, clear_frame_cache
 
     results: dict[str, dict[str, float]] = {}
-    for sf_label, sf_dir in (("sf0.1", SRC), ("sf1x10", OUT10)):
-        for name in X10_QUERIES:
+    for sf_label, sf_dir in (("sf0.1", SRC), (out_label, out_dir)):
+        for name in names:
             best = None
             for _ in range(2):
-                if name in MEMOIZING_QUERIES:
-                    _clear_query_memos()
+                if cold or name in MEMOIZING_QUERIES:
+                    clear_frame_cache()
                 t0 = time.monotonic()
                 n = QUERIES[name](spark, sf_dir).count()
                 dt = time.monotonic() - t0
                 best = dt if best is None else min(best, dt)
             results.setdefault(name, {})[sf_label] = round(best, 3)
             print(f"# {sf_label} {name}: {best:.3f}s ({n} rows)")
-    print("| query | sf0.1 s | sf1x10 s | ratio |")
+    print(f"| query | sf0.1 s | {out_label} s | ratio |")
     print("|---|---|---|---|")
-    for name in X10_QUERIES:
-        a, b = results[name]["sf0.1"], results[name]["sf1x10"]
+    for name in names:
+        a, b = results[name]["sf0.1"], results[name][out_label]
         print(f"| {name} | {a:.2f} | {b:.2f} | {b / a:.2f}x |")
+    return results
+
+
+def main_x10() -> None:
+    spark = _session("x10-bench", OUT10, generate_x10,
+                     [("embeddings", None), ("lineitem", "l_returnflag")])
+    results = _anchor(spark, X10_QUERIES, "sf1x10", OUT10)
     print(json.dumps({"results": results, "reps": X10_REPS}))
 
 
 def main() -> None:
-    from openmaptiles_zh_modifier_spark.registry import QUERIES
-    from openmaptiles_zh_modifier_spark.session import get_spark
-
     # --only a,b,c: anchor a subset (e.g. one new operator) without
     # re-timing the whole suite. Validated BEFORE the (expensive)
     # replica generation so a typo fails in milliseconds.
@@ -419,83 +435,10 @@ def main() -> None:
             raise SystemExit(f"--only: not in BENCH_QUERIES: {sorted(unknown)}")
         names = [n for n in BENCH_QUERIES if n in want]
 
-    spark = get_spark(app_name="skew-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    if "--regen" in sys.argv and os.path.isdir(OUT):
-        shutil.rmtree(OUT)
-    if not os.path.isdir(OUT):
-        t0 = time.monotonic()
-        generate(spark)
-        print(f"# generated {OUT} in {time.monotonic() - t0:.1f}s")
-
-    # warm codegen/shuffle/Arrow pools like bench.py does — BOTH dirs, so
-    # neither anchor pays first-touch page-cache/footer costs in its rows
-    for d in (SRC, OUT):
-        spark.read.parquet(f"{d}/lineitem.parquet").groupBy(
-            "l_returnflag"
-        ).count().count()
-        spark.read.parquet(f"{d}/events.parquet").groupBy(
-            "event_type"
-        ).count().count()
-    spark.range(8).mapInPandas(lambda it: it, schema="id long").count()
-
-    results: dict[str, dict[str, float]] = {}
-    for sf_label, sf_dir in (("sf0.1", SRC), ("sf0.3skew", OUT)):
-        for name in names:
-            best = None
-            for _ in range(2):  # min-of-2: co-tenant variance guard
-                if name in MEMOIZING_QUERIES:
-                    # rep 2 would otherwise time a memo hit (build
-                    # cached per session+sf_dir) — evict so both reps
-                    # price the same cold quantity
-                    _clear_query_memos()
-                t0 = time.monotonic()
-                n = QUERIES[name](spark, sf_dir).count()
-                dt = time.monotonic() - t0
-                best = dt if best is None else min(best, dt)
-            results.setdefault(name, {})[sf_label] = round(best, 3)
-            print(f"# {sf_label} {name}: {best:.3f}s ({n} rows)")
-
-    print("| query | sf0.1 s | sf0.3skew s | ratio |")
-    print("|---|---|---|---|")
-    for name in names:
-        a = results[name]["sf0.1"]
-        b = results[name]["sf0.3skew"]
-        print(f"| {name} | {a:.2f} | {b:.2f} | {b / a:.2f}x |")
+    spark = _session("skew-bench", OUT, generate,
+                     [("lineitem", "l_returnflag"), ("events", "event_type")])
+    results = _anchor(spark, names, "sf0.3skew", OUT)
     print(json.dumps({"results": results, "reps": REPS, "skew_pct": SKEW_PCT}))
-
-
-# Queries whose expensive build memoizes per (session, sf_dir): a warm
-# min-of-2 on these times a cache hit, not the query, so EVERY timed rep
-# must evict their memos first: registry.clear_frame_cache evicts the
-# memo frames and the cow-table build memos alike.
-MEMOIZING_QUERIES = {
-    "q_cow_merge_dv",
-    "q_cc_star",
-    "q_cow_delete_dv",
-    "q_cow_partition_evolution",
-    # round-12 late wave: star CC is linear in blocks (3x docs = 3x
-    # bounded components, rounds O(log^2 of the largest block)); RVQ is
-    # a corpus pass per level against a broadcast codebook + the
-    # 256-cell pair table (constant)
-    "q_cc_star",
-    "q_embed_rvq_adc",
-    "q_geo_dbscan",
-    "q_geo_dbscan_geodesic",
-    "q_geo_segment_join",
-    "q_geo_segment_join_geodesic",
-    "q_cow_schema_evolution",
-    "q_cow_compact_zorder",
-}
-
-
-def _clear_query_memos() -> None:
-    from openmaptiles_zh_modifier_spark.registry import clear_frame_cache
-
-    # the one session-store clear: unpersists memo frames, drops skew
-    # stats, and rmtrees every memoized cow table's temp dir
-    clear_frame_cache()
 
 
 # q_geo_polygon_overlay is NOT here: both its inputs (customer, nation)
@@ -529,42 +472,14 @@ LATE10_QUERIES = [
 
 
 def main_late10() -> None:
-    """Anchor ONLY the late round-10 trio. These memoize their expensive
+    """Anchor ONLY the late round-10 set. These memoize their expensive
     build per (session, sf_dir), so a warm min-of-2 would time an empty
     cache hit on rep 2 — instead every rep clears the query memos first
     (min-of-2 COLD: each rep prices the full build + census at both
     scales, which is the comparable quantity)."""
-    from openmaptiles_zh_modifier_spark.registry import QUERIES
-    from openmaptiles_zh_modifier_spark.session import get_spark
-
-    spark = get_spark(app_name="late10-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    if "--regen" in sys.argv and os.path.isdir(OUT):
-        shutil.rmtree(OUT)
-    if not os.path.isdir(OUT):
-        generate(spark)
-    for d in (SRC, OUT):
-        spark.read.parquet(f"{d}/documents.parquet").count()
-        spark.read.parquet(f"{d}/orders.parquet").groupBy("o_orderstatus").count().count()
-    spark.range(8).mapInPandas(lambda it: it, schema="id long").count()
-
-    results: dict[str, dict[str, float]] = {}
-    for sf_label, sf_dir in (("sf0.1", SRC), ("sf0.3skew", OUT)):
-        for name in LATE10_QUERIES:
-            best = None
-            for _ in range(2):
-                _clear_query_memos()
-                t0 = time.monotonic()
-                n = QUERIES[name](spark, sf_dir).count()
-                dt = time.monotonic() - t0
-                best = dt if best is None else min(best, dt)
-            results.setdefault(name, {})[sf_label] = round(best, 3)
-            print(f"# {sf_label} {name}: {best:.3f}s ({n} rows)")
-    print("| query | sf0.1 s | sf0.3skew s | ratio |")
-    print("|---|---|---|---|")
-    for name in LATE10_QUERIES:
-        a, b = results[name]["sf0.1"], results[name]["sf0.3skew"]
-        print(f"| {name} | {a:.2f} | {b:.2f} | {b / a:.2f}x |")
+    spark = _session("late10-bench", OUT, generate,
+                     [("documents", None), ("orders", "o_orderstatus")])
+    results = _anchor(spark, LATE10_QUERIES, "sf0.3skew", OUT, cold=True)
     print(json.dumps({"results": results, "reps": REPS, "mode": "cold-min2"}))
 
 
