@@ -84,7 +84,6 @@ from openmaptiles_zh_modifier_spark.operators.merge import (
 
 _MANIFEST_DIR = "_manifests"
 _PV = "__cow_pv"  # duplicated partition column: directory AND data
-_ANON_TXN = "__anon__"  # stream commits without a caller-supplied txn id
 
 
 class CowConflictError(RuntimeError):
@@ -117,34 +116,6 @@ def _read_manifest(root: str, version: int | None = None) -> dict:
     return m
 
 
-def _merged_stream_txns(root: str, manifest: dict) -> dict:
-    """Cumulative streaming-sink idempotency stamps for ``manifest``:
-    the predecessor's ``stream_txns`` map merged (max batch id per txn
-    key) with any stamps this commit itself carries. Carried forward on
-    EVERY commit — batch, MERGE, or stream — so the latest manifest
-    always holds the running max and (a) replay detection reads ONE
-    manifest instead of the whole history, (b) vacuum dropping old
-    manifests cannot erase a stamp and let a real epoch replay
-    re-commit duplicates (Delta stores txn (appId, version) in each
-    snapshot for the same reason)."""
-    merged: dict[str, int] = {}
-    if manifest["version"] > 1:
-        try:
-            prev = _read_manifest(root, manifest["version"] - 1)
-        except (FileNotFoundError, json.JSONDecodeError):
-            prev = {}  # predecessor vacuumed concurrently — best effort
-        merged.update(prev.get("stream_txns") or {})
-        # legacy single-stamp format (pre-txn-key tables): fold into the
-        # anonymous key so old stamps keep guarding after an upgrade
-        legacy = prev.get("last_stream_batch")
-        if legacy is not None:
-            k = _ANON_TXN
-            merged[k] = max(merged.get(k, -1), legacy)
-    for k, v in (manifest.get("stream_txns") or {}).items():
-        merged[k] = max(merged.get(k, -1), v)
-    return merged
-
-
 def _commit_manifest(root: str, manifest: dict) -> None:
     """Atomically publish ``manifest`` as its version, or raise
     CowConflictError if that version was committed concurrently.
@@ -162,9 +133,6 @@ def _commit_manifest(root: str, manifest: dict) -> None:
 
     mdir = os.path.join(root, _MANIFEST_DIR)
     os.makedirs(mdir, exist_ok=True)
-    txns = _merged_stream_txns(root, manifest)
-    if txns:
-        manifest = {**manifest, "stream_txns": txns}
     if "commit_ts" not in manifest:
         ts = time.time()
         if manifest["version"] > 1:
@@ -201,14 +169,31 @@ _TABLE_META = (
 )
 
 
-def _commit_next(root: str, m: dict, files: list, **meta) -> int:
+def _commit_next(
+    root: str, m: dict, files: list, txn: tuple[str, int] | None = None, **meta
+) -> int:
     """Publish the version after ``m``: ``files`` plus ``m``'s table
     metadata with ``meta`` overriding per key. An override of None
     drops the key, except ``partition_by``, which is always written
-    (None = unpartitioned). Extra keys (``stream_txns``) pass through.
-    Returns the committed version."""
+    (None = unpartitioned). Returns the committed version.
+
+    Exactly-once stamps: every commit carries ``m``'s ``stream_txns``
+    (the max batch id per streaming app id) forward and records
+    ``txn`` = ``(app_id, batch_id)`` when a streaming sink commits, so
+    the latest manifest always holds the running max — replay detection
+    (``_txn_recorded``) reads one manifest, and vacuuming old manifests
+    cannot erase a stamp (Delta keeps SetTransaction (appId, version)
+    in every snapshot for the same reason). The stamps are not
+    ``_TABLE_META``: concurrent stream commits that advance them are
+    not a metadata conflict."""
     nxt = {k: m[k] for k in _TABLE_META if k in m}
     nxt.update(meta)
+    txns = dict(m.get("stream_txns", {}))
+    if txn is not None:
+        app_id, batch_id = txn
+        txns[app_id] = max(txns.get(app_id, -1), batch_id)
+    if txns:
+        nxt["stream_txns"] = txns
     version = m["version"] + 1
     _commit_manifest(
         root,
@@ -219,6 +204,12 @@ def _commit_next(root: str, m: dict, files: list, **meta) -> int:
         },
     )
     return version
+
+
+def _txn_recorded(m: dict, txn: tuple[str, int] | None) -> bool:
+    """True when ``m`` already records the streaming batch ``txn`` =
+    ``(app_id, batch_id)``: the batch is a replay and commits nothing."""
+    return txn is not None and txn[1] <= m.get("stream_txns", {}).get(txn[0], -1)
 
 
 def _write_commit(
@@ -522,6 +513,7 @@ def cow_merge(
     base_version: int | None = None,
     strategy: str = "cow",
     dv_matched_threshold: float = 0.2,
+    txn: tuple[str, int] | None = None,
 ) -> int:
     """Delta-style ``MERGE INTO`` the cow table: rewrite ONLY the
     partitions whose values appear in the source (plus, when an INSERT
@@ -565,11 +557,18 @@ def cow_merge(
     merging stale derivations onto a base the caller never saw (the
     read-derive-merge TOCTOU). Default (None) merges onto the latest
     version, which is only safe when the source was derived
-    independently of the table's current contents."""
+    independently of the table's current contents.
+
+    ``txn`` = ``(app_id, batch_id)`` makes a streaming micro-batch
+    exactly-once (see ``_commit_next``): when the manifest already
+    records that batch, the merge returns the version it read without
+    reading or writing any data."""
     if strategy not in ("cow", "dv", "auto"):
         raise ValueError(f"cow_merge: unknown strategy {strategy!r}")
 
     m = _read_manifest(root, base_version)
+    if _txn_recorded(m, txn):
+        return m["version"]
     affected, keep = _merge_affected(source, m)
     if strategy == "auto":
         strategy = _pick_merge_strategy(
@@ -580,7 +579,7 @@ def cow_merge(
         return _merge_dv(
             spark, root, m, source, on,
             matched_update, matched_delete, not_matched_insert,
-            affected,
+            affected, txn,
         )
 
     # manifest schema is authoritative (not a sampled footer):
@@ -594,7 +593,7 @@ def cow_merge(
         _to_physical(merged, m), root, _physical_name(m, m["partition_by"])
     )
     _validate_constraints(spark, root, m, new_files)
-    return _commit_next(root, m, keep + new_files)
+    return _commit_next(root, m, keep + new_files, txn=txn)
 
 
 def _merge_affected(source: DataFrame, m: dict) -> tuple[list, list]:
@@ -673,6 +672,7 @@ def _merge_dv(
     matched_delete,
     not_matched_insert: dict | None,
     affected: list,
+    txn: tuple[str, int] | None,
 ) -> int:
     """Merge-on-read MERGE (Delta deletion-vector DML): matched rows'
     positions go to a DV sidecar (old images logically deleted, zero
@@ -782,7 +782,7 @@ def _merge_dv(
         _validate_constraints(spark, root, m, new_files)
 
     files = _repoint_dv(spark, root, m["files"], hits, touched)
-    return _commit_next(root, m, files + new_files)
+    return _commit_next(root, m, files + new_files, txn=txn)
 
 
 def _fname(e: dict) -> str:

@@ -364,13 +364,17 @@ def stream_backfill_to_jdbc(
     staging`` path the batch program uses — ``foreachBatch`` hands each
     micro-batch over as a batch DataFrame, so both call the one
     ``_stage_and_apply`` — shared, not reimplemented. The staging table
-    is OVERWRITTEN per batch (it is a transport buffer, not a log) and
-    the keyed UPDATE is idempotent on replay — re-deriving the same
-    hans/hant writes the same tags — which is exactly the
-    at-least-once-to-effectively-once story foreachBatch requires.
+    is OVERWRITTEN per batch (it is a transport buffer, not a log).
 
-    The checkpoint lives in a fresh temporary directory that nothing can
-    resume from, so it is removed once the query ends.
+    Delivery is at-least-once, with no exactly-once stamp: the
+    checkpoint lives in a fresh temporary directory and is thrown away
+    when the query ends, so a failed run does not resume — a re-run
+    starts over from the beginning of the source. That is safe because
+    the keyed UPDATE is idempotent: re-deriving a row writes the same
+    tags. A row the back-fill already completed no longer qualifies, so
+    a source that carries it in its back-filled state stages nothing and
+    counts nothing; a replayed change that still carries the old tags
+    is re-applied with identical values and counted again.
 
     Returns the total server-reported update count across batches (the
     reference's executeBatch tally, OMTZHModifier.java:169-176)."""
@@ -481,33 +485,42 @@ def stream_upsert_to_cow(
     ``update_cols`` plus ``order_by``, unmatched -> insert). Each batch
     lands as one atomic version.
 
+    Exactly-once across restarts: every merge commits the stamp
+    ``(query id, batch_id)``, the same one the cowtable streaming sink
+    writes (``cow_table._commit_next``). The query id is the one Spark
+    persists in ``<checkpoint>/metadata``, so it is stable across
+    restarts from that checkpoint. A batch replayed after a failure
+    between the merge's commit and Spark recording the batch finds its
+    stamp and reads, writes and commits nothing; its entry in the
+    returned list is the version the merge read.
+
     Out-of-order safety: the matched-update is CONDITIONAL on
     ``s.order_by > t.order_by`` — a stale change arriving after a newer
-    one (reordered batches, replays, late partitions) leaves the row
-    untouched, so the table converges to the per-key MAXIMUM order_by
-    regardless of arrival order. ``order_by`` is force-included in the
-    updated columns for exactly this reason: if the stored row's
-    order_by never advanced, a stale change could pass the version
-    check and clobber newer data. That also makes replay idempotent
-    twice over: re-applying a batch either rewrites identical values or
-    loses the version check. A concurrent non-stream writer can steal a
-    version; cow_merge then raises CowConflictError and the batch is
-    retried by the caller/engine rather than applied on a stale base.
+    one (reordered or late source partitions) leaves the row untouched,
+    so the table converges to the per-key MAXIMUM order_by regardless of
+    arrival order. ``order_by`` is force-included in the updated columns
+    for exactly this reason: if the stored row's order_by never
+    advanced, a stale change could pass the check and clobber newer
+    data. A concurrent non-stream writer can steal a version; cow_merge
+    then raises CowConflictError and the batch is retried by the
+    caller/engine rather than applied on a stale base.
 
     ``checkpoint_location`` defaults to ``<root>/_upsert_checkpoint``:
     re-invocations RESUME from the recorded source offsets instead of
-    re-reading the whole source through the (idempotent but wasteful)
-    order_by guard, and nothing leaks outside the table directory. Pass
-    an explicit path to run several independent upsert streams against
-    one table.
+    re-reading the whole source, and nothing leaks outside the table
+    directory. Pass an explicit path to run several independent upsert
+    streams against one table.
 
     Returns the committed version per micro-batch."""
+    import json
     import os
 
     from pyspark.sql import Window
 
     from openmaptiles_zh_modifier_spark.operators.cow_table import cow_merge
 
+    if checkpoint_location is None:
+        checkpoint_location = os.path.join(root, "_upsert_checkpoint")
     versions: list[int] = []
     # the stored order_by must advance with every applied change, or the
     # s.order_by > t.order_by guard stops guarding (see docstring)
@@ -527,6 +540,8 @@ def stream_upsert_to_cow(
         )
         if batch_df.isEmpty():
             return  # empty batch: no version burned
+        with open(os.path.join(checkpoint_location, "metadata")) as f:
+            query_id = json.loads(f.readline())["id"]
         spark = batch_df.sparkSession
         newer = F.col(f"s.{order_by}") > F.col(f"t.{order_by}")
         versions.append(
@@ -544,11 +559,10 @@ def stream_upsert_to_cow(
                 not_matched_insert={
                     c: F.col(f"s.{c}") for c in latest.columns
                 },
+                txn=(query_id, batch_id),
             )
         )
 
-    if checkpoint_location is None:
-        checkpoint_location = os.path.join(root, "_upsert_checkpoint")
     q = (
         stream_df.writeStream.foreachBatch(apply_batch)
         .trigger(availableNow=True)

@@ -71,18 +71,19 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from openmaptiles_zh_modifier_spark.operators.cow_table import (
-    _ANON_TXN,
     _PV,
     _TABLE_META,
     CowConflictError,
-    _commit_manifest,
     _commit_next,
     _latest_version,
     _read_manifest,
-    cow_history,
+    _txn_recorded,
 )
 
 FORMAT_NAME = "cowtable"
+_ANON_TXN = "__anon__"  # stream commits without a txnappid option
+# bytes of data files per read task, spark.sql.files.maxPartitionBytes
+_SPLIT_BYTES = 128 * 1024 * 1024
 
 
 @dataclass
@@ -108,7 +109,7 @@ class CowBundle(InputPartition):
     change files x tiny reads; the raw pyarrow reads of the whole
     98,710-row backlog measure 0.135 s, the drain's addBatch measured
     ~2.5 s warm). Planning packs files into ~split-sized bundles: one
-    task per `SPARK_GRAFT_COW_SPLIT_BYTES` (default 128 MiB, matching
+    task per ``_SPLIT_BYTES`` (128 MiB, matching
     spark.sql.files.maxPartitionBytes) of real bytes — a small backlog
     drains in one worker round-trip while a 100 TB scan still fans out
     to one task per 128 MiB, exactly like Spark's own FilePartition
@@ -117,16 +118,8 @@ class CowBundle(InputPartition):
     items: tuple
 
 
-def _split_target_bytes() -> int:
-    raw = os.environ.get("SPARK_GRAFT_COW_SPLIT_BYTES", "")
-    try:
-        return max(1, int(raw))
-    except ValueError:
-        return 128 * 1024 * 1024
-
-
-def _bundle_partitions(parts: list) -> list:
-    """Pack per-file partitions into ceil(total_bytes / split) read
+def _bundle_partitions(parts: list, target: int = _SPLIT_BYTES) -> list:
+    """Pack per-file partitions into ceil(total_bytes / target) read
     tasks (capped by file count), balancing by file size (first-fit on
     the least-loaded bundle, descending sizes; bundle-internal order
     stays path-stable). Row-level results are order-independent — every
@@ -139,7 +132,6 @@ def _bundle_partitions(parts: list) -> list:
             sizes.append(os.path.getsize(p.path))
         except OSError:
             sizes.append(0)
-    target = _split_target_bytes()
     n_tasks = max(1, min(len(parts), -(-sum(sizes) // target)))
     if n_tasks >= len(parts):
         return list(parts)
@@ -779,19 +771,18 @@ class CowBatchWriter(DataSourceArrowWriter):
         files = new_entries if self._overwrite else m["files"] + new_entries
         _commit_next(self._root, m, files)
 
-    def _create(self, new_entries: list, **extra) -> None:
-        """Publish v1 of a table this write creates."""
+    def _create(
+        self, new_entries: list, txn: tuple[str, int] | None = None
+    ) -> None:
+        """Publish v1 of a table this write creates, as the successor of
+        an empty version 0."""
         os.makedirs(self._root, exist_ok=True)
-        _commit_manifest(
-            self._root,
-            {
-                "version": 1,
-                "partition_by": self._partition_by,
-                "files": new_entries,
-                "schema": self._schema.json(),
-                **extra,
-            },
-        )
+        v0 = {
+            "version": 0,
+            "partition_by": self._partition_by,
+            "schema": self._schema.json(),
+        }
+        _commit_next(self._root, v0, new_entries, txn=txn)
 
     def _check_plan_metadata(self, m: dict, when: str, remedy: str) -> None:
         """Metadata-conflict gate (same contract as Delta): the task
@@ -833,10 +824,10 @@ class CowStreamWriter(CowBatchWriter, DataSourceStreamArrowWriter):
     query writing to the same table with a fresh checkpoint (batch ids
     restarting at 0) is not mistaken for a replay. Without the option,
     stamps fall under one anonymous key, which is single-writer-correct
-    only (documented fallback). Stamps live in a cumulative
-    ``stream_txns`` map that every commit carries forward onto the
-    latest manifest (``_merged_stream_txns``), so (a) commit reads ONE
-    manifest, not O(versions), and (b) vacuum cannot erase a stamp.
+    only (documented fallback). The stamp is the one every streaming
+    write into a cow table uses: ``_commit_next`` carries the
+    ``stream_txns`` map forward on every commit, so commit reads ONE
+    manifest and vacuum cannot erase a stamp.
 
     Task-side write is inherited verbatim from the batch writer (same
     commit-dir layout, same partition routing)."""
@@ -855,41 +846,23 @@ class CowStreamWriter(CowBatchWriter, DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803 (API name)
         new_entries = [e for m in messages if m for e in m.entries]
-        if self._exists:
-            m = _read_manifest(self._root)
-            stamps = m.get("stream_txns")
-            if stamps is None:
-                # legacy table (pre-carry-forward manifests): the latest
-                # manifest may lack stamps some older one carries — scan
-                # the history ONCE; the commit below writes the merged
-                # map so every later commit is O(1) again
-                stamps = {}
-                for v in cow_history(self._root):
-                    old = _read_manifest(self._root, v)
-                    legacy = old.get("last_stream_batch")
-                    if legacy is not None:
-                        stamps[_ANON_TXN] = max(
-                            stamps.get(_ANON_TXN, -1), legacy
-                        )
-                    for k, s in (old.get("stream_txns") or {}).items():
-                        stamps[k] = max(stamps.get(k, -1), s)
-            if batchId <= stamps.get(self._txn_key, -1):
-                # epoch replay after a failure between commit and the
-                # engine recording progress — already published (possibly
-                # several versions back, if other writers interleaved);
-                # the just-written duplicate files are manifest-orphans
-                self.abort(messages, batchId)
-                return
-            self._check_plan_metadata(
-                m, "mid-stream", "restart the stream to adopt it"
-            )
-            _commit_next(
-                self._root, m, m["files"] + new_entries,
-                stream_txns={**stamps, self._txn_key: batchId},
-            )
-        else:
-            self._create(new_entries, stream_txns={self._txn_key: batchId})
+        txn = (self._txn_key, batchId)
+        if not self._exists:
+            self._create(new_entries, txn)
             self._exists = True
+            return
+        m = _read_manifest(self._root)
+        if _txn_recorded(m, txn):
+            # epoch replay after a failure between commit and the
+            # engine recording progress — already published (possibly
+            # several versions back, if other writers interleaved);
+            # the just-written duplicate files are manifest-orphans
+            self.abort(messages, batchId)
+            return
+        self._check_plan_metadata(
+            m, "mid-stream", "restart the stream to adopt it"
+        )
+        _commit_next(self._root, m, m["files"] + new_entries, txn=txn)
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
         CowBatchWriter.abort(self, messages)

@@ -343,3 +343,123 @@ def test_stream_upsert_to_cow_equals_batch_latest_state(spark, sf_dir, tmp_path)
     }
     got = {r.user_id: r.seq for r in cow_read(spark, root).collect()}
     assert got == truth
+
+
+_FEED_SCHEMA = "user_id long, event_id long, event_type string, seq long"
+
+
+def _write_feed(spark, src_dir, n_batches=3):
+    """A change feed of ``n_batches`` single-file parts: every part
+    updates users 0-3 and inserts one new user, with seq rising across
+    parts so each part's changes win."""
+    for b in range(n_batches):
+        rows = [(u, 10 * b + u, f"e{b}", 100 * b + u) for u in range(4)]
+        rows.append((10 + b, b, "new", b))
+        spark.createDataFrame(rows, _FEED_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src_dir)
+
+
+def _run_upsert(spark, src_dir, root):
+    from openmaptiles_zh_modifier_spark.plans.pipeline import (
+        stream_upsert_to_cow,
+    )
+
+    stream = (
+        spark.readStream.schema(_FEED_SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
+    return stream_upsert_to_cow(
+        stream, root, on="user_id", order_by="seq",
+        update_cols=["event_id", "event_type"], tiebreak="event_id",
+    )
+
+
+def _upsert_table(spark, tmp_path, name):
+    root = str(tmp_path / name)
+    cow_create(spark, root, spark.createDataFrame([], _FEED_SCHEMA))
+    return root
+
+
+def _drop_last_commit(checkpoint):
+    """Forget the last batch Spark recorded as done — the state a crash
+    after the sink committed but before Spark wrote ``commits/<N>``
+    leaves — so a restart replays that batch."""
+    import os
+
+    cdir = os.path.join(checkpoint, "commits")
+    last = max(int(f) for f in os.listdir(cdir) if f.isdigit())
+    os.remove(os.path.join(cdir, str(last)))
+    os.remove(os.path.join(cdir, f".{last}.crc"))
+
+
+def _commit_dirs(root):
+    import os
+
+    return sorted(d for d in os.listdir(root) if d.startswith("commit-"))
+
+
+def _table_rows(spark, root):
+    return sorted(tuple(r) for r in cow_read(spark, root).collect())
+
+
+def test_stream_upsert_replay_commits_nothing(spark, tmp_path):
+    """A micro-batch replayed after its merge committed finds its
+    (query id, batch id) stamp: no version, no data file, same table."""
+    import os
+
+    from openmaptiles_zh_modifier_spark.operators.cow_table import (
+        cow_history,
+    )
+
+    src = str(tmp_path / "feed")
+    _write_feed(spark, src)
+    root = _upsert_table(spark, tmp_path, "t")
+    versions = _run_upsert(spark, src, root)
+    assert len(versions) == 3
+    history, dirs = cow_history(root), _commit_dirs(root)
+    rows = _table_rows(spark, root)
+
+    _drop_last_commit(os.path.join(root, "_upsert_checkpoint"))
+    assert _run_upsert(spark, src, root) == [history[-1]]
+    assert cow_history(root) == history
+    assert _commit_dirs(root) == dirs
+    assert _table_rows(spark, root) == rows
+
+
+def test_stream_upsert_failure_before_commit_matches_clean_run(
+    spark, tmp_path, monkeypatch
+):
+    """A merge that fails before its commit fails the query; the restart
+    re-runs that batch from the checkpoint, and the history and the
+    table equal a clean run's."""
+    from openmaptiles_zh_modifier_spark.operators import cow_table
+    from openmaptiles_zh_modifier_spark.operators.cow_table import (
+        cow_history,
+    )
+
+    src = str(tmp_path / "feed")
+    _write_feed(spark, src)
+    clean = _upsert_table(spark, tmp_path, "clean")
+    _run_upsert(spark, src, clean)
+
+    root = _upsert_table(spark, tmp_path, "t")
+    real_merge = cow_table.cow_merge
+    calls = []
+
+    def failing_merge(*args, **kwargs):
+        calls.append(kwargs["txn"])
+        if len(calls) == 2:
+            raise RuntimeError("injected failure before commit")
+        return real_merge(*args, **kwargs)
+
+    monkeypatch.setattr(cow_table, "cow_merge", failing_merge)
+    with pytest.raises(Exception, match="injected failure"):
+        _run_upsert(spark, src, root)
+    assert len(cow_history(root)) == 2  # create + the first batch
+    _run_upsert(spark, src, root)
+    # the restart re-ran the failed batch under the same query id
+    assert calls[2] == calls[1]
+    assert len(cow_history(root)) == len(cow_history(clean))
+    assert _table_rows(spark, root) == _table_rows(spark, clean)

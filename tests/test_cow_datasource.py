@@ -295,6 +295,49 @@ def test_stream_writer_txn_identity(spark, sf_dir, tmp_path):
     assert _read_manifest(root)["stream_txns"]["queryA"] == 1
 
 
+def test_stream_writer_replay_commits_nothing(spark, sf_dir, tmp_path):
+    """A micro-batch replayed after the sink committed it (Spark's
+    ``commits/<N>`` entry lost in a crash) is skipped on restart: the
+    history and the row count are unchanged."""
+    from openmaptiles_zh_modifier_spark.operators.cow_table import (
+        cow_history,
+    )
+    from tests.test_backfill_cow import _drop_last_commit
+
+    register_cow_datasource(spark)
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
+        "n_nationkey", "n_name", "n_regionkey"
+    )
+    src_dir = str(tmp_path / "src")
+    for i in range(3):
+        nation.where(F.col("n_nationkey") % 3 == i).write.mode(
+            "append"
+        ).parquet(src_dir)
+    root, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
+
+    def run():
+        q = (
+            spark.readStream.schema(nation.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src_dir)
+            .writeStream.format("cowtable")
+            .option("path", root)
+            .option("txnappid", "sink")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120), "stream did not finish in time"
+
+    run()
+    history, n_rows = cow_history(root), cow_read(spark, root).count()
+    assert n_rows == nation.count()
+    _drop_last_commit(ckpt)
+    run()
+    assert cow_history(root) == history
+    assert cow_read(spark, root).count() == n_rows
+
+
 def test_stream_replays_commit_log(spark, cow_root, tmp_path):
     updates = spark.createDataFrame(
         [(1, "STREAMED", 1)], "n_nationkey long, n_name string, n_regionkey int"

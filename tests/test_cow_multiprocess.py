@@ -43,85 +43,67 @@ def _race_commit(args):
         return ("conflict", writer_id)
 
 
+def _commit_loop(root, cdir, txn=None):
+    """Publish a version holding ``cdir``'s file on top of the latest
+    manifest through ``_commit_next`` (which carries the stream stamps
+    forward), retrying until it wins: on CowConflictError (another
+    writer took the version) and on FileNotFoundError (a concurrent
+    vacuum dropped the manifest between listing and reading it)."""
+    import random
+    import time
+
+    from openmaptiles_zh_modifier_spark.operators.cow_table import (
+        CowConflictError,
+        _commit_next,
+        _read_manifest,
+    )
+
+    while True:
+        try:
+            m = _read_manifest(root)
+            return _commit_next(
+                root, m,
+                [{"path": f"{cdir}/data.parquet", "partition": None}],
+                txn=txn,
+            )
+        except (CowConflictError, FileNotFoundError):
+            time.sleep(0.002 * random.random())
+
+
+def _stage(root, cdir, payload):
+    os.makedirs(os.path.join(root, cdir), exist_ok=True)
+    with open(os.path.join(root, cdir, "data.parquet"), "w") as f:
+        f.write(payload)
+
+
 def _merge_writer(args):
     """A MERGE-shaped writer loop: read latest, stage a commit dir,
     publish latest+1, retry on conflict — the cow_merge retry protocol
     without the Spark payload (the protocol is pure filesystem)."""
     root, wid, n_commits = args
-    import random
     import sys
-    import time
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
-    from openmaptiles_zh_modifier_spark.operators.cow_table import (
-        CowConflictError,
-        _commit_manifest,
-        _latest_version,
-    )
-
     committed = []
     for n in range(n_commits):
         cdir = f"commit-w{wid}-{n}"
-        os.makedirs(os.path.join(root, cdir), exist_ok=True)
-        with open(os.path.join(root, cdir, "data.parquet"), "w") as f:
-            f.write(f"w{wid}-{n}")
-        while True:
-            v = _latest_version(root)
-            man = {
-                "version": v + 1,
-                "partition_by": None,
-                "files": [
-                    {"path": f"{cdir}/data.parquet", "partition": None}
-                ],
-                "schema": "{}",
-            }
-            try:
-                _commit_manifest(root, man)
-                committed.append(v + 1)
-                break
-            except CowConflictError:
-                time.sleep(0.002 * random.random())
+        _stage(root, cdir, f"w{wid}-{n}")
+        committed.append(_commit_loop(root, cdir))
     return ("merge", wid, committed)
 
 
 def _stream_writer(args):
     """Stream-commit loop: like the merge writer but every commit also
-    carries a (txnAppId -> batchId) idempotency stamp."""
+    records a (txnAppId, batchId) idempotency stamp."""
     root, n_commits = args
-    import random
     import sys
-    import time
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
-    from openmaptiles_zh_modifier_spark.operators.cow_table import (
-        CowConflictError,
-        _commit_manifest,
-        _latest_version,
-    )
-
     committed = []
     for n in range(n_commits):
         cdir = f"commit-stream-{n}"
-        os.makedirs(os.path.join(root, cdir), exist_ok=True)
-        with open(os.path.join(root, cdir, "data.parquet"), "w") as f:
-            f.write(f"s-{n}")
-        while True:
-            v = _latest_version(root)
-            man = {
-                "version": v + 1,
-                "partition_by": None,
-                "files": [
-                    {"path": f"{cdir}/data.parquet", "partition": None}
-                ],
-                "schema": "{}",
-                "stream_txns": {"appA": n},
-            }
-            try:
-                _commit_manifest(root, man)
-                committed.append(v + 1)
-                break
-            except CowConflictError:
-                time.sleep(0.002 * random.random())
+        _stage(root, cdir, f"s-{n}")
+        committed.append(_commit_loop(root, cdir, txn=("appA", n)))
     return ("stream", 0, committed)
 
 

@@ -222,7 +222,6 @@ def test_stream_backfill_jdbc_matches_batch(spark, tmp_path):
     leave the database in EXACTLY the state the batch program leaves a
     twin database in — tags maps compared key-for-key."""
     from openmaptiles_zh_modifier_spark.plans.pipeline import (
-        hstore_text_to_map,
         run_backfill_jdbc,
         stream_backfill_to_jdbc,
     )
@@ -260,21 +259,70 @@ def test_stream_backfill_jdbc_matches_batch(spark, tmp_path):
     # the throwaway checkpoint is removed once the query ends
     assert set(glob.glob(ckpts)) == before
 
-    def final_tags(url):
-        df = (
-            spark.read.format("jdbc")
-            .option("url", url).option("dbtable", "app.poi")
-            .option("driver", DRIVER).load()
-        )
-        return {
-            r.id: r.m
-            for r in df.select("id", hstore_text_to_map(df["tags"]).alias("m")).collect()
-        }
-
-    batch_state, stream_state = final_tags(url_b), final_tags(url_s)
+    batch_state = _final_tags(spark, url_b)
+    stream_state = _final_tags(spark, url_s)
     assert stream_state == batch_state
     assert stream_state[5]["name:zh-Hans"] == "轻松广场"
     assert stream_state[5]["name:zh-Hant"] == "輕鬆廣場"
+
+
+def _read_poi(spark, url):
+    return (
+        spark.read.format("jdbc")
+        .option("url", url).option("dbtable", "app.poi")
+        .option("driver", DRIVER).load()
+    )
+
+
+def _final_tags(spark, url):
+    from openmaptiles_zh_modifier_spark.plans.pipeline import hstore_text_to_map
+
+    df = _read_poi(spark, url)
+    return {
+        r.id: r.m
+        for r in df.select("id", hstore_text_to_map(df["tags"]).alias("m")).collect()
+    }
+
+
+def test_stream_backfill_jdbc_rerun_is_idempotent(spark, tmp_path):
+    """The streaming JDBC back-fill keeps no exactly-once stamp: its
+    checkpoint is thrown away, so a second run starts over. That is
+    safe because the keyed UPDATE is idempotent. A second stream over
+    the same source table, now back-filled, stages no row (none still
+    qualifies) and returns 0; replaying the original change rows
+    rewrites identical tags. The Derby state is unchanged either way."""
+    from openmaptiles_zh_modifier_spark.plans.pipeline import (
+        stream_backfill_to_jdbc,
+    )
+
+    schema = "id long, name string, tags string"
+    poi = spark.createDataFrame(
+        [
+            (1, "臺灣鐵路", '"amenity"=>"station"'),
+            (2, "Berlin", '"amenity"=>"cafe"'),
+            (3, "輕鬆廣場", '"leisure"=>"park"'),
+        ],
+        schema,
+    )
+    url = _url("rerun")
+    write_jdbc(poi, url, "poi", mode="overwrite", driver=DRIVER)
+
+    def run(rows, name):
+        src = str(tmp_path / name)
+        rows.repartition(2).write.parquet(src)
+        stream = spark.readStream.schema(schema).parquet(src)
+        return stream_backfill_to_jdbc(stream, url, "app.poi", "id", DRIVER)
+
+    assert run(poi, "feed") == 2
+    state = _final_tags(spark, url)
+    assert state[3]["name:zh-Hans"] == "轻松广场"
+
+    backfilled = _read_poi(spark, url).select("id", "name", "tags")
+    assert run(backfilled, "backfilled") == 0
+    assert _final_tags(spark, url) == state
+
+    assert run(poi, "replayed_feed") == 2
+    assert _final_tags(spark, url) == state
 
 
 def test_hstore_text_parser_adversarial_values(spark):

@@ -53,7 +53,7 @@ class TestCowBundlePacking:
     """_bundle_partitions packing math (round 14): one task per
     split-size of real bytes, capped by file count, all files kept."""
 
-    def test_packing_counts_and_membership(self, tmp_path, monkeypatch):
+    def test_packing_counts_and_membership(self, tmp_path):
         from openmaptiles_zh_modifier_spark.sources.cow_datasource import (
             CowBundle,
             CowFilePartition,
@@ -67,20 +67,17 @@ class TestCowBundlePacking:
             paths.append(str(p))
         parts = [CowFilePartition(p, None) for p in paths]
 
-        monkeypatch.setenv("SPARK_GRAFT_COW_SPLIT_BYTES", "1000")
-        out = _bundle_partitions(parts)
+        out = _bundle_partitions(parts, target=1000)
         assert len(out) == 1 and isinstance(out[0], CowBundle)
         assert {i.path for i in out[0].items} == set(paths)
 
         # split of 100 bytes over 210 total -> 3 tasks, balanced
-        monkeypatch.setenv("SPARK_GRAFT_COW_SPLIT_BYTES", "100")
-        out = _bundle_partitions(parts)
+        out = _bundle_partitions(parts, target=100)
         assert len(out) == 3
         got = [i.path for b in out for i in b.items]
         assert sorted(got) == sorted(paths)
 
         # split of 1 byte -> one task per file, UNbundled passthrough
-        monkeypatch.setenv("SPARK_GRAFT_COW_SPLIT_BYTES", "1")
-        out = _bundle_partitions(parts)
+        out = _bundle_partitions(parts, target=1)
         assert len(out) == len(parts)
         assert all(isinstance(p, CowFilePartition) for p in out)

@@ -40,7 +40,6 @@ def main() -> None:
 
     for name in args.queries:
         for rep in range(args.reps):
-            before = {q.id for q in spark.streams.active}
             t0 = time.perf_counter()
             QUERIES[name](spark, args.sf).count()
             wall = time.perf_counter() - t0
@@ -50,10 +49,7 @@ def main() -> None:
             print(f"== {name} rep{rep}: wall {wall:.3f}s")
         # hook: monkeypatch run_to_memory's awaitTermination to capture
         # progress before the query object is dropped
-        from openmaptiles_zh_modifier_spark.streaming import events as ev
-
         captured: list = []
-        orig_start = ev.DataFrame  # unused; keep lints quiet
 
         import pyspark.sql.streaming.query as q_mod
 
