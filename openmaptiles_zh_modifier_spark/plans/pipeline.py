@@ -491,8 +491,8 @@ def stream_upsert_to_cow(
     persists in ``<checkpoint>/metadata``, so it is stable across
     restarts from that checkpoint. A batch replayed after a failure
     between the merge's commit and Spark recording the batch finds its
-    stamp and reads, writes and commits nothing; its entry in the
-    returned list is the version the merge read.
+    stamp and commits nothing, without reading or writing a table file;
+    its entry in the returned list is the version the merge read.
 
     Out-of-order safety: the matched-update is CONDITIONAL on
     ``s.order_by > t.order_by`` — a stale change arriving after a newer
