@@ -95,7 +95,8 @@ def discover_jdbc_tables(
     (user/password) to both the metadata connection and the table reads
     — never embed them in the URL, it leaks into job descriptions.
     Tested with the bundled Derby; ``schema_pattern`` narrows discovery
-    (Derby surfaces system tables under SYS otherwise)."""
+    to matching schemas (system tables never show: the type filter is
+    ``TABLE``)."""
     jvm = spark.sparkContext._jvm
     jvm.java.lang.Class.forName(driver)
     props = jvm.java.util.Properties()
@@ -113,8 +114,7 @@ def discover_jdbc_tables(
         conn.close()
 
     def quoted(schema: str | None, name: str) -> str:
-        q = '"' + name.replace('"', '""') + '"'
-        return f'"{schema}".{q}' if schema else q
+        return ".".join('"' + p.replace('"', '""') + '"' for p in (schema, name) if p)
 
     out: dict[str, DataFrame] = {}
     for schema, name in sorted(found):

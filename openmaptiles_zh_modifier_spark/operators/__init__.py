@@ -2,8 +2,7 @@
 
 from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
     backfill_table,
-    derive_zh_columns,
     updates_frame,
 )
 
-__all__ = ["backfill_table", "derive_zh_columns", "updates_frame"]
+__all__ = ["backfill_table", "updates_frame"]

@@ -120,38 +120,6 @@ def _zh_exprs(compat_names_typo: bool, tables) -> dict[str, Column]:
     }
 
 
-def derive_zh_columns(
-    df: DataFrame,
-    id_field: str = "id",
-    compat_names_typo: bool = False,
-    tables=None,
-) -> DataFrame:
-    """Project + filter + derive. Returns
-    ``(id_field, name, zh, hans_old, hant_old, hans, hant, needs_update)``
-    for rows that pass the server-side filter AND have a usable zh source.
-
-    Pure column expressions — Catalyst pushes the filter into the scan and
-    prunes the projection to exactly (id_field, name, tags). ``tables``
-    as in :func:`_zh_exprs`.
-    """
-    e = _zh_exprs(compat_names_typo, tables)
-    return (
-        df.where(e["qualifies"])
-        .where(e["zh"].isNotNull())
-        .select(
-            F.col(id_field),
-            F.col("name").alias("name"),
-            *(
-                e[c].alias(c)
-                for c in (
-                    "zh", "hans_old", "hant_old", "hans", "hant",
-                    "needs_update",
-                )
-            ),
-        )
-    )
-
-
 def updates_frame(
     df: DataFrame,
     id_field: str = "id",

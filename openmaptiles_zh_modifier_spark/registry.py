@@ -20,13 +20,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openmaptiles_zh_modifier_spark.functions.zh import (
+    CURATED,
     HAN_REGEX_RE2,
-    is_han,
-    nullif_empty,
-    to_simplified,
     to_simplified_sql,
-    to_traditional,
     to_traditional_sql,
+)
+from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
+    KEY_HANS,
+    KEY_HANT,
+    KEY_ZH,
+    updates_frame,
 )
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -154,13 +157,12 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 def _read_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     if table == "events":
-        # The events fixture stores TIMESTAMP(NANOS). Spark >= 4.x reads it
-        # natively as timestamp_ntz (truncating nanos->micros, which already
-        # matches DuckDB); older Sparks only read it under
-        # spark.sql.legacy.parquet.nanosAsLong=true, yielding BIGINT nanos.
-        # Branch on the ACTUAL dtype so both environments converge on the
-        # same micros-precision timestamp — integer `div` truncation is
-        # bit-exact with DuckDB's nanos handling.
+        # The testdata stores ts as TIMESTAMP(MICROS), which reads as
+        # timestamp_ntz. A TIMESTAMP(NANOS) file reads as BIGINT nanos
+        # under the session's spark.sql.legacy.parquet.nanosAsLong (Spark
+        # 4.1 refuses it without). Branch on the ACTUAL dtype so both
+        # converge on the same micros-precision timestamp (integer `div`
+        # truncates the nanos).
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -176,17 +178,23 @@ def _read_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # zh back-fill (the reference's native query, SURVEY.md §2.1-§2.10)
 #
 # The driver testdata has no map-typed tags table, so the oracle-checked
-# form derives a deterministic zh fixture from `documents` (doc_id-indexed
-# Chinese literals) and runs the scalar-column stage of the pipeline:
+# rows build a deterministic ``(doc_id, name, tags)`` fixture from
+# `documents` (doc_id-indexed Chinese literals) and run the product
+# operator, ``operators/zh_backfill.updates_frame``, over it:
 # han-gate (P4) → ''-normalization (P5) → coalesce cascade (F5) →
-# changed-rows (F6). The map-typed stages (element_at projection,
-# map_concat write-back) are pytest-verified in tests/test_zh_backfill.py.
+# changed-rows (F6). The write-back stages (map_concat, the rewrites)
+# are pytest-verified in tests/test_zh_backfill.py.
 # =========================================================================
 
 _ZH_NAMES = ["臺灣鐵路", "Berlin", "頭髮廣場", "Beijing 北京", "", None, "國語學校"]
 _ZH_TAGVALS = [None, "臺北車站", "廣州東門", None, "馬場公園", None, None]
 _ZH_HANS = [None, "", None, "北京", None, None, None]
 _ZH_HANT = [None, None, "廣州東門", None, "", None, "國語學校"]
+# The typo-compat row's stored Hant DIVERGES from what regeneration
+# produces (rows doc_id%7 in {2,6}: stored 舊城門樓/國語書院 vs
+# regenerated 廣州東門/國語學校), so reading the wrong key is visible
+# in the hash; with _ZH_HANT both values coincide.
+_ZH_HANT_DIVERGENT = [None, None, "舊城門樓", None, "", None, "國語書院"]
 
 
 def _pick_spark(vals: list[str | None], idx) -> F.Column:
@@ -207,13 +215,22 @@ def _pick_sql(vals: list[str | None], idx: str) -> str:
     return f"CASE {whens} ELSE {last} END"
 
 
-ZH_BACKFILL_ORACLE = f"""
+def _zh_backfill_oracle(
+    hant_vals: list[str | None], compat_names_typo: bool
+) -> str:
+    # Typo mode reads the stored Hant from the misspelled key, which
+    # never exists: hant_old is NULL, so every qualifying row regenerates
+    # Hant. The WHERE is spelled correctly in both modes.
+    hant_old = (
+        "CAST(NULL AS VARCHAR)" if compat_names_typo else "NULLIF(hant_tag, '')"
+    )
+    return f"""
 WITH src AS (
   SELECT doc_id,
          {_pick_sql(_ZH_NAMES, "doc_id")} AS name,
          {_pick_sql(_ZH_TAGVALS, "doc_id")} AS zh_tag,
          {_pick_sql(_ZH_HANS, "doc_id")} AS hans_tag,
-         {_pick_sql(_ZH_HANT, "doc_id")} AS hant_tag
+         {_pick_sql(hant_vals, "doc_id")} AS hant_tag
   FROM documents
 ),
 qualified AS (
@@ -229,7 +246,7 @@ derived AS (
                             AND regexp_matches(name, '{HAN_REGEX_RE2}')
                        THEN name END) AS zh,
          NULLIF(hans_tag, '') AS hans_old,
-         NULLIF(hant_tag, '') AS hant_old
+         {hant_old} AS hant_old
   FROM qualified
 )
 SELECT doc_id,
@@ -241,156 +258,57 @@ ORDER BY doc_id
 """
 
 
-def zh_fixture_src(docs: DataFrame) -> DataFrame:
-    """Deterministic zh fixture columns over any doc_id-bearing frame
-    (batch or streaming — pure column expressions either way)."""
+def zh_tags(zh: F.Column, hans: F.Column, hant: F.Column) -> F.Column:
+    """The production ``tags`` map over three scalar zh columns:
+    null-valued entries drop out (the key is absent), empty strings stay
+    (quirk B7's raw IS NULL WHERE must see them)."""
+    return F.map_filter(
+        F.map_from_arrays(
+            F.array(F.lit(KEY_ZH), F.lit(KEY_HANS), F.lit(KEY_HANT)),
+            F.array(zh, hans, hant),
+        ),
+        lambda k, v: v.isNotNull(),
+    )
+
+
+def zh_fixture(docs: DataFrame, hant_vals: list[str | None]) -> DataFrame:
+    """The deterministic ``(doc_id, name, tags)`` fixture over any
+    doc_id-bearing frame (batch or streaming: pure column expressions)."""
     idx = F.col("doc_id")
     return docs.select(
         idx,
         _pick_spark(_ZH_NAMES, idx).alias("name"),
-        _pick_spark(_ZH_TAGVALS, idx).alias("zh_tag"),
-        _pick_spark(_ZH_HANS, idx).alias("hans_tag"),
-        _pick_spark(_ZH_HANT, idx).alias("hant_tag"),
-    )
-
-
-def zh_backfill_transform(src: DataFrame) -> DataFrame:
-    """The reference's derivation chain (P2 -> P4 -> P5 -> F5 -> F6) as
-    stateless column expressions: works identically under batch and
-    Structured Streaming (no aggregation, no state — append mode)."""
-    name, zh_tag = F.col("name"), F.col("zh_tag")
-    hans_tag, hant_tag = F.col("hans_tag"), F.col("hant_tag")
-    qualified = src.where(
-        (name.isNotNull() | zh_tag.isNotNull())
-        & (hant_tag.isNull() | hans_tag.isNull())
-    )
-    name_usable = name.isNotNull() & (name != F.lit("")) & is_han(name)
-    zh = F.coalesce(zh_tag, F.when(name_usable, name))
-    hans_old = nullif_empty(hans_tag)
-    hant_old = nullif_empty(hant_tag)
-    return (
-        qualified.select(
-            "doc_id",
-            zh.alias("zh"),
-            hans_old.alias("hans_old"),
-            hant_old.alias("hant_old"),
-        )
-        .where(F.col("zh").isNotNull()
-               & (F.col("hans_old").isNull() | F.col("hant_old").isNull()))
-        .select(
-            "doc_id",
-            F.coalesce("hans_old", to_simplified("zh")).alias("hans"),
-            F.coalesce("hant_old", to_traditional("zh")).alias("hant"),
-        )
-    )
-
-
-@register("zh_backfill", oracle=ZH_BACKFILL_ORACLE)
-def q_zh_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return zh_backfill_transform(zh_fixture_src(docs)).orderBy("doc_id")
-
-
-# --- B1 typo-compat mode, oracle-gated (VERDICT r6 #8) --------------------
-#
-# ``compat_names_typo=True`` reproduces OMTZHModifier.java:135-136: the
-# SELECT reads the existing Hant from the misspelled key ``names:zh-Hant``
-# (which never exists) while WHERE/UPDATE use the correct key — so a stored
-# Hant value is never seen and is regenerated whenever the row qualifies.
-# The fixture's Hant column deliberately DIVERGES from what regeneration
-# produces (rows doc_id%7 in {2,6}: stored 舊城門樓/國語書院 vs regenerated
-# 廣州東門/國語學校), so the overwrite behavior is visible in the hash —
-# with the original fixture both values coincided and the quirk was
-# unobservable.
-
-_ZH_HANT_DIVERGENT = [None, None, "舊城門樓", None, "", None, "國語書院"]
-
-ZH_BACKFILL_TYPO_ORACLE = f"""
-WITH src AS (
-  SELECT doc_id,
-         {_pick_sql(_ZH_NAMES, "doc_id")} AS name,
-         {_pick_sql(_ZH_TAGVALS, "doc_id")} AS zh_tag,
-         {_pick_sql(_ZH_HANS, "doc_id")} AS hans_tag,
-         {_pick_sql(_ZH_HANT_DIVERGENT, "doc_id")} AS hant_tag
-  FROM documents
-),
-qualified AS (
-  -- the WHERE is spelled correctly even in typo mode (only the SELECT
-  -- reads the wrong key), so the row set is unchanged
-  SELECT * FROM src
-  WHERE (name IS NOT NULL OR zh_tag IS NOT NULL)
-    AND (hant_tag IS NULL OR hans_tag IS NULL)
-),
-derived AS (
-  SELECT doc_id,
-         COALESCE(zh_tag,
-                  CASE WHEN name IS NOT NULL AND name <> ''
-                            AND regexp_matches(name, '{HAN_REGEX_RE2}')
-                       THEN name END) AS zh,
-         NULLIF(hans_tag, '') AS hans_old
-  FROM qualified
-)
--- hant_old is read from the misspelled key => always NULL: hant is always
--- regenerated and needs_update is always true for qualifying rows
-SELECT doc_id,
-       COALESCE(hans_old, {to_simplified_sql('zh')}) AS hans,
-       {to_traditional_sql('zh')} AS hant
-FROM derived
-WHERE zh IS NOT NULL
-ORDER BY doc_id
-"""
-
-
-@register("zh_backfill_typo_compat", oracle=ZH_BACKFILL_TYPO_ORACLE)
-def q_zh_backfill_typo_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B1 typo-compat back-fill through the REAL map-typed operator: the
-    scalar fixture is assembled into the production ``(name, tags map)``
-    shape (null-valued entries dropped, empty strings kept — quirk B7's
-    raw-IS-NULL WHERE must see them), then ``derive_zh_columns`` runs
-    with ``compat_names_typo=True`` so the Hant read misses and every
-    qualifying row regenerates Hant. Pure column expressions end to end:
-    map_from_arrays/map_filter build, element_at reads, no UDF."""
-    from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
-        KEY_HANS,
-        KEY_HANT,
-        KEY_ZH,
-        derive_zh_columns,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    idx = F.col("doc_id")
-    src = docs.select(
-        idx,
-        _pick_spark(_ZH_NAMES, idx).alias("name"),
-        _pick_spark(_ZH_TAGVALS, idx).alias("zh_tag"),
-        _pick_spark(_ZH_HANS, idx).alias("hans_tag"),
-        _pick_spark(_ZH_HANT_DIVERGENT, idx).alias("hant_tag"),
-    )
-    tagged = src.select(
-        "doc_id",
-        "name",
-        F.map_filter(
-            F.map_from_arrays(
-                F.array(F.lit(KEY_ZH), F.lit(KEY_HANS), F.lit(KEY_HANT)),
-                F.array("zh_tag", "hans_tag", "hant_tag"),
-            ),
-            lambda k, v: v.isNotNull(),
+        zh_tags(
+            _pick_spark(_ZH_TAGVALS, idx),
+            _pick_spark(_ZH_HANS, idx),
+            _pick_spark(hant_vals, idx),
         ).alias("tags"),
     )
-    # tables=CURATED pins the gate to the curated dictionaries even on a
-    # box where a deployment exported SPARK_GRAFT_OPENCC_DIR — the
-    # static DuckDB oracle compiles the curated literals, so the Spark
-    # side must too (review finding: env var would hash-mismatch the
-    # gate for correct code)
-    from openmaptiles_zh_modifier_spark.functions.zh import CURATED
 
-    out = derive_zh_columns(
-        tagged, "doc_id", compat_names_typo=True, tables=CURATED
+
+# tables=CURATED pins the gate rows to the curated dictionaries even
+# where a deployment exports SPARK_GRAFT_OPENCC_DIR: the DuckDB oracle
+# compiles the curated literals, so the Spark side must too.
+@register("zh_backfill", oracle=_zh_backfill_oracle(_ZH_HANT, False))
+def q_zh_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    fixture = zh_fixture(load(spark, sf_dir, "documents"), _ZH_HANT)
+    return updates_frame(fixture, "doc_id", False, tables=CURATED).orderBy(
+        "doc_id"
     )
-    return (
-        out.where("needs_update")
-        .select("doc_id", "hans", "hant")
-        .orderBy("doc_id")
+
+
+@register(
+    "zh_backfill_typo_compat",
+    oracle=_zh_backfill_oracle(_ZH_HANT_DIVERGENT, True),
+)
+def q_zh_backfill_typo_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B1 typo-compat back-fill (OMTZHModifier.java:135-136): the SELECT
+    reads the existing Hant from the misspelled key ``names:zh-Hant``
+    while WHERE/UPDATE use the correct key, so a stored Hant value is
+    never seen and every qualifying row regenerates it."""
+    fixture = zh_fixture(load(spark, sf_dir, "documents"), _ZH_HANT_DIVERGENT)
+    return updates_frame(fixture, "doc_id", True, tables=CURATED).orderBy(
+        "doc_id"
     )
 
 

@@ -27,11 +27,11 @@ SEMANTIC_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
 }
 
-# Best-effort compatibility confs: harmless no-ops on current Spark, needed
-# only on older versions. NOT semantic on Spark 4.x — PySpark 4.1.2 reads
-# parquet TIMESTAMP(NANOS) natively as timestamp_ntz (nanos truncated to
-# micros) and ignores this flag entirely; registry.load() branches on the
-# actual ts dtype so either read path converges on the same frame.
+# Compatibility confs. Spark 4.1 refuses to read a parquet TIMESTAMP(NANOS)
+# column (PARQUET_TYPE_ILLEGAL) unless nanosAsLong is set; with it the
+# column reads as BIGINT nanoseconds, which registry.load() and
+# read_events_stream() turn into a micros timestamp. TIMESTAMP(MICROS)
+# columns, as in every testdata scale, read as timestamp_ntz either way.
 COMPAT_CONFS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }

@@ -32,15 +32,23 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
-from openmaptiles_zh_modifier_spark.registry import load, local_frame, register
+from openmaptiles_zh_modifier_spark.functions.zh import CURATED
+from openmaptiles_zh_modifier_spark.operators.zh_backfill import updates_frame
+from openmaptiles_zh_modifier_spark.registry import (
+    _ZH_HANT,
+    ORACLE_SQL,
+    load,
+    local_frame,
+    register,
+    zh_fixture,
+)
 
-# Parquet streaming source needs an explicit schema; ts is TIMESTAMP(NANOS)
-# on disk. How that surfaces depends on the installed Spark: 4.x reads it
-# natively as timestamp_ntz (nanos truncated to micros); older Sparks only
-# read it as BIGINT nanos under the nanosAsLong conf (which session.py
-# still sets best-effort). The reader below peeks the BATCH schema of the
-# same file and adapts — the same dtype branch registry.load() applies —
-# so both environments produce an identical micros-precision frame.
+# Parquet streaming source needs an explicit schema. A TIMESTAMP(MICROS)
+# ts (the testdata) reads as timestamp_ntz; a TIMESTAMP(NANOS) ts reads
+# as BIGINT nanos under the nanosAsLong conf session.py sets. The reader
+# below peeks the BATCH schema of the same file and adapts — the same
+# dtype branch registry.load() applies — so both produce an identical
+# micros-precision frame.
 def _events_raw_schema(ts_type) -> StructType:
     return StructType(
         [
@@ -377,14 +385,16 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result.orderBy("user_id", "session_start")
 
 
-@register("q_stream_zh_backfill", oracle=None)  # oracle set below: same SQL as batch
+# streaming must compute the same result: the batch row's oracle verbatim
+@register("q_stream_zh_backfill", oracle=ORACLE_SQL["zh_backfill"])
 def q_stream_zh_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's native workload (zh back-fill, SURVEY.md §2.1-§2.10)
-    as a Structured Streaming pipeline: the derivation chain is stateless
-    column expressions + two pandas_udfs, so it runs unmodified under
-    readStream in append mode — the CDC-shaped deployment of the back-fill
-    (new rows arrive, derived zh tags stream out). Hash-checked against
-    the same DuckDB oracle as the batch `zh_backfill` query.
+    as a Structured Streaming pipeline: the product operator
+    (``updates_frame``) is stateless column expressions, so it runs
+    unmodified under readStream in append mode — the CDC-shaped
+    deployment of the back-fill (new rows arrive, derived zh tags stream
+    out). Hash-checked against the same DuckDB oracle as the batch
+    `zh_backfill` query.
 
     The small repartition(8) exists because the conversion fold is
     compute-dense relative to its input bytes: a micro-batch that carries
@@ -394,11 +404,6 @@ def q_stream_zh_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     CDC-sized batch is noise). This is the common production CDC shape
     too (one small file per trigger). For backfills over many-split
     sources, drop it — the scan already provides the parallelism."""
-    from openmaptiles_zh_modifier_spark.registry import (
-        zh_backfill_transform,
-        zh_fixture_src,
-    )
-
     docs_schema = StructType(
         [
             StructField("doc_id", LongType()),
@@ -414,14 +419,10 @@ def q_stream_zh_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
         .repartition(8)
     )
-    derived = zh_backfill_transform(zh_fixture_src(stream))
+    derived = updates_frame(
+        zh_fixture(stream, _ZH_HANT), "doc_id", False, tables=CURATED
+    )
     return run_to_memory(derived, output_mode="append").orderBy("doc_id")
-
-
-# Reuse the batch oracle verbatim: streaming must compute the same result.
-from openmaptiles_zh_modifier_spark.registry import ORACLE_SQL, ZH_BACKFILL_ORACLE  # noqa: E402,E501
-
-ORACLE_SQL["q_stream_zh_backfill"] = ZH_BACKFILL_ORACLE
 
 
 @register(

@@ -101,3 +101,42 @@ def test_debounce_matches_python_reference(spark, tmp_path):
         (2, 2): (5, 1),
         (3, 1): (6, 1),
     }
+
+
+def test_nanos_events_ts_reads_as_micros_timestamp(spark, tmp_path):
+    """A TIMESTAMP(NANOS) ``events.ts`` reads as BIGINT nanoseconds under
+    the session's ``spark.sql.legacy.parquet.nanosAsLong``; the batch
+    loader and the stream reader both turn it into a timestamp truncated
+    to microseconds. The testdata stores TIMESTAMP(MICROS), so only this
+    test runs the BIGINT branch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from openmaptiles_zh_modifier_spark.registry import load
+    from openmaptiles_zh_modifier_spark.streaming.events import (
+        read_events_stream,
+        run_to_memory,
+    )
+
+    nanos = [1_700_000_000_123_456_789, 1_700_000_060_000_000_999]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "user_id": pa.array([10, 11], pa.int64()),
+                "event_type": ["view", "click"],
+                "ts": pa.array(nanos, pa.timestamp("ns")),
+                "value": [1.0, 2.0],
+                "props": ["{}", "{}"],
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    sf = str(tmp_path)
+    assert dict(spark.read.parquet(f"{sf}/events.parquet").dtypes)["ts"] == "bigint"
+    stream = run_to_memory(read_events_stream(spark, sf), output_mode="append")
+    for df in (load(spark, sf, "events"), stream):
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got = sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
+        assert got == [n // 1000 for n in nanos]

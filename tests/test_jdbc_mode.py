@@ -11,7 +11,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from openmaptiles_zh_modifier_spark.registry import zh_backfill_transform
+from openmaptiles_zh_modifier_spark.operators.zh_backfill import updates_frame
+from openmaptiles_zh_modifier_spark.registry import zh_tags
 from openmaptiles_zh_modifier_spark.sources.io import (
     read_jdbc_partitioned,
     write_jdbc,
@@ -50,9 +51,9 @@ def test_jdbc_partitioned_roundtrip_and_writeback(spark):
 
     # derive + changed-rows (P4/P5/F5/F6) over the JDBC frame, then S5:
     # batched write-back to a staging table (the UPDATE ... FROM shape)
-    derived = zh_backfill_transform(
-        scan.withColumnRenamed("id", "doc_id")
-    ).withColumnRenamed("doc_id", "id")
+    tags = zh_tags(scan.zh_tag, scan.hans_tag, scan.hant_tag)
+    tagged = scan.select("id", "name", tags.alias("tags"))
+    derived = updates_frame(tagged, "id")
     write_jdbc(derived, url, "updates", mode="overwrite", driver=DRIVER)
     back = (
         spark.read.format("jdbc")
@@ -120,6 +121,29 @@ def test_jdbc_catalog_discovery_and_classification(spark):
     assert classes["poi"] == "id"
     assert classes["roads"] == "osm_id"
     assert "plain" not in classes
+
+
+def test_jdbc_discovery_quotes_schema_names(spark):
+    """A double quote in a SCHEMA name is escaped like one in a table
+    name. Unescaped, the read of that one table is a syntax error, and
+    with no schema_pattern it aborts discovery of every table."""
+    from openmaptiles_zh_modifier_spark.catalog import discover_jdbc_tables
+    from openmaptiles_zh_modifier_spark.sources.io import execute_jdbc_update
+
+    url = _url("quoting")
+    write_jdbc(
+        spark.createDataFrame([(1, "a")], "id long, name string"),
+        url, "plain", mode="overwrite", driver=DRIVER,
+    )
+    for sql in (
+        'CREATE SCHEMA "we""ird"',
+        'CREATE TABLE "we""ird"."t" (id BIGINT)',
+        'INSERT INTO "we""ird"."t" VALUES (7)',
+    ):
+        execute_jdbc_update(spark, url, DRIVER, sql)
+    tables = discover_jdbc_tables(spark, url, DRIVER)
+    rows = {k: [tuple(r) for r in df.collect()] for k, df in tables.items()}
+    assert rows == {"APP.PLAIN": [(1, "a")], 'we"ird.t': [(7,)]}
 
 
 def test_run_backfill_jdbc_end_to_end(spark):

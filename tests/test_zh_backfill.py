@@ -406,54 +406,28 @@ def test_backfill_plans_are_shuffle_free(spark, lattice_df, tmp_path):
 
 def test_typo_compat_gate_query_diverges_by_mode(spark):
     """The oracle-gated zh_backfill_typo_compat entry (VERDICT r6 #8)
-    runs derive_zh_columns in typo mode over a fixture whose stored Hant
+    runs updates_frame in typo mode over a fixture whose stored Hant
     (rows doc_id%7 in {2,6}) DIVERGES from regeneration — so a wrong
     implementation that reads the correct key would keep the stored
     value and break the driver hash. Prove the divergence here by
     running the same map-typed fixture in both modes."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
-        KEY_HANS,
-        KEY_HANT,
-        KEY_ZH,
-        derive_zh_columns,
-    )
     from openmaptiles_zh_modifier_spark.registry import (
-        _ZH_HANS,
         _ZH_HANT_DIVERGENT,
-        _ZH_NAMES,
-        _ZH_TAGVALS,
-        _pick_spark,
+        zh_fixture,
     )
 
     sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    idx = F.col("doc_id")
-    tagged = docs.select(
-        idx,
-        _pick_spark(_ZH_NAMES, idx).alias("name"),
-        F.map_filter(
-            F.map_from_arrays(
-                F.array(F.lit(KEY_ZH), F.lit(KEY_HANS), F.lit(KEY_HANT)),
-                F.array(
-                    _pick_spark(_ZH_TAGVALS, idx),
-                    _pick_spark(_ZH_HANS, idx),
-                    _pick_spark(_ZH_HANT_DIVERGENT, idx),
-                ),
-            ),
-            lambda k, v: v.isNotNull(),
-        ).alias("tags"),
-    )
+    tagged = zh_fixture(docs, _ZH_HANT_DIVERGENT)
     faithful = {
         r["doc_id"]: r["hant"]
-        for r in derive_zh_columns(tagged, "doc_id", True).collect()
+        for r in updates_frame(tagged, "doc_id", True).collect()
     }
     intended = {
         r["doc_id"]: r["hant"]
-        for r in derive_zh_columns(tagged, "doc_id", False).collect()
+        for r in updates_frame(tagged, "doc_id", False).collect()
     }
     saw = 0
     for doc_id, hant in intended.items():
@@ -466,6 +440,46 @@ def test_typo_compat_gate_query_diverges_by_mode(spark):
         else:
             assert faithful[doc_id] == hant
     assert saw >= 2
+
+
+def test_zh_gate_rows_match_their_oracles(spark, sf_dir):
+    """The zh gate rows and the driver's ``entry()`` smoke check match
+    their DuckDB oracles under the driver's fingerprint (row count,
+    name-sorted columns, order-insensitive value hash) — the check
+    tools/check_oracle.py makes, here inside the suite."""
+    import sys
+    from pathlib import Path
+
+    import duckdb
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    import __spark_entry__ as entry
+    from tools.check_oracle import frame_fingerprint
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/documents.parquet')"
+    )
+    oracles = entry.oracle_sql()
+
+    def oracle_fp(name):
+        res = con.execute(oracles[name])
+        return frame_fingerprint(
+            [d[0] for d in res.description], res.fetchall()
+        )
+
+    def spark_fp(df):
+        fp = frame_fingerprint(df.columns, [tuple(r) for r in df.collect()])
+        assert fp[0] > 0
+        return fp
+
+    queries = entry.queries()
+    for name in ("zh_backfill", "zh_backfill_typo_compat", "q_stream_zh_backfill"):
+        assert spark_fp(queries[name](spark, sf_dir)) == oracle_fp(name), name
+    # entry() reads sf0.001, the suite's default sf_dir
+    if Path(sf_dir).name == "sf0.001":
+        assert spark_fp(entry.entry(spark)) == oracle_fp("zh_backfill")
 
 
 def test_curated_fold_equals_duckdb_twin_on_every_phrase(spark):
