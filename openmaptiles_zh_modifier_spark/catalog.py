@@ -55,8 +55,12 @@ def discover_parquet_tables(spark: SparkSession, root: str) -> dict[str, DataFra
     """Lake-mode catalog scan: every ``*.parquet`` under ``root`` is a table.
 
     Replaces the reference's ``getTables`` loop (OMTZHModifier.java:39-43).
-    Reading a DataFrame here only touches footers — it is lazy and cheap
-    even when the files hold terabytes.
+    Not free: each ``spark.read.parquet`` without a schema runs one Spark
+    job that infers the schema from the footers (``ParquetUtils.inferSchema``
+    → ``SchemaMergeUtils.mergeSchemasInParallel`` → ``RDD.collect``). The
+    job reads footers only, so its cost does not grow with the data, but
+    on a small lake it is most of a run's jobs and a large share of its
+    driver CPU.
     """
     out: dict[str, DataFrame] = {}
     for p in sorted(Path(root).glob("*.parquet")):

@@ -148,13 +148,7 @@ def updates_frame_with_tags(
     over a live JDBC source, two scans are two snapshots, and pairing
     hans/hant from one snapshot with tags from another silently loses
     concurrent writes."""
-    e = _zh_exprs(compat_names_typo, tables)
-    return df.where(e["applies"]).select(
-        F.col(id_field),
-        e["hans"].alias("hans"),
-        e["hant"].alias("hant"),
-        e["new_tags"].alias("new_tags_map"),
-    )
+    return _updates_with_tags(df, _zh_exprs(compat_names_typo, tables), id_field)
 
 
 def backfill_table(
@@ -171,10 +165,7 @@ def backfill_table(
     applies, which at lake scale beats materializing an updates frame and
     joining it back. Every other column is passed through untouched.
     """
-    e = _zh_exprs(compat_names_typo, tables)
-    return df.withColumn(
-        "tags", F.when(e["applies"], e["new_tags"]).otherwise(F.col("tags"))
-    )
+    return df.withColumn("tags", _rewrite(_zh_exprs(compat_names_typo, tables)))
 
 
 def backfill_counts(compat_names_typo: bool = False) -> tuple[Column, Column]:
@@ -183,8 +174,37 @@ def backfill_counts(compat_names_typo: bool = False) -> tuple[Column, Column]:
     frame before the rewrite (afterwards the changed rows no longer
     qualify), e.g. as an ``Observation`` on the frame being written.
     The update predicate does not read the dictionaries."""
-    applies = _predicate_exprs(compat_names_typo)["applies"]
+    return _counts(_predicate_exprs(compat_names_typo))
+
+
+# The forms below take a BUILT derivation (:func:`_zh_exprs` or, for the
+# counts, :func:`_predicate_exprs`), so a caller that runs many tables or
+# micro-batches builds it once and reuses the same unresolved Columns:
+# every ``F.*`` call is driver-side py4j work, and a Column binds to no
+# frame until it is used.
+
+
+def _rewrite(e: dict[str, Column]) -> Column:
+    """The new ``tags`` of :func:`backfill_table`: the concatenated map
+    where the back-fill applies, the old one elsewhere."""
+    return F.when(e["applies"], e["new_tags"]).otherwise(F.col("tags"))
+
+
+def _counts(e: dict[str, Column]) -> tuple[Column, Column]:
+    """The ``(n_updated, n_rows)`` aggregates of :func:`backfill_counts`."""
     return (
-        F.count_if(applies).alias("n_updated"),
+        F.count_if(e["applies"]).alias("n_updated"),
         F.count(F.lit(1)).alias("n_rows"),
+    )
+
+
+def _updates_with_tags(
+    df: DataFrame, e: dict[str, Column], id_field: str
+) -> DataFrame:
+    """The frame of :func:`updates_frame_with_tags`."""
+    return df.where(e["applies"]).select(
+        F.col(id_field),
+        e["hans"].alias("hans"),
+        e["hant"].alias("hant"),
+        e["new_tags"].alias("new_tags_map"),
     )

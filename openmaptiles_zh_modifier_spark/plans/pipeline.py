@@ -16,7 +16,7 @@ import tempfile
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from openmaptiles_zh_modifier_spark.catalog import (
@@ -25,10 +25,10 @@ from openmaptiles_zh_modifier_spark.catalog import (
     discover_parquet_tables,
 )
 from openmaptiles_zh_modifier_spark.operators.zh_backfill import (
+    _counts,
+    _rewrite,
+    _updates_with_tags,
     _zh_exprs,
-    backfill_counts,
-    backfill_table,
-    updates_frame_with_tags,
 )
 from openmaptiles_zh_modifier_spark.sources.io import (
     execute_jdbc_update,
@@ -83,18 +83,22 @@ def run_backfill(
     tests/test_zh_backfill.py::test_backfill_plans_are_shuffle_free), so
     the metrics are collected in the write's result stage, where Spark
     applies each successful task's accumulator update exactly once, even
-    when a task is retried."""
+    when a task is retried.
+
+    The derivation is built once per run, the way the reference sets its
+    conversion up once before its table loop: the count aggregates and
+    the ``tags`` rewrite are unresolved Columns that each table's plan
+    binds to its own frame."""
     tables = discover_parquet_tables(spark, lake_root)
     report = RunReport()
+    e = _zh_exprs(compat_names_typo, None)
+    counts, rewrite = _counts(e), _rewrite(e)
     for tc in classify_all(tables):
         df = tables[tc.table]
         t0 = time.perf_counter()
-        counts = backfill_counts(compat_names_typo)
         if out_root is not None:
             obs = Observation()
-            result = backfill_table(
-                df.observe(obs, *counts), tc.id_field, compat_names_typo
-            )
+            result = df.observe(obs, *counts).withColumn("tags", rewrite)
             write_parquet(result, f"{out_root}/{tc.table}.parquet")
             got = obs.get
             n_updated, n_rows = got["n_updated"], got["n_rows"]
@@ -230,13 +234,27 @@ def _apply_update_sql(
     )
 
 
+def _staging_exprs(
+    compat_names_typo: bool,
+) -> tuple[Column, dict[str, Column], Column]:
+    """The Columns of the JDBC write-back, built once per run or streaming
+    query and shared by its tables or micro-batches: the parse of the
+    hstore-text ``tags``, the derivation, and the staged ``new_tags``
+    text."""
+    return (
+        hstore_text_to_map(F.col("tags")),
+        _zh_exprs(compat_names_typo, None),
+        map_to_hstore_text(F.col("new_tags_map")).alias("new_tags"),
+    )
+
+
 def _stage_and_apply(
     df: DataFrame,
     url: str,
     driver: str,
     table: str,
     id_field: str,
-    compat_names_typo: bool,
+    exprs: tuple[Column, dict[str, Column], Column],
     staging: str,
     opts: dict[str, str],
 ) -> int:
@@ -246,16 +264,13 @@ def _stage_and_apply(
     (a join of the updates frame back onto the source would be a second
     scan, and over a live database two scans are two snapshots), overwrite
     the ``staging`` table with it, then run ONE set-based server-side
-    ``UPDATE … FROM staging``. Returns the update count the server
-    reports — the telemetry the reference logs per executeBatch."""
-    mapped = df.withColumn("tags", hstore_text_to_map(df["tags"]))
-    staged = updates_frame_with_tags(
-        mapped, id_field, compat_names_typo
-    ).select(
-        id_field,
-        "hans",
-        "hant",
-        map_to_hstore_text(F.col("new_tags_map")).alias("new_tags"),
+    ``UPDATE … FROM staging``. ``exprs`` is :func:`_staging_exprs`.
+    Returns the update count the server reports — the telemetry the
+    reference logs per executeBatch."""
+    parse, e, new_tags = exprs
+    mapped = df.withColumn("tags", parse)
+    staged = _updates_with_tags(mapped, e, id_field).select(
+        id_field, "hans", "hant", new_tags
     )
     write_jdbc(staged, url, staging, mode="overwrite", driver=driver, **opts)
     return execute_jdbc_update(
@@ -307,6 +322,7 @@ def run_backfill_jdbc(
         tables[name.lower()] = df.toDF(*[c.lower() for c in df.columns])
     report = RunReport()
     opts = dict(properties or {})
+    exprs = _staging_exprs(compat_names_typo)
     for tc in classify_all(tables):
         t0 = time.perf_counter()
         # S3/S4: re-read the qualifying table as a partitioned range scan
@@ -330,7 +346,7 @@ def run_backfill_jdbc(
             driver,
             tc.table,
             tc.id_field,
-            compat_names_typo,
+            exprs,
             f"{tc.table}{staging_suffix}",
             opts,
         )
@@ -380,6 +396,7 @@ def stream_backfill_to_jdbc(
     reference's executeBatch tally, OMTZHModifier.java:169-176)."""
     opts = dict(properties or {})
     staging = f"{table}{staging_suffix}"
+    exprs = _staging_exprs(compat_names_typo)
     counts: list[int] = []
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -390,7 +407,7 @@ def stream_backfill_to_jdbc(
                 driver,
                 table,
                 id_field,
-                compat_names_typo,
+                exprs,
                 staging,
                 opts,
             )

@@ -5,7 +5,9 @@ id-range batching (OMTZHModifier.java:23-25, 130-137) and per-row batched
 UPDATE write-back (:156-169). Here:
 
 - file lakes are read with ``spark.read.parquet`` directly — splits
-  replace manual ranges; footers carry the schema, so "discovery" is free.
+  replace manual ranges; footers carry the schema, so discovery needs no
+  catalog, but each read without a schema runs one schema-inference job
+  over the footers.
 - ``read_jdbc_partitioned`` reproduces the reference's exact BETWEEN-range
   scan: Spark's partitioned JDBC read generates
   ``WHERE idField BETWEEN lo AND hi`` per task — the same SQL the

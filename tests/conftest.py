@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
 
@@ -32,3 +33,24 @@ def sf_dir() -> str:
 
 def load(spark, sf_dir: str, table: str):
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+
+
+@pytest.fixture()
+def count_calls(monkeypatch):
+    """``count_calls(module, *names)`` wraps each named function of
+    ``module`` with a counter and returns the shared ``Counter`` of calls
+    by name. The wrappers are undone after the test."""
+    calls = Counter()
+
+    def wrap(module, *names):
+        for name in names:
+            fn = getattr(module, name)
+
+            def counted(*args, _fn=fn, _name=name, **kwargs):
+                calls[_name] += 1
+                return _fn(*args, **kwargs)
+
+            monkeypatch.setattr(module, name, counted)
+        return calls
+
+    return wrap

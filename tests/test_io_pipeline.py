@@ -13,6 +13,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from openmaptiles_zh_modifier_spark.operators import zh_backfill
 from openmaptiles_zh_modifier_spark.operators.zh_backfill import updates_frame
 from openmaptiles_zh_modifier_spark.plans.pipeline import run_backfill
 from openmaptiles_zh_modifier_spark.sources.io import write_parquet
@@ -114,6 +115,30 @@ def test_run_backfill_counts_match_recount(
         assert t.n_updated == want, t
         back = spark.read.parquet(f"{out}/{t.table}.parquet") if write else src
         assert t.n_rows == back.count(), t
+
+
+@pytest.mark.parametrize("write", [False, True], ids=["no_out", "out"])
+def test_run_backfill_builds_derivation_once(
+    spark, lake, tmp_path, count_calls, write
+):
+    """run_backfill builds the derivation once per run, before its table
+    loop, and every table reuses its Columns: each build is about a
+    thousand py4j round trips. Every form of the derivation starts at
+    _predicate_exprs, so counting it counts builds. A second run builds
+    again: nothing is cached across runs."""
+    quirks = [
+        Row(id=1, name="理发", tags={"name:zh-Hans": "", "name:zh-Hant": None}),
+        Row(id=2, name="理发", tags={"names:zh-Hant": "Y"}),
+    ]
+    spark.createDataFrame(quirks, ZH_SCHEMA).write.parquet(
+        f"{lake}/quirks.parquet"
+    )
+    builds = count_calls(zh_backfill, "_predicate_exprs")
+    for run in (1, 2):
+        out = str(tmp_path / f"out{run}") if write else None
+        report = run_backfill(spark, lake, out)
+        assert {t.table for t in report.tables} == {"poi", "roads", "quirks"}
+        assert builds["_predicate_exprs"] == run
 
 
 def test_run_backfill_one_job_per_table(spark, lake, tmp_path):

@@ -8,9 +8,11 @@ from __future__ import annotations
 import glob
 import os
 import tempfile
+from collections import Counter
 
 from pyspark.sql import functions as F
 
+from openmaptiles_zh_modifier_spark.operators import zh_backfill
 from openmaptiles_zh_modifier_spark.operators.zh_backfill import updates_frame
 from openmaptiles_zh_modifier_spark.registry import zh_tags
 from openmaptiles_zh_modifier_spark.sources.io import (
@@ -19,6 +21,12 @@ from openmaptiles_zh_modifier_spark.sources.io import (
 )
 
 DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
+
+# The JDBC write-back builds its Columns with these two functions of
+# plans/pipeline.py and the derivation, whose every form starts at
+# zh_backfill._predicate_exprs. A run or a streaming query calls each once.
+STAGING_BUILDERS = ("hstore_text_to_map", "map_to_hstore_text")
+ONE_BUILD = Counter(dict.fromkeys(("_predicate_exprs", *STAGING_BUILDERS), 1))
 
 
 def _url(name: str) -> str:
@@ -146,10 +154,13 @@ def test_jdbc_discovery_quotes_schema_names(spark):
     assert rows == {"APP.PLAIN": [(1, "a")], 'we"ird.t': [(7,)]}
 
 
-def test_run_backfill_jdbc_end_to_end(spark):
+def test_run_backfill_jdbc_end_to_end(spark, count_calls):
     """The whole reference program against a live (embedded) database:
     discover -> classify -> parse hstore text -> derive -> staging
-    write-back, with S6 telemetry."""
+    write-back, with S6 telemetry. Each run builds the write-back's
+    Columns (the hstore parse, the derivation, the serializer) once, for
+    all its tables."""
+    from openmaptiles_zh_modifier_spark.plans import pipeline
     from openmaptiles_zh_modifier_spark.plans.pipeline import run_backfill_jdbc
 
     url = _url("full")
@@ -171,6 +182,8 @@ def test_run_backfill_jdbc_end_to_end(spark):
     write_jdbc(roads, url, "roads", mode="overwrite", driver=DRIVER)
     write_jdbc(plain, url, "plain", mode="overwrite", driver=DRIVER)
 
+    count_calls(zh_backfill, "_predicate_exprs")
+    builds = count_calls(pipeline, *STAGING_BUILDERS)
     sc = spark.sparkContext
     group = "run-backfill-jdbc-jobs"
     sc.setJobGroup(group, group)
@@ -178,6 +191,7 @@ def test_run_backfill_jdbc_end_to_end(spark):
         report = run_backfill_jdbc(spark, url, DRIVER, schema_pattern="APP")
     finally:
         sc.setJobGroup(None, None)
+    assert builds == ONE_BUILD, builds
     by_table = {t.table: t for t in report.tables}
     # keys are schema-qualified (two schemas may hold same-named tables)
     assert set(by_table) == {"app.poi", "app.roads"}  # plain skipped (S2)
@@ -235,16 +249,20 @@ def test_run_backfill_jdbc_end_to_end(spark):
 
     # idempotence guard: a second run must not discover the staging tables,
     # and — now that the UPDATE landed — must find nothing left to update.
+    builds.clear()
     report2 = run_backfill_jdbc(spark, url, DRIVER, schema_pattern="APP")
+    assert builds == ONE_BUILD, builds  # a new build: no cache across runs
     assert {t.table for t in report2.tables} == {"app.poi", "app.roads"}
     assert all(t.n_updated == 0 for t in report2.tables)
 
 
-def test_stream_backfill_jdbc_matches_batch(spark, tmp_path):
+def test_stream_backfill_jdbc_matches_batch(spark, tmp_path, count_calls):
     """Streaming zh back-fill sink parity: the SAME source rows, streamed
     through foreachBatch into the staging + server-side UPDATE path, must
     leave the database in EXACTLY the state the batch program leaves a
-    twin database in — tags maps compared key-for-key."""
+    twin database in — tags maps compared key-for-key. The query builds
+    the write-back's Columns once, for all its micro-batches."""
+    from openmaptiles_zh_modifier_spark.plans import pipeline
     from openmaptiles_zh_modifier_spark.plans.pipeline import (
         run_backfill_jdbc,
         stream_backfill_to_jdbc,
@@ -270,7 +288,13 @@ def test_stream_backfill_jdbc_matches_batch(spark, tmp_path):
     assert {t.table: t.n_updated for t in report.tables} == {"app.poi": 3}
 
     src_dir = str(tmp_path / "cdc")
-    poi.repartition(5).write.parquet(src_dir)
+    # one file per row (round-robin repartition(5) can leave a partition
+    # empty and write 4 files, which is only 2 batches)
+    for row in rows:
+        spark.createDataFrame([row], schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src_dir)
+    assert len(glob.glob(os.path.join(src_dir, "*.parquet"))) == 5
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "2")
@@ -278,7 +302,12 @@ def test_stream_backfill_jdbc_matches_batch(spark, tmp_path):
     )
     ckpts = os.path.join(tempfile.gettempdir(), "omt-jdbc-ckpt-*")
     before = set(glob.glob(ckpts))
+    count_calls(zh_backfill, "_predicate_exprs")
+    calls = count_calls(pipeline, *STAGING_BUILDERS, "_stage_and_apply")
     n = stream_backfill_to_jdbc(stream, url_s, "app.poi", "id", DRIVER)
+    batches = calls.pop("_stage_and_apply")
+    assert batches >= 3, batches
+    assert calls == ONE_BUILD, calls
     assert n == 3  # same server-side update tally as the batch run
     # the throwaway checkpoint is removed once the query ends
     assert set(glob.glob(ckpts)) == before
