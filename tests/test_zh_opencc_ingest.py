@@ -140,9 +140,9 @@ from hypothesis import strategies as st
 _ALPHA = "甲乙丙丁戊己"  # tiny CJK alphabet forces collisions/overlaps
 
 
-def _ref_pairs_from_lines(lines):
+def _ref_entries(lines):
     """Reference parse: (src, first candidate) per data line, identity
-    dropped; then first-wins split into a 1:1 alphabet + phrase spill."""
+    dropped."""
     pairs = []
     for line in lines:
         body = line.rstrip("\n").rstrip("\r")
@@ -152,8 +152,14 @@ def _ref_pairs_from_lines(lines):
         dst = rest.split(" ")[0]
         if src != dst:
             pairs.append((src, dst))
+    return pairs
+
+
+def _ref_pairs_from_lines(lines):
+    """:func:`_ref_entries`, then first-wins split into a 1:1 alphabet +
+    phrase spill (the char-file rule)."""
     frm, to, phrases, seen = [], [], [], set()
-    for s, d in pairs:
+    for s, d in _ref_entries(lines):
         if len(s) == 1 and len(d) == 1:
             if s not in seen:
                 seen.add(s)
@@ -216,11 +222,10 @@ def test_ingested_plan_equals_reference_fold(
     # parse-level rules hold for the char files
     frm, to, spill = _ref_pairs_from_lines(ts_lines)
     assert (t.t2s_from, t.t2s_to) == (frm, to)
-    # t2s phrases = TSPhrases entries ++ char-file spill (order kept)
-    ph_frm, ph_to, ph_phr = _ref_pairs_from_lines(st_lines)
-    expect_phrases = tuple(
-        [(s, d_) for s, d_ in zip(ph_frm, ph_to)] + ph_phr + spill
-    )
+    # t2s phrases = TSPhrases entries ++ char-file spill (order kept);
+    # a phrase file is not split first-wins like a char file, so a
+    # repeated source keeps every entry (the fold applies the first)
+    expect_phrases = tuple(_ref_entries(st_lines) + spill)
     assert set(t.t2s_phrases) == set(expect_phrases)
 
     expected = [
