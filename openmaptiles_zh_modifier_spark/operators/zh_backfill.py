@@ -91,17 +91,14 @@ def _zh_exprs(compat_names_typo: bool, tables) -> dict[str, Column]:
     """The back-fill derivation, spelled once: named column expressions
     over ``name`` / ``tags`` that every public form below selects from.
 
-    ``tables`` resolves here: :data:`CURATED` forces the curated
-    dictionaries, ``None`` defers to env ``SPARK_GRAFT_OPENCC_DIR``
+    ``tables`` is a :class:`ZhTables` used as given (the gate rows pass
+    :data:`CURATED`); ``None`` defers to env ``SPARK_GRAFT_OPENCC_DIR``
     (ingested OpenCC dictionaries — the deployment path to full
-    dictionary parity, VERDICT r11 #3; unset = curated gate path), and a
-    :class:`ZhTables` is used as given.
+    dictionary parity, VERDICT r11 #3) and falls back to :data:`CURATED`
+    when it is unset.
     """
-    tables = (
-        None
-        if tables is CURATED
-        else (tables if tables is not None else opencc_tables_from_env())
-    )
+    if tables is None:
+        tables = opencc_tables_from_env() or CURATED
     e = _predicate_exprs(compat_names_typo)
     tags = F.col("tags")
 
@@ -168,18 +165,9 @@ def backfill_table(
     return df.withColumn("tags", _rewrite(_zh_exprs(compat_names_typo, tables)))
 
 
-def backfill_counts(compat_names_typo: bool = False) -> tuple[Column, Column]:
-    """Aggregates ``(n_updated, n_rows)`` over a SOURCE frame: the rows
-    :func:`backfill_table` changes, and all rows. Evaluate them over the
-    frame before the rewrite (afterwards the changed rows no longer
-    qualify), e.g. as an ``Observation`` on the frame being written.
-    The update predicate does not read the dictionaries."""
-    return _counts(_predicate_exprs(compat_names_typo))
-
-
-# The forms below take a BUILT derivation (:func:`_zh_exprs` or, for the
-# counts, :func:`_predicate_exprs`), so a caller that runs many tables or
-# micro-batches builds it once and reuses the same unresolved Columns:
+# The forms below take a BUILT derivation (:func:`_zh_exprs`), so a
+# caller that runs many tables or micro-batches builds it once and
+# reuses the same unresolved Columns:
 # every ``F.*`` call is driver-side py4j work, and a Column binds to no
 # frame until it is used.
 
@@ -191,7 +179,10 @@ def _rewrite(e: dict[str, Column]) -> Column:
 
 
 def _counts(e: dict[str, Column]) -> tuple[Column, Column]:
-    """The ``(n_updated, n_rows)`` aggregates of :func:`backfill_counts`."""
+    """Aggregates ``(n_updated, n_rows)`` over a SOURCE frame: the rows
+    :func:`backfill_table` changes, and all rows. Evaluate them over the
+    frame before the rewrite (afterwards the changed rows no longer
+    qualify), e.g. as an ``Observation`` on the frame being written."""
     return (
         F.count_if(e["applies"]).alias("n_updated"),
         F.count(F.lit(1)).alias("n_rows"),

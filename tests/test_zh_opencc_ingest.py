@@ -248,3 +248,24 @@ def test_ingested_plan_equals_reference_fold(
         for x in texts
     ]
     assert got_sql == expected
+
+    # the s2t direction: STCharacters split first-wins, its spill is the
+    # whole phrase table (no STPhrases file), and a draw without
+    # multi-char lines leaves no phrases, so no fold runs at all
+    s_frm, s_to, s_spill = _ref_pairs_from_lines(st_lines)
+    assert (t.s2t_from, t.s2t_to) == (s_frm, s_to)
+    assert t.s2t_phrases == tuple(s_spill)
+    expected_t = [_ref_convert(x, s_frm, s_to, s_spill) for x in texts]
+    got_t = [
+        r.out
+        for r in df.select(
+            to_traditional("txt", tables=t).alias("out")
+        ).collect()
+    ]
+    assert got_t == expected_t
+    sql_t = to_traditional_sql("txt", tables=t)
+    got_sql_t = [
+        con.execute(f"SELECT {sql_t} FROM (SELECT ? AS txt)", [x]).fetchone()[0]
+        for x in texts
+    ]
+    assert got_sql_t == expected_t

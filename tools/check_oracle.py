@@ -3,7 +3,9 @@
 Runs every QUERIES[name] on Spark and the matching ORACLE_SQL[name] on
 DuckDB over the same parquet, then compares row count, column names, and an
 order-insensitive value hash (columns sorted by name, rows sorted, values
-stringified). Usage:
+stringified). Each row prints the seconds Spark (build + collect) and
+DuckDB (execute + fetch) took, and the five slowest rows are listed
+before the final tally. Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -12,6 +14,7 @@ from __future__ import annotations
 
 import hashlib
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -93,8 +96,10 @@ def main() -> int:
         )
 
     failures = 0
+    timings: list[tuple[float, str, float, float]] = []
     for name in names:
         fn = QUERIES[name]
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir)
             s_cols = sdf.columns
@@ -103,6 +108,7 @@ def main() -> int:
             print(f"  [FAIL] {name}: spark error: {str(exc)[:300]}")
             failures += 1
             continue
+        spark_s = time.perf_counter() - t0
         try:
             s_fp = frame_fingerprint(s_cols, s_rows)
         except NonScalarCell as exc:
@@ -111,11 +117,18 @@ def main() -> int:
             continue
 
         if name not in ORACLE_SQL:
-            print(f"  {name}: rows={s_fp[0]} (rows-only check, no oracle)")
+            print(
+                f"  {name}: rows={s_fp[0]} (rows-only check, no oracle)"
+                f" spark={spark_s:.2f}s"
+            )
+            timings.append((spark_s, name, spark_s, 0.0))
             continue
+        t0 = time.perf_counter()
         res = con.execute(ORACLE_SQL[name])
         d_cols = [d[0] for d in res.description]
         d_rows = res.fetchall()
+        duck_s = time.perf_counter() - t0
+        timings.append((spark_s + duck_s, name, spark_s, duck_s))
         try:
             d_fp = frame_fingerprint(d_cols, d_rows)
         except NonScalarCell as exc:
@@ -125,7 +138,11 @@ def main() -> int:
 
         ok = s_fp == d_fp
         status = "OK " if ok else "FAIL"
-        print(f"  [{status}] {name}: spark(rows={s_fp[0]}, hash={s_fp[2]}) duckdb(rows={d_fp[0]}, hash={d_fp[2]})")
+        print(
+            f"  [{status}] {name}: spark(rows={s_fp[0]}, hash={s_fp[2]})"
+            f" duckdb(rows={d_fp[0]}, hash={d_fp[2]})"
+            f" spark={spark_s:.2f}s duckdb={duck_s:.2f}s"
+        )
         if not ok:
             failures += 1
             if s_fp[1] != d_fp[1]:
@@ -139,6 +156,9 @@ def main() -> int:
                     if a != b:
                         print(f"      spark : {a[:200]}\n      duckdb: {b[:200]}")
                         break
+    print("slowest rows:")
+    for total, name, spark_s, duck_s in sorted(timings, reverse=True)[:5]:
+        print(f"  {name}: spark={spark_s:.2f}s duckdb={duck_s:.2f}s")
     print(f"{len(names) - failures}/{len(names)} queries match")
     return 1 if failures else 0
 
