@@ -4,8 +4,9 @@ CATALOG whose versioned pointer file is the single commit truth.
 The reference has no table format at all (it UPDATEs PostGIS rows in
 autocommit batches, OMTZHModifier.java:210-236); the cow format built
 here (operators/cow_table.py) gives single-table ACID via one
-link-rename CAS per manifest. This module closes the last format delta
-the round-12 verdict named vs Delta/Iceberg: MULTI-table transactions.
+create-if-absent link per manifest. This module closes the last format
+delta the round-12 verdict named vs Delta/Iceberg: MULTI-table
+transactions.
 Delta has none (each table's log is its own truth); Iceberg's REST
 catalog protocol does — a commit carries per-table *requirements*
 (expected base snapshots) and *updates* (new snapshots), and the
@@ -13,8 +14,8 @@ catalog applies all-or-nothing. This is that model on a filesystem:
 
 - A catalog manifest ``_catalog/cat-000N.json`` maps table name ->
   (root, pinned manifest version). Publication uses the SAME
-  link-then-rename CAS as table manifests, so exactly one concurrent
-  writer can create a given catalog version.
+  create-if-absent link (``_publish_json``) as table manifests, so
+  exactly one concurrent writer can create a given catalog version.
 - Table-level mutations (cow_delete / cow_append / cow_merge / ...)
   are STAGING from the catalog's point of view: they publish table
   manifests, but a catalog reader never sees a version no catalog
@@ -37,20 +38,19 @@ from __future__ import annotations
 
 import json
 import os
-import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from openmaptiles_zh_modifier_spark.operators.cow_table import (
     CowConflictError,
     _latest_version,
+    _list_versions,
     _manifest_path,
+    _publish_json,
     cow_read,
 )
 
 _CAT_DIR = "_catalog"
-_CAT_RE = re.compile(r"^cat-(\d{4})\.json$")
 
 
 def _cat_path(cat_root: str, version: int) -> str:
@@ -61,16 +61,13 @@ def catalog_latest(cat_root: str) -> int:
     """Highest committed catalog version (scan, not a pointer file —
     the set of committed versions IS the directory listing, and the
     CAS guarantees it has no holes created by losers)."""
-    d = os.path.join(cat_root, _CAT_DIR)
-    best = 0
-    if os.path.isdir(d):
-        for fn in os.listdir(d):
-            m = _CAT_RE.match(fn)
-            if m:
-                best = max(best, int(m.group(1)))
-    if best == 0:
+    try:
+        versions = _list_versions(os.path.join(cat_root, _CAT_DIR), "cat-")
+    except FileNotFoundError:
+        versions = []
+    if not versions:
         raise FileNotFoundError(f"no catalog at {cat_root}")
-    return best
+    return versions[-1]
 
 
 def catalog_manifest(cat_root: str, version: int | None = None) -> dict:
@@ -81,25 +78,13 @@ def catalog_manifest(cat_root: str, version: int | None = None) -> dict:
 
 
 def _publish(cat_root: str, manifest: dict) -> None:
-    """Same duel-safe protocol as cow _commit_manifest: temp file in
-    the same dir, then os.link (fails EEXIST) + unlink — exactly one
-    concurrent writer creates a given catalog version."""
-    d = os.path.join(cat_root, _CAT_DIR)
-    os.makedirs(d, exist_ok=True)
-    final = _cat_path(cat_root, manifest["version"])
-    fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(tmp, final)
-        except FileExistsError as exc:
-            raise CowConflictError(
-                f"catalog version {manifest['version']} was committed "
-                f"concurrently ({final} exists)"
-            ) from exc
-    finally:
-        os.unlink(tmp)
+    """Publish the catalog version with the cow manifest protocol
+    (``_publish_json``): exactly one concurrent writer creates it."""
+    _publish_json(
+        _cat_path(cat_root, manifest["version"]),
+        manifest,
+        f"catalog version {manifest['version']}",
+    )
 
 
 def catalog_create(cat_root: str, tables: dict[str, str]) -> int:

@@ -18,9 +18,9 @@ granularity, Delta's file-pruning idea one level coarser) and publishes
 a NEW manifest.
 
 Atomicity + isolation come from the manifest commit protocol:
-``os.rename`` of a temp file onto ``v{N+1}.json`` with an existence
-check — POSIX rename is atomic, so concurrent writers race to create
-the next version and exactly one wins; the loser gets
+``os.link`` of a temp file onto ``v{N+1}.json`` — the link fails if the
+target exists, so concurrent writers race to create the next version
+and exactly one wins; the loser gets
 ``CowConflictError`` (optimistic concurrency, same contract as Delta's
 ConcurrentAppendException) and must re-read + retry. Old manifests and
 files remain: every historical version stays readable (time travel)
@@ -69,6 +69,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import tempfile
 import uuid
 
@@ -94,36 +95,72 @@ def _manifest_path(root: str, version: int) -> str:
     return os.path.join(root, _MANIFEST_DIR, f"v{version:010d}.json")
 
 
+def _list_versions(dirpath: str, prefix: str) -> list[int]:
+    """Committed version numbers in ``dirpath``, ascending: exactly the
+    names ``<prefix><digits>.json``. Anything else in the directory (a
+    publish's temp file, a stray ``vacuum.json``) is not a version.
+    Raises FileNotFoundError when ``dirpath`` does not exist."""
+    pattern = re.compile(rf"^{re.escape(prefix)}(\d+)\.json$")
+    return sorted(
+        int(hit.group(1))
+        for f in os.listdir(dirpath)
+        if (hit := pattern.match(f))
+    )
+
+
 def _latest_version(root: str) -> int:
-    mdir = os.path.join(root, _MANIFEST_DIR)
-    if not os.path.isdir(mdir):
-        raise FileNotFoundError(f"not a cow table (no {_MANIFEST_DIR}): {root}")
-    versions = [
-        int(f[1:-5])
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    ]
+    try:
+        versions = cow_history(root)
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"not a cow table (no {_MANIFEST_DIR}): {root}"
+        ) from None
     if not versions:
         raise FileNotFoundError(f"cow table has no committed version: {root}")
-    return max(versions)
+    return versions[-1]
 
 
 def _read_manifest(root: str, version: int | None = None) -> dict:
     v = _latest_version(root) if version is None else version
-    with open(_manifest_path(root, v)) as f:
+    path = _manifest_path(root, v)
+    with open(path) as f:
         m = json.load(f)
-    assert m["version"] == v
+    if m.get("version") != v:
+        raise ValueError(
+            f"manifest {path} records version {m.get('version')!r}, not {v}"
+        )
     return m
+
+
+def _publish_json(final: str, payload: dict, what: str) -> None:
+    """Atomically create ``final`` holding ``payload`` (the version file
+    of ``what``), or raise CowConflictError if it already exists.
+
+    Protocol: write to a temp file in the SAME directory (a link must
+    not cross filesystems), then ``os.link`` it onto the final name.
+    The link fails with EEXIST if the target exists — unlike rename,
+    which silently replaces — so exactly one concurrent writer creates
+    a given version file. The temp file is always unlinked."""
+    d = os.path.dirname(final)
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(payload, f)
+        try:
+            os.link(tmp, final)  # atomic create-if-absent
+        except FileExistsError as exc:
+            raise CowConflictError(
+                f"{what} was committed concurrently ({final} exists)"
+            ) from exc
+    finally:
+        os.unlink(tmp)
 
 
 def _commit_manifest(root: str, manifest: dict) -> None:
     """Atomically publish ``manifest`` as its version, or raise
-    CowConflictError if that version was committed concurrently.
-
-    Protocol: write to a temp file in the SAME directory (rename must not
-    cross filesystems), then link+rename onto the final name. ``os.link``
-    fails with EEXIST if the target exists — unlike plain rename, which
-    silently replaces — so exactly one concurrent writer can win.
+    CowConflictError if that version was committed concurrently
+    (``_publish_json``).
 
     Every commit is stamped with a wall-clock ``commit_ts`` (VERDICT r11
     #4) so ``cow_read(as_of_ts=...)`` can resolve timestamp time travel
@@ -131,35 +168,24 @@ def _commit_manifest(root: str, manifest: dict) -> None:
     clock skew between concurrent writers cannot reorder history."""
     import time
 
-    mdir = os.path.join(root, _MANIFEST_DIR)
-    os.makedirs(mdir, exist_ok=True)
     if "commit_ts" not in manifest:
         ts = time.time()
         if manifest["version"] > 1:
             # never regress below the predecessor (Delta's in-commit
             # timestamp monotonicity): clock skew between writers makes
             # ties, not reordering. Reader-side monotonization in
-            # cow_resolve_as_of_ts still guards legacy/external
+            # _monotonized_stamps still guards legacy/external
             # manifests that carry raw regressing stamps.
             try:
                 ts = max(ts, _effective_commit_ts(root, manifest["version"] - 1))
             except (FileNotFoundError, OSError, json.JSONDecodeError):
                 pass  # predecessor vacuumed — nothing to anchor to
         manifest = {**manifest, "commit_ts": ts}
-    final = _manifest_path(root, manifest["version"])
-    fd, tmp = tempfile.mkstemp(dir=mdir, suffix=".tmp")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(tmp, final)  # atomic create-if-absent
-        except FileExistsError as exc:
-            raise CowConflictError(
-                f"version {manifest['version']} was committed concurrently "
-                f"({final} exists) — re-read the table and retry the merge"
-            ) from exc
-    finally:
-        os.unlink(tmp)
+    _publish_json(
+        _manifest_path(root, manifest["version"]),
+        manifest,
+        f"version {manifest['version']}",
+    )
 
 
 # Table metadata every next version carries forward from its
@@ -465,6 +491,21 @@ def _entry_pcol(e: dict, m: dict) -> str | None:
     return e.get("pcol", m["partition_by"])
 
 
+def _entries_for_partitions(m: dict, values: set[str]) -> list:
+    """Entries of ``m`` that can hold rows whose partition value (as
+    ``str``) is in ``values`` — file pruning from metadata alone.
+    Current-spec entries match by recorded value. An old-spec entry
+    (``pcol`` stamp, written before a partition-spec change) records a
+    value of a different column, so it is always kept (lossless,
+    Iceberg's cross-spec behavior; its rows still pass the caller's
+    row-level filter)."""
+    return [
+        e
+        for e in m["files"]
+        if _entry_pcol(e, m) != m["partition_by"] or e["partition"] in values
+    ]
+
+
 def cow_read(
     spark: SparkSession,
     root: str,
@@ -485,18 +526,7 @@ def cow_read(
     m = _read_manifest(root, version)
     files = m["files"]
     if partition_values is not None:
-        wanted = {str(v) for v in partition_values}
-        # spec-evolution safety: only CURRENT-spec entries can be
-        # pruned by value — an old-spec entry's recorded value belongs
-        # to a different column, so it must be scanned (lossless,
-        # Iceberg's cross-spec behavior; its rows still pass the
-        # caller's row-level filter)
-        files = [
-            e
-            for e in files
-            if _entry_pcol(e, m) != m["partition_by"]
-            or e["partition"] in wanted
-        ]
+        files = _entries_for_partitions(m, {str(v) for v in partition_values})
     # the MANIFEST schema is authoritative: files written before a schema
     # evolution lack the later columns and project them as NULL
     return _read_files(spark, root, m, files)
@@ -512,7 +542,6 @@ def cow_merge(
     not_matched_insert: dict | None = None,
     base_version: int | None = None,
     strategy: str = "cow",
-    dv_matched_threshold: float = 0.2,
     txn: tuple[str, int] | None = None,
 ) -> int:
     """Delta-style ``MERGE INTO`` the cow table: rewrite ONLY the
@@ -543,11 +572,6 @@ def cow_merge(
       it diffs (path, dv) pairs, so DV'd survivors cancel exactly like
       rewritten-but-unchanged rows do (hash-pinned in
       tests/test_cow_merge_dv.py).
-    - ``"auto"``: counts matched rows against the affected files' total
-      (parquet footer row counts, driver-side metadata only) and picks
-      ``dv`` when the fraction is at most ``dv_matched_threshold``,
-      else ``cow`` — the matched-fraction heuristic Delta applies for
-      DV-eligible DML.
 
     ``base_version`` pins the snapshot the merge is computed FROM and
     commits ``base_version + 1``: a caller that read version V, derived
@@ -563,18 +587,13 @@ def cow_merge(
     exactly-once (see ``_commit_next``): when the manifest already
     records that batch, the merge returns the version it read without
     reading or writing any data."""
-    if strategy not in ("cow", "dv", "auto"):
+    if strategy not in ("cow", "dv"):
         raise ValueError(f"cow_merge: unknown strategy {strategy!r}")
 
     m = _read_manifest(root, base_version)
     if _txn_recorded(m, txn):
         return m["version"]
     affected, keep = _merge_affected(source, m)
-    if strategy == "auto":
-        strategy = _pick_merge_strategy(
-            spark, root, m, source, on, affected,
-            matched_update, matched_delete, dv_matched_threshold,
-        )
     if strategy == "dv":
         return _merge_dv(
             spark, root, m, source, on,
@@ -611,55 +630,13 @@ def _merge_affected(source: DataFrame, m: dict) -> tuple[list, list]:
             " a NULL partition cannot be pruned or routed; clean or"
             " default them upstream"
         )
-    touched = {str(v) for v in vals}
-    # old-spec entries (pre-partition-evolution) cannot be pruned by
-    # the current column's values — they join the rewrite/DV pass, which
-    # also MIGRATES them to the current spec (Iceberg's progressive
-    # rewrite-to-new-spec behavior)
-    affected = [
-        e
-        for e in m["files"]
-        if _entry_pcol(e, m) != part_col or e["partition"] in touched
-    ]
+    # old-spec entries (pre-partition-evolution) join the rewrite/DV
+    # pass, which also MIGRATES them to the current spec (Iceberg's
+    # progressive rewrite-to-new-spec behavior)
+    affected = _entries_for_partitions(m, {str(v) for v in vals})
     _aff = {e["path"] for e in affected}
     keep = [e for e in m["files"] if e["path"] not in _aff]
     return affected, keep
-
-
-def _pick_merge_strategy(
-    spark: SparkSession,
-    root: str,
-    m: dict,
-    source: DataFrame,
-    on,
-    affected: list,
-    matched_update,
-    matched_delete,
-    threshold: float,
-) -> str:
-    """``strategy="auto"``: DV merge pays off when the matched rows are
-    a small fraction of the affected files' rows (sidecar + small append
-    vs whole-partition re-encode). Matched count is one semi-join over
-    the pruned scan; the denominator is driver-side parquet FOOTER row
-    counts (metadata only, bounded by file count — an upper bound that
-    ignores already-DV'd positions, which only biases TOWARD the cow
-    rewrite, the safe side)."""
-    import pyarrow.parquet as pq
-
-    if matched_update is None and matched_delete is None:
-        return "dv"  # insert-only: append either way; never rewrite
-    total = 0
-    for e in affected:
-        try:
-            total += pq.ParquetFile(os.path.join(root, e["path"])).metadata.num_rows
-        except Exception:
-            return "cow"  # unreadable footer: be conservative
-    if total == 0:
-        return "dv"
-    base = _read_files(spark, root, m, affected).alias("t")
-    cond = _key_cond(_key_pairs(on))
-    matched = base.join(source.alias("s"), cond, "left_semi").count()
-    return "dv" if matched / total <= threshold else "cow"
 
 
 def _merge_dv(
@@ -814,6 +791,40 @@ def _repoint_dv(
     return [({**e, "dv": dv_rel} if _fname(e) in touched else e) for e in entries]
 
 
+def _commit_changes(root: str, sv: int, ev: int):
+    """Yield ``(version, changes)`` for each committed version in
+    ``(sv, ev]``, ascending: what that commit changed against its
+    predecessor (version ``sv`` is the base; 0 or less = the empty
+    table). ``changes`` lists ``(kind, path, dv, old_dv)``:
+
+    - ``insert``: an entry added (``dv`` its sidecar, if any);
+    - ``delete_dv``: an entry repointed from sidecar ``old_dv`` to
+      ``dv`` — rows were deleted without a rewrite;
+    - ``delete_file``: an entry removed (``dv`` its last sidecar).
+
+    Per commit, not an endpoint diff: an add-then-delete inside the
+    span shows up as both. Metadata only: O(span x files) manifest JSON,
+    no data I/O."""
+
+    def dvs(v: int) -> dict:
+        return {e["path"]: e.get("dv") for e in _read_manifest(root, v)["files"]}
+
+    prev = dvs(sv) if sv >= 1 else {}
+    for v in range(max(sv + 1, 1), ev + 1):
+        cur = dvs(v)
+        changes = []
+        for p, dv in cur.items():
+            if p not in prev:
+                changes.append(("insert", p, dv, None))
+            elif prev[p] != dv:
+                changes.append(("delete_dv", p, dv, prev[p]))
+        changes += [
+            ("delete_file", p, dv, None) for p, dv in prev.items() if p not in cur
+        ]
+        yield v, changes
+        prev = cur
+
+
 def _effective_commit_ts(root: str, version: int) -> float:
     """Wall-clock stamp for ``version``: the manifest's recorded
     ``commit_ts``, else the manifest FILE's mtime (legacy pre-round-12
@@ -839,13 +850,10 @@ def cow_resolve_as_of_ts(root: str, as_of_ts: float) -> int:
     existed to read — same contract as Delta). Driver-side metadata
     scan, O(versions) manifest reads, no data I/O."""
     best: int | None = None
-    eff = float("-inf")
-    for v in cow_history(root):
-        eff = max(eff, _effective_commit_ts(root, v))
-        if eff <= as_of_ts:
-            best = v
-        else:
+    for v, eff in _monotonized_stamps(root):
+        if eff > as_of_ts:
             break  # monotone: every later version is strictly after ts
+        best = v
     if best is None:
         raise ValueError(
             f"as_of_ts={as_of_ts} predates the first commit of cow table"
@@ -854,14 +862,22 @@ def cow_resolve_as_of_ts(root: str, as_of_ts: float) -> int:
     return best
 
 
+def _monotonized_stamps(root: str):
+    """Yield ``(version, effective stamp)`` for every committed version,
+    ascending. The effective stamp is the running max of the raw
+    stamps (``_effective_commit_ts``), so it never decreases: raw
+    stamps of legacy or external manifests may regress under clock
+    skew, and both timestamp time travel and age-based vacuum must see
+    one order-consistent history."""
+    eff = float("-inf")
+    for v in cow_history(root):
+        eff = max(eff, _effective_commit_ts(root, v))
+        yield v, eff
+
+
 def cow_history(root: str) -> list[int]:
     """All committed versions, ascending (every one is readable)."""
-    mdir = os.path.join(root, _MANIFEST_DIR)
-    return sorted(
-        int(f[1:-5])
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
+    return _list_versions(os.path.join(root, _MANIFEST_DIR), "v")
 
 
 def cow_vacuum(
@@ -871,9 +887,10 @@ def cow_vacuum(
     pinned_versions=None,
     keep_newer_than_ts: float | None = None,
 ) -> int:
-    """Drop manifests older than the newest ``keep_versions`` and delete
-    every data file no surviving manifest references — including
-    manifest-ORPHANS that never belonged to any version (files written by
+    """Drop manifests older than the newest ``keep_versions`` (at least
+    1: the latest version always survives) and delete every data file
+    no surviving manifest references — including manifest-ORPHANS that
+    never belonged to any version (files written by
     a streaming-sink epoch replay that was skipped at commit, or by a
     writer that crashed between task writes and manifest publish).
     Returns files deleted.
@@ -906,6 +923,10 @@ def cow_vacuum(
     snapshot's files once enough newer versions land."""
     import time
 
+    if keep_versions < 1:
+        raise ValueError(
+            f"cow_vacuum: keep_versions must be at least 1, got {keep_versions}"
+        )
     versions = cow_history(root)
     kept_vs = versions[-keep_versions:]
     if keep_newer_than_ts is not None:
@@ -914,13 +935,10 @@ def cow_vacuum(
         # version whose MONOTONIZED stamp is >= the cutoff survives,
         # so `cow_read(as_of_ts=t)` keeps working for any t inside the
         # retention window regardless of how many versions landed
-        eff = float("-inf")
-        aged = []
-        for v in versions:
-            eff = max(eff, _effective_commit_ts(root, v))
-            if eff >= keep_newer_than_ts:
-                aged.append(v)
-        kept_vs = sorted(set(kept_vs) | set(aged))
+        aged = {
+            v for v, eff in _monotonized_stamps(root) if eff >= keep_newer_than_ts
+        }
+        kept_vs = sorted(set(kept_vs) | aged)
     if pinned_versions:
         kept_vs = sorted(
             set(kept_vs) | (set(pinned_versions) & set(versions))
@@ -1123,10 +1141,22 @@ class CowConstraintError(ValueError):
     """A write violates a table CHECK constraint — nothing was published."""
 
 
-def _violation_cond(expr: str):
-    """SQL CHECK semantics: a row violates when the expression evaluates
-    to FALSE; NULL passes (unknown is not a violation)."""
-    return ~F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
+# SQL CHECK semantics, one helper per engine: a row violates when the
+# expression evaluates to FALSE; NULL passes (unknown is not a
+# violation). Each returns at most one violating row (empty = none).
+def _first_violation(df: DataFrame, expr: str) -> list:
+    return (
+        df.where(~F.coalesce(F.expr(expr).cast("boolean"), F.lit(True)))
+        .limit(1)
+        .collect()
+    )
+
+
+def _duckdb_first_violation(con, relation: str, expr: str) -> list:
+    return con.execute(
+        f"SELECT * FROM {relation}"
+        f" WHERE NOT COALESCE(CAST(({expr}) AS BOOLEAN), TRUE) LIMIT 1"
+    ).fetchall()
 
 
 def _validate_constraints(spark: SparkSession, root: str, m: dict, entries):
@@ -1140,7 +1170,7 @@ def _validate_constraints(spark: SparkSession, root: str, m: dict, entries):
         return
     df = _read_files(spark, root, m, entries)
     for name, expr in cons.items():
-        bad = df.where(_violation_cond(expr)).limit(1).collect()
+        bad = _first_violation(df, expr)
         if bad:
             for e in entries:
                 try:
@@ -1172,10 +1202,7 @@ def _constraint_probe_error(schema, expr: str) -> Exception | None:
             ),
         )
         try:
-            con.execute(
-                "SELECT * FROM __cow_probe WHERE NOT COALESCE("
-                f"CAST(({expr}) AS BOOLEAN), TRUE) LIMIT 1"
-            ).fetchall()
+            _duckdb_first_violation(con, "__cow_probe", expr)
         except duckdb.Error as exc:
             return exc
     return None
@@ -1204,12 +1231,7 @@ def cow_add_constraint(
             f" DuckDB-evaluated DSv2 write path: {exc}. Use the ANSI"
             " subset both engines parse (the repo-wide oracle dialect)."
         ) from exc
-    bad = (
-        _read_files(spark, root, m, m["files"])
-        .where(_violation_cond(expr))
-        .limit(1)
-        .collect()
-    )
+    bad = _first_violation(_read_files(spark, root, m, m["files"]), expr)
     if bad:
         raise CowConstraintError(
             f"cannot add CHECK constraint {name!r} ({expr}): existing row"

@@ -74,7 +74,10 @@ from openmaptiles_zh_modifier_spark.operators.cow_table import (
     _PV,
     _TABLE_META,
     CowConflictError,
+    _commit_changes,
     _commit_next,
+    _duckdb_first_violation,
+    _entries_for_partitions,
     _latest_version,
     _read_manifest,
     _txn_recorded,
@@ -306,16 +309,7 @@ class CowBatchReader(DataSourceReader):
     def partitions(self) -> Sequence[InputPartition]:
         files = self._manifest["files"]
         if self._wanted is not None:
-            # spec-evolution safety: only entries whose recorded value
-            # belongs to the CURRENT partition column are pruned by it;
-            # pre-evolution entries (explicit "pcol" stamp) are scanned
-            # and rely on the row-level residual filter
-            cur = self._part_col
-            files = [
-                e
-                for e in files
-                if e.get("pcol", cur) != cur or e["partition"] in self._wanted
-            ]
+            files = _entries_for_partitions(self._manifest, self._wanted)
         if self._zone_filters:
             files = [e for e in files if self._zone_keep(e)]
         return _bundle_partitions(
@@ -414,32 +408,24 @@ class CowStreamReader(DataSourceStreamReader):
 
 
 def _raise_on_span_deletes(root: str, sv: int, ev: int) -> None:
-    """Walk every version pair in (sv, ev] and raise if any commit
-    deleted rows: a removed live file, or an entry repointed to a new
-    DV sidecar. Per-commit inspection (not an endpoint diff) so an
-    add-then-delete inside the span cannot slip through — the same
-    granularity Delta's source applies to its commit actions. Metadata
-    only: O(span x files) manifest JSON, no data I/O."""
-    prev = None
-    for v in range(max(sv, 1), ev + 1):
-        cur = {e["path"]: e.get("dv") for e in _read_manifest(root, v)["files"]}
-        if prev is not None:
-            removed = [p for p in prev if p not in cur]
-            repointed = [
-                p for p, dv in cur.items()
-                if p in prev and prev[p] != dv
-            ]
-            if removed or repointed:
-                raise ValueError(
-                    f"cowtable streaming source: version {v} deletes rows "
-                    f"({len(removed)} file(s) removed, {len(repointed)} "
-                    "deletion-vector repoint(s)) and ignore_deletes is "
-                    "false. Either set .option('ignore_deletes', 'true') "
-                    "to replay appends only (deletes will NOT flow "
-                    "downstream), or stream the change feed with "
-                    ".option('read_changes', 'true')."
-                )
-        prev = cur
+    """Raise if any commit in (sv, ev] deleted rows: a removed live
+    file, or an entry repointed to a new DV sidecar. Per-commit
+    inspection (``_commit_changes``), so an add-then-delete inside the
+    span cannot slip through — the same granularity Delta's source
+    applies to its commit actions."""
+    for v, changes in _commit_changes(root, sv, ev):
+        removed = sum(kind == "delete_file" for kind, *_ in changes)
+        repointed = sum(kind == "delete_dv" for kind, *_ in changes)
+        if removed or repointed:
+            raise ValueError(
+                f"cowtable streaming source: version {v} deletes rows "
+                f"({removed} file(s) removed, {repointed} "
+                "deletion-vector repoint(s)) and ignore_deletes is "
+                "false. Either set .option('ignore_deletes', 'true') "
+                "to replay appends only (deletes will NOT flow "
+                "downstream), or stream the change feed with "
+                ".option('read_changes', 'true')."
+            )
 
 
 @dataclass
@@ -514,39 +500,15 @@ class CowChangesStreamReader(DataSourceStreamReader):
         sv, ev = start["version"], end["version"]
         if ev <= sv:
             return []
-        out: list[CowChangePartition] = []
-        prev: dict[str, str | None] = {}
-        if sv >= 1:
-            prev = {
-                e["path"]: e.get("dv")
-                for e in _read_manifest(self._root, sv)["files"]
-            }
-        for v in range(max(sv + 1, 1), ev + 1):
-            cur = {
-                e["path"]: e.get("dv")
-                for e in _read_manifest(self._root, v)["files"]
-            }
-            ap = os.path.join  # noqa: E731 — brevity in the loops below
-            for p, dv in cur.items():
-                if p not in prev:
-                    out.append(CowChangePartition(
-                        ap(self._root, p), "insert",
-                        dv=ap(self._root, dv) if dv else None,
-                    ))
-                elif prev[p] != dv:
-                    out.append(CowChangePartition(
-                        ap(self._root, p), "delete_dv",
-                        dv=ap(self._root, dv) if dv else None,
-                        old_dv=ap(self._root, prev[p]) if prev[p] else None,
-                    ))
-            for p, dv in prev.items():
-                if p not in cur:
-                    out.append(CowChangePartition(
-                        ap(self._root, p), "delete_file",
-                        dv=ap(self._root, dv) if dv else None,
-                    ))
-            prev = cur
-        return _bundle_partitions(out)
+
+        def ap(rel: str | None) -> str | None:
+            return os.path.join(self._root, rel) if rel else None
+
+        return _bundle_partitions([
+            CowChangePartition(ap(p), kind, dv=ap(dv), old_dv=ap(old_dv))
+            for _v, changes in _commit_changes(self._root, sv, ev)
+            for kind, p, dv, old_dv in changes
+        ])
 
     def read(self, partition) -> Iterator:
         import pyarrow as pa
@@ -689,10 +651,7 @@ class CowBatchWriter(DataSourceArrowWriter):
             con = duckdb.connect()
             con.register("__cow_batch", table)
             for cname, cexpr in self._constraints.items():
-                bad = con.execute(
-                    "SELECT * FROM __cow_batch WHERE NOT COALESCE("
-                    f"CAST(({cexpr}) AS BOOLEAN), TRUE) LIMIT 1"
-                ).fetchall()
+                bad = _duckdb_first_violation(con, "__cow_batch", cexpr)
                 if bad:
                     raise ValueError(
                         f"CHECK constraint {cname!r} ({cexpr}) violated"

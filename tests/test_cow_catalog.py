@@ -148,6 +148,29 @@ def test_crash_recovery_abort(spark, two_tables):
     catalog_verify(cat_root)
 
 
+def test_catalog_versions_past_four_digits(spark, two_tables):
+    """Catalog versions are listed by number, not by a fixed width:
+    ``cat-10000.json`` and later stay visible, so commits keep
+    advancing past version 9999."""
+    import json
+    import os
+
+    cat_root, a_root, _ = two_tables
+    v1 = catalog_manifest(cat_root, 1)
+    with open(os.path.join(cat_root, "_catalog", "cat-9999.json"), "w") as f:
+        json.dump({**v1, "version": 9999}, f)
+    assert catalog_latest(cat_root) == 9999
+    v2 = cow_delete(spark, a_root, "k % 10 = 0")
+    assert catalog_commit(cat_root, {"a": v2}, {"a": 1}) == 10000
+    v3 = cow_delete(spark, a_root, "k % 10 = 1")
+    assert catalog_commit(cat_root, {"a": v3}, {"a": v2}) == 10001
+    assert catalog_latest(cat_root) == 10001
+    assert catalog_manifest(cat_root)["tables"]["a"]["version"] == v3
+    assert _sum_v(spark, cat_root, "a") == sum(
+        10 * k for k in range(100) if k % 10 not in (0, 1)
+    )
+
+
 def test_broken_chain_rejected(spark, two_tables):
     cat_root, a_root, _ = two_tables
     # claim a staged version that was never published

@@ -3,9 +3,8 @@
 deletion-vector sidecar + ordinary appends instead of rewriting the
 touched partitions. Pins: (a) result parity with the copy-on-write
 strategy, (b) ZERO pre-existing data files rewritten, (c) the CDF emits
-IDENTICAL deltas under both strategies (hash-pinned), (d) the "auto"
-strategy picks by matched fraction, (e) write amplification tracks
-matched+inserted rows, not partition size."""
+IDENTICAL deltas under both strategies (hash-pinned), (d) write
+amplification tracks matched+inserted rows, not partition size."""
 
 from __future__ import annotations
 
@@ -182,87 +181,6 @@ def test_dv_merge_composes_with_compact_and_second_merge(spark, twin_tables):
     pre = _rows(cow_read(spark, dv_root))
     cow_compact(spark, dv_root)
     assert _rows(cow_read(spark, dv_root)) == pre
-
-
-def test_auto_strategy_picks_by_matched_fraction(spark, tmp_path):
-    from openmaptiles_zh_modifier_spark.operators.cow_table import (
-        _read_manifest,
-    )
-
-    def live(version=None):
-        return {e["path"] for e in _read_manifest(root, version)["files"]}
-
-    root = str(tmp_path / "auto")
-    cow_create(spark, root, _base_df(spark), partition_by="part")
-    # sparse source: 2 of 20 rows matched -> dv (v1 files stay LIVE)
-    sparse = spark.createDataFrame(
-        [(0, "a", 1.0, "p0"), (5, "b", 2.0, "p1")],
-        "id long, val string, amt double, part string",
-    )
-    v1_files = live(1)
-    cow_merge(
-        spark, root, sparse, on="id", strategy="auto",
-        matched_update={"val": F.col("s.val")},
-    )
-    assert v1_files <= live()  # dv path: originals still live entries
-    # dense source: every row matched -> cow (old files rewritten away:
-    # they survive ON DISK for time travel, but leave the live manifest)
-    dense = _base_df(spark).withColumn("val", F.lit("dense"))
-    cow_merge(
-        spark, root, dense, on="id", strategy="auto",
-        matched_update={"val": F.col("s.val")},
-    )
-    assert not (v1_files & live())
-    vals = {r.val for r in cow_read(spark, root).collect()}
-    assert vals == {"dense"}
-
-
-def test_auto_strategy_collects_partition_values_once(spark, twin_tables):
-    """``strategy="auto"`` resolving to ``cow`` runs exactly the jobs of
-    a plain cow merge plus the strategy pick's matched count: the
-    source's distinct partition values are collected once, not again
-    for the rewrite."""
-    from openmaptiles_zh_modifier_spark.operators.cow_table import (
-        _merge_affected,
-        _pick_merge_strategy,
-        _read_manifest,
-    )
-
-    sc = spark.sparkContext
-    dense = _base_df(spark).withColumn("val", F.lit("dense"))
-    upd = {"val": F.col("s.val")}
-
-    def jobs(label, fn):
-        sc.setJobGroup(label, label)
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup(None, None)
-        return len(sc.statusTracker().getJobIdsForGroup(label)), out
-
-    cow_root, auto_root = twin_tables
-    m = _read_manifest(auto_root)
-    affected, _ = _merge_affected(dense, m)
-    n_pick, picked = jobs(
-        "auto-pick",
-        lambda: _pick_merge_strategy(
-            spark, auto_root, m, dense, "id", affected, upd, None, 0.2
-        ),
-    )
-    assert picked == "cow"
-    n_cow, _ = jobs(
-        "auto-cow",
-        lambda: cow_merge(spark, cow_root, dense, on="id", matched_update=upd),
-    )
-    n_auto, _ = jobs(
-        "auto-auto",
-        lambda: cow_merge(
-            spark, auto_root, dense, on="id", matched_update=upd,
-            strategy="auto",
-        ),
-    )
-    assert n_auto == n_cow + n_pick, (n_auto, n_cow, n_pick)
-    assert _rows(cow_read(spark, auto_root)) == _rows(cow_read(spark, cow_root))
 
 
 def test_dv_merge_source_uniqueness_enforced(spark, tmp_path):

@@ -146,6 +146,45 @@ def test_cow_unpartitioned_and_vacuum(spark, tmp_path):
     assert cow_read(spark, root).count() == 6  # latest still intact
 
 
+def test_stray_json_in_manifest_dir_is_not_a_version(spark, tmp_path):
+    """Only ``v<digits>.json`` names are versions: another file in
+    ``_manifests/`` that starts with ``v`` leaves the table readable."""
+    root = str(tmp_path / "t")
+    cow_create(spark, root, _base_df(spark))
+    with open(os.path.join(root, "_manifests", "vacuum.json"), "w") as f:
+        f.write("{}")
+    assert cow_history(root) == [1]
+    assert cow_read(spark, root).count() == 5
+
+
+def test_manifest_recording_another_version_rejected(spark, tmp_path):
+    """A manifest whose recorded version is not its file's version is
+    refused with ValueError (a check that survives ``python -O``)."""
+    import json
+
+    root = str(tmp_path / "t")
+    cow_create(spark, root, _base_df(spark))
+    path = os.path.join(root, "_manifests", "v0000000001.json")
+    with open(path) as f:
+        m = json.load(f)
+    with open(path, "w") as f:
+        json.dump({**m, "version": 7}, f)
+    with pytest.raises(ValueError, match="records version 7"):
+        _read_manifest(root, 1)
+
+
+def test_vacuum_keep_versions_below_one_rejected(spark, tmp_path):
+    root = str(tmp_path / "t")
+    cow_create(spark, root, _base_df(spark))
+    cow_merge(
+        spark, root, _base_df(spark).where("id = 1"), on="id",
+        matched_update={"bal": F.col("s.bal") + 1},
+    )
+    with pytest.raises(ValueError, match="keep_versions"):
+        cow_vacuum(root, keep_versions=0, orphan_grace_seconds=0)
+    assert cow_history(root) == [1, 2]
+
+
 def test_cow_null_partition_rejected(spark, tmp_path):
     root = str(tmp_path / "t")
     cow_create(spark, root, _base_df(spark), partition_by="region")
