@@ -14,8 +14,8 @@ pure ``schema → id_field | None`` so it needs no IO and no session to test.
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -52,19 +52,98 @@ def classify_schema(schema: StructType, table: str = "") -> TableClass | None:
 
 
 def discover_parquet_tables(spark: SparkSession, root: str) -> dict[str, DataFrame]:
-    """Lake-mode catalog scan: every ``*.parquet`` under ``root`` is a table.
+    """Lake-mode catalog scan: every ``*.parquet`` entry of ``root`` is a
+    table, keyed by its name without the suffix.
 
     Replaces the reference's ``getTables`` loop (OMTZHModifier.java:39-43).
-    Not free: each ``spark.read.parquet`` without a schema runs one Spark
-    job that infers the schema from the footers (``ParquetUtils.inferSchema``
-    → ``SchemaMergeUtils.mergeSchemasInParallel`` → ``RDD.collect``). The
-    job reads footers only, so its cost does not grow with the data, but
-    on a small lake it is most of a run's jobs and a large share of its
-    driver CPU.
-    """
+    ``root`` is listed through its Hadoop ``FileSystem``, so a plain path,
+    a ``file://`` URI and an ``hdfs://`` or ``s3a://`` lake are all
+    discovered. Runs no Spark job: each table's schema is read from its
+    parquet footers on the driver (:func:`_footer_schemas`) and handed to
+    the read, which then infers nothing."""
     out: dict[str, DataFrame] = {}
-    for p in sorted(Path(root).glob("*.parquet")):
-        out[p.stem] = spark.read.parquet(str(p))
+    for table, schema in _footer_schemas(spark, root).items():
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        out[table] = reader.parquet(f"{root.rstrip('/')}/{table}.parquet")
+    return out
+
+
+# Parquet summary files: read for their schema, never as data.
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-index name filter (``InMemoryFileIndex``): ``_*`` and
+    ``.*`` entries are skipped (``_SUCCESS``, ``.crc`` sidecars,
+    ``_temporary``), except partition directories (``_k=v``) and the
+    summary files."""
+    skip = (name.startswith("_") and "=" not in name) or name.startswith(".")
+    return (skip or name.endswith("._COPYING_")) and not name.startswith(_SUMMARY_FILES)
+
+
+def _footer_schemas(spark: SparkSession, root: str) -> dict[str, StructType | None]:
+    """Table name → the schema ``spark.read.parquet`` would infer for
+    each ``*.parquet`` entry of ``root``, read from footers on the
+    driver with Spark's own footer reader and Parquet→Spark converter
+    (``ParquetFileFormat.readParquetFootersInParallel`` and
+    ``readSchema``), fed the files ``ParquetUtils.inferSchema`` picks.
+    Without ``spark.sql.parquet.mergeSchema`` that is ``_common_metadata``,
+    else ``_metadata``, else the first data file by path; with it, every
+    data file (none under ``spark.sql.parquet.respectSummaryFiles``) plus
+    the summary files. Spark's inference runs the same read as a job;
+    here it is a call. One difference: ``readSchema`` merges column names
+    case-sensitively, so files of one table whose columns differ only in
+    case merge into two columns where Spark's job, under the default
+    case-insensitive analysis, would merge them into one.
+
+    None for a table without a file to read: the caller then lets Spark
+    infer, so an empty table raises exactly as ``spark.read.parquet``
+    does."""
+    jvm = spark.sparkContext._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    jroot = jvm.org.apache.hadoop.fs.Path(root)
+    fs = jroot.getFileSystem(conf)
+    get = spark.conf.get
+    merge = get("spark.sql.parquet.mergeSchema").lower() == "true"
+    respect = get("spark.sql.parquet.respectSummaryFiles").lower() == "true"
+    ignore_corrupt = get("spark.sql.files.ignoreCorruptFiles").lower() == "true"
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    pff = getattr(getattr(parquet, "ParquetFileFormat$"), "MODULE$")
+    to_seq = jvm.org.apache.spark.api.python.PythonUtils.toSeq
+
+    out: dict[str, StructType | None] = {}
+    entries = {e.getPath().getName(): e for e in fs.listStatus(jroot)}
+    for name in sorted(n for n in entries if n.endswith(".parquet")):
+        entry = entries[name]
+        leaves = []
+        todo = [(entry.getPath(), entry)]
+        while todo:
+            path, st = todo.pop()
+            if not st.isDirectory():
+                leaves.append((path.toString(), st))
+                continue
+            for child in fs.listStatus(path):
+                child_path = child.getPath()
+                if not _hidden(child_path.getName()):
+                    todo.append((child_path, child))
+        leaves.sort(key=lambda leaf: leaf[0])
+        kinds = [path.rsplit("/", 1)[-1] for path, _ in leaves]
+        data = [st for (_, st), k in zip(leaves, kinds) if k not in _SUMMARY_FILES]
+        common, metadata = (
+            [st for (_, st), k in zip(leaves, kinds) if k == summary]
+            for summary in _SUMMARY_FILES
+        )
+        if merge:
+            touch = ([] if respect else data) + metadata + common
+        else:
+            touch = (common or metadata or data)[:1]
+        schema = None
+        if touch:
+            footers = pff.readParquetFootersInParallel(conf, to_seq(touch), ignore_corrupt)
+            found = pff.readSchema(footers, spark._jsparkSession)
+            if found.isDefined():
+                schema = StructType.fromJson(json.loads(found.get().json()))
+        out[name[: -len(".parquet")]] = schema
     return out
 
 

@@ -88,7 +88,10 @@ def run_backfill(
     The derivation is built once per run, the way the reference sets its
     conversion up once before its table loop: the count aggregates and
     the ``tags`` rewrite are unresolved Columns that each table's plan
-    binds to its own frame."""
+    binds to its own frame. Discovery reads the schemas from parquet
+    footers on the driver, so a run with ``out_root`` launches exactly
+    one Spark job per qualifying table (pinned by
+    tests/test_io_pipeline.py::test_run_backfill_one_job_per_table)."""
     tables = discover_parquet_tables(spark, lake_root)
     report = RunReport()
     e = _zh_exprs(compat_names_typo, None)

@@ -6,8 +6,8 @@ UPDATE write-back (:156-169). Here:
 
 - file lakes are read with ``spark.read.parquet`` directly — splits
   replace manual ranges; footers carry the schema, so discovery needs no
-  catalog, but each read without a schema runs one schema-inference job
-  over the footers.
+  catalog. ``catalog.discover_parquet_tables`` reads them on the driver
+  and hands each read its schema, so discovery runs no Spark job.
 - ``read_jdbc_partitioned`` reproduces the reference's exact BETWEEN-range
   scan: Spark's partitioned JDBC read generates
   ``WHERE idField BETWEEN lo AND hi`` per task — the same SQL the

@@ -2,7 +2,13 @@
 
 from __future__ import annotations
 
+import os
+from pathlib import Path
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -13,6 +19,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from openmaptiles_zh_modifier_spark.catalog import classify_all, discover_parquet_tables
 from openmaptiles_zh_modifier_spark.operators import zh_backfill
 from openmaptiles_zh_modifier_spark.operators.zh_backfill import updates_frame
 from openmaptiles_zh_modifier_spark.plans.pipeline import run_backfill
@@ -141,19 +148,122 @@ def test_run_backfill_builds_derivation_once(
         assert builds["_predicate_exprs"] == run
 
 
-def test_run_backfill_one_job_per_table(spark, lake, tmp_path):
-    """One pass per table: discovery reads each table's schema (at most
-    one job per discovered table) and each qualifying table is written
-    by ONE job that also yields its counts — no separate count job and
-    no read-back."""
+def _jobs_in_group(spark, group, fn):
     sc = spark.sparkContext
-    group = "run-backfill-jobs"
     sc.setJobGroup(group, group)
     try:
-        report = run_backfill(spark, lake, str(tmp_path / "out"))
+        result = fn()
     finally:
         sc.setJobGroup(None, None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    n_discovered = 3  # poi, roads, plain
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_backfill_one_job_per_table(spark, lake, tmp_path):
+    """One pass per table: discovery reads the schemas from footers on
+    the driver (no job) and each qualifying table is written by ONE job
+    that also yields its counts — no separate count job and no
+    read-back."""
+    report, n_jobs = _jobs_in_group(
+        spark, "run-backfill-jobs", lambda: run_backfill(spark, lake, str(tmp_path / "out"))
+    )
     assert len(report.tables) == 2
-    assert n_jobs <= n_discovered + len(report.tables), n_jobs
+    assert n_jobs == len(report.tables), n_jobs
+
+
+def test_discovery_runs_no_job(spark, lake):
+    """Discovering and classifying a lake, schemas included, runs no
+    Spark job."""
+    def discover_and_classify():
+        tables = discover_parquet_tables(spark, lake)
+        return tables, classify_all(tables)
+
+    (tables, classes), n_jobs = _jobs_in_group(
+        spark, "discovery-jobs", discover_and_classify
+    )
+    assert sorted(tables) == ["plain", "poi", "roads"]
+    assert [c.table for c in classes] == ["poi", "roads"]
+    assert n_jobs == 0
+
+
+def test_discover_uri_root_equals_plain_path(spark, lake):
+    """A ``file://`` URI lake root discovers the same tables, with the
+    same schemas and rows, as its plain path."""
+    plain = discover_parquet_tables(spark, lake)
+    uri = discover_parquet_tables(spark, Path(lake).as_uri())
+    assert sorted(uri) == sorted(plain) == ["plain", "poi", "roads"]
+    for name, df in plain.items():
+        assert uri[name].schema == df.schema, name
+        assert sorted(uri[name].collect(), key=str) == sorted(df.collect(), key=str), name
+
+
+def _spark_dir(spark, path):
+    spark.createDataFrame(
+        [Row(id=1, name="臺灣", tags={"k": "v"}, w=1.5)],
+        "id long, name string, tags map<string,string>, w double",
+    ).write.parquet(path)
+    names = os.listdir(path)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+
+
+def _partitioned_dir(spark, path):
+    spark.range(6).withColumn("k", F.col("id") % 3).write.partitionBy("k").parquet(path)
+
+
+def _pyarrow_file(spark, path):
+    pq.write_table(
+        pa.table({"osm_id": pa.array([1, 2], pa.int32()), "name": ["a", None]}), path
+    )
+
+
+def _nanos_file(spark, path):
+    ts = pa.array([1_700_000_000_123_456_789, None], pa.timestamp("ns"))
+    pq.write_table(pa.table({"id": [1, 2], "at": ts}), path)
+
+
+def _merged_dir(spark, path):
+    spark.range(2).write.parquet(path)
+    spark.range(2).withColumn("extra", F.lit("x")).write.mode("append").parquet(path)
+
+
+@pytest.mark.parametrize(
+    "make, merge",
+    [
+        (_spark_dir, False),
+        (_partitioned_dir, False),
+        (_pyarrow_file, False),
+        (_nanos_file, False),
+        (_merged_dir, True),
+    ],
+    ids=["spark_dir", "partitioned", "pyarrow_file", "nanos", "merge_schema"],
+)
+def test_discovered_schema_equals_spark_inference(spark, tmp_path, make, merge):
+    """The footer-read schema is the one ``spark.read.parquet`` infers."""
+    root = tmp_path / "lake"
+    root.mkdir()
+    path = str(root / "t.parquet")
+    make(spark, path)
+    key = "spark.sql.parquet.mergeSchema"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(merge).lower())
+    try:
+        got = discover_parquet_tables(spark, str(root))["t"]
+        want = spark.read.parquet(path)
+        assert got.schema == want.schema
+        assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)
+        if merge:
+            assert want.columns == ["id", "extra"]
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_discover_empty_table_raises_like_spark(spark, tmp_path):
+    """A table directory without files fails the way Spark's own read
+    of it fails."""
+    root = tmp_path / "lake"
+    (root / "empty.parquet").mkdir(parents=True)
+    with pytest.raises(AnalysisException) as ours:
+        discover_parquet_tables(spark, str(root))
+    with pytest.raises(AnalysisException) as spark_own:
+        spark.read.parquet(str(root / "empty.parquet"))
+    assert ours.value.getCondition() == spark_own.value.getCondition()
+    assert str(ours.value) == str(spark_own.value)

@@ -482,41 +482,27 @@ def test_zh_gate_rows_match_their_oracles(spark, sf_dir):
         assert spark_fp(entry.entry(spark)) == oracle_fp("zh_backfill")
 
 
-def test_curated_fold_equals_duckdb_twin_on_every_phrase(spark):
-    """The Spark phrase fold (indexed constant arrays) and its DuckDB
-    twin (split_part over joined pairs) are spelled differently; pin
-    them equal on every curated phrase source and target, bare, inside
-    a neutral Han context and at both string ends, plus NULL and ''."""
+def _fold_diffs(spark, texts, tables=None):
+    """Every text whose Spark conversion (candidate-pruned fold) differs
+    from the DuckDB twin's (every pair, split_part), as
+    ``text -> (spark, duckdb)`` for both directions; and the Spark
+    results by text."""
     import duckdb
     import pyarrow as pa
 
     from openmaptiles_zh_modifier_spark.functions.zh import (
-        _S2T_RULED_PAIRS,
-        S2T_FROM,
-        T2S_FROM,
-        T2S_PHRASES,
         to_simplified_sql,
         to_traditional_sql,
     )
 
-    pairs = T2S_PHRASES + _S2T_RULED_PAIRS
-    words = sorted({w for pair in pairs for w in pair})
-    used = set("".join(words) + T2S_FROM + S2T_FROM)
-    ctx = next(ch for ch in "之乎者也丁七丈" if ch not in used)
-    texts = [None, ""] + [
-        form
-        for w in words
-        for form in (w, f"{ctx}{w}{ctx}", f"{w}{ctx}", f"{ctx}{w}")
-    ]
     rows = list(enumerate(texts))
-
     df = spark.createDataFrame(rows, "i int, v string")
     got = {
         r.i: (r.s, r.t)
         for r in df.select(
             "i",
-            to_simplified("v").alias("s"),
-            to_traditional("v").alias("t"),
+            to_simplified("v", tables).alias("s"),
+            to_traditional("v", tables).alias("t"),
         ).collect()
     }
     con = duckdb.connect()
@@ -527,10 +513,204 @@ def test_curated_fold_equals_duckdb_twin_on_every_phrase(spark):
     want = {
         i: (s, t)
         for i, s, t in con.execute(
-            f"SELECT i, {to_simplified_sql('v')}, {to_traditional_sql('v')}"
-            " FROM src"
+            f"SELECT i, {to_simplified_sql('v', tables)},"
+            f" {to_traditional_sql('v', tables)} FROM src"
         ).fetchall()
     }
-    assert len(got) == len(rows) > 4 * len(pairs)
+    assert len(got) == len(want) == len(rows)
     diff = {texts[i]: (got[i], want[i]) for i in got if got[i] != want[i]}
+    return diff, {texts[i]: got[i] for i in got}
+
+
+def test_curated_fold_equals_duckdb_twin_on_every_phrase(spark):
+    """The Spark phrase fold (candidate-pruned, indexed constant arrays)
+    and its DuckDB twin (split_part over every joined pair) are spelled
+    differently; pin them equal on every curated phrase source and
+    target, bare, inside a neutral Han context, at both string ends,
+    doubled, after a non-BMP char and beside a private-use char of the
+    candidate-id range, plus NULL and ''."""
+    from openmaptiles_zh_modifier_spark.functions.zh import (
+        _ID_BASE,
+        _S2T_RULED_PAIRS,
+        S2T_FROM,
+        T2S_FROM,
+        T2S_PHRASES,
+    )
+
+    pairs = T2S_PHRASES + _S2T_RULED_PAIRS
+    words = sorted({w for pair in pairs for w in pair})
+    used = set("".join(words) + T2S_FROM + S2T_FROM)
+    ctx = next(ch for ch in "之乎者也丁七丈" if ch not in used)
+    ext_b, pua = "\U00020000", chr(_ID_BASE + 3)
+    texts = [None, ""] + [
+        form
+        for w in words
+        for form in (
+            w,
+            f"{ctx}{w}{ctx}",
+            f"{w}{ctx}",
+            f"{ctx}{w}",
+            w + w,
+            ext_b + w,
+            f"{w}{pua}",
+        )
+    ]
+    diff, _ = _fold_diffs(spark, texts)
+    assert len(texts) > 7 * len(pairs)
+    assert diff == {}
+
+
+def _random_texts(rng, pieces, n, max_pieces=5):
+    """``n`` strings, each 1..max_pieces random ``pieces`` joined."""
+    return [
+        "".join(rng.choice(pieces) for _ in range(rng.randint(1, max_pieces)))
+        for _ in range(n)
+    ]
+
+
+def test_curated_fold_equals_twins_on_random_strings(spark):
+    """Seeded property test: strings of curated dictionary material
+    (phrase sources and targets, single table chars, a non-BMP char, a
+    candidate-id private-use char and one past the id range, ASCII)
+    convert the same through the Spark fold, the DuckDB twin and, for
+    s2t, :func:`to_traditional_py`."""
+    import random
+
+    from openmaptiles_zh_modifier_spark.functions.zh import (
+        _ID_BASE,
+        CURATED,
+        to_traditional_py,
+    )
+
+    t = CURATED
+    words = sorted({w for p in t.t2s_phrases + t.s2t_phrases for w in p})
+    chars = sorted(set(t.t2s_from + t.t2s_to + t.s2t_from + t.s2t_to))
+    pieces = words + chars + [
+        "\U00020000", chr(_ID_BASE + 7), chr(_ID_BASE + 0xFFF), "a", " "
+    ]
+    texts = _random_texts(random.Random(20261021), pieces, 4000)
+    diff, got = _fold_diffs(spark, texts)
+    assert diff == {}
+    py_diff = {x: v for x, v in got.items() if v[1] != to_traditional_py(x)}
+    assert py_diff == {}
+
+
+def _row_candidates(ix, text):
+    """The pair positions the Spark fold walks for ``text``: the lists
+    of its first chars, and of any candidate-id char it holds."""
+    from openmaptiles_zh_modifier_spark.functions.zh import _ID_BASE
+
+    out = set()
+    for ch in text:
+        k = ix.firsts.find(ch)
+        if k < 0:
+            k = ord(ch) - _ID_BASE
+        if 0 <= k < len(ix.firsts):
+            out.update(ix.flat[ix.off[k] - 1 : ix.off[k] - 1 + ix.size[k]])
+    return out
+
+
+def _firing_pairs(ix, text):
+    """Trace the all-pairs fold: the positions of the pairs that change
+    the accumulator."""
+    fired = set()
+    for i, (src, dst) in enumerate(ix.ordered, 1):
+        nxt = text.replace(src, dst)
+        if nxt != text:
+            fired.add(i)
+        text = nxt
+    return fired
+
+
+def _synthetic_st_phrases(n, seed):
+    """``n`` STPhrases-like s2t pairs: 2–4 char sources drawn from the
+    curated simplified chars and a block of unconverted Han chars, each
+    target the source char-converted (how OpenCC's STPhrases relates
+    them)."""
+    import random
+
+    from openmaptiles_zh_modifier_spark.functions.zh import (
+        S2T_FROM,
+        S2T_TO,
+        T2S_FROM,
+    )
+
+    rng = random.Random(seed)
+    plain = [chr(c) for c in range(0x4E00, 0x5600) if chr(c) not in T2S_FROM + S2T_FROM]
+    pool = list(S2T_FROM) + plain
+    conv = str.maketrans(S2T_FROM, S2T_TO)
+    pairs = {}
+    while len(pairs) < n:
+        src = "".join(rng.choice(pool) for _ in range(rng.randint(2, 4)))
+        if src.translate(conv) != src:
+            pairs.setdefault(src, src.translate(conv))
+    return list(pairs.items())
+
+
+def _random_ingested_tables(rng, n_lines):
+    """A random ingested table set over a tiny alphabet, where sources
+    and targets overlap and chain (the shape of the OpenCC ingest
+    property test)."""
+    from openmaptiles_zh_modifier_spark.functions.zh import ZhTables
+
+    alpha = "甲乙丙丁戊己"
+
+    def pairs():
+        out = []
+        for _ in range(n_lines):
+            src = "".join(rng.choice(alpha) for _ in range(rng.randint(1, 3)))
+            dst = "".join(rng.choice(alpha) for _ in range(rng.randint(1, 3)))
+            if src != dst:
+                out.append((src, dst))
+        return tuple(out)
+
+    return ZhTables(pairs(), pairs(), "甲", "乙", "丙", "丁")
+
+
+def test_candidate_index_covers_every_firing_pair():
+    """Pure-Python closure check: over random strings, every pair that
+    changes the accumulator of the all-pairs fold is among the row's
+    candidates, for the curated tables, random chaining ingested tables
+    and an 8k-pair STPhrases-like table."""
+    import random
+
+    from openmaptiles_zh_modifier_spark.functions.zh import (
+        _ID_BASE,
+        CURATED,
+        ZhTables,
+        _phrase_index,
+    )
+
+    rng = random.Random(7)
+    cases = [(CURATED.t2s_index, 3000), (CURATED.s2t_index, 3000)]
+    for _ in range(20):
+        t = _random_ingested_tables(rng, rng.randint(1, 12))
+        cases += [(t.t2s_index, 100), (t.s2t_index, 100)]
+    cases.append((_phrase_index(_synthetic_st_phrases(8000, 11)), 1000))
+    checked = fired_any = 0
+    for ix, n in cases:
+        words = sorted({w for p in ix.ordered for w in p}) or ["甲"]
+        pieces = words + list(ix.firsts) + [chr(_ID_BASE + 1), "x"]
+        for text in _random_texts(rng, pieces, n):
+            fired = _firing_pairs(ix, text)
+            assert fired <= _row_candidates(ix, text), (text, fired)
+            checked += 1
+            fired_any += bool(fired)
+    assert checked == sum(n for _, n in cases) and fired_any > checked // 2
+    assert ZhTables((), (), "", "", "", "").t2s_index.ordered == ()
+
+
+def test_synthetic_8k_pair_fold_equals_duckdb_twin(spark):
+    """An 8k-pair STPhrases-like s2t table (the scale of real OpenCC
+    STPhrases) folds exactly: Spark equals the DuckDB twin on strings of
+    its phrases and chars."""
+    import random
+
+    from openmaptiles_zh_modifier_spark.functions.zh import ZhTables
+
+    pairs = _synthetic_st_phrases(8000, 11)
+    t = ZhTables((), tuple(pairs), "", "", "", "")
+    rng = random.Random(5)
+    pieces = [w for p in pairs for w in p] + list(t.s2t_index.firsts)
+    diff, _ = _fold_diffs(spark, _random_texts(rng, pieces, 300), t)
     assert diff == {}

@@ -269,3 +269,68 @@ def test_ingested_plan_equals_reference_fold(
         for x in texts
     ]
     assert got_sql_t == expected_t
+
+
+def test_random_ingested_folds_equal_twins_on_random_strings(spark, tmp_path):
+    """Seeded companion of the property above at a larger draw: 30
+    random OpenCC file sets over the tiny alphabet (sources and targets
+    chain), 100 random strings each (with a private-use char of the
+    fold's candidate-id range mixed in); Spark, the DuckDB twin and the
+    reference fold agree in both directions."""
+    import random
+
+    from openmaptiles_zh_modifier_spark.functions.zh import _ID_BASE
+
+    rng = random.Random(14)
+
+    def lines():
+        out = []
+        for _ in range(rng.randint(0, 12)):
+            src = "".join(rng.choice(_ALPHA) for _ in range(rng.randint(1, 3)))
+            cands = [
+                "".join(rng.choice(_ALPHA) for _ in range(rng.randint(1, 3)))
+                for _ in range(rng.randint(1, 3))
+            ]
+            out.append(f"{src}\t{' '.join(cands)}")
+        return "".join(ln + "\n" for ln in out)
+
+    alphabet = _ALPHA + "Ax " + chr(_ID_BASE + 2)
+    texts = [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 12)))
+        for _ in range(100)
+    ]
+    df = spark.createDataFrame([(x,) for x in texts], "txt string")
+    con = duckdb.connect()
+    cols, sqls, expected = [], [], []
+    for k in range(30):
+        d = tmp_path / f"set{k}"
+        d.mkdir()
+        for name in ("TSCharacters", "STCharacters", "TSPhrases", "STPhrases"):
+            (d / f"{name}.txt").write_text(lines(), encoding="utf-8")
+        t = opencc_tables_from_dir(str(d))
+        cols += [
+            to_simplified("txt", tables=t).alias(f"s{k}"),
+            to_traditional("txt", tables=t).alias(f"t{k}"),
+        ]
+        sqls += [to_simplified_sql("txt", t), to_traditional_sql("txt", t)]
+        expected.append(
+            [
+                (
+                    _ref_convert(x, t.t2s_from, t.t2s_to, list(t.t2s_phrases)),
+                    _ref_convert(x, t.s2t_from, t.s2t_to, list(t.s2t_phrases)),
+                )
+                for x in texts
+            ]
+        )
+    got = [tuple(r) for r in df.select(*cols).collect()]
+    con.execute("CREATE TABLE src (i INTEGER, txt VARCHAR)")
+    con.executemany("INSERT INTO src VALUES (?, ?)", list(enumerate(texts)))
+    got_sql = [
+        r[1:]
+        for r in con.execute(f"SELECT i, {', '.join(sqls)} FROM src ORDER BY i").fetchall()
+    ]
+    want = [
+        tuple(v for per_set in expected for v in per_set[j]) for j in range(len(texts))
+    ]
+    assert got == want
+    assert got_sql == want
